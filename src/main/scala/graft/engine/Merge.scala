@@ -41,49 +41,32 @@ object Merge {
     * Python regrouping (submission.py:153–184); here it is two
     * pre-aggregations and three joins, all pushed before the entity
     * shuffle. Child arrays are ordered by child id (insertion order,
-    * matching the reference's row order).
+    * matching the reference's row order). Every internal exchange is
+    * left at AQE's coalesced width.
     */
-  /** @param pinWidth pin every internal exchange (the three child
-    *                  pre-aggregations and the snapshot join side) to
-    *                  full task width, keyed on the exchange's own
-    *                  join/group key — the exchanges exist either way
-    *                  (ENSURE_REQUIREMENTS at AQE-coalesced width vs
-    *                  REPARTITION_BY_NUM pinned), so this never adds a
-    *                  shuffle; it stops AQE's byte-blind coalescing of
-    *                  struct-building stages that are CPU-heavy per
-    *                  byte (measured at sf0.1: the nested join stages
-    *                  ran 16 tasks of ~0.5 s, the child aggs 3 tasks
-    *                  of up to 0.9 s). Opt-in for at-scale inline
-    *                  callers (nestedAtScale); fixture-scale callers
-    *                  keep AQE widths. */
   def nestedSubmissionSnapshots(
       snapshots: DataFrame,
       keywords: DataFrame,
       files: DataFrame,
       fileHashes: DataFrame,
-      contributors: DataFrame,
-      pinWidth: Boolean = false): DataFrame = {
-    def pin(df: DataFrame, key: String): DataFrame =
-      if (pinWidth) graft.engine.Spread.spreadForExplosion(df, col(key))
-      else df
-    val kw = pin(keywords, "submission_snapshot_id")
+      contributors: DataFrame): DataFrame = {
+    val kw = keywords
       .groupBy("submission_snapshot_id")
       .agg(collectOrdered(col("keyword_id"), lit(0L),
         struct(col("keyword"), col("ordinal"))).as("keywords"))
-    val hashesPerFile = pin(fileHashes, "file_id")
+    val hashesPerFile = fileHashes
       .groupBy("file_id")
       .agg(collectOrdered(col("hash_id"), lit(0L),
         struct(col("algo_id"), col("hash_value"))).as("hashes"))
-    val filesNested = pin(pin(files, "file_id")
+    val filesNested = files
       .join(hashesPerFile, Seq("file_id"), "left")
       .withColumn("hashes",
-        coalesce(col("hashes"), array().cast("array<struct<algo_id:bigint,hash_value:binary>>"))),
-      "submission_snapshot_id")
+        coalesce(col("hashes"), array().cast("array<struct<algo_id:bigint,hash_value:binary>>")))
       .groupBy("submission_snapshot_id")
       .agg(collectOrdered(col("file_id"), lit(0L),
         struct(col("site_file_id"), col("file_url"), col("file_size"),
           col("extra_data"), col("hashes"))).as("files"))
-    pin(snapshots, "submission_snapshot_id")
+    snapshots
       .join(kw, Seq("submission_snapshot_id"), "left")
       .join(filesNested, Seq("submission_snapshot_id"), "left")
       .join(broadcast(contributors.select(

@@ -206,8 +206,10 @@ object IvfAnn {
     * distributed loop costs `iters` dependent assign→mean pipelines —
     * ~6 sequential stages of pure latency at gate scale (ProfileQ:
     * q90's warm wall was 2.5 s of which total task time was 1.0 s).
-    * At or below the bound the sample is collected once and Lloyd runs
-    * on the driver. Centroid VALUES may differ from the distributed
+    * One `limit(bound + 1)` collect both tests the bound and, at or
+    * below it, is the sample Lloyd then runs on the driver (above it,
+    * the bound + 1 rows read are dropped and the loop runs distributed).
+    * Centroid VALUES may differ from the distributed
     * mean in the last ulp (double summation order) — which is exactly
     * as nondeterministic as the distributed mean already is across
     * partition orders, and provably irrelevant to every caller: the
@@ -221,16 +223,18 @@ object IvfAnn {
   def refine(embeddings: DataFrame, idCol: String, vecCol: String,
       cents: DataFrame, iters: Int = 2,
       localMaxRows: Long = localRefineMaxRows): DataFrame = {
-    val sample = embeddings.select(col(idCol), col(vecCol))
-    val n = sample.count()
+    // one bounded probe answers both "is the sample empty?" and "does
+    // it fit the local bound?" — and, when it fits, is the local input
+    val bound = (localMaxRows max 0L min (Int.MaxValue - 1L)).toInt
+    val probe = embeddings.select(col(vecCol)).limit(bound + 1).collect()
     // empty sample: no refinement — return the seeds unchanged (the
     // callers' exactness contract needs a NON-EMPTY centroid set, and
     // a Lloyd pass over nothing would drop every cell). Folding the
     // check here saves the callers' separate isEmpty() job.
-    if (n == 0) return cents
-    if (n <= localMaxRows) {
-      val pts = sample.collect().map(_.getSeq[Float](1).toArray)
-      if (pts(0).length.toLong * n <= (8L << 20))
+    if (probe.isEmpty) return cents
+    if (probe.length <= bound) {
+      val pts = probe.map(_.getSeq[Float](0).toArray)
+      if (pts(0).length.toLong * pts.length <= (8L << 20))
         return refineLocal(embeddings.sparkSession, pts, cents, iters)
     }
     var c = cents

@@ -67,11 +67,8 @@ object MergeScaleQ {
       unhex(lpad(hex($"l_suppkey" % 200 + 1), 4, "0")).as("hash_value"))
     val contributors = Seq((1L, "c1", "k1"), (2L, "c2", "k2"))
       .toDF("contributor_id", "name", "api_key")
-    // pinWidth: this is the at-scale inline build (q55/q65 and the
-    // one-time store materializations) — same exchange count, widths
-    // pinned instead of AQE-coalesced (see nestedSubmissionSnapshots)
     Merge.nestedSubmissionSnapshots(snaps, keywords, files, hashes,
-      contributors, pinWidth = false)
+      contributors)
   }
 
   /** The q55 emission shape shared by the full and incremental paths. */

@@ -1,7 +1,18 @@
 package graft.storage
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table registry — replaces the reference's Database object
   * (faexport_db/db.py:53–137) and schema bootstrap
@@ -15,6 +26,30 @@ import org.apache.spark.sql.functions._
   * (db.py:102–127, 1000 rows/statement) is subsumed by parquet row
   * groups; "deferred index builds" (indexes.sql:1–3) are moot.
   *
+  * Opening a table ([[read]]) launches no Spark job. A bare
+  * `spark.read.parquet(dir)` runs a one-task job to read a footer and
+  * infer the schema; here the driver lists the table directory, takes
+  * the first data file (names starting with `_` or `.` are skipped,
+  * `key=value` partition directories are descended), reads that one
+  * footer and converts it with Spark's own
+  * `ParquetFileFormat.readSchemaFromFooter` — the conversion schema
+  * inference runs inside its job. Partition columns named by the
+  * file's `key=value` directories are dropped from that schema, so
+  * Spark still infers them (and their types) from the directory names.
+  * The table is then opened with `spark.read.schema(dataSchema)`.
+  *
+  * The schema is memoised per table in this instance, together with
+  * the footer file's path and length. An entry is used only while that
+  * file still exists with the same length: parquet files get unique
+  * names and are never modified, so an overwrite, a compaction, a
+  * delete done outside this class or a write from another instance
+  * invalidates the entry on its own — no write path touches the memo.
+  *
+  * Three cases keep the bare `spark.read.parquet(dir)`, with its
+  * inference job and its exceptions: the directory is missing, it holds
+  * no readable data file, or the session sets
+  * `spark.sql.parquet.mergeSchema` (a merged schema needs every footer).
+  *
   * 100 TB note: for shuffle-free merge-on-read, write snapshot tables
   * sorted within partitions by the entity key
   * (`sortWithinPartitions`) so the M-family groupBy can use
@@ -23,11 +58,17 @@ import org.apache.spark.sql.functions._
   * entirely (SURVEY §4.4).
   */
 class Storage(spark: SparkSession, root: String) {
+  import Storage.StoredSchema
 
   private val partitioned = Set(
     "user_snapshots", "submission_snapshots")
 
+  private val schemas = new ConcurrentHashMap[String, StoredSchema]()
+
   def path(table: String): String = s"$root/$table"
+
+  private def fs: FileSystem = FileSystem.get(
+    new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
   def append(table: String, df: DataFrame): Unit = {
     val w = df.write.mode(SaveMode.Append)
@@ -40,20 +81,63 @@ class Storage(spark: SparkSession, root: String) {
     // path in one job is unsafe
     val tmp = s"$root/.tmp_$table"
     df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path(table))
+    swapIn(tmp, table)
+  }
+
+  private def swapIn(tmp: String, table: String): Unit = {
+    val dst = new Path(path(table))
     fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.rename(new Path(tmp), dst)
   }
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table))
+  def read(table: String): DataFrame =
+    dataSchema(table).fold(spark.read)(spark.read.schema(_)).parquet(path(table))
 
-  def exists(table: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(path(table)))
+  /** The stored data schema of `table` (partition columns excluded),
+    * from the memo while its footer file is unchanged, else from one
+    * footer; None when the table must be opened by inference. */
+  private def dataSchema(table: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else Option(schemas.get(table)).filter(_.isCurrent(fs))
+      .orElse(footerSchema(new Path(path(table))).map { s =>
+        schemas.put(table, s); s
+      })
+      .map(_.schema)
+
+  private def footerSchema(dir: Path): Option[StoredSchema] =
+    try firstDataFile(dir, Nil).map { case (file, partitionCols) =>
+      val footer = ParquetFileReader.readFooter(
+        HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      StoredSchema(file.getPath, file.getLen, StructType(schema.filterNot(f =>
+        partitionCols.exists(spark.sessionState.conf.resolver(_, f.name)))))
+    } catch {
+      // a missing directory or an unreadable file: inference reports it
+      case NonFatal(_) => None
+    }
+
+  /** Depth-first, in name order: the first data file under `dir` and
+    * the partition columns named by the directories above it. */
+  private def firstDataFile(dir: Path, partitionCols: List[String])
+      : Option[(FileStatus, List[String])] = {
+    val (dirs, files) = fs.listStatus(dir)
+      .filterNot(st => Storage.isHidden(st.getPath.getName))
+      .sortBy(_.getPath.getName)
+      .partition(_.isDirectory)
+    files.headOption.map(_ -> partitionCols).orElse(
+      dirs.iterator.flatMap { d =>
+        val name = d.getPath.getName
+        val col = if (name.contains("=")) List(
+          ExternalCatalogUtils.unescapePathName(name.takeWhile(_ != '=')))
+          else Nil
+        firstDataFile(d.getPath, partitionCols ++ col)
+      }.nextOption())
   }
+
+  def exists(table: String): Boolean = fs.exists(new Path(path(table)))
 
   /** Bucketed append via the catalog (SURVEY §4.4 "bucket/sort the
     * snapshot tables by entity key so merge becomes a shuffle-free
@@ -154,11 +238,7 @@ class Storage(spark: SparkSession, root: String) {
     val w = df.repartition(targetFiles).write.mode(SaveMode.Overwrite)
     if (partitioned(table)) w.partitionBy("website_id").parquet(tmp)
     else w.parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path(table))
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    swapIn(tmp, table)
   }
 
   /** Settings bootstrap — version seed row (faexport_db.sql:116–124). */
@@ -171,6 +251,19 @@ class Storage(spark: SparkSession, root: String) {
 }
 
 object Storage {
+  /** A memoised data schema and the footer file it was read from. */
+  private final case class StoredSchema(file: Path, length: Long,
+      schema: StructType) {
+    def isCurrent(fs: FileSystem): Boolean =
+      try fs.getFileStatus(file).getLen == length
+      catch { case _: java.io.FileNotFoundException => false }
+  }
+
+  /** Names Spark's file listing skips as well (`_SUCCESS`, `.crc` side
+    * files); `_key=value` stays a partition directory. */
+  private def isHidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
   /** Catalog-safe per-directory table name: a readable sanitized tail
     * plus an md5 of the EXACT path, so two distinct dirs can never
     * share a table (same scheme as the q83 bucketed store,

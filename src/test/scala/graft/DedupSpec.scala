@@ -254,6 +254,50 @@ class DedupSpec extends AnyFunSuite {
     assert(res.head.getLong(2) === 40L)
   }
 
+  test("IVF refine: the driver-local Lloyd loop equals the distributed one") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.IvfAnn
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val emb = (0L until 41L).map { i =>
+      (i, Array.tabulate(16)(j => math.sin(i * 17 + j).toFloat).toSeq)
+    }.toDF("vec_id", "embedding").repartition(3)
+    val seeds = IvfAnn.centroids(emb, "vec_id", "embedding", c = 4)
+    def refine(in: DataFrame, maxRows: Long) =
+      IvfAnn.refine(in, "vec_id", "embedding", seeds, localMaxRows = maxRows)
+    def isLocal(df: DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    def cells(df: DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).sortBy(_._1).toSeq
+    def assertSameCells(a: DataFrame, b: DataFrame): Unit = {
+      val (ca, cb) = (cells(a), cells(b))
+      assert(ca.map(_._1) === cb.map(_._1))
+      ca.zip(cb).foreach { case ((id, va), (_, vb)) =>
+        assert(va.length === vb.length)
+        va.zip(vb).foreach { case (x, y) =>
+          // double summation order may move the mean by an ulp
+          assert(math.abs(x - y) <= 1e-6f, s"cell $id: $va vs $vb")
+        }
+      }
+    }
+    // the default bound runs locally; a bound of 0 forces the loop
+    val local = refine(emb, IvfAnn.localRefineMaxRows)
+    val distributed = refine(emb, 0L)
+    assert(isLocal(local) && !isLocal(distributed))
+    assertSameCells(local, distributed)
+    // 41 rows: a bound of 41 still fits, one row over it (40) does not
+    val atBound = refine(emb, 41L)
+    val overBound = refine(emb, 40L)
+    assert(isLocal(atBound) && !isLocal(overBound))
+    assertSameCells(atBound, overBound)
+    assertSameCells(overBound, distributed)
+    // an empty sample returns the seeds themselves on either path
+    Seq(IvfAnn.localRefineMaxRows, 0L).foreach { m =>
+      assert(refine(emb.filter(lit(false)), m) eq seeds)
+    }
+  }
+
   test("embedding cosine near-dup pairs: duplicate vector scores 1.0") {
     val s = spark
     import s.implicits._

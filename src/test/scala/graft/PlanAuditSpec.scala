@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank-filter → WindowGroupLimit) asserted as tests so a plan
   * regression fails the build, not just the benchmark. */
 class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
+  import PlanAuditSpec.PlanNode
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -41,6 +42,93 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   private def executed(df: DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+  }
+
+  /** Parses the operator tree of a formatted plan: a node's parent is
+    * the nearest line above it whose operator name starts further left. */
+  private def parsePlan(formatted: String): PlanNode = {
+    val lines = formatted.split("\n").toSeq
+    val details = lines.zipWithIndex.collect {
+      case (PlanAuditSpec.DetailHeader(id, _), i) =>
+        id.toInt -> lines.drop(i + 1).takeWhile(_.nonEmpty).collect {
+          case PlanAuditSpec.DetailLine(k, v) => k -> v
+        }.toMap
+    }.toMap
+    val tree = lines.drop(1).takeWhile(_.nonEmpty).collect {
+      case PlanAuditSpec.TreeLine(prefix, name, id) =>
+        (prefix.length, name.stripPrefix("* ").trim, id.toInt)
+    }
+    val parent = new Array[Int](tree.length)
+    val open = scala.collection.mutable.Stack[Int]()
+    tree.indices.foreach { i =>
+      while (open.nonEmpty && tree(open.top)._1 >= tree(i)._1) open.pop()
+      parent(i) = if (open.isEmpty) -1 else open.top
+      open.push(i)
+    }
+    def node(i: Int): PlanNode = PlanNode(tree(i)._2, tree(i)._3,
+      tree.indices.filter(parent(_) == i).map(node),
+      details.getOrElse(tree(i)._3, Map.empty))
+    node(0)
+  }
+
+  /** Stacked exchanges: a shuffle inserted to meet a distribution
+    * (ENSURE_REQUIREMENTS) whose nearest shuffle below is a
+    * REPARTITION_BY_NUM on a subset of its keys. Rows hash-clustered on
+    * a subset of the keys are already clustered on all of them, so the
+    * upper exchange moves every row a second time for nothing
+    * (plans/r18/q65_incremental_merge_after.txt does this to the heavy
+    * merge structs). */
+  private def stackedExchanges(plan: PlanNode): Seq[String] =
+    for {
+      upper <- plan.all
+      ("ENSURE_REQUIREMENTS", upperKeys) <- upper.hashShuffle.toSeq
+      lower <- upper.feedingExchanges
+      ("REPARTITION_BY_NUM", lowerKeys) <- lower.hashShuffle.toSeq
+      if lowerKeys.subsetOf(upperKeys)
+    } yield s"Exchange (${upper.id}) ${upperKeys.mkString(",")} over " +
+      s"Exchange (${lower.id}) ${lowerKeys.mkString(",")}"
+
+  test("the stacked-exchange audit fires on the stacked q65 merge dump") {
+    def dump(file: String) = parsePlan(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"plans/r18/$file")), "UTF-8"))
+    val found = stackedExchanges(dump("q65_incremental_merge_after.txt"))
+    assert(found === Seq(
+      "Exchange (41) w,site_submission_id over Exchange (39) w,site_submission_id"),
+      found)
+    // the dump before the width pin had no pinned exchange to stack on
+    assert(stackedExchanges(dump("q65_incremental_merge_before.txt")).isEmpty)
+  }
+
+  test("q55/q65 inline merge: one pinned exchange feeds each merge aggregate, none stacked") {
+    for (q <- Seq("q55_merge_scale", "q65_incremental_merge")) {
+      val df = graft.queries.MergeScaleQ.queries(q)(spark, "/root/testdata/sf0.001")
+      val text = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val plan = parsePlan(text)
+      graft.engine.CacheRegistry.releaseAll()
+      assert(stackedExchanges(plan).isEmpty, s"$q stacked exchanges:\n$text")
+      // the merge aggregate: the final collect over the entity key
+      val merges = plan.all.filter { n =>
+        n.name.endsWith("Aggregate") &&
+          n.details.get("Keys").exists(_.contains("site_submission_id")) &&
+          n.details.get("Functions").exists(f =>
+            f.contains("collect_list(") && !f.contains("partial_collect_list"))
+      }
+      assert(merges.nonEmpty, s"$q: no merge aggregate found:\n$text")
+      merges.foreach { m =>
+        assert(m.feedingExchanges.flatMap(_.hashShuffle) ===
+          Seq("REPARTITION_BY_NUM" -> Set("site_submission_id")),
+          s"$q: Aggregate (${m.id}) is not fed by exactly one pinned exchange:\n$text")
+      }
+      // q65's batch key set (a distinct of the entity keys alone) may
+      // shuffle on them; nothing that carries snapshot columns may
+      val entityKeyed = plan.all.filter(n => n.hashShuffle.exists {
+        case (origin, keys) => origin == "ENSURE_REQUIREMENTS" &&
+          keys("site_submission_id") && !n.input.subsetOf(keys)
+      }).map(_.id)
+      assert(entityKeyed.isEmpty,
+        s"$q: ENSURE_REQUIREMENTS exchanges $entityKeyed on the entity key:\n$text")
+    }
   }
 
   test("point-lookup filters reach the parquet scan (PushedFilters)") {
@@ -285,5 +373,55 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(rows.length === 20)
     assert(rows.count(_.get(1) == null) === 1)
     assert(rows.filter(_.get(1) == null).map(_.getLong(0)).toSeq === Seq(3L))
+  }
+}
+
+object PlanAuditSpec {
+  /** One operator of a formatted plan (`explain("formatted")`, the
+    * shape of the plans/ dumps): name, node id, and its `Keys`,
+    * `Functions` and `Arguments` detail lines. */
+  final case class PlanNode(name: String, id: Int,
+      children: Seq[PlanNode], details: Map[String, String]) {
+    /** (shuffle origin, hash keys without expression ids) of a hash
+      * exchange. */
+    def hashShuffle: Option[(String, Set[String])] =
+      details.get("Arguments").collect {
+        case HashShuffle(keys, _, origin) =>
+          origin -> topLevel(keys).map(stripIds).toSet
+      }
+    /** The operator's input columns, without expression ids. */
+    def input: Set[String] = details.get("Input")
+      .map(i => topLevel(i.stripPrefix("[").stripSuffix("]")).map(stripIds).toSet)
+      .getOrElse(Set.empty)
+    /** The nearest exchanges below this operator. */
+    def feedingExchanges: Seq[PlanNode] =
+      children.flatMap(c => if (c.name.endsWith("Exchange")) Seq(c) else c.feedingExchanges)
+    def all: Seq[PlanNode] = this +: children.flatMap(_.all)
+  }
+
+  /** `<tree prefix><operator> (<id>)[, <statistics>]` */
+  private val TreeLine = """^([\s:|+\-]*)(.+?) \((\d+)\)(?:, .*)?$""".r
+  /** `(<id>) <operator>` opening a node's detail block */
+  private val DetailHeader = """^\((\d+)\) (.+)$""".r
+  private val DetailLine = """^(\w+)(?: \[\d+\])?: (.*)$""".r
+  private val HashShuffle = """^hashpartitioning\((.*), (\d+)\), (\w+).*$""".r
+
+  private def stripIds(expr: String): String = expr.replaceAll("#\\d+L?", "")
+
+  /** Splits `a, f(b, c), d` at its top-level commas. */
+  private def topLevel(args: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    var depth = 0
+    var start = 0
+    args.indices.foreach { i =>
+      args(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case ',' if depth == 0 =>
+          parts += args.substring(start, i).trim; start = i + 1
+        case _ =>
+      }
+    }
+    (parts += args.substring(start).trim).result()
   }
 }

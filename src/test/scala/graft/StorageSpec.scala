@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Fixtures
+import graft.engine.{Fixtures, Merge}
 import graft.ingest.{Formats, Normalize}
 import graft.maintenance.Dump
 import graft.storage.Storage
@@ -38,6 +42,147 @@ class StorageSpec extends AnyFunSuite {
     // appends accumulate
     st.append("submission_snapshots", Fixtures.submissionSnapshots(s))
     assert(st.read("submission_snapshots").count() === 8L)
+  }
+
+  /** `read` must open a table exactly as Spark's schema inference
+    * does: same schema (names, types, order, nullability) and rows. */
+  private def assertReadsAsInferred(st: Storage, table: String): Unit = {
+    def rows(df: DataFrame) = df.toJSON.collect().sorted.toSeq
+    val opened = st.read(table)
+    val inferred = spark.read.parquet(st.path(table))
+    assert(opened.schema === inferred.schema, s"$table schema")
+    assert(rows(opened) === rows(inferred), s"$table rows")
+  }
+
+  /** Every table shape the archive writes, two sites in the
+    * partitioned tables, plus the merged tables an overwrite stores. */
+  private def archive(st: Storage): Seq[String] = {
+    val s = spark
+    def twoSites(df: DataFrame) =
+      df.union(df.withColumn("website_id", lit("ws")))
+    st.append("submission_snapshots", twoSites(Fixtures.submissionSnapshots(s)))
+    st.append("user_snapshots", twoSites(Fixtures.userSnapshots(s)))
+    st.append("submission_snapshot_keywords", Fixtures.keywords(s))
+    st.append("submission_snapshot_files", Fixtures.files(s))
+    st.append("submission_snapshot_file_hashes", Fixtures.fileHashes(s))
+    st.append("archive_contributors", Fixtures.contributors(s))
+    st.overwrite("merged_submissions", Merge.mergeSubmissions(
+      Merge.nestedSubmissionSnapshots(st.read("submission_snapshots"),
+        st.read("submission_snapshot_keywords"), st.read("submission_snapshot_files"),
+        st.read("submission_snapshot_file_hashes"), st.read("archive_contributors"))))
+    st.overwrite("merged_users", Merge.mergeUsers(st.read("user_snapshots")))
+    Seq("submission_snapshots", "user_snapshots", "submission_snapshot_keywords",
+      "submission_snapshot_files", "submission_snapshot_file_hashes",
+      "archive_contributors", "merged_submissions", "merged_users")
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * job starts in order, so a marker job run after `body` flushes it. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"flush-${System.nanoTime}"
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != marker).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("read returns what schema inference returns for every stored table shape") {
+    val st = new Storage(spark, tmpDir())
+    archive(st).foreach(assertReadsAsInferred(st, _))
+    // nested arrays, binary hashes and timestamps all came through
+    val merged = st.read("merged_submissions").schema
+    assert(merged("keywords").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    assert(merged("files").dataType.catalogString.contains("hash_value:binary"))
+    assert(st.read("submission_snapshots").schema.last.name === "website_id")
+  }
+
+  test("the read-side schema memo follows every way a table changes") {
+    val s = spark
+    val root = tmpDir()
+    val st = new Storage(s, root)
+    val t = "submission_snapshot_keywords"
+    st.append(t, Fixtures.keywords(s))
+    assertReadsAsInferred(st, t)
+    // a second append
+    st.append(t, Fixtures.keywords(s))
+    assertReadsAsInferred(st, t)
+    assert(st.read(t).count() === 10L)
+    // an overwrite with another schema
+    st.overwrite(t, st.read(t).drop("ordinal").withColumn("weight", lit(0.5)))
+    assertReadsAsInferred(st, t)
+    assert(st.read(t).columns.toSeq ===
+      Seq("keyword_id", "submission_snapshot_id", "keyword", "weight"))
+    // a compaction of a partitioned table
+    val p = "submission_snapshots"
+    (1 to 3).foreach(_ => st.append(p, Fixtures.submissionSnapshots(s)))
+    assertReadsAsInferred(st, p)
+    st.compact(p)
+    assertReadsAsInferred(st, p)
+    // a delete through the Hadoop FS, written back with another schema
+    // by a plain Spark write
+    FileSystem.get(new java.net.URI(root), s.sparkContext.hadoopConfiguration)
+      .delete(new Path(st.path(t)), true)
+    Fixtures.keywords(s).select(col("keyword").as("tag"), col("keyword_id"))
+      .write.parquet(st.path(t))
+    assertReadsAsInferred(st, t)
+    assert(st.read(t).columns.toSeq === Seq("tag", "keyword_id"))
+    // a write by a second instance on the same root
+    new Storage(s, root).overwrite(t, Fixtures.files(s))
+    assertReadsAsInferred(st, t)
+    assert(st.read(t).columns.contains("file_url"))
+  }
+
+  test("read falls back to schema inference where the footer cannot answer") {
+    val s = spark
+    import s.implicits._
+    val root = tmpDir()
+    val st = new Storage(s, root)
+    def failure(open: => DataFrame): Class[_] =
+      intercept[Exception](open).getClass
+    // a missing table: the same exception inference raises
+    val missing = failure(st.read("nope"))
+    assert(missing === failure(s.read.parquet(st.path("nope"))))
+    assert(classOf[AnalysisException].isAssignableFrom(missing))
+    // a directory with no data file
+    st.append("websites", Fixtures.websites(s))
+    val fs = FileSystem.get(new java.net.URI(root), s.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(st.path("websites")))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .foreach(f => fs.delete(f.getPath, false))
+    assert(failure(st.read("websites")) ===
+      failure(s.read.parquet(st.path("websites"))))
+    // a session that merges schemas reads every footer
+    st.append("settings", Seq(("a", "1")).toDF("setting_id", "setting_value"))
+    st.append("settings", Seq(("b", 2L)).toDF("setting_id", "extra"))
+    s.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assertReadsAsInferred(st, "settings")
+      assert(st.read("settings").columns.toSet ===
+        Set("setting_id", "setting_value", "extra"))
+    } finally s.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("read launches no Spark job, with the schema memo cold and warm") {
+    val s = spark
+    val root = tmpDir()
+    val p = "submission_snapshots"
+    archive(new Storage(s, root))
+    // the listener sees the job a bare parquet open runs
+    assert(jobsDuring(s.read.parquet(s"$root/$p")) >= 1)
+    val st = new Storage(s, root)
+    assert(jobsDuring(st.read(p)) === 0, "cold memo")
+    assert(jobsDuring(st.read(p)) === 0, "warm memo")
   }
 
   test("dimension upsert is get-or-create (A10/A11)") {
