@@ -1,10 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Merge
-import graft.ingest.Normalize
+import graft.engine.{Concurrent, Merge}
+import graft.ingest.{Normalize, NormalizeUsers}
 import graft.storage.Storage
 
 /** The reference's web API surface (faexport_db/web.py) as library
@@ -84,39 +84,53 @@ class Api(storage: Storage) {
     * A6, fixed).
     *
     * The converter pipeline behind `nestedRows` is evaluated once: the
-    * nested frame is persisted for the four child appends, and the
-    * per-table counts ride along as `observe` metrics on the writes
-    * themselves instead of separate count() actions.
+    * nested frame is persisted for the five writes, and the per-table
+    * counts ride along as `observe` metrics on the appends themselves
+    * instead of separate count() actions.
+    *
+    * The contributor upsert and the four child appends run at once
+    * ([[graft.engine.Concurrent]]): no write reads another's output,
+    * since every id is a content hash of the row. As before, there is
+    * no atomicity across tables: if one write fails, the others still
+    * land, and the call rethrows the failure once all have finished.
     */
   def ingestSubmissions(nestedRows: DataFrame): Map[String, Long] = {
     val cached = nestedRows.persist()
     try {
       val (s, k, f, h) = Normalize.splitChildren(cached)
-      storage.upsertDimension("archive_contributors",
-        graft.ingest.NormalizeUsers.contributorsOf(cached), Seq("contributor_id"))
-      Seq(
+      val appends = Seq(
         "submission_snapshots" -> s,
         "submission_snapshot_keywords" -> k,
         "submission_snapshot_files" -> f,
-        "submission_snapshot_file_hashes" -> h).map { case (table, df) =>
-        val obs = org.apache.spark.sql.Observation()
-        storage.append(table, df.observe(obs, count(lit(1)).as("n")))
+        "submission_snapshot_file_hashes" -> h)
+        .map { case (table, df) => (table, df, Observation()) }
+      Concurrent.run(cached.sparkSession.sparkContext)(
+        (() => upsertContributors(cached)) +: appends.map { case (table, df, obs) =>
+          () => storage.append(table, df.observe(obs, count(lit(1)).as("n")))
+        }: _*)
+      appends.map { case (table, _, obs) =>
         table -> obs.get("n").asInstanceOf[Long]
       }.toMap
     } finally cached.unpersist()
   }
 
+  /** User analog of [[ingestSubmissions]]: the contributor upsert and
+    * the `user_snapshots` append run at once. */
   def ingestUsers(nestedUsers: DataFrame): Map[String, Long] = {
     val cached = nestedUsers.persist()
     try {
-      val rows = graft.ingest.NormalizeUsers.toStorage(cached)
-      storage.upsertDimension("archive_contributors",
-        graft.ingest.NormalizeUsers.contributorsOf(cached), Seq("contributor_id"))
-      val obs = org.apache.spark.sql.Observation()
-      storage.append("user_snapshots", rows.observe(obs, count(lit(1)).as("n")))
+      val rows = NormalizeUsers.toStorage(cached)
+      val obs = Observation()
+      Concurrent.run(cached.sparkSession.sparkContext)(
+        () => upsertContributors(cached),
+        () => storage.append("user_snapshots", rows.observe(obs, count(lit(1)).as("n"))))
       Map("user_snapshots" -> obs.get("n").asInstanceOf[Long])
     } finally cached.unpersist()
   }
+
+  private def upsertContributors(nested: DataFrame): Unit =
+    storage.upsertDimension("archive_contributors",
+      NormalizeUsers.contributorsOf(nested), Seq("contributor_id"))
 
   /** API-key auth lookup (web.py:158–163,
     * archive_contributor.py:76–88). */

@@ -33,12 +33,18 @@ import org.apache.spark.sql.functions.{col, lit}
   * it is millions, of which a batch names thousands. Above `maxIds` —
   * a backfill-sized probe — the prune is skipped and the join reverts
   * to the full stream (at that batch size the scan amortizes; an
-  * unbounded collect would not). */
+  * unbounded collect would not).
+  *
+  * Below `minTableBytes` the table is returned as it is, with no probe
+  * job. The gate measures what the table scans: the summed
+  * `sizeInBytes` of its optimized plan's leaf relations (the parquet
+  * files, a cached relation, a local relation). It does not use the
+  * estimate at the plan's root, because without CBO Catalyst sizes a
+  * join as the product of its inputs: the nested submission store of
+  * an archive whose five tables scan a few KB is estimated above
+  * 256 MB, so every incremental refresh paid the probe. */
 object ProbePrune {
 
-  /** `table` restricted to the values of `probe`'s `probeCol` in its
-    * `tableCol`, with the bounded-collect / InSet / range-cover
-    * contract above. */
   /** Ops escape hatch (and the A/B lever the measured claims come
     * from): GRAFT_PROBE_PRUNE=off disables pruning entirely, =inset
     * keeps only the row-level InSet filter (no range pushdown),
@@ -49,6 +55,9 @@ object ProbePrune {
     sys.props.get("graft.probe.prune")
       .orElse(sys.env.get("GRAFT_PROBE_PRUNE")).getOrElse("full")
 
+  /** `table` restricted to the values of `probe`'s `probeCol` in its
+    * `tableCol`, with the bounded-collect / InSet / range-cover
+    * contract above. */
   def pruneToProbeKeys(table: DataFrame, tableCol: String,
       probe: DataFrame, probeCol: String, maxIds: Int = 100000,
       maxRanges: Int = 256, minTableBytes: Long = 256L << 20): DataFrame = {
@@ -61,9 +70,8 @@ object ProbePrune {
     // gate-scale accept probes ran ~1.5x slower with pruning forced
     // on, while the 262k-doc sweep point ran 1.8x faster with it).
     // Catalyst file-level stats make the decision free.
-    if (mode != "force" &&
-        table.queryExecution.optimizedPlan.stats.sizeInBytes
-          < BigInt(minTableBytes)) return table
+    if (mode != "force" && scannedBytes(table) < BigInt(minTableBytes))
+      return table
     val ids = probe.select(col(probeCol)).distinct().limit(maxIds + 1)
       .collect().map(_.get(0))
     if (ids.length > maxIds) table
@@ -81,6 +89,10 @@ object ProbePrune {
       }
     }
   }
+
+  private def scannedBytes(table: DataFrame): BigInt =
+    table.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).sum
 
   private def orTree(cs: IndexedSeq[Column]): Column =
     if (cs.length == 1) cs.head

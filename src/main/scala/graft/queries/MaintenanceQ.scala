@@ -98,40 +98,20 @@ object MaintenanceQ {
       "merged_submissions" -> merged)
     // The six per-table dumps are independent fixture-scale writes —
     // each one is a short Spark job whose cost is scheduling latency,
-    // not compute, so run them from a small thread pool and let the
-    // scheduler overlap them (guide §2.6: actions are only sequential
-    // because driver code calls them sequentially). Measured at sf0.1:
-    // the serial writes were ~2 s of q85's ~3.4 s wall. Job group and
-    // description are thread-local; copy the caller's into each worker
-    // so the bench's cap watchdog can still cancel these jobs.
-    val sc = s.sparkContext
-    val parentGroup = sc.getLocalProperty("spark.jobGroup.id")
-    val parentDesc = sc.getLocalProperty("spark.job.description")
-    val parentInterrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
-    try {
-      tables.map { case (name, df) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            if (parentGroup != null)
-              sc.setLocalProperty("spark.jobGroup.id", parentGroup)
-            if (parentDesc != null)
-              sc.setLocalProperty("spark.job.description", parentDesc)
-            if (parentInterrupt != null)
-              sc.setLocalProperty("spark.job.interruptOnCancel", parentInterrupt)
-            val path = s"$root/$name"
-            if (name == "merged_submissions")
-              graft.maintenance.Dump.mergedJsonl(df, path)
-            else graft.maintenance.Dump.snapshotsJsonl(df, path)
-          }
-        })
-      }.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-        }
+    // not compute, so submit them together and let the scheduler
+    // overlap them (guide §2.6: actions are only sequential because
+    // driver code calls them sequentially). Measured at sf0.1: the
+    // serial writes were ~2 s of q85's ~3.4 s wall. Concurrent keeps
+    // the caller's job group, so the bench's cap watchdog can still
+    // cancel these jobs.
+    graft.engine.Concurrent.run(s.sparkContext)(tables.map { case (name, df) =>
+      () => {
+        val path = s"$root/$name"
+        if (name == "merged_submissions")
+          graft.maintenance.Dump.mergedJsonl(df, path)
+        else graft.maintenance.Dump.snapshotsJsonl(df, path)
       }
-    } finally pool.shutdown()
+    }: _*)
     tables.map { case (name, df) =>
       val path = s"$root/$name"
       val back = s.read.schema(df.schema).json(path)

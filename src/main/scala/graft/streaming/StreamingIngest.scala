@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.engine.Concurrent
 import graft.ingest.Normalize
 import graft.storage.Storage
 
@@ -69,11 +70,16 @@ object StreamingIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (snaps, kw, files, hashes) = Normalize.splitChildren(convert(batch))
-        storage.append("submission_snapshots", snaps)
-        storage.append("submission_snapshot_keywords", kw)
-        storage.append("submission_snapshot_files", files)
-        storage.append("submission_snapshot_file_hashes", hashes)
+        // converted once for the four appends, which run at once
+        val converted = convert(batch).persist()
+        try {
+          val (snaps, kw, files, hashes) = Normalize.splitChildren(converted)
+          Concurrent.run(batch.sparkSession.sparkContext)(
+            () => storage.append("submission_snapshots", snaps),
+            () => storage.append("submission_snapshot_keywords", kw),
+            () => storage.append("submission_snapshot_files", files),
+            () => storage.append("submission_snapshot_file_hashes", hashes))
+        } finally { converted.unpersist(); () }
       }
       .start()
 

@@ -1,14 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Api
 import graft.engine.Fixtures
-import graft.ingest.{BulkSources, Enrichment, Normalize}
+import graft.ingest.{BulkSources, Enrichment, Normalize, NormalizeUsers}
 import graft.storage.Storage
 
 /** End-to-end API surface over Storage: ingest → point lookups → merge
@@ -22,7 +27,7 @@ class ApiSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def freshApi(): Api = {
+  private def freshStorage(): Storage = {
     val s = spark
     val root = Files.createTempDirectory("graft_api").toString
     val st = new Storage(s, root)
@@ -32,7 +37,73 @@ class ApiSpec extends AnyFunSuite {
     st.append("submission_snapshot_file_hashes", Fixtures.fileHashes(s))
     st.append("user_snapshots", Fixtures.userSnapshots(s))
     st.append("archive_contributors", Fixtures.contributors(s))
-    new Api(st)
+    st
+  }
+
+  private def freshApi(): Api = new Api(freshStorage())
+
+  private val ingestTables = Seq("submission_snapshots",
+    "submission_snapshot_keywords", "submission_snapshot_files",
+    "submission_snapshot_file_hashes", "archive_contributors")
+
+  /** Three snapshots from a new contributor over two sites: ordered and
+    * unordered keywords, one snapshot without files, two files with
+    * three hashes between them. */
+  private def multiSiteBatch(): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      """{"website_id":"fa","site_submission_id":"s1",""" +
+        """"scan_datetime":"2022-07-01T00:00:00","title":"Rescan",""" +
+        """"ordered_keywords":["fox","forest"],"files":[{"site_file_id":"f7",""" +
+        """"file_url":"https://fa.example/f7.png","file_size":70,""" +
+        """"file_hashes":[{"algo_id":1,"hash_value":"qrs="},""" +
+        """{"algo_id":2,"hash_value":"AAECAwQFBgc="}]}]}""",
+      """{"website_id":"fa","site_submission_id":"s50",""" +
+        """"scan_datetime":"2022-07-02T00:00:00","title":"Bare",""" +
+        """"unordered_keywords":["sketch"],"files":[]}""",
+      """{"website_id":"e621","site_submission_id":"9001",""" +
+        """"scan_datetime":"2022-07-03T00:00:00","title":"Other site",""" +
+        """"unordered_keywords":["canine","solo","digital"],""" +
+        """"files":[{"site_file_id":"e1","file_url":"https://e621.example/e1.jpg",""" +
+        """"file_size":900,"file_hashes":[{"algo_id":1,"hash_value":"3q2+7w=="}]}]}""")
+      .toDF("payload")
+      .transform(graft.ingest.Formats.webSubmission(_, "payload",
+        lit("carol"), to_timestamp(lit("2022-07-04 00:00:00"))))
+  }
+
+  private def sortedRows(st: Storage, table: String): Seq[String] =
+    st.read(table).toJSON.collect().sorted.toSeq
+
+  /** Spark job groups of the jobs started while `body` runs, in start
+    * order. The listener bus delivers job starts in order, so a marker
+    * job run after `body` flushes it. */
+  private def jobGroupsDuring(body: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"flush-${System.nanoTime}"
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != marker).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Wait until every listener has seen every event posted so far (the
+    * status tracker is one of them). The bus is Spark-internal but
+    * public in bytecode. */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 
   test("viewSubmission merges one entity; listSubmissions distinct (Q1/Q3)") {
@@ -119,6 +190,80 @@ class ApiSpec extends AnyFunSuite {
     assert(ack("submission_snapshots") === 1L)
     assert(ack("submission_snapshot_keywords") === 1L)
     assert(api.viewSubmission("fa", "90").head().getAs[String]("title") === "New")
+  }
+
+  test("concurrent ingest lands the rows and acks of one-table-at-a-time writes") {
+    val batch = multiSiteBatch()
+    val concurrent = freshStorage()
+    val ack = new Api(concurrent).ingestSubmissions(batch)
+    // the reference model: the same writes, one after another
+    val serial = freshStorage()
+    val (s, k, f, h) = Normalize.splitChildren(batch)
+    serial.upsertDimension("archive_contributors",
+      NormalizeUsers.contributorsOf(batch), Seq("contributor_id"))
+    val expected = Seq("submission_snapshots" -> s,
+      "submission_snapshot_keywords" -> k, "submission_snapshot_files" -> f,
+      "submission_snapshot_file_hashes" -> h).map { case (table, df) =>
+      serial.append(table, df)
+      table -> df.count()
+    }.toMap
+    assert(expected === Map("submission_snapshots" -> 3L,
+      "submission_snapshot_keywords" -> 6L, "submission_snapshot_files" -> 2L,
+      "submission_snapshot_file_hashes" -> 3L))
+    assert(ack === expected)
+    ingestTables.foreach { table =>
+      assert(sortedRows(concurrent, table) === sortedRows(serial, table), table)
+    }
+    assert(concurrent.read("archive_contributors")
+      .filter(col("name") === "carol").count() === 1L)
+    assert(concurrent.read("submission_snapshots")
+      .select("website_id").distinct().count() === 2L)
+  }
+
+  test("every job of a concurrent ingest carries the caller's job group") {
+    val api = new Api(freshStorage())
+    val sc = spark.sparkContext
+    val group = s"ingest-caller-${System.nanoTime}"
+    val groups = jobGroupsDuring {
+      sc.setJobGroup(group, "concurrent ingest")
+      try {
+        api.ingestSubmissions(multiSiteBatch())
+        api.ingestUsers(graft.ingest.Formats.webUser(
+          spark.createDataFrame(Seq(Tuple1(
+            """{"website_id":"fa","site_user_id":"u77",""" +
+              """"scan_datetime":"2022-07-05T00:00:00","display_name":"New"}""")))
+            .toDF("payload"), "payload", lit("carol"),
+          to_timestamp(lit("2022-07-06 00:00:00"))))
+      } finally sc.clearJobGroup()
+    }
+    // the upsert's probe and five appends at least
+    assert(groups.size >= 6, groups)
+    assert(groups.forall(_ == group), groups)
+  }
+
+  test("a failed write is rethrown after the other writes finish; input unpersisted") {
+    val st = freshStorage()
+    // a regular file where the contributor table's directory should be:
+    // the upsert, first of the five writes, fails at once
+    val blocked = Paths.get(st.path("archive_contributors"))
+    Files.walk(blocked).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.write(blocked, "not a table".getBytes("UTF-8"))
+    val children = ingestTables.filter(_ != "archive_contributors")
+    val before = children.map(t => t -> st.read(t).count()).toMap
+    val batch = multiSiteBatch()
+    val err = intercept[Throwable](new Api(st).ingestSubmissions(batch))
+    drainListenerBus()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(batch.storageLevel === StorageLevel.NONE)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(chain.contains("archive_contributors"), chain)
+    // the four child appends all landed
+    val added = children.map(t => t -> (st.read(t).count() - before(t))).toMap
+    assert(added === Map("submission_snapshots" -> 3L,
+      "submission_snapshot_keywords" -> 6L, "submission_snapshot_files" -> 2L,
+      "submission_snapshot_file_hashes" -> 3L))
+    assert(Files.isRegularFile(blocked))
   }
 
   test("findfurrypicbot posts → 4 hashes per file (S5)") {

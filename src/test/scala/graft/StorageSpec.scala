@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Fixtures, Merge}
+import graft.engine.{Fixtures, Merge, ProbePrune}
 import graft.ingest.{Formats, Normalize}
 import graft.maintenance.Dump
 import graft.storage.Storage
@@ -183,6 +183,41 @@ class StorageSpec extends AnyFunSuite {
     val st = new Storage(s, root)
     assert(jobsDuring(st.read(p)) === 0, "cold memo")
     assert(jobsDuring(st.read(p)) === 0, "warm memo")
+  }
+
+  test("ProbePrune gates on the bytes a store scans: no probe on a small archive") {
+    val s = spark
+    val st = new Storage(s, tmpDir())
+    archive(st)
+    // more files in each child table: the scans grow fourfold,
+    // Catalyst's estimate of their join with the product
+    (1 to 3).foreach { _ =>
+      st.append("submission_snapshot_keywords", Fixtures.keywords(s))
+      st.append("submission_snapshot_files", Fixtures.files(s))
+      st.append("submission_snapshot_file_hashes", Fixtures.fileHashes(s))
+      st.append("archive_contributors", Fixtures.contributors(s))
+    }
+    val nested = Merge.nestedSubmissionSnapshots(st.read("submission_snapshots"),
+      st.read("submission_snapshot_keywords"), st.read("submission_snapshot_files"),
+      st.read("submission_snapshot_file_hashes"), st.read("archive_contributors"))
+    val touched = st.read("submission_snapshots")
+      .filter(col("site_submission_id") === "s2")
+      .select("website_id", "site_submission_id")
+    def prune() = ProbePrune.pruneToProbeKeys(nested, "site_submission_id",
+      touched, "site_submission_id")
+    // Catalyst sizes the joins as the product of their inputs, above
+    // the 256 MB threshold, while the scans are a few KB
+    assert(nested.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(256L << 20))
+    var kept: DataFrame = null
+    assert(jobsDuring { kept = prune() } === 0)
+    assert(kept eq nested)
+    System.setProperty("graft.probe.prune", "force")
+    try {
+      val forced = prune()
+      assert(!(forced eq nested))
+      assert(forced.select("site_submission_id").distinct()
+        .collect().map(_.getString(0)).toSet === Set("s2"))
+    } finally System.clearProperty("graft.probe.prune")
   }
 
   test("dimension upsert is get-or-create (A10/A11)") {
