@@ -1,8 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.plans.{GraftPlans, ResolveAsofJoin, UnresolvedAsofJoin}
 
 /** As-of (temporal) join: for every left row, attach the LATEST right
   * row with rightTime <= leftTime on the same key — the canonical
@@ -54,57 +60,6 @@ import org.apache.spark.sql.functions._
   * — left-outer semantics).
   */
 object AsofJoin {
-
-  /** Floating-point keys bypass Catalyst's NormalizeFloatingNumbers
-    * (which only rewrites Join/Window/Aggregate), so -0.0 vs 0.0 and
-    * NaN would hash to different shuffle partitions / probe-index
-    * entries and silently diverge from the composed path — the native
-    * paths reject rather than normalize (a float equality key is a
-    * modeling bug). Shared with the SQL surface's resolution rule
-    * ([[graft.plans.ResolveAsofJoin]]) so both front doors enforce
-    * one contract. */
-  private[graft] def hasFloat(
-      dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.FloatType |
-         org.apache.spark.sql.types.DoubleType => true
-    case s: org.apache.spark.sql.types.StructType =>
-      s.fields.exists(f => hasFloat(f.dataType))
-    case a: org.apache.spark.sql.types.ArrayType => hasFloat(a.elementType)
-    case m: org.apache.spark.sql.types.MapType =>
-      hasFloat(m.keyType) || hasFloat(m.valueType)
-    case _ => false
-  }
-
-  /** Memoized skew-routing decisions: (canonicalized right plan, time
-    * column, broadcast threshold) → "the stats pick the merge exec".
-    * Canonicalization normalizes exprIds, so re-planning the SAME
-    * dimension (a streaming foreachBatch loop, repeated queries over
-    * one stored table) hits the cache instead of re-running a
-    * driver-side optimizer pass per call. LRU-bounded at 128 entries —
-    * the retained canonical plans are one dimension fragment each, and
-    * distinct (plan, threshold) shapes in a JVM are few. Conf CHANGES
-    * participate in the key (a new threshold is a new entry), so a
-    * tuned threshold never reads a stale decision. */
-  private val statsRouteCache =
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans
-      .logical.LogicalPlan, String, Long), java.lang.Boolean](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans
-            .logical.LogicalPlan, String, Long), java.lang.Boolean])
-          : Boolean = size > 128
-    }
-
-  /** How many times the sizing probe actually ran (not served from
-    * [[statsRouteCache]]) — observability for the memoization spec. */
-  private[graft] val statsProbeCount =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Current entry count of [[statsRouteCache]] — observability for
-    * the LRU-cap spec (a long-lived multi-tenant session planning many
-    * distinct right sides must not grow driver memory unboundedly). */
-  private[graft] def statsRouteCacheSize: Int =
-    statsRouteCache.synchronized(statsRouteCache.size)
 
   /** Build the tagged union sides shared by [[asofJoin]] and
     * [[asofJoinSplit]]: left rows (side=1, null payload) and
@@ -187,378 +142,6 @@ object AsofJoin {
     * well-distributed. AsofJoinSpec asserts split == unsplit on
     * randomized data with a hot key; q84 runs it under q73's oracle.
     */
-  /** The same semantics as [[asofJoin]] through the engine's custom
-    * Catalyst operator ([[graft.plans.AsofJoinPlan]] →
-    * [[graft.plans.AsofJoinExec]]) instead of the union+window
-    * composition. Same output schema, same null/tie contract
-    * (AsofJoinSpec pins native == composed on randomized data); the
-    * plan differences are the point — each input is shuffled once AT
-    * ITS OWN WIDTH (no union of padded schemas) and the merge streams
-    * with O(1) held state (no WindowExec partition buffering), so a
-    * hot key degrades to sequential scan speed, not to a spilling
-    * buffer. Use this for wide inputs or skew-prone keys; [[asofJoin]]
-    * remains the composition baseline (q73 vs q126 bench twins).
-    *
-    * Filters applied ABOVE the result push through the node —
-    * [[graft.plans.PushFilterThroughAsofJoin]] moves left-column
-    * predicates into the left scan and mirrors key predicates onto the
-    * right scan. Column pruning does NOT traverse the node: project
-    * inputs to needed columns first (as the query-layer callers do).
-    *
-    * @param broadcast physical-path override. None (default) picks by
-    *                the right side's size estimate vs
-    *                autoBroadcastJoinThreshold: a dimension-sized right
-    *                plans as [[graft.plans.BroadcastAsofJoinExec]] —
-    *                the fact side is never shuffled OR sorted, the
-    *                scale win for the 100 TB-facts-vs-small-state shape.
-    *                Some(true)/Some(false) force broadcast/merge (the
-    *                gate queries force each path so both execs stay
-    *                oracle-checked regardless of stats).
-    * @param maxStale optional staleness bound (the [[asofJoinTolerance]]
-    *                contract) evaluated INSIDE the kernel — see that
-    *                method for semantics and the pruning argument.
-    * @param splitBounds optional (lo, hi) of the time axis, used ONLY
-    *                when the skewSplits conf reroutes this call through
-    *                [[asofJoinNativeSplit]]: a stored dimension that
-    *                already knows its range (e.g. a manifest note —
-    *                [[graft.storage.DurableStores.readNote]]) passes it
-    *                so the split skips its min/max job. Stale or
-    *                conservative bounds are safe (bucketOf clamps).
-    */
-  def asofJoinNative(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      tieBreak: String,
-      broadcast: Option[Boolean] = None,
-      maxStale: Option[Column] = None,
-      splitBounds: Option[(Double, Double)] = None): DataFrame = {
-    // deployment-level skew routing: `spark.graft.asof.skewSplits` >= 2
-    // sends merge-path joins through the time-bucketed native split
-    // (one hot entity stops serializing on one task) without any code
-    // change at the call sites — the same conf-only contract as
-    // GraftExtensions. Covered shapes: an explicit broadcast=Some(false)
-    // call, AND the default broadcast=None call whose right side is too
-    // big to broadcast — the stats-driven default is exactly the
-    // skew-prone shape most callers write, so the knob must protect it.
-    // Broadcast-path joins are exempt: the fact side is never shuffled
-    // there, so key skew cannot concentrate a task.
-    //
-    // Honesty about the estimate: the decision reads the SAME threshold
-    // as AsofJoinStrategy but sizes the STANDALONE right fragment at
-    // this call, BEFORE PruneAsofPayload has narrowed it to what the
-    // final query reads — so a wide right that would have pruned under
-    // the threshold is routed to the split even though the unrouted
-    // plan would have broadcast. That errs toward skew protection (the
-    // split is correct and shuffle-bound, never wrong); a caller who
-    // knows the post-prune width fits should say broadcast=Some(true),
-    // which this knob never overrides. The sizing itself is one
-    // driver-side optimizer pass over the right fragment — MEMOIZED per
-    // (canonicalized right plan, time column, threshold), so a hot loop
-    // of small as-of calls (streaming foreachBatch re-planning the same
-    // dimension every batch) pays it once, not per batch.
-    //
-    // Threshold and knob BOTH read from the left plan's own session
-    // conf — the thread-local SQLConf.get can belong to a different
-    // session (multi-session or foreign-thread use) and routing must
-    // see the exact conf the strategy will plan under.
-    val sessionConf = left.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf
-    val skewSplits = sessionConf
-      .getConfString("spark.graft.asof.skewSplits", "0").toInt
-    def statsPickMerge: Boolean = {
-      val threshold = sessionConf.autoBroadcastJoinThreshold
-      if (threshold <= 0) true
-      else {
-        val key = (right.queryExecution.analyzed.canonicalized,
-          rightTime, threshold)
-        statsRouteCache.synchronized {
-          Option(statsRouteCache.get(key))
-        } match {
-          case Some(cached) => cached.booleanValue()
-          case None =>
-            statsProbeCount.incrementAndGet()
-            val merge = right.filter(col(rightTime).isNotNull)
-              .queryExecution.optimizedPlan.stats.sizeInBytes > threshold
-            statsRouteCache.synchronized {
-              statsRouteCache.put(key, java.lang.Boolean.valueOf(merge))
-            }
-            merge
-        }
-      }
-    }
-    if (skewSplits >= 2 &&
-        (broadcast.contains(false) || (broadcast.isEmpty && statsPickMerge)))
-      asofJoinNativeSplit(left, right, keys, leftTime, rightTime, tieBreak,
-        numSplits = skewSplits, bounds = splitBounds, maxStale = maxStale)
-    else
-      asofJoinNativeImpl(left, right, keys, leftTime, rightTime, tieBreak,
-        broadcast, maxStale)
-  }
-
-  private def asofJoinNativeImpl(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      tieBreak: String,
-      broadcast: Option[Boolean],
-      maxStale: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      AttributeReference, CreateStruct}
-    import org.apache.spark.sql.classic
-    require(left.columns.forall(_ != "asof"),
-      "left side already has an 'asof' column")
-    // the staleness bound is PRECOMPUTED as a left column (analyzed
-    // Column arithmetic handles interval/decimal/integral time types
-    // uniformly) and handed to the kernels as one attribute — inside
-    // the exec it is a single row-local comparison on the held
-    // candidate's time, never a read of the output struct, so payload
-    // pruning above the node stays fully effective
-    val boundName = "__asof_bound"
-    require(maxStale.isEmpty || left.columns.forall(_ != boundName),
-      s"input columns may not use the reserved name $boundName")
-    val leftB = maxStale match {
-      case Some(ms) => left.withColumn(boundName, col(leftTime) - ms)
-      case None => left
-    }
-    val s = left.sparkSession.asInstanceOf[classic.SparkSession]
-    graft.plans.GraftPlans.install(s)
-    // re-alias every right column: a self-join's sides share exprIds
-    // (same scan), and the analyzer's relation-dedup must not need to
-    // rewrite a node it doesn't know — fresh Alias ids per call keep
-    // the two children disjoint by construction
-    val rightFresh = right.filter(col(rightTime).isNotNull)
-      .select(right.columns.map(c => col(c).as(c)).toSeq: _*)
-    val lPlan = leftB.queryExecution.analyzed
-    val rPlan = rightFresh.queryExecution.analyzed
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String) = {
-      val hits = plan.output.filter(_.name == name)
-      require(hits.size == 1,
-        s"column '$name' resolved to ${hits.size} attributes")
-      hits.head
-    }
-    val lKeys = keys.map(attr(lPlan, _))
-    val rKeys = keys.map(attr(rPlan, _))
-    lKeys.zip(rKeys).foreach { case (l, r) =>
-      require(l.dataType == r.dataType,
-        s"key type mismatch: ${l.name} ${l.dataType} vs ${r.dataType}") }
-    lKeys.foreach { k =>
-      require(!hasFloat(k.dataType),
-        s"as-of join key '${k.name}' is ${k.dataType}: floating-point " +
-          "keys are not supported (-0.0/0.0 and NaN do not normalize " +
-          "across partitioning and probe hashing) — cast the key to an " +
-          "integral, decimal, or string type")
-    }
-    val (lT, rT) = (attr(lPlan, leftTime), attr(rPlan, rightTime))
-    require(lT.dataType == rT.dataType,
-      s"time type mismatch: ${lT.dataType} vs ${rT.dataType}")
-    val payload = rPlan.output.filterNot(a => keys.contains(a.name))
-    val asofOut = AttributeReference(
-      "asof", CreateStruct(payload).dataType, nullable = true)()
-    val boundAttr = maxStale.map { _ =>
-      val b = attr(lPlan, boundName)
-      require(b.dataType == rT.dataType,
-        s"staleness bound type ${b.dataType} (leftTime - maxStale) must " +
-          s"equal the right time type ${rT.dataType} — the kernels " +
-          "compare them under one natural ordering")
-      b
-    }
-    val res = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(s,
-      graft.plans.AsofJoinPlan(
-      lPlan, rPlan, lKeys, rKeys, lT, rT, attr(rPlan, tieBreak),
-      payload, asofOut, broadcast, boundAttr))
-    if (maxStale.isDefined) res.drop(boundName) else res
-  }
-
-  /** The NATIVE operator's skew answer ([[asofJoinSplit]]'s
-    * time-bucketing lifted onto [[graft.plans.AsofJoinExec]]): the
-    * merge exec's ClusteredDistribution concentrates each key on ONE
-    * task, so a hot entity (the classic feature-store hot user — 25%+
-    * of both sides on one key) serializes a straggler at scale, and
-    * AQE's OptimizeSkewedJoin does not know custom nodes. This variant
-    * plans the SAME native node over (keys, coarse time bucket):
-    *
-    *  - both sides carry a `__b` bucket column (a monotone floor of
-    *    the time axis, bounds from one tiny min/max job — the same
-    *    cost class as range partitioning's sampling pass), so the
-    *    per-side shuffles hash on (key, bucket) and the hot key's work
-    *    spreads over up to `numSplits` tasks;
-    *  - each (key, source-bucket)'s LAST right row (max (time,
-    *    tieBreak)) is replicated into every later bucket, so a left
-    *    row whose latest prior right row lives in an earlier bucket
-    *    still sees it — the completeness argument is [[asofJoinSplit]]'s
-    *    verbatim: bucket assignment is monotone, equal times share a
-    *    bucket, so replicas never tie with native rows and the
-    *    in-bucket argmax IS the global argmax at-or-before;
-    *  - null-time left rows spread by a deterministic row hash (they
-    *    answer null in ANY bucket — the kernel returns null on a null
-    *    probe time — and pinning them to one bucket would re-create
-    *    the very hot spot this exists to remove).
-    *
-    * Identical results to [[asofJoinNative]]/[[asofJoin]] (AsofJoinSpec
-    * proves it on randomized hot-key data with nulls; q130 runs it
-    * under q73's DuckDB oracle). Forces the merge exec — if the right
-    * side is dimension-sized, use the broadcast path instead, which
-    * has no skew by construction (the fact side is never shuffled).
-    * Cost vs the plain native path: the bounds job, one extra window
-    * pass over the right side (per-bucket last pick), and ≤
-    * numSplits²/2 replicated rows per key — noise next to the inputs.
-    *
-    * @param bounds caller-supplied (lo, hi) of the time axis as
-    *               doubles — stored/bucketed dimensions that already
-    *               know their time range (a manifest, a partition
-    *               listing) pass it and SKIP the min/max job entirely
-    *               (two full time-column scans otherwise). Any clamp
-    *               is safe: [[bucketOf]] floors out-of-range times
-    *               into the edge buckets, so a stale or conservative
-    *               range changes the SPREAD, never the answer
-    *               (AsofJoinSpec pins supplied == computed). Also the
-    *               streaming entry's route — a bounds job cannot run
-    *               on an unbounded stream.
-    * @param maxStale optional staleness bound, threaded to the kernel
-    *               ([[asofJoinTolerance]] semantics): the in-bucket
-    *               winner IS the global winner (the carry argument),
-    *               so the bucket-local check equals the unsplit one.
-    */
-  def asofJoinNativeSplit(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      tieBreak: String,
-      numSplits: Int = 8,
-      bounds: Option[(Double, Double)] = None,
-      maxStale: Option[Column] = None): DataFrame = {
-    require(numSplits >= 2,
-      "numSplits must be >= 2 (use asofJoinNative for 1)")
-    require((left.columns ++ right.columns).forall(_ != "__b"),
-      "input columns may not use the reserved name __b")
-    val (boundsLo, boundsHi) = bounds match {
-      case Some((l, h)) => (l, h)
-      case None =>
-        // a bounds job cannot run on an unbounded stream: compute the
-        // axis from the static right side alone — bucketOf clamps, so
-        // stream rows outside the dimension's range land in the edge
-        // buckets (identical answers; only the spread differs)
-        val src =
-          if (left.isStreaming)
-            right.select(col(rightTime).cast("double").as("t"))
-          else left.select(col(leftTime).cast("double").as("t"))
-            .unionByName(right.select(col(rightTime).cast("double").as("t")))
-        val row = src
-          .agg(min(col("t")).as("lo"), max(col("t")).as("hi")).head()
-        if (row.isNullAt(0) || row.isNullAt(1))
-          (Double.NaN, Double.NaN)
-        else (row.getDouble(0), row.getDouble(1))
-    }
-    if (!(boundsHi > boundsLo))
-      return asofJoinNativeImpl(left, right, keys, leftTime, rightTime,
-        tieBreak, broadcast = Some(false), maxStale = maxStale)
-    val lo = boundsLo
-    val width = (boundsHi - lo) / numSplits
-    def bucketOf(t: Column): Column = {
-      val d = t.cast("double")
-      greatest(lit(0), least(lit(numSplits - 1),
-        floor((d - lit(lo)) / lit(width)).cast("int")))
-    }
-    val lb = left.withColumn("__b",
-      when(col(leftTime).isNull,
-        pmod(hash(left.columns.map(col): _*), lit(numSplits)).cast("int"))
-        .otherwise(bucketOf(col(leftTime))))
-    val rb = right.filter(col(rightTime).isNotNull)
-      .withColumn("__b", bucketOf(col(rightTime)))
-    val wLast = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col(rightTime).desc, col(tieBreak).desc)
-    val carried = rb
-      .withColumn("__rn", row_number().over(wLast))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("__b", explode(
-        when(col("__b") < numSplits - 1,
-          sequence(col("__b") + 1, lit(numSplits - 1)))
-          .otherwise(array().cast("array<int>"))))
-    asofJoinNativeImpl(lb, rb.unionByName(carried), keys :+ "__b",
-      leftTime, rightTime, tieBreak, broadcast = Some(false),
-      maxStale = maxStale)
-      .drop("__b")
-  }
-
-  /** As-of join with a STALENESS BOUND (the standard feature-store
-    * tolerance: `rightTime <= leftTime AND rightTime >= leftTime -
-    * maxStale` — "the last known state, unless it is too old to
-    * trust"). Equivalent to the bounded-window argmax by a one-line
-    * argument that makes it a pure post-condition on ANY of the
-    * engine's as-of implementations: the unbounded argmax picks the
-    * LATEST candidate at-or-before leftTime, so either that winner is
-    * inside the window (then it is also the bounded argmax — every
-    * other in-window candidate is earlier), or it is older than the
-    * bound (then NO candidate is in the window: anything in-window
-    * would be later than the winner yet still <= leftTime,
-    * contradicting the argmax). Nulling stale winners therefore equals
-    * re-running the join with the bounded predicate — no exec change,
-    * no extra shuffle, same cost as the unbounded operator plus one
-    * row-local comparison. AsofJoinSpec pins parity across
-    * composed/native/broadcast against a naive bounded argmax; q131
-    * runs it under a DuckDB bounded-window oracle.
-    *
-    * @param maxStale the bound, in the time column's own arithmetic
-    *                 (e.g. `lit(86400000000L)` for one day of epoch
-    *                 micros, or an INTERVAL literal for timestamps).
-    * @param impl     which physical path answers the unbounded join:
-    *                 "composed" ([[asofJoin]]), "native"
-    *                 ([[asofJoinNative]] merge exec), "broadcast"
-    *                 (the broadcast exec), "split"
-    *                 ([[asofJoinNativeSplit]]).
-    *
-    * Pruning: on the NATIVE paths (native/broadcast/split) the bound
-    * is evaluated inside the kernel — one comparison of the held
-    * candidate's own time against a precomputed `leftTime - maxStale`
-    * left column — so it never references the output struct and
-    * [[graft.plans.PruneAsofPayload]] narrows the payload exactly as
-    * it would for the unbounded join (AsofJoinSpec pins the pruned
-    * plan shape). Only the "composed" impl applies the bound as the
-    * post-condition rebuild described above, since the union+window
-    * formulation has no custom node to prune through anyway.
-    */
-  def asofJoinTolerance(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTime: String,
-      rightTime: String,
-      tieBreak: String,
-      maxStale: Column,
-      impl: String = "native"): DataFrame = impl match {
-    case "composed" =>
-      require(!keys.contains(rightTime),
-        s"rightTime '$rightTime' must be a payload column, not a key " +
-          "(the composed staleness bound reads it from the asof struct)")
-      // null out winners older than the bound; a null asof stays null
-      // (when without otherwise). asof.<rightTime> is never null — the
-      // kernel excludes null-time right rows before they can be held
-      asofJoin(left, right, keys, leftTime, rightTime, tieBreak)
-        .withColumn("asof",
-          when(col("asof").getField(rightTime) >= col(leftTime) - maxStale,
-            col("asof")))
-    case "native" =>
-      asofJoinNative(left, right, keys, leftTime, rightTime, tieBreak,
-        broadcast = Some(false), maxStale = Some(maxStale))
-    case "broadcast" =>
-      asofJoinNative(left, right, keys, leftTime, rightTime, tieBreak,
-        broadcast = Some(true), maxStale = Some(maxStale))
-    case "split" =>
-      asofJoinNativeSplit(left, right, keys, leftTime, rightTime, tieBreak,
-        maxStale = Some(maxStale))
-    case other => throw new IllegalArgumentException(
-      s"unknown asof impl '$other' (composed|native|broadcast|split)")
-  }
-
   def asofJoinSplit(
       left: DataFrame,
       right: DataFrame,
@@ -623,4 +206,124 @@ object AsofJoin {
       .filter(col("__side") === 1)
       .drop("__t", "__side", "__tie", "__payload", "__b")
   }
+
+  /** The same semantics as [[asofJoin]] through the engine's custom
+    * Catalyst operator ([[graft.plans.AsofJoinPlan]] →
+    * [[graft.plans.AsofJoinExec]] / [[graft.plans.BroadcastAsofJoinExec]])
+    * instead of the union+window composition. Same output schema, same
+    * null/tie contract (AsofJoinSpec pins native == composed on
+    * randomized data); the plan differences are the point — each input
+    * is shuffled once AT ITS OWN WIDTH (no union of padded schemas) and
+    * the merge streams with O(1) held state (no WindowExec partition
+    * buffering), so a hot key degrades to sequential scan speed, not to
+    * a spilling buffer. [[asofJoin]] remains the composition baseline
+    * (q73 vs q126 bench twins).
+    *
+    * One lowering: the arguments become a
+    * [[graft.plans.UnresolvedAsofJoin]] over the inputs' analyzed plans
+    * and go through [[graft.plans.ResolveAsofJoin.lower]], the code the
+    * `asof_join` SQL TVF lowers through, under the LEFT plan's own
+    * session conf (the thread-local SQLConf.get can belong to another
+    * session). Column resolution (the session's case sensitivity), the
+    * argument checks, skew routing and the split construction are
+    * therefore the SQL door's, and building the DataFrame starts no
+    * Spark job (except a split streaming join's bounds job, below).
+    *
+    * Filters applied ABOVE the result push through the node
+    * ([[graft.plans.PushFilterThroughAsofJoin]] moves left-column
+    * predicates into the left scan and mirrors key predicates onto the
+    * right scan), and [[graft.plans.PruneAsofPayload]] narrows the
+    * payload to the fields the query reads.
+    *
+    * @param broadcast physical path: None (default) picks by the right
+    *                side's size estimate vs autoBroadcastJoinThreshold —
+    *                a dimension-sized right plans as
+    *                [[graft.plans.BroadcastAsofJoinExec]], where the fact
+    *                side is never shuffled OR sorted; Some(true) /
+    *                Some(false) force broadcast / merge (the gate queries
+    *                force each path so both execs stay oracle-checked).
+    *                SQL: 'auto', 'broadcast', 'merge'.
+    * @param maxStale optional STALENESS BOUND, the feature-store
+    *                tolerance `rightTime >= leftTime - maxStale` ("the
+    *                last known state, unless it is too old to trust"): a
+    *                literal in the time column's own arithmetic, e.g.
+    *                `lit(86400000000L)` for a day of epoch micros or
+    *                `expr("INTERVAL 1 DAY")` for a timestamp axis. It is
+    *                evaluated INSIDE the kernels as one comparison of the
+    *                held candidate's own time against a precomputed
+    *                `leftTime - maxStale` left column, so it never reads
+    *                the `asof` struct and payload pruning is unaffected.
+    *                Correct by a bounded-argmax argument: the unbounded
+    *                argmax picks the LATEST candidate at-or-before
+    *                leftTime, so either that winner is inside the window
+    *                (then it is also the bounded argmax — every other
+    *                in-window candidate is earlier), or it is older than
+    *                the bound (then NO candidate is in the window:
+    *                anything in-window would be later than the winner
+    *                yet still <= leftTime, contradicting the argmax).
+    *                Nulling stale winners therefore equals re-running the
+    *                join with the bounded predicate — on the split too,
+    *                whose in-bucket winner IS the global winner. q131
+    *                runs it under a DuckDB bounded-window oracle.
+    * @param splitBounds optional (lo, hi) of the time axis as doubles,
+    *                used when the join is split: a stored dimension that
+    *                already knows its range (e.g. a manifest note —
+    *                [[graft.storage.DurableStores.readNote]]) passes it,
+    *                and the plan carries literals instead of a bounds
+    *                subquery over both time columns. Stale or
+    *                conservative bounds are answer-safe (the bucket
+    *                expression clamps); degenerate ones (hi <= lo) plan
+    *                the unsplit merge. SQL: 'split:N:lo:hi'.
+    * @param numSplits split the join over this many (>= 2) coarse time
+    *                buckets, the skew answer for a hot key
+    *                ([[graft.plans.ResolveAsofJoin.lowerSplit]]); plans
+    *                the merge exec. Without it,
+    *                `spark.graft.asof.skewSplits` >= 2 splits
+    *                merge-planned joins from conf alone. SQL: 'split:N'.
+    *                A split over a streaming left with no `splitBounds`
+    *                takes its axis from one min/max job over the static
+    *                right side when the DataFrame is built, because a
+    *                bounds subquery cannot run over an unbounded stream
+    *                (stream rows outside that axis clamp into the edge
+    *                buckets: the spread changes, never the answers).
+    */
+  def asofJoinNative(
+      left: DataFrame,
+      right: DataFrame,
+      keys: Seq[String],
+      leftTime: String,
+      rightTime: String,
+      tieBreak: String,
+      broadcast: Option[Boolean] = None,
+      maxStale: Option[Column] = None,
+      splitBounds: Option[(Double, Double)] = None,
+      numSplits: Option[Int] = None): DataFrame = {
+    val s = left.sparkSession.asInstanceOf[SparkSession]
+    GraftPlans.install(s)
+    def underLeftConf[T](f: => T): T =
+      SQLConf.withExistingConf(s.sessionState.conf)(f)
+    val u = UnresolvedAsofJoin(left.queryExecution.analyzed,
+      right.queryExecution.analyzed, keys, leftTime, rightTime, tieBreak,
+      broadcast, maxStale.map(literalOf(s, _)), numSplits, splitBounds)
+    val streamBounds =
+      if (left.isStreaming && splitBounds.isEmpty &&
+          underLeftConf(ResolveAsofJoin.splitsFor(u)).isDefined) {
+        val t = col(rightTime).cast("double")
+        val row = right.agg(min(t), max(t)).head()
+        Some(if (row.isNullAt(0)) (Double.NaN, Double.NaN)
+          else (row.getDouble(0), row.getDouble(1)))
+      } else None
+    PlanBridge.ofRows(s, underLeftConf(ResolveAsofJoin.lower(
+      streamBounds.fold(u)(b => u.copy(splitBounds = Some(b))))))
+  }
+
+  /** `maxStale` folded to the literal the lowering takes: the bound is
+    * a constant of the query, not a per-row expression. */
+  private def literalOf(s: SparkSession, c: Column): Literal =
+    s.emptyDataFrame.select(c).queryExecution.analyzed.expressions.head
+      match {
+        case Alias(e, _) if e.foldable => Literal.create(e.eval(), e.dataType)
+        case other => throw new IllegalArgumentException(
+          s"maxStale must fold to a literal, got $other")
+      }
 }

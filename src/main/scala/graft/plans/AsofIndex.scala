@@ -51,7 +51,7 @@ final class AsofIndex(
     * so payload pruning above the operator is unaffected. A non-null
     * bound row with a null value satisfies nothing (SQL comparison
     * semantics). Correct by the bounded-argmax post-condition proof on
-    * [[graft.operators.AsofJoin.asofJoinTolerance]]. */
+    * [[graft.operators.AsofJoin.asofJoinNative]]'s `maxStale`. */
   def probe(key: UnsafeRow, time: UnsafeRow, bound: UnsafeRow): InternalRow = {
     val e = index.get(key)
     if (e == null) null

@@ -29,7 +29,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * with O(1) held state ([[AsofJoinExec]]).
   *
   * The node is constructed already-resolved (attributes are taken from
-  * the analyzed child plans — [[graft.operators.AsofJoin.asofJoinNative]])
+  * the analyzed child plans — [[ResolveAsofJoin.lower]], which both
+  * the DataFrame and the SQL front door go through)
   * and planned by [[AsofJoinStrategy]];
   * [[PushFilterThroughAsofJoin]] keeps Catalyst's filter pushdown
   * working across it. Column pruning does NOT traverse the node (the

@@ -30,8 +30,8 @@ import org.apache.spark.sql.catalyst.expressions.{
   * struct and payload pruning stays transparent
   * ([[graft.plans.PruneAsofPayload]]). Correctness is the bounded-
   * argmax post-condition proof on [[graft.operators.AsofJoin
-  * .asofJoinTolerance]]: the unbounded winner is in-window iff any
-  * candidate is. A null bound satisfies nothing (SQL comparison
+  * .asofJoinNative]]'s `maxStale`: the unbounded winner is in-window
+  * iff any candidate is. A null bound satisfies nothing (SQL comparison
   * semantics — `r.t >= l.t - NULL` is never true).
   */
 final case class AsofMergerSpec(

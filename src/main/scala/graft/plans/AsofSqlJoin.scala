@@ -17,8 +17,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{
-  ArrayType, DayTimeIntervalType, DoubleType, IntegerType, NumericType,
-  StringType, TimestampNTZType, TimestampType}
+  ArrayType, DataType, DayTimeIntervalType, DoubleType, FloatType,
+  IntegerType, MapType, NumericType, StringType, StructType,
+  TimestampNTZType, TimestampType}
 
 /** The SQL surface of the native as-of operator family: a
   * table-valued function
@@ -44,30 +45,24 @@ import org.apache.spark.sql.types.{
   * argument EXPRESSIONS (the table names as string literals), so it
   * returns an [[UnresolvedAsofJoin]] carrying [[UnresolvedRelation]]
   * children plus the column NAMES; once the analyzer has resolved the
-  * children, [[ResolveAsofJoin]] lowers the node into the same
-  * construction [[graft.operators.AsofJoin.asofJoinNative]] builds —
-  * null-time right rows filtered, right columns re-aliased to fresh
-  * exprIds (self-joins from one scan stay disjoint), the same key /
-  * time / float-key type checks — so the two front doors cannot drift.
-  * The lowered plan then meets [[PushFilterThroughAsofJoin]] and
-  * [[PruneAsofPayload]] in the optimizer exactly like the DataFrame
-  * path (the SQL spec pins pushdown + pruning firing).
+  * children, [[ResolveAsofJoin]] lowers the node. The DataFrame door
+  * ([[graft.operators.AsofJoin.asofJoinNative]]) builds the same node
+  * over its inputs' analyzed plans and calls the same lowering, so the
+  * two front doors cannot drift. The lowered plan then meets
+  * [[PushFilterThroughAsofJoin]] and [[PruneAsofPayload]] in the
+  * optimizer (the SQL spec pins pushdown + pruning firing).
   *
-  * SKEW, from SQL (round 15 — the r14 verdict's top item): the
-  * deployment knob `spark.graft.asof.skewSplits` now routes the SQL
-  * front door too. When the conf is >= 2 and the join would plan the
-  * merge exec (an explicit 'merge', or an 'auto' whose right side's
-  * size estimate exceeds autoBroadcastJoinThreshold — the same stats +
-  * threshold contract [[AsofJoinStrategy]] plans by), the lowering
-  * builds the time-bucketed SPLIT construction
-  * ([[graft.operators.AsofJoin.asofJoinNativeSplit]]'s shape, see
-  * [[ResolveAsofJoin.lowerSplit]]), so a hot key spreads over
-  * `skewSplits` tasks instead of serializing on one. The explicit
-  * `'split'` path argument requests the same construction
-  * unconditionally. The split's bucket bounds are UNCORRELATED SCALAR
-  * SUBQUERIES (min/max of the two time axes), not a driver-side job:
-  * analysis stays jobless and Spark's subquery machinery executes —
-  * and reuses — the tiny bounds aggregate before the main stages.
+  * SKEW: the deployment knob `spark.graft.asof.skewSplits` routes
+  * merge-planned joins (an explicit 'merge', or an 'auto' whose right
+  * side's size estimate exceeds autoBroadcastJoinThreshold) through the
+  * time-bucketed split construction ([[ResolveAsofJoin.lowerSplit]]),
+  * so a hot key spreads over `skewSplits` tasks instead of serializing
+  * on one. The explicit `'split'` path argument requests the same
+  * construction unconditionally. Unless supplied, the split's bucket
+  * bounds are UNCORRELATED SCALAR SUBQUERIES (min/max of the two time
+  * axes), not a driver-side job: analysis stays jobless and Spark's
+  * subquery machinery executes — and reuses — the tiny bounds
+  * aggregate before the main stages.
   *
   * Registered by [[graft.GraftExtensions]] (injectTableFunction +
   * injectResolutionRule). Both pieces are session-BUILD-time hooks, so
@@ -81,8 +76,10 @@ object AsofSqlJoin {
   /** Argument shape: (left_table, right_table, keys_csv, left_time,
     * right_time, tie_break[, path[, max_stale]]) — path is 'auto' |
     * 'broadcast' | 'merge' | 'split'[':N'[':lo:hi']] as a string
-    * literal; max_stale is the staleness bound ([[graft.operators
-    * .AsofJoin.asofJoinTolerance]] semantics) as a foldable literal in
+    * literal, the SQL spelling of [[graft.operators.AsofJoin
+    * .asofJoinNative]]'s `broadcast`/`numSplits`/`splitBounds`;
+    * max_stale is the staleness bound (that method's `maxStale`
+    * semantics) as a foldable literal in
     * the time axis's own arithmetic — `86400000000` (or '86400000000')
     * for a day of epoch micros, `INTERVAL 1 DAY` (or 'INTERVAL 1 DAY')
     * for a timestamp axis. 'split:N:lo:hi' supplies the time axis's
@@ -90,8 +87,7 @@ object AsofSqlJoin {
     * manifest note, a partition listing) skips the bounds subquery and
     * its extra scan of both time columns; conservative or stale bounds
     * are answer-safe (the bucket expression clamps), degenerate ones
-    * (hi <= lo) fall back to the unsplit merge exactly like the
-    * DataFrame path's `bounds` parameter. */
+    * (hi <= lo) fall back to the unsplit merge. */
   val usage: String = "asof_join(left_table, right_table, " +
     "'k1,k2', left_time, right_time, tie_break[, " +
     "'auto'|'broadcast'|'merge'|'split'[':N'[':lo:hi']][, max_stale]])"
@@ -126,8 +122,6 @@ object AsofSqlJoin {
             val parts = s.stripPrefix("split:").split(":", -1).toSeq
             val n = try parts.head.toInt
               catch { case _: NumberFormatException => malformed }
-            require(n >= 2,
-              s"asof_join: split needs N >= 2 buckets, got $n")
             val bounds = parts.tail match {
               case Seq() => None
               case Seq(loRaw, hiRaw) =>
@@ -197,10 +191,14 @@ object AsofSqlJoin {
       builder)
 }
 
-/** The analysis-time placeholder [[AsofSqlJoin.builder]] returns: the
-  * relations are still unresolved when the TVF builder runs, so the
-  * typed [[AsofJoinPlan]] (whose attributes and output struct type
-  * need the children's schemas) cannot be built yet. `resolved` is
+/** The as-of arguments in plan form, field for field the SQL path
+  * string: `broadcast` ('auto' = None, 'broadcast', 'merge'),
+  * `numSplits` and `splitBounds` ('split:N[:lo:hi]'), `maxStale`.
+  * [[AsofSqlJoin.builder]] returns it over still-unresolved relations
+  * (the typed [[AsofJoinPlan]], whose attributes and output struct type
+  * need the children's schemas, cannot be built yet);
+  * [[graft.operators.AsofJoin.asofJoinNative]] builds it over analyzed
+  * plans and lowers it at once. `resolved` is
   * pinned false so the analyzer keeps iterating until
   * [[ResolveAsofJoin]] lowers it; like Spark's own unresolved nodes it
   * exposes no output. */
@@ -223,178 +221,193 @@ case class UnresolvedAsofJoin(
 }
 
 /** Lowers [[UnresolvedAsofJoin]] to [[AsofJoinPlan]] once both
-  * children are resolved — the plan-level twin of
-  * [[graft.operators.AsofJoin.asofJoinNative]]'s construction, with
-  * the same safety checks (unique column resolution — under the
-  * session's own case-sensitivity resolver, like every other SQL
-  * construct — key/time type equality, float-key rejection). Injected
-  * as an analyzer resolution rule by [[graft.GraftExtensions]].
-  *
-  * When the split is requested (explicit 'split' path) or conf-routed
-  * (`spark.graft.asof.skewSplits` over a merge-planned join), the
-  * lowering instead builds the (key, coarse time bucket) construction
-  * of [[graft.operators.AsofJoin.asofJoinNativeSplit]] — see
-  * [[lowerSplit]] — so the deployment knob protects BOTH front doors. */
+  * children are resolved. This is the ONE place as-of arguments become
+  * a plan: the SQL TVF reaches it as an analyzer resolution rule
+  * (injected by [[graft.GraftExtensions]]), and
+  * [[graft.operators.AsofJoin.asofJoinNative]] calls [[lower]] over its
+  * inputs' analyzed plans. Both front doors therefore share one set of
+  * checks (unique column resolution under the session's
+  * case-sensitivity resolver, key/time type equality, float-key
+  * rejection, reserved names), one skew routing ([[splitsFor]]) and one
+  * split construction ([[lowerSplit]]). */
 object ResolveAsofJoin extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp {
       case u: UnresolvedAsofJoin if u.childrenResolved => lower(u)
     }
 
-  private def lower(u: UnresolvedAsofJoin): LogicalPlan = {
-    // name resolution honors spark.sql.caseSensitive like the rest of
-    // the analyzer — asof_join(..., 'TS', ...) against a 'ts' column
-    // resolves exactly where a plain SELECT would
-    val resolver = conf.resolver
-    def attr(p: LogicalPlan, name: String, side: String): Attribute = {
-      val hits = p.output.filter(a => resolver(a.name, name))
-      require(hits.size == 1,
-        s"asof_join: column '$name' resolved to ${hits.size} attributes " +
-          s"on the $side side (${p.output.map(_.name).mkString(", ")})")
-      hits.head
-    }
-    // same construction as the DataFrame path, same guards: the left
-    // relation may not already carry an 'asof' column (the output
-    // would hold two same-named columns and die downstream with a
-    // generic ambiguity instead of this contract error)
-    require(u.left.output.forall(a => !resolver(a.name, "asof")),
-      "asof_join: the left table already has an 'asof' column")
-    // drop null right times (they cannot satisfy rightTime <=
-    // leftTime), then re-alias every right column so a self-join's
-    // sides get disjoint exprIds
-    val rFiltered = Filter(
+  /** Column lookup honoring spark.sql.caseSensitive like the rest of
+    * the analyzer: 'TS' finds a 'ts' column exactly where a plain
+    * SELECT or `col("TS")` would. */
+  private def attr(p: LogicalPlan, name: String, side: String): Attribute = {
+    val hits = p.output.filter(a => conf.resolver(a.name, name))
+    require(hits.size == 1,
+      s"as-of join: column '$name' resolved to ${hits.size} attributes " +
+        s"on the $side side (${p.output.map(_.name).mkString(", ")})")
+    hits.head
+  }
+
+  /** Floating-point keys bypass Catalyst's NormalizeFloatingNumbers
+    * (which only rewrites Join/Window/Aggregate), so -0.0 vs 0.0 and
+    * NaN would hash to different shuffle partitions / probe-index
+    * entries and silently diverge from the composed path — the native
+    * operator rejects rather than normalizes (a float equality key is
+    * a modeling bug). */
+  private def hasFloat(dt: DataType): Boolean = dt match {
+    case FloatType | DoubleType => true
+    case s: StructType => s.fields.exists(f => hasFloat(f.dataType))
+    case a: ArrayType => hasFloat(a.elementType)
+    case m: MapType => hasFloat(m.keyType) || hasFloat(m.valueType)
+    case _ => false
+  }
+
+  /** A fresh instance of the right side: null right times dropped (they
+    * cannot satisfy rightTime <= leftTime), then every column
+    * re-aliased so a self-join's sides get disjoint exprIds. */
+  private def freshRight(u: UnresolvedAsofJoin): LogicalPlan = {
+    val filtered = Filter(
       IsNotNull(attr(u.right, u.rightTime, "right")), u.right)
-    val rFresh = Project(
-      rFiltered.output.map(a => Alias(a, a.name)()), rFiltered)
+    Project(filtered.output.map(a => Alias(a, a.name)()), filtered)
+  }
+
+  /** How many time buckets the join is split over, if any. An explicit
+    * `numSplits` ('split:N' from SQL) always splits; otherwise
+    * `spark.graft.asof.skewSplits` >= 2 reroutes joins that would plan
+    * the MERGE exec — forced merge, or auto whose right side's size
+    * estimate exceeds the broadcast threshold (the same stats +
+    * threshold AsofJoinStrategy plans by, read from the session conf in
+    * scope). Broadcast-planned joins are exempt: the fact side is never
+    * shuffled there, so key skew cannot concentrate a task. The
+    * estimate is the analyzed (pre-prune) right fragment's, so a wide
+    * right that would prune under the threshold errs toward the split,
+    * which is answer-identical; a caller who knows better forces
+    * broadcast, which the knob never overrides. Degenerate supplied
+    * bounds (hi <= lo: an empty or constant axis per the caller's own
+    * manifest) never split — buckets could not spread work anyway. */
+  private[graft] def splitsFor(u: UnresolvedAsofJoin): Option[Int] = {
+    val skewSplits =
+      conf.getConfString("spark.graft.asof.skewSplits", "0").toInt
+    def statsPickMerge: Boolean = {
+      val threshold = conf.autoBroadcastJoinThreshold
+      threshold <= 0 || freshRight(u).stats.sizeInBytes > threshold
+    }
+    if (u.splitBounds.exists { case (lo, hi) => !(hi > lo) }) None
+    else u.numSplits.orElse(
+      if (skewSplits >= 2 && (u.broadcast.contains(false) ||
+          (u.broadcast.isEmpty && statsPickMerge))) Some(skewSplits)
+      else None)
+  }
+
+  private[graft] def lower(u: UnresolvedAsofJoin): LogicalPlan = {
+    val resolver = conf.resolver
+    // the output would otherwise hold two same-named columns and die
+    // downstream with a generic ambiguity instead of this contract error
+    require(u.left.output.forall(a => !resolver(a.name, "asof")),
+      "as-of join: the left side already has an 'asof' column")
+    u.numSplits.foreach(n => require(n >= 2,
+      s"as-of join: split needs N >= 2 buckets, got $n"))
     val lKeys = u.keys.map(attr(u.left, _, "left"))
-    val rKeys = u.keys.map(attr(rFresh, _, "right"))
+    val rKeys = u.keys.map(attr(u.right, _, "right"))
     lKeys.zip(rKeys).foreach { case (l, r) =>
       require(l.dataType == r.dataType,
-        s"asof_join: key type mismatch: ${l.name} ${l.dataType} vs " +
+        s"as-of join: key type mismatch: ${l.name} ${l.dataType} vs " +
           s"${r.dataType}")
     }
     lKeys.foreach { k =>
-      require(!graft.operators.AsofJoin.hasFloat(k.dataType),
-        s"asof_join: key '${k.name}' is ${k.dataType}: floating-point " +
-          "keys are not supported — cast to an integral, decimal, or " +
-          "string type")
+      require(!hasFloat(k.dataType),
+        s"as-of join: key '${k.name}' is ${k.dataType}: floating-point " +
+          "keys are not supported (-0.0/0.0 and NaN do not normalize " +
+          "across partitioning and probe hashing) — cast to an " +
+          "integral, decimal, or string type")
     }
     val lT = attr(u.left, u.leftTime, "left")
-    val rT = attr(rFresh, u.rightTime, "right")
+    val rT = attr(u.right, u.rightTime, "right")
     require(lT.dataType == rT.dataType,
-      s"asof_join: time type mismatch: ${lT.dataType} vs ${rT.dataType}")
-    val rKeyIds = rKeys.map(_.exprId).toSet
-    val payload = rFresh.output.filterNot(a => rKeyIds.contains(a.exprId))
-    // the staleness bound: same precomputed-left-column mechanics as
-    // the DataFrame path, with the arithmetic constructed RESOLVED for
-    // the two time-axis shapes the engine supports from SQL — a
-    // numeric axis minus a numeric literal, and a timestamp axis minus
-    // a day-time interval literal (TimestampAddInterval of the negated interval;
-    // its session-timezone field is filled by the analyzer's
-    // ResolveTimeZone in the same fixpoint)
+      s"as-of join: time type mismatch: ${lT.dataType} vs ${rT.dataType}")
+    // the staleness bound becomes a precomputed `leftTime - maxStale`
+    // left column, constructed RESOLVED for the two time-axis shapes the
+    // engine supports — a numeric axis minus a numeric literal, and a
+    // timestamp axis minus a day-time interval literal
+    // (TimestampAddInterval of the negated interval; its session-timezone
+    // field is filled by the analyzer's ResolveTimeZone)
     val boundExpr: Option[Expression] = u.maxStale.map { ms =>
       val built = (lT.dataType, ms.dataType) match {
         case (t: NumericType, s: NumericType) =>
           // NEVER narrow the literal into the axis type: a non-ANSI
-          // cast would silently wrap ('86400000000' over an INT axis)
-          // or truncate ('1.5' over a LONG axis) — fail the way the
-          // DataFrame path's widening arithmetic + type require does
+          // cast would silently wrap (86400000000 over an INT axis) or
+          // truncate (1.5 over a LONG axis)
           val widened = org.apache.spark.sql.catalyst.analysis
             .TypeCoercion.findTightestCommonType(t, s)
           require(widened.contains(t),
-            s"asof_join: max_stale type $s does not fit the $t time " +
+            s"as-of join: max_stale type $s does not fit the $t time " +
               "axis without narrowing — pass a literal of the axis's " +
               "own arithmetic")
           Subtract(lT, Cast(ms, t))
         case (TimestampType | TimestampNTZType, _: DayTimeIntervalType) =>
           TimestampAddInterval(lT, UnaryMinus(ms))
         case (t, s) => throw new IllegalArgumentException(
-          s"asof_join: max_stale of type $s cannot bound a $t time " +
+          s"as-of join: max_stale of type $s cannot bound a $t time " +
             "axis — use a numeric literal for a numeric axis, or a " +
             "day-time INTERVAL literal for a timestamp axis")
       }
       // the kernels compare the bound and the candidate's time under
-      // ONE natural ordering built from the time type — mirror the
-      // DataFrame path's require so e.g. a decimal axis (where
-      // Subtract bumps precision and changes the UnsafeRow format)
-      // fails loudly on BOTH front doors instead of comparing garbage
+      // ONE natural ordering built from the time type — e.g. a decimal
+      // axis (where Subtract bumps precision and changes the UnsafeRow
+      // format) fails loudly instead of comparing garbage
       require(built.dataType == rT.dataType,
-        s"asof_join: staleness bound type ${built.dataType} " +
+        s"as-of join: staleness bound type ${built.dataType} " +
           s"(left_time - max_stale) must equal the right time type " +
           s"${rT.dataType} — the kernels compare them under one " +
           "natural ordering")
       built
     }
-    // SKEW ROUTING, the conf contract shared with the DataFrame front
-    // door (operators/AsofJoin.asofJoinNative): an explicit 'split'
-    // always splits; otherwise skewSplits >= 2 reroutes joins that
-    // would plan the MERGE exec — forced 'merge', or 'auto' whose
-    // right side's size estimate exceeds the broadcast threshold (the
-    // same stats + threshold AsofJoinStrategy plans by, read from this
-    // session's conf). Broadcast-planned joins are exempt: the fact
-    // side is never shuffled there, so key skew cannot concentrate a
-    // task. The estimate is the analyzed (pre-prune) right fragment —
-    // erring toward the split, which is answer-identical.
-    val skewSplits =
-      conf.getConfString("spark.graft.asof.skewSplits", "0").toInt
-    def statsPickMerge: Boolean = {
-      val threshold = conf.autoBroadcastJoinThreshold
-      threshold <= 0 || rFresh.stats.sizeInBytes > threshold
-    }
-    // caller-supplied degenerate bounds (hi <= lo — an empty or
-    // constant axis per the caller's own manifest) fall back to the
-    // unsplit merge, exactly like the DataFrame path's `bounds`
-    // parameter: buckets could not spread work anyway
-    val degenerateBounds =
-      u.splitBounds.exists { case (lo, hi) => !(hi > lo) }
-    val effectiveSplits: Option[Int] =
-      (if (degenerateBounds) None else u.numSplits).orElse {
-        if (!degenerateBounds && skewSplits >= 2 &&
-            (u.broadcast.contains(false) ||
-              (u.broadcast.isEmpty && statsPickMerge))) Some(skewSplits)
-        else None
-      }
-    val effectiveBroadcast =
-      if (degenerateBounds) Some(false) else u.broadcast
-    effectiveSplits match {
+    require(boundExpr.isEmpty ||
+      u.left.output.forall(a => !resolver(a.name, "__asof_bound")),
+      "as-of join: the left side may not use the reserved name __asof_bound")
+    splitsFor(u) match {
       case Some(n) =>
         // bounds priority: caller literals ('split:N:lo:hi') > the
         // catalog's recorded axis (a stored dimension's
-        // graft.asof.bounds.<timeCol> table property) > the subquery.
-        // A deployment that only sets skewSplits therefore skips the
-        // bounds scan over registered stored dimensions too — the
-        // r15 residual where only the explicit SQL form consumed
-        // manifest bounds.
-        val bounds = u.splitBounds
-          .orElse(catalogBounds(u.right, u.rightTime, resolver))
-        lowerSplit(u, lKeys, lT, boundExpr, n, resolver, bounds)
-      case None => boundExpr match {
-        case None =>
-          AsofJoinPlan(u.left, rFresh, lKeys, rKeys, lT, rT,
-            attr(rFresh, u.tieBreak, "right"), payload,
-            asofAttr(payload), effectiveBroadcast)
-        case Some(be) =>
-          require(u.left.output.forall(a =>
-            !resolver(a.name, "__asof_bound")),
-            "asof_join: the left table may not use the reserved name " +
-              "__asof_bound")
-          val boundAlias = Alias(be, "__asof_bound")()
-          val leftB = Project(u.left.output :+ boundAlias, u.left)
-          val node = AsofJoinPlan(leftB, rFresh, lKeys, rKeys, lT, rT,
-            attr(rFresh, u.tieBreak, "right"), payload,
-            asofAttr(payload), effectiveBroadcast,
-            toleranceBound = Some(boundAlias.toAttribute))
-          // strip the helper column, exactly like the DataFrame path's
-          // drop — the all-attribute Project collapses into the user's
-          // own projection in the optimizer, so pruning is unaffected
-          Project(u.left.output :+ node.asofOut, node)
-      }
+        // graft.asof.bounds.<timeCol> table property) > the subquery
+        lowerSplit(u, lKeys, lT, boundExpr, n,
+          u.splitBounds.orElse(catalogBounds(u.right, u.rightTime)))
+      case None =>
+        val rFresh = freshRight(u)
+        val rKeysF = u.keys.map(attr(rFresh, _, "right"))
+        val rKeyIds = rKeysF.map(_.exprId).toSet
+        node(u, u.left, rFresh, lKeys, rKeysF, lT,
+          attr(rFresh, u.rightTime, "right"),
+          attr(rFresh, u.tieBreak, "right"),
+          rFresh.output.filterNot(a => rKeyIds.contains(a.exprId)),
+          // a requested split whose bounds are degenerate still plans
+          // the merge exec it asked for
+          if (u.numSplits.isDefined) Some(false) else u.broadcast,
+          boundExpr)
     }
   }
 
-  private def asofAttr(payload: Seq[Attribute]): AttributeReference =
-    AttributeReference(
-      "asof", CreateStruct(payload).dataType, nullable = true)()
+  /** The one [[AsofJoinPlan]] construction. The staleness bound rides
+    * as a `__asof_bound` left column handed to the kernels as one
+    * attribute: inside the exec it is a single row-local comparison on
+    * the held candidate's time, never a read of the output struct, so
+    * payload pruning above the node stays fully effective. Helper
+    * columns (`__asof_bound`, the split's `__b`) are stripped by a
+    * Project back to the user's left columns plus `asof`, which
+    * collapses into the user's own projection in the optimizer. */
+  private def node(u: UnresolvedAsofJoin, left: LogicalPlan,
+      right: LogicalPlan, lKeys: Seq[Attribute], rKeys: Seq[Attribute],
+      lT: Attribute, rT: Attribute, tie: Attribute, payload: Seq[Attribute],
+      broadcast: Option[Boolean], boundExpr: Option[Expression])
+      : LogicalPlan = {
+    val boundAlias = boundExpr.map(Alias(_, "__asof_bound")())
+    val leftB = boundAlias.fold(left)(b => Project(left.output :+ b, left))
+    val plan = AsofJoinPlan(leftB, right, lKeys, rKeys, lT, rT, tie,
+      payload, AttributeReference(
+        "asof", CreateStruct(payload).dataType, nullable = true)(),
+      broadcast, boundAlias.map(_.toAttribute))
+    if (leftB.output == u.left.output) plan
+    else Project(u.left.output :+ plan.asofOut, plan)
+  }
 
   /** The right side's time-axis bounds from catalog TABLE PROPERTIES
     * (`graft.asof.bounds.<timeCol>` = "lo,hi" as doubles — what
@@ -422,8 +435,8 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
     * can never change answers — only spread quality. Degenerate or
     * malformed values contribute nothing (with none found, the
     * subquery path remains). */
-  private def catalogBounds(right: LogicalPlan, timeName: String,
-      resolver: (String, String) => Boolean): Option[(Double, Double)] = {
+  private def catalogBounds(right: LogicalPlan, timeName: String)
+      : Option[(Double, Double)] = {
     import org.apache.spark.sql.catalyst.plans.logical.{
       Filter, LocalRelation, Project, SubqueryAlias, Union, View}
     import org.apache.spark.sql.catalyst.catalog.CatalogTable
@@ -445,7 +458,7 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
     def recordedAxis(ct: CatalogTable): Option[(Double, Double)] =
       ct.properties.collectFirst {
         case (k, v) if k.startsWith("graft.asof.bounds.") &&
-            resolver(k.stripPrefix("graft.asof.bounds."), timeName) => v
+            conf.resolver(k.stripPrefix("graft.asof.bounds."), timeName) => v
       }.flatMap { v =>
         v.split(",") match {
           case Array(loRaw, hiRaw) =>
@@ -466,23 +479,36 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
     }
   }
 
-  /** The split construction, built directly in logical-plan form —
-    * [[graft.operators.AsofJoin.asofJoinNativeSplit]]'s exact shape
-    * (same completeness argument: bucket assignment is a monotone
-    * floor of the time axis, each (key, bucket)'s LAST right row is
-    * replicated into every later bucket, null-time left rows spread by
-    * a deterministic row hash and answer null wherever they land),
-    * with ONE deliberate difference: the bucket bounds are
-    * UNCORRELATED SCALAR SUBQUERIES (a single min/max aggregate over
-    * the union of both time axes) instead of an eager driver-side job,
-    * because an analyzer rule must not run jobs. Spark's subquery
-    * machinery executes the tiny bounds aggregate before the main
-    * stages and ReuseSubquery collapses the canonically-equal
-    * references into one execution. A degenerate axis (empty inputs,
-    * all-null or constant times) makes the bucket expression answer 0
-    * for every row — exactly the unsplit semantics the DataFrame path
-    * falls back to, with a few harmless carried replicas into empty
-    * buckets.
+  /** The split construction: the join planned over (keys, coarse time
+    * bucket), so one hot entity (the classic feature-store hot user —
+    * 25%+ of both sides on one key) spreads over up to `numSplits`
+    * merge tasks instead of serializing on the one the merge exec's
+    * ClusteredDistribution gives it (AQE's OptimizeSkewedJoin does not
+    * know custom nodes). Completeness is the composed
+    * [[graft.operators.AsofJoin.asofJoinSplit]]'s argument: bucket
+    * assignment is a monotone floor of the time axis, equal times share
+    * a bucket, and each (key, bucket)'s LAST right row (max (time,
+    * tieBreak)) is replicated into every later bucket, so replicas never
+    * tie with native rows and the in-bucket argmax IS the global argmax
+    * at-or-before (and the staleness check on that winner equals the
+    * unsplit one). Null-time left rows spread by a deterministic row
+    * hash: they answer null in ANY bucket, and pinning them to one would
+    * re-create the hot spot this exists to remove. Cost vs the unsplit
+    * merge: one extra window pass over the right side (the per-bucket
+    * last pick) and ≤ numSplits²/2 replicated rows per key.
+    *
+    * The bucket bounds are `suppliedBounds` as literals when known (the
+    * caller's 'split:N:lo:hi' / `splitBounds`, or a catalog-recorded
+    * axis), else UNCORRELATED SCALAR SUBQUERIES — a single min/max
+    * aggregate over the union of both time axes — so building the plan
+    * runs no job; Spark's subquery machinery executes the tiny bounds
+    * aggregate before the main stages and ReuseSubquery collapses the
+    * canonically-equal references into one execution. Stale or
+    * conservative bounds are answer-safe (the bucket expression
+    * clamps). A degenerate computed axis (empty inputs, all-null or
+    * constant times) makes the bucket expression answer 0 for every
+    * row — the unsplit semantics, with a few harmless carried replicas
+    * into empty buckets.
     *
     * ID DISCIPLINE (load-bearing): every occurrence of the right table
     * — the bucketed union branch, the carried-replica branch, and each
@@ -499,28 +525,17 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
       u: UnresolvedAsofJoin,
       lKeys: Seq[Attribute], lT: Attribute,
       boundExpr: Option[Expression], numSplits: Int,
-      resolver: (String, String) => Boolean,
-      suppliedBounds: Option[(Double, Double)] = None): LogicalPlan = {
-    def attr(p: LogicalPlan, name: String, side: String): Attribute = {
-      val hits = p.output.filter(a => resolver(a.name, name))
-      require(hits.size == 1,
-        s"asof_join: column '$name' resolved to ${hits.size} attributes " +
-          s"on the $side side (${p.output.map(_.name).mkString(", ")})")
-      hits.head
-    }
+      suppliedBounds: Option[(Double, Double)]): LogicalPlan = {
     val reserved = Seq("__b", "__rn", "__t", "__bounds")
     (u.left.output ++ u.right.output).foreach { a =>
-      require(!reserved.exists(r => resolver(a.name, r)),
-        s"asof_join: input columns may not use the reserved names " +
+      require(!reserved.exists(r => conf.resolver(a.name, r)),
+        s"as-of join: input columns may not use the reserved names " +
           s"${reserved.mkString(", ")} (found '${a.name}')")
     }
-    // a FRESH null-filtered, alias-capped instance of the right table —
-    // one per use site, plus resolved handles into it
-    def freshRight(): (LogicalPlan, Attribute, Attribute, Seq[Attribute]) = {
-      val filtered = Filter(
-        IsNotNull(attr(u.right, u.rightTime, "right")), u.right)
-      val capped = Project(
-        filtered.output.map(a => Alias(a, a.name)()), filtered)
+    // a FRESH instance of the right table per use site, plus resolved
+    // handles into it
+    def freshHandles(): (LogicalPlan, Attribute, Attribute, Seq[Attribute]) = {
+      val capped = freshRight(u)
       (capped, attr(capped, u.rightTime, "right"),
         attr(capped, u.tieBreak, "right"),
         u.keys.map(attr(capped, _, "right")))
@@ -544,11 +559,6 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
         "__bounds")()), times)
     }
     def bucketOf(t: Expression): Expression = {
-      // caller-supplied bounds ('split:N:lo:hi', already checked
-      // non-degenerate by lower()) become plain literals — no bounds
-      // subquery is built at all, so the plan never re-scans the two
-      // time columns for the range a manifest already knows; the clamp
-      // below keeps stale or conservative bounds answer-safe
       val (lo: Expression, hi: Expression) = suppliedBounds match {
         case Some((l, h)) =>
           (Literal(l, DoubleType), Literal(h, DoubleType))
@@ -564,22 +574,19 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
         Least(Seq(Literal(numSplits - 1), raw))))
       If(GreaterThan(hi, lo), clamped, Literal(0))
     }
-    // left: bucket by time; null-time rows spread by a deterministic
-    // row hash (they answer null in ANY bucket — the kernel returns
-    // null on a null probe time — and pinning them to one bucket would
-    // re-create the hot spot this exists to remove)
+    // left: bucket by time; null-time rows spread by a row hash
     val lbAlias = Alias(If(IsNull(lT),
       Pmod(new Murmur3Hash(u.left.output), Literal(numSplits)),
       bucketOf(lT)), "__b")()
     val lb = Project(u.left.output :+ lbAlias, u.left)
     // union branch 1: the right table bucketed by time
-    val (rFresh1, rT1, tie1, rKeys1) = freshRight()
+    val (rFresh1, rT1, tie1, rKeys1) = freshHandles()
     val rbAlias = Alias(bucketOf(rT1), "__b")()
     val rb = Project(rFresh1.output :+ rbAlias, rFresh1)
     // union branch 2: each (key, bucket)'s LAST row (max (time,
     // tieBreak)) replicated into every later bucket — over ITS OWN
     // instance of the bucketed right table
-    val (rFresh2, rT2, tie2, rKeys2) = freshRight()
+    val (rFresh2, rT2, tie2, rKeys2) = freshHandles()
     val rb2Alias = Alias(bucketOf(rT2), "__b")()
     val rb2 = Project(rFresh2.output :+ rb2Alias, rFresh2)
     val partSpec: Seq[Expression] = rKeys2 :+ rb2Alias.toAttribute
@@ -615,24 +622,10 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
     def inUnion(a: Attribute): Attribute =
       rAll.output.find(_.exprId == a.exprId).getOrElse(a)
     val rKeyIds1 = rKeys1.map(_.exprId).toSet
-    val payload = rFresh1.output
-      .filterNot(a => rKeyIds1.contains(a.exprId)).map(inUnion)
-    val asofOut = asofAttr(payload)
-    val lKeysB = lKeys :+ lbAlias.toAttribute
-    val rKeysB = (rKeys1 :+ rbAlias.toAttribute).map(inUnion)
-    val (leftFinal, boundAttr) = boundExpr match {
-      case Some(be) =>
-        val boundAlias = Alias(be, "__asof_bound")()
-        (Project(lb.output :+ boundAlias, lb),
-          Some(boundAlias.toAttribute))
-      case None => (lb, None)
-    }
-    val node = AsofJoinPlan(leftFinal, rAll, lKeysB, rKeysB, lT,
-      inUnion(rT1), inUnion(tie1), payload, asofOut,
-      broadcast = Some(false), toleranceBound = boundAttr)
-    // strip the helper columns (__b, __asof_bound): the output is the
-    // user's left columns plus the asof struct, exactly like the
-    // unsplit lowering
-    Project(u.left.output :+ asofOut, node)
+    node(u, lb, rAll, lKeys :+ lbAlias.toAttribute,
+      (rKeys1 :+ rbAlias.toAttribute).map(inUnion), lT, inUnion(rT1),
+      inUnion(tie1),
+      rFresh1.output.filterNot(a => rKeyIds1.contains(a.exprId)).map(inUnion),
+      broadcast = Some(false), boundExpr)
   }
 }

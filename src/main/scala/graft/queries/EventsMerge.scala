@@ -223,11 +223,13 @@ object EventsMerge {
   }
 
   /** q73's lookup through the NATIVE SKEW-SPLIT path
-    * ([[graft.operators.AsofJoin.asofJoinNativeSplit]]): the custom
+    * ([[graft.operators.AsofJoin.asofJoinNative]] with `numSplits`,
+    * lowered by [[graft.plans.ResolveAsofJoin.lowerSplit]]): the custom
     * merge exec planned over (key, coarse time bucket) with carried
     * per-bucket last rows — the plan that spreads a hot entity over
-    * numSplits tasks instead of serializing it. Same oracle as
-    * q73/q84/q126–q128: six plans, one contract. */
+    * numSplits tasks instead of serializing it. The bucket bounds are
+    * an in-plan scalar subquery. Same oracle as q73/q84/q126–q128: six
+    * plans, one contract. */
   private val q130AsofJoinNativeSplit: Q = (s, d) => {
     import s.implicits._
     val ev = eventsTsMicros(s, d)
@@ -235,18 +237,18 @@ object EventsMerge {
       .select($"user_id", $"event_id", $"ts")
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"user_id", $"event_id", $"ts", $"value")
-    graft.operators.AsofJoin.asofJoinNativeSplit(
+    graft.operators.AsofJoin.asofJoinNative(
       clicks, purchases, Seq("user_id"), "ts", "ts", "event_id",
-      numSplits = 8)
+      numSplits = Some(8))
       .select($"user_id", $"event_id".as("click_id"),
         $"asof".getField("event_id").as("purchase_id"),
         $"asof".getField("value").as("purchase_value"))
   }
 
   /** q73's lookup with a STALENESS BOUND
-    * ([[graft.operators.AsofJoin.asofJoinTolerance]]): the latest
-    * prior purchase counts only if it happened within ONE DAY of the
-    * click — the feature-store tolerance contract (`r.ts <= l.ts AND
+    * ([[graft.operators.AsofJoin.asofJoinNative]]'s `maxStale`): the
+    * latest prior purchase counts only if it happened within ONE DAY of
+    * the click — the feature-store tolerance contract (`r.ts <= l.ts AND
     * r.ts >= l.ts - 1d` argmax). Runs through the native merge exec;
     * the DuckDB oracle replays the bounded correlated argmax. */
   private val q131AsofJoinStale: Q = (s, d) => {
@@ -256,9 +258,9 @@ object EventsMerge {
       .select($"user_id", $"event_id", $"ts")
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"user_id", $"event_id", $"ts", $"value")
-    graft.operators.AsofJoin.asofJoinTolerance(
+    graft.operators.AsofJoin.asofJoinNative(
       clicks, purchases, Seq("user_id"), "ts", "ts", "event_id",
-      maxStale = lit(86400L * 1000000L), impl = "native")
+      broadcast = Some(false), maxStale = Some(lit(86400L * 1000000L)))
       .select($"user_id", $"event_id".as("click_id"),
         $"asof".getField("event_id").as("purchase_id"),
         $"asof".getField("value").as("purchase_value"))
@@ -315,7 +317,7 @@ object EventsMerge {
     * drift): bucketed time-sorted layout, then the dimension's time
     * axis recorded TWICE — as the manifest-sidecar note (the q136
     * manifest-bounds workflow) and as a catalog TABLE PROPERTY
-    * (`graft.asof.bounds.ts`), which the SQL split lowering
+    * (`graft.asof.bounds.ts`), which the split lowering
     * ([[graft.plans.ResolveAsofJoin]]) reads so a conf-routed skew
     * split over the stored dimension skips its bounds subquery without
     * any analyzer → store coupling. The property rides the manifest's

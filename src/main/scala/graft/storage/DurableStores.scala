@@ -648,9 +648,8 @@ object DurableStores {
 
   /** Record a small DATA-DERIVED fact next to `store`'s manifest —
     * e.g. the as-of dimension's time-axis (min, max), written once at
-    * build so split-path probes can skip their own min/max job
-    * ([[graft.operators.AsofJoin.asofJoinNativeSplit]]'s bounds
-    * overload). Notes are deliberately NOT part of the build-params
+    * build so split-path probes can skip their bounds subquery
+    * ([[graft.operators.AsofJoin.asofJoinNative]]'s `splitBounds`). Notes are deliberately NOT part of the build-params
     * contract: `params` is the CALLER's declaration compared for
     * staleness, so a data-derived value there would force a rebuild
     * loop. Builders write notes before the manifest lands (a crashed

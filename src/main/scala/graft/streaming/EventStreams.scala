@@ -107,13 +107,12 @@ object EventStreams {
     * The batch family's deployment knobs work HERE too (StreamingSpec
     * pins stream == batch on both): `spark.graft.asof.skewSplits`
     * reroutes merge-path triggers through the time-bucketed split —
-    * the split's bounds come from the static dimension alone, since a
-    * min/max job cannot run on an unbounded stream (stream rows
-    * outside the dimension's range clamp into the edge buckets,
-    * changing spread, never answers) — and `maxStale` applies the
-    * [[graft.operators.AsofJoin.asofJoinTolerance]] staleness bound
-    * inside the kernel, one row-local comparison per event, pruning
-    * intact. */
+    * the split's bounds come from one min/max job over the static
+    * dimension alone, since a bounds subquery cannot run over an
+    * unbounded stream (stream rows outside the dimension's range clamp
+    * into the edge buckets, changing spread, never answers) — and
+    * `maxStale` applies the operator's staleness bound inside the
+    * kernel, one row-local comparison per event, pruning intact. */
   def enrichAsof(
       stream: DataFrame,
       dim: DataFrame,

@@ -504,8 +504,8 @@ class AsofJoinSpec extends AnyFunSuite {
       .sortBy(r => (r._1, r._2)).toSeq
     val composed = canon(AsofJoin.asofJoin(left, right, Seq("k"), "t", "t", "rid"))
     for (splits <- Seq(2, 3, 8)) {
-      assert(canon(AsofJoin.asofJoinNativeSplit(
-          left, right, Seq("k"), "t", "t", "rid", numSplits = splits))
+      assert(canon(AsofJoin.asofJoinNative(
+          left, right, Seq("k"), "t", "t", "rid", numSplits = Some(splits)))
         === composed, s"numSplits=$splits")
     }
     // degenerate axes fall back to the plain native path
@@ -514,7 +514,8 @@ class AsofJoinSpec extends AnyFunSuite {
     def canon2(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("lid", "asof.rid AS rid").collect()
       .map(r => (r.getLong(0), Option(r.get(1)))).sortBy(_._1).toSeq
-    assert(canon2(AsofJoin.asofJoinNativeSplit(lconst, rconst, Seq("k"), "t", "t", "rid"))
+    assert(canon2(AsofJoin.asofJoinNative(lconst, rconst, Seq("k"), "t", "t", "rid",
+        numSplits = Some(8)))
       === canon2(AsofJoin.asofJoin(lconst, rconst, Seq("k"), "t", "t", "rid")))
   }
 
@@ -537,8 +538,8 @@ class AsofJoinSpec extends AnyFunSuite {
     // numSplits = 8, not 4: murmur3 of (k=1, bucket 0..3) mod 4 is a
     // real 4-way collision (all land on partition 1) — with 8 buckets
     // the spread survives this suite's 4 shuffle partitions
-    val split = AsofJoin.asofJoinNativeSplit(
-      left, right, Seq("k"), "t", "t", "rid", numSplits = 8)
+    val split = AsofJoin.asofJoinNative(
+      left, right, Seq("k"), "t", "t", "rid", numSplits = Some(8))
     assert(canon(split) === canon(plain))
     // AQE's partition coalescing folds this test's few-KB shuffles into
     // one partition regardless of keys — turn it off to observe the
@@ -648,89 +649,6 @@ class AsofJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("the skewSplits sizing probe is memoized per (canonical plan, threshold)") {
-    // VERDICT r14 nit: the probe ran a driver-side optimizer pass over
-    // the right fragment on EVERY broadcast=None call while the conf
-    // was set — per-batch planning overhead in a streaming foreachBatch
-    // loop. The decision is now cached per (canonicalized right plan,
-    // time column, threshold): re-planning the same dimension probes
-    // once; a changed threshold is a new entry (never a stale answer).
-    val s = spark
-    import s.implicits._
-    // unique fixture data so no other test's cached plan collides
-    val left = (0L until 50L).map(i => (i % 3, i, 770001L + i))
-      .toDF("k", "lid", "t")
-    val right = (0L until 40L).map(i => (i % 3, 880001L + i, 770001L + i))
-      .toDF("k", "rid", "t")
-    val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.graft.asof.skewSplits", "4")
-      val before = AsofJoin.statsProbeCount.get()
-      AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      val afterFirst = AsofJoin.statsProbeCount.get()
-      assert(afterFirst === before + 1, "first call must probe")
-      // the same DataFrame again: served from the cache
-      AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      assert(AsofJoin.statsProbeCount.get() === afterFirst,
-        "an identical call must not re-probe")
-      // a RE-CREATED identical plan (fresh exprIds — what a streaming
-      // foreachBatch loop hands the operator every batch) also hits:
-      // the key is the CANONICALIZED plan
-      val rightAgain = (0L until 40L)
-        .map(i => (i % 3, 880001L + i, 770001L + i)).toDF("k", "rid", "t")
-      AsofJoin.asofJoinNative(left, rightAgain, Seq("k"), "t", "t", "rid")
-      assert(AsofJoin.statsProbeCount.get() === afterFirst,
-        "a canonically-equal re-created plan must not re-probe")
-      // a tuned threshold participates in the key — new entry, fresh
-      // decision, never a stale answer under the old threshold
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "123456")
-      AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      assert(AsofJoin.statsProbeCount.get() === afterFirst + 1,
-        "a changed threshold must probe once more")
-    } finally {
-      s.conf.unset("spark.graft.asof.skewSplits")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    }
-  }
-
-  test("statsRouteCache stays LRU-bounded under more distinct plans than the cap") {
-    // VERDICT r15 residual: the memoization map must not leak driver
-    // memory in a long-lived multi-tenant session planning many
-    // DISTINCT right sides — the cache is capped at 128 entries
-    // (access-order LRU), so >cap distinct plans evict the eldest
-    // instead of growing without bound, while repeated plans still hit.
-    val s = spark
-    import s.implicits._
-    val left = (0L until 10L).map(i => (i, i, 660001L + i))
-      .toDF("k", "lid", "t")
-    val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.graft.asof.skewSplits", "4")
-      // 140 structurally distinct right plans (the literal varies) —
-      // each is a new cache key; the map must stay at the 128 cap
-      (0 until 140).foreach { i =>
-        val right = (0L until 5L).map(j => (j, 550001L + i * 10 + j,
-          660001L + j)).toDF("k", "rid", "t")
-          .filter($"rid" =!= (i + 1234567L)) // per-i literal: distinct canonical plan
-        AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      }
-      assert(AsofJoin.statsRouteCacheSize <= 128,
-        s"cache must stay at the 128-entry cap, got " +
-          s"${AsofJoin.statsRouteCacheSize}")
-      // memoization still works for a repeated plan after the churn
-      val right = (0L until 5L).map(j => (j, 440001L + j, 660001L + j))
-        .toDF("k", "rid", "t")
-      val before = AsofJoin.statsProbeCount.get()
-      AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
-      assert(AsofJoin.statsProbeCount.get() === before + 1,
-        "a repeated plan must still probe once and then hit the cache")
-    } finally {
-      s.conf.unset("spark.graft.asof.skewSplits")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    }
-  }
-
   test("caller-supplied split bounds skip the min/max job; answers unchanged") {
     val s = spark
     import s.implicits._
@@ -740,8 +658,9 @@ class AsofJoinSpec extends AnyFunSuite {
       .selectExpr("lid", "asof.rid AS rid").collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
       .sortBy(_._1).toSeq
-    val computed = canon(AsofJoin.asofJoinNativeSplit(
-      left, right, Seq("k"), "t", "t", "rid", numSplits = 4))
+    val computedDf = AsofJoin.asofJoinNative(
+      left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4))
+    val computed = canon(computedDf)
     // building the DataFrame with supplied bounds must launch ZERO
     // jobs (the min/max `.head()` is the job the overload removes —
     // stored/bucketed dimensions carry their range in a manifest)
@@ -753,9 +672,9 @@ class AsofJoinSpec extends AnyFunSuite {
     }
     s.sparkContext.addSparkListener(listener)
     try {
-      val supplied = AsofJoin.asofJoinNativeSplit(
-        left, right, Seq("k"), "t", "t", "rid", numSplits = 4,
-        bounds = Some((0.0, 52.0)))
+      val supplied = AsofJoin.asofJoinNative(
+        left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4),
+        splitBounds = Some((0.0, 52.0)))
       Thread.sleep(500) // listener bus is async; give a job time to surface
       assert(jobs.get() === 0,
         "supplied bounds must not launch the bounds job at build time")
@@ -763,21 +682,22 @@ class AsofJoinSpec extends AnyFunSuite {
         "supplied bounds must not change answers")
       // a CONSERVATIVE range is also safe: bucketOf clamps out-of-range
       // times into the edge buckets — spread changes, answers don't
-      val clamped = canon(AsofJoin.asofJoinNativeSplit(
-        left, right, Seq("k"), "t", "t", "rid", numSplits = 4,
-        bounds = Some((10.0, 30.0))))
+      val clamped = canon(AsofJoin.asofJoinNative(
+        left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4),
+        splitBounds = Some((10.0, 30.0))))
       assert(clamped === computed)
-      // and the unsupplied path DOES run its bounds job (the cost the
-      // overload exists to skip)
-      val before = jobs.get()
-      AsofJoin.asofJoinNativeSplit(
-        left, right, Seq("k"), "t", "t", "rid", numSplits = 4)
-      var waited = 0
-      while (jobs.get() === before && waited < 5000) {
-        Thread.sleep(100); waited += 100
-      }
-      assert(jobs.get() > before,
-        "the default path runs the min/max bounds job")
+      // supplied bounds plan no bounds subquery; computed bounds plan
+      // one (the min/max aggregate rides the plan as a scalar subquery,
+      // its several references canonically equal)
+      def boundsSubqueries(df: org.apache.spark.sql.DataFrame): Int =
+        df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+          case sq: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
+            sq.plan.canonicalized
+        })).distinct.size
+      assert(boundsSubqueries(supplied) === 0,
+        "supplied bounds must not plan the bounds subquery")
+      assert(boundsSubqueries(computedDf) === 1,
+        "computed bounds plan one bounds subquery")
     } finally s.sparkContext.removeSparkListener(listener)
   }
 
@@ -797,9 +717,9 @@ class AsofJoinSpec extends AnyFunSuite {
       .toDF("k", "rid", "t", "v1", "v2", "v3", "v4")
     val bound = 11L
     for (impl <- Seq("native", "broadcast")) {
-      val q = AsofJoin.asofJoinTolerance(left, right, Seq("k"), "t", "t",
-        "rid", maxStale = org.apache.spark.sql.functions.lit(bound),
-        impl = impl)
+      val q = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t",
+        "rid", broadcast = Some(impl == "broadcast"),
+        maxStale = Some(org.apache.spark.sql.functions.lit(bound)))
         .selectExpr("k", "lid", "asof.v2 AS v2", "asof.v4 AS v4")
       val node = q.queryExecution.optimizedPlan.collect {
         case a: graft.plans.AsofJoinPlan => a }
@@ -863,8 +783,9 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(canon(AsofJoin.asofJoinNative(
       left, right, Seq("k"), "t", "t", "rid", broadcast = Some(true)))
       === composed, "broadcast exec")
-    assert(canon(AsofJoin.asofJoinNativeSplit(
-      left, right, Seq("k"), "t", "t", "rid")) === composed, "split")
+    assert(canon(AsofJoin.asofJoinNative(
+      left, right, Seq("k"), "t", "t", "rid", numSplits = Some(8)))
+      === composed, "split")
   }
 
   test("tolerance asof equals the bounded argmax across all four implementations") {
@@ -894,15 +815,20 @@ class AsofJoinSpec extends AnyFunSuite {
       }
       (lid, w.map(_._2), w.map(_._4))
     }.sortBy(_._1)
-    for (impl <- Seq("composed", "native", "broadcast", "split")) {
-      assert(canon(AsofJoin.asofJoinTolerance(
-          left, right, Seq("k"), "t", "t", "rid",
-          maxStale = org.apache.spark.sql.functions.lit(bound), impl = impl))
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // the reference: the composed join with stale winners nulled as a
+    // post-condition (the bounded-argmax argument on asofJoinNative's
+    // maxStale); the native paths evaluate the bound in the kernel
+    val composed = AsofJoin.asofJoin(left, right, Seq("k"), "t", "t", "rid")
+      .withColumn("asof",
+        when(col("asof").getField("t") >= col("t") - lit(bound), col("asof")))
+    assert(canon(composed) === expected, "impl=composed")
+    for ((impl, bc, splits) <- Seq(("native", Some(false), None),
+        ("broadcast", Some(true), None), ("split", None, Some(8)))) {
+      assert(canon(AsofJoin.asofJoinNative(
+          left, right, Seq("k"), "t", "t", "rid", broadcast = bc,
+          maxStale = Some(lit(bound)), numSplits = splits))
         === expected, s"impl=$impl")
-    }
-    intercept[IllegalArgumentException] {
-      AsofJoin.asofJoinTolerance(left, right, Seq("k"), "t", "t", "rid",
-        maxStale = org.apache.spark.sql.functions.lit(bound), impl = "nope")
     }
   }
 
@@ -939,9 +865,9 @@ class AsofJoinSpec extends AnyFunSuite {
       (1L, 900L, "2024-01-09 12:00:00", "fresh"),   // 1d before lid 100
       (1L, 901L, "2024-01-01 12:00:00", "stale"))   // 19d before lid 101
       .toDF("k", "rid", "t", "v").withColumn("t", $"t".cast("timestamp"))
-    val out = AsofJoin.asofJoinTolerance(left, right, Seq("k"), "t", "t",
-        "rid", maxStale = org.apache.spark.sql.functions.expr("INTERVAL 2 DAYS"),
-        impl = "native")
+    val out = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t",
+        "rid", broadcast = Some(false),
+        maxStale = Some(org.apache.spark.sql.functions.expr("INTERVAL 2 DAYS")))
       .selectExpr("lid", "asof.v AS v")
       .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(out === Map(
@@ -960,8 +886,8 @@ class AsofJoinSpec extends AnyFunSuite {
       .selectExpr("lid", "asof.rid AS rid")
       .collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
       .sortBy(_._1).toSeq
-    assert(canon(AsofJoin.asofJoinNativeSplit(
-        left, right, Seq("k1", "k2"), "t", "t", "rid", numSplits = 4))
+    assert(canon(AsofJoin.asofJoinNative(
+        left, right, Seq("k1", "k2"), "t", "t", "rid", numSplits = Some(4)))
       === canon(AsofJoin.asofJoin(left, right, Seq("k1", "k2"), "t", "t", "rid")))
   }
 
@@ -1355,5 +1281,76 @@ class AsofJoinSpec extends AnyFunSuite {
           Option(r.get(2)).map(_.asInstanceOf[Long])))
         .sortBy(r => (r._1, r._2)).toSeq
     assert(run(1, 1) === run(7, 3))
+  }
+
+  test("building a DataFrame split or a conf-routed join starts no Spark job; q130 rows unchanged") {
+    // the split's time-axis bounds are a scalar subquery inside the
+    // plan, so the bounds aggregate runs with the query, not when the
+    // DataFrame is built
+    val s = spark
+    import s.implicits._
+    val sf = "/root/testdata/sf0.001"
+    val events = graft.Tables.t(s, sf, "events")
+      .withColumn("ts",
+        org.apache.spark.sql.functions.unix_micros($"ts".cast("timestamp")))
+    val clicks = events.filter($"event_type" === "click")
+      .select($"user_id", $"event_id", $"ts")
+    val purchases = events.filter($"event_type" === "purchase")
+      .select($"user_id", $"event_id", $"ts", $"value")
+    // job starts seen while `body` runs; the listener bus delivers them
+    // in order, so a marker job run after `body` flushes it
+    def jobsDuring(body: => Any): Int = {
+      val sc = s.sparkContext
+      val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(Option(j.properties)
+            .map(_.getProperty("spark.jobGroup.id")).orNull))
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        val marker = s"flush-${System.nanoTime}"
+        sc.setJobGroup(marker, "listener flush")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        Iterator.continually(
+          groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .takeWhile(g => g != null && g != marker).size
+      } finally sc.removeSparkListener(listener)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    def q130Shape(df: org.apache.spark.sql.DataFrame) = df
+      .select($"user_id", $"event_id".as("click_id"),
+        $"asof".getField("event_id").as("purchase_id"),
+        $"asof".getField("value").as("purchase_value"))
+    val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    var split: org.apache.spark.sql.DataFrame = null
+    var routed: org.apache.spark.sql.DataFrame = null
+    try {
+      s.conf.set("spark.graft.asof.skewSplits", "8")
+      // a 1-byte threshold: the routing sizes the right side from stats
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      val jobs = jobsDuring {
+        split = AsofJoin.asofJoinNative(clicks, purchases, Seq("user_id"),
+          "ts", "ts", "event_id", numSplits = Some(8))
+        routed = AsofJoin.asofJoinNative(clicks, purchases, Seq("user_id"),
+          "ts", "ts", "event_id")
+      }
+      assert(jobs === 0, "building the joins must not start a Spark job")
+      assert(routed.queryExecution.analyzed.collect {
+        case a: graft.plans.AsofJoinPlan => a.leftKeys.map(_.name)
+      } === Seq(Seq("user_id", "__b")), "the conf must route to the split")
+    } finally {
+      s.conf.unset("spark.graft.asof.skewSplits")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
+    val q73 = rows(graft.queries.EventsMerge.queries("q73_asof_join")(s, sf))
+    assert(q73.nonEmpty)
+    assert(rows(q130Shape(split)) === q73)
+    assert(rows(q130Shape(routed)) === q73)
+    assert(rows(graft.queries.EventsMerge
+      .queries("q130_asof_join_native_split")(s, sf)) === q73)
   }
 }

@@ -201,17 +201,17 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(pnode.right.exists(_.isInstanceOf[LFilter]),
         "key predicate must mirror onto the right side")
       assert(pushed.collect().length === 10)
-      // the 8th argument is the staleness bound (asofJoinTolerance from
-      // SQL): numeric literal over the numeric axis, kernel-evaluated —
+      // the 8th argument is the staleness bound (asofJoinNative's
+      // maxStale from SQL): numeric literal over the numeric axis, kernel-evaluated —
       // equals the DataFrame operator, and pruning still fires
       val staleSql = s.sql(
         """SELECT lid, asof.v2 AS v2
           |FROM asof_join('asof_sql_left', 'asof_sql_right',
           |               'k', 't', 't', 'rid', 'merge', '2')""".stripMargin)
-      val staleDf = graft.operators.AsofJoin.asofJoinTolerance(
+      val staleDf = graft.operators.AsofJoin.asofJoinNative(
         s.table("asof_sql_left"), s.table("asof_sql_right"),
-        Seq("k"), "t", "t", "rid",
-        maxStale = org.apache.spark.sql.functions.lit(2L), impl = "native")
+        Seq("k"), "t", "t", "rid", broadcast = Some(false),
+        maxStale = Some(org.apache.spark.sql.functions.lit(2L)))
         .selectExpr("lid", "asof.v2 AS v2")
       def canonS(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
@@ -235,11 +235,11 @@ class ExtensionsSpec extends AnyFunSuite {
           |FROM asof_join('asof_sql_left_ts', 'asof_sql_right_ts',
           |               'k', 'ts', 'ts', 'rid', 'broadcast',
           |               'INTERVAL 2 HOURS')""".stripMargin)
-      val staleTsDf = graft.operators.AsofJoin.asofJoinTolerance(
+      val staleTsDf = graft.operators.AsofJoin.asofJoinNative(
         s.table("asof_sql_left_ts"), s.table("asof_sql_right_ts"),
-        Seq("k"), "ts", "ts", "rid",
-        maxStale = org.apache.spark.sql.functions.expr("INTERVAL 2 HOURS"),
-        impl = "broadcast")
+        Seq("k"), "ts", "ts", "rid", broadcast = Some(true),
+        maxStale = Some(
+          org.apache.spark.sql.functions.expr("INTERVAL 2 HOURS")))
         .selectExpr("lid", "asof.rid AS rid")
       def canonT(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
@@ -735,6 +735,134 @@ class ExtensionsSpec extends AnyFunSuite {
         s.conf.unset("spark.graft.asof.skewSplits")
         s.sql("DROP TABLE IF EXISTS asof_cb_right")
       }
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("asof_join front doors: the DataFrame call and the SQL TVF give the same rows and executed plan on every path") {
+    // both doors lower through ResolveAsofJoin.lower, so for each path
+    // the answers and the executed operator sequence must be identical
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    try {
+      val s = SparkSession.builder().master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        // the final plan without adaptive re-planning: one operator
+        // sequence per query to compare
+        .config("spark.sql.adaptive.enabled", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      import s.implicits._
+      import org.apache.spark.sql.{Column, DataFrame}
+      import org.apache.spark.sql.functions.{expr, lit}
+      import graft.operators.AsofJoin
+      (0L until 200L).map(i => (i % 3, i, i % 61))
+        .toDF("k", "lid", "t").createOrReplaceTempView("fd_left")
+      (0L until 150L).map(i => (i % 3, 1000L + i, i % 53, s"v$i"))
+        .toDF("k", "rid", "t", "v").createOrReplaceTempView("fd_right")
+      s.sql("SELECT k, lid, timestamp_seconds(t * 3600) AS t FROM fd_left")
+        .createOrReplaceTempView("fd_left_ts")
+      s.sql("SELECT k, rid, timestamp_seconds(t * 3600) AS t, v FROM fd_right")
+        .createOrReplaceTempView("fd_right_ts")
+      def viaSql(path: String, extra: String = "", ts: Boolean = false) = {
+        val sfx = if (ts) "_ts" else ""
+        s.sql(s"""SELECT k, lid, asof.rid AS rid
+                 |FROM asof_join('fd_left$sfx', 'fd_right$sfx',
+                 |               'k', 't', 't', 'rid', '$path'$extra)"""
+          .stripMargin)
+      }
+      def viaDf(broadcast: Option[Boolean] = None,
+          maxStale: Option[Column] = None, numSplits: Option[Int] = None,
+          splitBounds: Option[(Double, Double)] = None, ts: Boolean = false,
+          keys: Seq[String] = Seq("k"), time: String = "t",
+          tie: String = "rid") = {
+        val sfx = if (ts) "_ts" else ""
+        AsofJoin.asofJoinNative(s.table(s"fd_left$sfx"),
+          s.table(s"fd_right$sfx"), keys, time, time, tie, broadcast,
+          maxStale, splitBounds, numSplits)
+          .selectExpr("k", "lid", "asof.rid AS rid")
+      }
+      def rows(df: DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          Option(r.get(2)).map(_.asInstanceOf[Long]))).sortBy(_._2).toSeq
+      def ops(df: DataFrame): Seq[String] =
+        df.queryExecution.executedPlan.collectWithSubqueries {
+          case p => p.nodeName }
+      // returns the operator sequence for the path-specific pins below
+      def same(what: String, sql: DataFrame, df: DataFrame): Seq[String] = {
+        assert(rows(sql) === rows(df), what)
+        assert(ops(sql) === ops(df), what)
+        ops(df)
+      }
+      val autoSmall = same("auto, small right", viaSql("auto"), viaDf())
+      assert(autoSmall.contains("BroadcastAsofJoin"), autoSmall)
+      val threshold = "spark.sql.autoBroadcastJoinThreshold"
+      val prevThreshold = s.conf.get(threshold)
+      try {
+        s.conf.set(threshold, "1") // every right side is "large"
+        val autoLarge = same("auto, large right", viaSql("auto"), viaDf())
+        assert(autoLarge.contains("AsofJoin") &&
+          !autoLarge.contains("BroadcastAsofJoin"), autoLarge)
+      } finally s.conf.set(threshold, prevThreshold)
+      val merge = same("merge", viaSql("merge"), viaDf(Some(false)))
+      assert(!merge.contains("BroadcastAsofJoin"), merge)
+      val bcast = same("broadcast", viaSql("broadcast"), viaDf(Some(true)))
+      assert(bcast.contains("BroadcastAsofJoin"), bcast)
+      val split = same("split:8", viaSql("split:8"),
+        viaDf(numSplits = Some(8)))
+      assert(split.contains("Window") && split.contains("Subquery"), split)
+      val splitB = same("split:8:lo:hi", viaSql("split:8:0:60"),
+        viaDf(numSplits = Some(8), splitBounds = Some((0.0, 60.0))))
+      assert(splitB.contains("Window") && !splitB.contains("Subquery"),
+        splitB)
+      same("merge + numeric max_stale", viaSql("merge", ", 5"),
+        viaDf(Some(false), maxStale = Some(lit(5L))))
+      same("merge + INTERVAL max_stale",
+        viaSql("merge", ", INTERVAL 2 HOURS", ts = true),
+        viaDf(Some(false), maxStale = Some(expr("INTERVAL 2 HOURS")),
+          ts = true))
+      // the bounds actually bite on both axes
+      assert(rows(viaSql("merge", ", 5")) !== rows(viaSql("merge")))
+      assert(rows(viaSql("merge", ", INTERVAL 2 HOURS", ts = true)) !==
+        rows(viaSql("merge", ts = true)))
+      // the DataFrame door resolves names under the session's resolver
+      // (case-insensitive here), like SQL and col() do
+      assert(rows(viaDf(Some(false), keys = Seq("K"), time = "T",
+        tie = "RID")) === rows(viaDf(Some(false))))
+      // one contract error per misuse, on both doors
+      val asofLeft = s.table("fd_left").withColumnRenamed("lid", "ASOF")
+      asofLeft.createOrReplaceTempView("fd_left_asof")
+      val eDf = intercept[IllegalArgumentException] {
+        AsofJoin.asofJoinNative(asofLeft, s.table("fd_right"), Seq("k"),
+          "t", "t", "rid")
+      }
+      assert(eDf.getMessage.contains("already has an 'asof' column"),
+        eDf.getMessage)
+      val eSql = intercept[Exception] {
+        s.sql("SELECT * FROM asof_join('fd_left_asof', 'fd_right', " +
+          "'k', 't', 't', 'rid')").collect()
+      }
+      assert(eSql.getMessage.contains("already has an 'asof' column"),
+        eSql.getMessage)
+      val rnRight = s.table("fd_right").withColumn("__rn", lit(1))
+      rnRight.createOrReplaceTempView("fd_right_rn")
+      val eRnDf = intercept[IllegalArgumentException] {
+        AsofJoin.asofJoinNative(s.table("fd_left"), rnRight, Seq("k"),
+          "t", "t", "rid", numSplits = Some(4))
+      }
+      assert(eRnDf.getMessage.contains("reserved names"), eRnDf.getMessage)
+      val eRnSql = intercept[Exception] {
+        s.sql("SELECT * FROM asof_join('fd_left', 'fd_right_rn', " +
+          "'k', 't', 't', 'rid', 'split:4')").collect()
+      }
+      assert(eRnSql.getMessage.contains("reserved names"), eRnSql.getMessage)
     } finally {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()

@@ -699,12 +699,14 @@ class StreamingSpec extends AnyFunSuite {
       // kernel, and through the composed window — three paths, one answer
       val allEvents = s.read.parquet(s"$dir/in")
       s.conf.unset("spark.graft.asof.skewSplits")
-      val batchNative = canon(graft.operators.AsofJoin.asofJoinTolerance(
-        allEvents, dim, Seq("k"), "t", "t", "rid", lit(stale), impl = "native")
+      val batchNative = canon(graft.operators.AsofJoin.asofJoinNative(
+        allEvents, dim, Seq("k"), "t", "t", "rid", broadcast = Some(false),
+        maxStale = Some(lit(stale)))
         .selectExpr("lid", "asof.rid AS rid").collect())
-      val batchComposed = canon(graft.operators.AsofJoin.asofJoinTolerance(
-        allEvents, dim, Seq("k"), "t", "t", "rid", lit(stale),
-        impl = "composed")
+      val batchComposed = canon(graft.operators.AsofJoin.asofJoin(
+        allEvents, dim, Seq("k"), "t", "t", "rid")
+        .withColumn("asof", when(
+          col("asof").getField("t") >= col("t") - lit(stale), col("asof")))
         .selectExpr("lid", "asof.rid AS rid").collect())
       assert(streamOut === batchNative,
         "stream through conf-split + kernel bound must equal unsplit batch")
