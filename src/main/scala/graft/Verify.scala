@@ -44,6 +44,8 @@ object Verify {
     }
     writeOracleJson(outDir, SparkEntry.oracleSql)
     spark.stop()
+    // PLAN_AUDIT.json must still describe the plans (its own session)
+    PlanSweep.check(sfDir).foreach(m => System.err.println(s"[verify] plan audit: $m"))
   }
 
   /** Dump oracle SQL as the driver's oracle_sql.json. JSON string

@@ -2,6 +2,7 @@ package graft.storage
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -216,15 +217,40 @@ class Storage(spark: SparkSession, root: String) {
 
   /** A10/A11 get-or-create dimension upsert: append only the rows whose
     * natural key is absent (archive_contributor.py:41–57 ON CONFLICT DO
-    * NOTHING; website.py:46–55 EXISTS check). */
+    * NOTHING; website.py:46–55 EXISTS check).
+    *
+    * The anti-join against the stored keys runs once, as the write
+    * itself: it lands in a private staging directory, and only the
+    * data files that hold rows move into the table. Spark writes a
+    * schema-only file even when a write has no rows, so without the
+    * staging step every upsert that brings no new key would add an
+    * empty file to the table. */
   def upsertDimension(table: String, rows: DataFrame, keyCols: Seq[String]): Unit = {
-    if (!exists(table)) append(table, rows.dropDuplicates(keyCols))
+    val unique = rows.dropDuplicates(keyCols)
+    if (!exists(table)) append(table, unique)
     else {
-      val fresh = rows.dropDuplicates(keyCols)
-        .join(read(table), keyCols, "left_anti")
-      if (!fresh.isEmpty) append(table, fresh)
+      val staging = fs.makeQualified(
+        new Path(s"$root/.upsert_${table}_${java.util.UUID.randomUUID}"))
+      try {
+        val w = unique.join(read(table), keyCols, "left_anti").write
+        if (partitioned(table)) w.partitionBy("website_id").parquet(staging.toString)
+        else w.parquet(staging.toString)
+        val staged = fs.listFiles(staging, true)
+        val files = Iterator.continually(staged).takeWhile(_.hasNext).map(_.next()).toList
+        for (f <- files if !Storage.isHidden(f.getPath.getName) && rowCount(f) > 0) {
+          val dst = new Path(path(table) +
+            f.getPath.toUri.getPath.stripPrefix(staging.toUri.getPath))
+          fs.mkdirs(dst.getParent)
+          fs.rename(f.getPath, dst)
+        }
+      } finally fs.delete(staging, true)
     }
   }
+
+  private def rowCount(file: FileStatus): Long =
+    ParquetFileReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
 
   /** Small-files compaction — the operational companion of streaming
     * ingest: micro-batch appends accumulate many small parquet files,

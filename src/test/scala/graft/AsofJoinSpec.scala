@@ -3,7 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+
 import graft.operators.AsofJoin
+import graft.plans.{AsofJoinExec, BroadcastAsofJoinExec}
 
 /** As-of join semantics: latest-prior pick, <=-inclusive match, tie
   * break by max tieBreak, left-outer null when no prior right row,
@@ -49,13 +53,8 @@ class AsofJoinSpec extends AnyFunSuite {
     val right = Seq((1L, 90L, 3L)).toDF("k", "rid", "t")
     val q = AsofJoin.asofJoin(left, right, Seq("k"), "t", "t", "rid")
     q.collect()
-    // AdaptiveSparkPlan's toString appends the pre-AQE "Initial Plan";
-    // count exchanges only in the final executed section
-    val plan = q.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val exchanges = "(?<!Reused)Exchange hashpartitioning".r
-      .findAllIn(plan).size
-    assert(exchanges === 1, s"expected one shuffle, plan:\n$plan")
+    val exchanges = PlanShape.hashShuffles(PlanShape.nodes(q)).size
+    assert(exchanges === 1, s"expected one shuffle, plan:\n${PlanShape.render(q)}")
   }
 
   test("asof join rejects inputs using its reserved internal column names") {
@@ -261,7 +260,7 @@ class AsofJoinSpec extends AnyFunSuite {
     val right = (0L until 200L).map(i => (1L, 1000L + i, i)).toDF("k", "rid", "t")
     val q = AsofJoin.asofJoinSplit(left, right, Seq("k"), "t", "t", "rid", numSplits = 4)
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = PlanShape.render(q)
     assert(plan.contains("__b"),
       s"split plan should window on (key, __b):\n$plan")
   }
@@ -319,13 +318,12 @@ class AsofJoinSpec extends AnyFunSuite {
     val q = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid",
       broadcast = Some(false))
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(plan.contains("AsofJoin"), s"native exec missing:\n$plan")
-    assert(!plan.contains("Window"), s"no WindowExec expected:\n$plan")
-    assert(!plan.contains("Union"), s"no union expected:\n$plan")
-    val exchanges = "(?<!Reused)Exchange hashpartitioning".r
-      .findAllIn(plan).size
+    val nodes = PlanShape.nodes(q)
+    val plan = PlanShape.render(q)
+    assert(nodes.exists(_.isInstanceOf[AsofJoinExec]), s"native exec missing:\n$plan")
+    assert(!nodes.exists(_.nodeName.contains("Window")), s"no WindowExec expected:\n$plan")
+    assert(!nodes.exists(_.nodeName.contains("Union")), s"no union expected:\n$plan")
+    val exchanges = PlanShape.hashShuffles(nodes).size
     assert(exchanges === 2,
       s"expected one exchange per side at its own width:\n$plan")
   }
@@ -561,10 +559,8 @@ class AsofJoinSpec extends AnyFunSuite {
     // between the exchanges and the exec: the only Window is the
     // right side's batch-sized per-bucket last pick)
     split.collect()
-    val plan = split.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(plan.contains("AsofJoin"),
-      s"split path should ride the native exec:\n$plan")
+    assert(PlanShape.nodes(split).exists(_.isInstanceOf[AsofJoinExec]),
+      s"split path should ride the native exec:\n${PlanShape.render(split)}")
   }
 
   test("spark.graft.asof.skewSplits routes explicit merge-path joins through the split") {
@@ -591,8 +587,8 @@ class AsofJoinSpec extends AnyFunSuite {
       val bcast = AsofJoin.asofJoinNative(
         left, right, Seq("k"), "t", "t", "rid", broadcast = Some(true))
       bcast.collect()
-      assert(bcast.queryExecution.executedPlan.toString
-        .contains("BroadcastAsofJoin"))
+      assert(PlanShape.nodes(bcast).exists(_.isInstanceOf[BroadcastAsofJoinExec]),
+        PlanShape.render(bcast))
     } finally {
       s.conf.unset("spark.graft.asof.skewSplits")
       s.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
@@ -628,8 +624,7 @@ class AsofJoinSpec extends AnyFunSuite {
       val small = AsofJoin.asofJoinNative(
         left, right, Seq("k"), "t", "t", "rid", broadcast = None)
       small.collect()
-      assert(small.queryExecution.executedPlan.toString
-        .contains("BroadcastAsofJoin"),
+      assert(PlanShape.nodes(small).exists(_.isInstanceOf[BroadcastAsofJoinExec]),
         "a broadcastable right must keep the broadcast exec under the conf")
       // fact-sized right (threshold off): the stats decision is the
       // merge exec — exactly the skew-prone default shape; the knob
@@ -923,13 +918,13 @@ class AsofJoinSpec extends AnyFunSuite {
     val q = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid",
       broadcast = Some(true))
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(plan.contains("BroadcastAsofJoin"), s"broadcast exec missing:\n$plan")
-    assert(plan.contains("BroadcastExchange"), s"broadcast exchange missing:\n$plan")
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"fact side must not shuffle:\n$plan")
-    assert(!plan.contains("Sort "), s"fact side must not sort:\n$plan")
+    val nodes = PlanShape.nodes(q)
+    val plan = PlanShape.render(q)
+    assert(nodes.exists(_.isInstanceOf[BroadcastAsofJoinExec]), s"broadcast exec missing:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"broadcast exchange missing:\n$plan")
+    assert(PlanShape.hashShuffles(nodes).isEmpty, s"fact side must not shuffle:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[SortExec]), s"fact side must not sort:\n$plan")
   }
 
   test("asof strategy auto-selects broadcast by right-side size vs threshold") {
@@ -940,10 +935,9 @@ class AsofJoinSpec extends AnyFunSuite {
     def execName(): String = {
       val q = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid")
       q.collect()
-      val plan = q.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      if (plan.contains("BroadcastAsofJoin")) "broadcast"
-      else if (plan.contains("AsofJoin")) "merge" else "?"
+      val nodes = PlanShape.nodes(q)
+      if (nodes.exists(_.isInstanceOf[BroadcastAsofJoinExec])) "broadcast"
+      else if (nodes.exists(_.isInstanceOf[AsofJoinExec])) "merge" else "?"
     }
     // tiny right side under the default 10MB threshold -> broadcast
     assert(execName() === "broadcast")
@@ -972,13 +966,10 @@ class AsofJoinSpec extends AnyFunSuite {
       .sortBy(r => (r._1, r._2)).toSeq
     val q = run()
     val withCodegen = canon(q)
-    // the op line carries a codegen stage id — scan -> as-of ->
-    // projection compile into one generated loop, no iterator boundary
-    val plan = q.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val opLine = plan.split("\n").find(_.contains("BroadcastAsofJoin")).get
-    assert(opLine.contains("*("),
-      s"as-of exec should be inside a WholeStageCodegen span:\n$plan")
+    // the exec sits in a codegen span — scan -> as-of -> projection
+    // compile into one generated loop, no iterator boundary
+    assert(PlanShape.codegenOps(q).exists(_.isInstanceOf[BroadcastAsofJoinExec]),
+      s"as-of exec should be inside a WholeStageCodegen span:\n${PlanShape.render(q)}")
     // and the interpreted path (codegen off) answers identically
     val key = "spark.sql.codegen.wholeStage"
     val prev = s.conf.get(key)
@@ -1008,14 +999,11 @@ class AsofJoinSpec extends AnyFunSuite {
       .sortBy(r => (r._1, r._2)).toSeq
     val q = run()
     val withCodegen = canon(q)
-    // the op line carries a codegen stage id — as-of merge ->
-    // downstream projection compile into one generated loop (the
-    // SortMergeJoinExec shape: sorts feed the stage as its two inputs)
-    val plan = q.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val opLine = plan.split("\n").find(_.contains("AsofJoin")).get
-    assert(opLine.contains("*("),
-      s"merge as-of exec should be inside a WholeStageCodegen span:\n$plan")
+    // the exec sits in a codegen span — as-of merge -> downstream
+    // projection compile into one generated loop (the SortMergeJoinExec
+    // shape: sorts feed the stage as its two inputs)
+    assert(PlanShape.codegenOps(q).exists(_.isInstanceOf[AsofJoinExec]),
+      s"merge as-of exec should be inside a WholeStageCodegen span:\n${PlanShape.render(q)}")
     // and the interpreted path (codegen off) answers identically
     val key2 = "spark.sql.codegen.wholeStage"
     val prev = s.conf.get(key2)
@@ -1113,20 +1101,20 @@ class AsofJoinSpec extends AnyFunSuite {
     // run under) lets bucketed scans report their at-rest sort; this
     // suite builds a bare session, so mirror the conf here
     s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    def planOf(): (String, org.apache.spark.sql.DataFrame) = {
+    def run() = {
       val q = graft.queries.EventsMerge.queries("q128_asof_join_stored")(s, sf)
       q.collect()
-      (q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0), q)
+      q
     }
-    val (plan, q) = planOf()
+    val q = run()
+    val nodes = PlanShape.nodes(q)
+    val plan = PlanShape.render(q)
     // exactly ONE hash exchange and ONE sort — the probe (clicks)
     // side; the stored dimension's bucketed sorted layout satisfies
     // both exec requirements from its at-rest files
-    val exchanges = "(?<!Reused)Exchange hashpartitioning".r.findAllIn(plan).size
-    val sorts = "(?<!\\w)Sort \\[".r.findAllIn(plan).size
-    assert(exchanges === 1, s"dim side must not shuffle:\n$plan")
-    assert(sorts === 1, s"dim side must not sort:\n$plan")
-    assert(plan.contains("AsofJoin"), s"native exec missing:\n$plan")
+    assert(PlanShape.hashShuffles(nodes).size === 1, s"dim side must not shuffle:\n$plan")
+    assert(nodes.count(_.isInstanceOf[SortExec]) === 1, s"dim side must not sort:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[AsofJoinExec]), s"native exec missing:\n$plan")
     // same answer as the in-query native path (q126 under one oracle)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -1140,10 +1128,9 @@ class AsofJoinSpec extends AnyFunSuite {
     graft.storage.DurableStores.resetVerifiedForTest()
     val tbl = graft.storage.Storage.tableNameFor("graft_asof_dim", sf)
     s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-    val (plan2, _) = planOf()
-    val sorts2 = "(?<!\\w)Sort \\[".r.findAllIn(plan2).size
-    assert(sorts2 === 1,
-      s"cold-catalog re-registration lost the at-rest sort:\n$plan2")
+    val q2 = run()
+    assert(PlanShape.nodes(q2).count(_.isInstanceOf[SortExec]) === 1,
+      s"cold-catalog re-registration lost the at-rest sort:\n${PlanShape.render(q2)}")
   }
 
   test("q129: asof accept lifecycle — guard, idempotence, delta-leg plan, compact fold") {
@@ -1171,13 +1158,13 @@ class AsofJoinSpec extends AnyFunSuite {
       // leg's probe side) and the delta leg through the broadcast exec
       // — accepting state never costs the base a re-sort or the probe
       // a second shuffle
-      val plan = q.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert("(?<!Reused)Exchange hashpartitioning".r.findAllIn(plan).size === 1,
+      val nodes = PlanShape.nodes(q)
+      val plan = PlanShape.render(q)
+      assert(PlanShape.hashShuffles(nodes).size === 1,
         s"accept deltas must not add exchanges:\n$plan")
-      assert("(?<!\\w)Sort \\[".r.findAllIn(plan).size === 1,
+      assert(nodes.count(_.isInstanceOf[SortExec]) === 1,
         s"accept deltas must not add sorts:\n$plan")
-      assert(plan.contains("BroadcastAsofJoin"),
+      assert(nodes.exists(_.isInstanceOf[BroadcastAsofJoinExec]),
         s"delta leg should ride the broadcast exec:\n$plan")
       // equals the inline recompute over purchases ∪ both sentinel
       // batches (twin: the composed operator over the unioned

@@ -51,8 +51,7 @@ class CoresetChunkerSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val docs = Seq((1L, "some text to chunk")).toDF("doc_id", "text")
-    val plan = Chunker.chunk(docs, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val plan = PlanShape.render(Chunker.chunk(docs, "doc_id", "text"))
     assert(!plan.contains("Exchange"), s"chunking must not shuffle:\n$plan")
   }
 
@@ -101,7 +100,7 @@ class CoresetChunkerSpec extends AnyFunSuite {
         (0L, Array(1f, 0f)), (1L, Array(0.9f, 0.1f)), (2L, Array(0f, 1f)))
         .toDF("vec_id", "v")
       val df = Coreset.kCenterAssign(emb, "vec_id", "v", k = 2)
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = PlanShape.render(df)
       assert(!plan.contains("Exchange"),
         s"assignment must be join- and shuffle-free:\n$plan")
     }

@@ -75,7 +75,7 @@ class DecontaminateSpec extends AnyFunSuite {
       .select($"doc_id", xxhash64($"g").as("gh"))
       .filter(bloomMightContain($"gh", bf))
     pruned.collect()
-    val plan = pruned.queryExecution.executedPlan.toString
+    val plan = PlanShape.render(pruned)
     assert(plan.contains("bloom_might_contain"), s"prune filter missing:\n$plan")
     assert(!plan.contains("Exchange"),
       s"prune pipeline must be narrow (no shuffle before the filter):\n$plan")

@@ -142,10 +142,8 @@ class DedupSpec extends AnyFunSuite {
     try {
       def bhjCount(df: org.apache.spark.sql.DataFrame): Int = {
         df.collect() // finalize any adaptive plan
-        // AdaptiveSparkPlanExec is a leaf node — the finalized tree is
-        // only reachable through its string rendering
-        "BroadcastHashJoin".r
-          .findAllMatchIn(df.queryExecution.executedPlan.toString).length
+        PlanShape.nodes(df).count(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec])
       }
       def run(maxBroadcastDocs: Long) = Dedup.incrementalMinhashPairs(
         Dedup.corpusSketch(corpus, "doc_id", "text"), batch,

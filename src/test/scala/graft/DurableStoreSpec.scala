@@ -84,7 +84,7 @@ class DurableStoreSpec extends AnyFunSuite {
       coldCatalog(statsT, compT)
       val q = graft.queries.CorpusOps.queries("q115_sparse_topk_stored")(s, data)
       val second = q.collect().map(_.toString).sorted.toSeq
-      val plan = q.queryExecution.executedPlan.toString
+      val plan = PlanShape.render(q)
       graft.engine.CacheRegistry.releaseAll()
       assert(second === first)
       assert(plan.contains(statsT) && plan.contains(compT),
@@ -105,7 +105,7 @@ class DurableStoreSpec extends AnyFunSuite {
       coldCatalog(tbl)
       val merged = graft.engine.Merge.mergeSubmissions(
         graft.queries.MergeScaleQ.bucketedNested(s, data))
-      val plan = merged.queryExecution.executedPlan.toString
+      val plan = PlanShape.render(merged)
       assert(!plan.contains("Exchange hashpartitioning"),
         s"re-registered bucketed store lost its layout (merge shuffles):\n$plan")
       val second = graft.queries.MergeScaleQ
@@ -216,7 +216,7 @@ class DurableStoreSpec extends AnyFunSuite {
       val oneCell = members.select("cell").limit(1).collect()(0).get(0)
       val pruned = members.filter(col("cell") === lit(oneCell))
       pruned.collect()
-      val prunedPlan = pruned.queryExecution.executedPlan.toString
+      val prunedPlan = PlanShape.render(pruned)
       assert(prunedPlan.contains("PartitionFilters") && prunedPlan.contains("cell"),
         s"cell filter no longer a partition filter after re-registration:\n$prunedPlan")
     }

@@ -174,7 +174,7 @@ class MergeSpec extends AnyFunSuite {
     val nested = graft.queries.MergeScaleQ.nestedAtScale(s, "/root/testdata/sf0.001")
     val merged = Merge.mergeSubmissions(
       graft.queries.MergeScaleQ.bucketedNested(s, "/root/testdata/sf0.001"))
-    val plan = merged.queryExecution.executedPlan.toString
+    val plan = PlanShape.render(merged)
     assert(!plan.contains("Exchange"),
       s"merge over the bucketed nested store should not shuffle:\n$plan")
     // identical results to the direct (shuffling) path
@@ -195,7 +195,7 @@ class MergeSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val q117 = graft.queries.MergeScaleQ
       .queries("q117_incremental_merge_stored")(s, sf)
-    val plan = q117.queryExecution.executedPlan.toString
+    val plan = PlanShape.render(q117)
     // the stored base and the bucketed history are both laid out on
     // the entity key, so NOTHING in the maintenance query shuffles on
     // it: touched-entity distinct, left_semi re-merge, left_anti

@@ -3,6 +3,13 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,8 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * rank-filter → WindowGroupLimit) asserted as tests so a plan
   * regression fails the build, not just the benchmark. */
 class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  import PlanAuditSpec.PlanNode
-
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -39,95 +44,75 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     super.afterAll()
   }
 
-  private def executed(df: DataFrame): String = {
-    df.collect()
-    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+  private def scans(ns: Seq[SparkPlan]) = ns.collect { case f: FileSourceScanExec => f }
+
+  private def nestedLoop(p: SparkPlan) =
+    p.isInstanceOf[CartesianProductExec] || p.isInstanceOf[BroadcastNestedLoopJoinExec]
+
+  private def singlePartitionShuffles(ns: Seq[SparkPlan]) = ns.count {
+    case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+    case _ => false
   }
 
-  /** Parses the operator tree of a formatted plan: a node's parent is
-    * the nearest line above it whose operator name starts further left. */
-  private def parsePlan(formatted: String): PlanNode = {
-    val lines = formatted.split("\n").toSeq
-    val details = lines.zipWithIndex.collect {
-      case (PlanAuditSpec.DetailHeader(id, _), i) =>
-        id.toInt -> lines.drop(i + 1).takeWhile(_.nonEmpty).collect {
-          case PlanAuditSpec.DetailLine(k, v) => k -> v
-        }.toMap
-    }.toMap
-    val tree = lines.drop(1).takeWhile(_.nonEmpty).collect {
-      case PlanAuditSpec.TreeLine(prefix, name, id) =>
-        (prefix.length, name.stripPrefix("* ").trim, id.toInt)
+  test("stacked-exchange check flags round 18's two-key spread, not the one-key pin") {
+    val s = spark
+    import s.implicits._
+    // round 18's inline merge (MergeScaleQ.spreadForMerge): a constant
+    // "w" column, a pinned spread on (w, entity key), then the merge
+    // aggregate grouped on both. The constant is re-aliased inside the
+    // aggregate's keys, so the spread's partitioning cannot satisfy the
+    // aggregate and a second exchange moves every row again
+    // (a range, not a local Seq: a literal over local rows folds into
+    // the rows themselves)
+    val rows = s.range(40).select(concat(lit("e"), ($"id" % 7).cast("string"))
+      .as("site_submission_id"), $"id".as("v")).withColumn("w", lit("w"))
+    def merge(spread: DataFrame) = spread.groupBy("w", "site_submission_id")
+      .agg(collect_list("v").as("vs"))
+    val width = s.sessionState.conf.numShufflePartitions
+    val twoKey = merge(rows.repartition(width, col("w"), col("site_submission_id")))
+    val oneKey = merge(rows.repartition(width, col("site_submission_id")))
+    for (stage <- Seq("planned", "executed")) {
+      if (stage == "executed") { twoKey.collect(); oneKey.collect() }
+      val found = PlanShape.stackedExchanges(twoKey)
+      assert(found.size === 1, s"$stage two-key spread:\n${PlanShape.render(twoKey)}")
+      assert(found.head.contains("ENSURE_REQUIREMENTS") &&
+        found.head.contains("REPARTITION_BY_NUM"), found.head)
+      assert(PlanShape.stackedExchanges(oneKey).isEmpty,
+        s"$stage one-key pin:\n${PlanShape.render(oneKey)}")
     }
-    val parent = new Array[Int](tree.length)
-    val open = scala.collection.mutable.Stack[Int]()
-    tree.indices.foreach { i =>
-      while (open.nonEmpty && tree(open.top)._1 >= tree(i)._1) open.pop()
-      parent(i) = if (open.isEmpty) -1 else open.top
-      open.push(i)
-    }
-    def node(i: Int): PlanNode = PlanNode(tree(i)._2, tree(i)._3,
-      tree.indices.filter(parent(_) == i).map(node),
-      details.getOrElse(tree(i)._3, Map.empty))
-    node(0)
-  }
-
-  /** Stacked exchanges: a shuffle inserted to meet a distribution
-    * (ENSURE_REQUIREMENTS) whose nearest shuffle below is a
-    * REPARTITION_BY_NUM on a subset of its keys. Rows hash-clustered on
-    * a subset of the keys are already clustered on all of them, so the
-    * upper exchange moves every row a second time for nothing
-    * (plans/r18/q65_incremental_merge_after.txt does this to the heavy
-    * merge structs). */
-  private def stackedExchanges(plan: PlanNode): Seq[String] =
-    for {
-      upper <- plan.all
-      ("ENSURE_REQUIREMENTS", upperKeys) <- upper.hashShuffle.toSeq
-      lower <- upper.feedingExchanges
-      ("REPARTITION_BY_NUM", lowerKeys) <- lower.hashShuffle.toSeq
-      if lowerKeys.subsetOf(upperKeys)
-    } yield s"Exchange (${upper.id}) ${upperKeys.mkString(",")} over " +
-      s"Exchange (${lower.id}) ${lowerKeys.mkString(",")}"
-
-  test("the stacked-exchange audit fires on the stacked q65 merge dump") {
-    def dump(file: String) = parsePlan(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"plans/r18/$file")), "UTF-8"))
-    val found = stackedExchanges(dump("q65_incremental_merge_after.txt"))
-    assert(found === Seq(
-      "Exchange (41) w,site_submission_id over Exchange (39) w,site_submission_id"),
-      found)
-    // the dump before the width pin had no pinned exchange to stack on
-    assert(stackedExchanges(dump("q65_incremental_merge_before.txt")).isEmpty)
   }
 
   test("q55/q65 inline merge: one pinned exchange feeds each merge aggregate, none stacked") {
     for (q <- Seq("q55_merge_scale", "q65_incremental_merge")) {
+      // the plan as built, before execution (AQE's starting plan)
       val df = graft.queries.MergeScaleQ.queries(q)(spark, "/root/testdata/sf0.001")
-      val text = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val plan = parsePlan(text)
+      val plan = PlanShape.nodes(df)
+      val text = PlanShape.render(df)
       graft.engine.CacheRegistry.releaseAll()
-      assert(stackedExchanges(plan).isEmpty, s"$q stacked exchanges:\n$text")
+      assert(PlanShape.stackedExchanges(df).isEmpty, s"$q stacked exchanges:\n$text")
       // the merge aggregate: the final collect over the entity key
-      val merges = plan.all.filter { n =>
-        n.name.endsWith("Aggregate") &&
-          n.details.get("Keys").exists(_.contains("site_submission_id")) &&
-          n.details.get("Functions").exists(f =>
-            f.contains("collect_list(") && !f.contains("partial_collect_list"))
+      val merges = plan.collect {
+        case a: BaseAggregateExec
+            if a.groupingExpressions.exists(_.references.exists(_.name == "site_submission_id")) &&
+              a.aggregateExpressions.exists(e =>
+                e.mode != Partial && e.aggregateFunction.isInstanceOf[CollectList]) => a
       }
       assert(merges.nonEmpty, s"$q: no merge aggregate found:\n$text")
       merges.foreach { m =>
-        assert(m.feedingExchanges.flatMap(_.hashShuffle) ===
-          Seq("REPARTITION_BY_NUM" -> Set("site_submission_id")),
-          s"$q: Aggregate (${m.id}) is not fed by exactly one pinned exchange:\n$text")
+        val feeding = PlanShape.hashShuffles(PlanShape.feedingExchanges(m))
+        assert(feeding.map(e => e.shuffleOrigin -> PlanShape.hashKeys(e)) ===
+          Seq(REPARTITION_BY_NUM -> Set("site_submission_id")),
+          s"$q: ${m.nodeName} is not fed by exactly one pinned exchange:\n$text")
       }
       // q65's batch key set (a distinct of the entity keys alone) may
       // shuffle on them; nothing that carries snapshot columns may
-      val entityKeyed = plan.all.filter(n => n.hashShuffle.exists {
-        case (origin, keys) => origin == "ENSURE_REQUIREMENTS" &&
-          keys("site_submission_id") && !n.input.subsetOf(keys)
-      }).map(_.id)
+      val entityKeyed = PlanShape.hashShuffles(plan).filter { e =>
+        val keys = PlanShape.hashKeys(e)
+        e.shuffleOrigin == ENSURE_REQUIREMENTS && keys("site_submission_id") &&
+          !e.child.output.map(_.name).toSet.subsetOf(keys)
+      }
       assert(entityKeyed.isEmpty,
-        s"$q: ENSURE_REQUIREMENTS exchanges $entityKeyed on the entity key:\n$text")
+        s"$q: ENSURE_REQUIREMENTS exchanges on the entity key:\n$text")
     }
   }
 
@@ -141,12 +126,14 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val q = s.read.parquet(s"$dir/t")
       .filter($"website_id" === "w1" && $"id" === 7L)
       .select($"payload")
-    val plan = executed(q)
-    assert(plan.contains("PushedFilters: ["), s"no pushdown:\n$plan")
-    assert(plan.contains("EqualTo(website_id,w1)") && plan.contains("EqualTo(id,7)"),
-      s"point-lookup predicates not pushed:\n$plan")
-    assert(plan.contains("ReadSchema") && !plan.contains("payload,extra"),
-      s"projection not pruned:\n$plan")
+    q.collect()
+    val scan = scans(PlanShape.nodes(q))
+    assert(scan.size === 1, PlanShape.render(q))
+    val pushed = scan.head.metadata("PushedFilters")
+    assert(pushed.contains("EqualTo(website_id,w1)") && pushed.contains("EqualTo(id,7)"),
+      s"point-lookup predicates not pushed: $pushed")
+    assert(scan.head.metadata.get("ReadSchema").exists(!_.contains("payload,extra")),
+      s"projection not pruned:\n${PlanShape.render(q)}")
   }
 
   test("small dimension joins broadcast AUTOMATICALLY (size estimation, no hint)") {
@@ -162,10 +149,13 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .write.parquet(s"$dir/dim")
     val fact = s.read.parquet(s"$dir/fact")
     val dim = s.read.parquet(s"$dir/dim")
-    val plan = executed(fact.join(dim, Seq("dim_id")))
-    assert(plan.contains("BroadcastHashJoin"),
-      s"dim join not auto-broadcast from size estimation:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"unexpected SMJ:\n$plan")
+    val q = fact.join(dim, Seq("dim_id"))
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"dim join not auto-broadcast from size estimation:\n${PlanShape.render(q)}")
+    assert(!plan.exists(_.isInstanceOf[SortMergeJoinExec]),
+      s"unexpected SMJ:\n${PlanShape.render(q)}")
   }
 
   test("explicit broadcast hint is honored regardless of statistics") {
@@ -173,9 +163,13 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import s.implicits._
     val fact = (1L to 1000L).map(i => (i, i % 10)).toDF("k", "dim_id")
     val dim = (0L to 9L).map(i => (i, s"d$i")).toDF("dim_id", "name")
-    val plan = executed(fact.join(broadcast(dim), Seq("dim_id")))
-    assert(plan.contains("BroadcastHashJoin"), s"dim join not broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"unexpected SMJ:\n$plan")
+    val q = fact.join(broadcast(dim), Seq("dim_id"))
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"dim join not broadcast:\n${PlanShape.render(q)}")
+    assert(!plan.exists(_.isInstanceOf[SortMergeJoinExec]),
+      s"unexpected SMJ:\n${PlanShape.render(q)}")
   }
 
   test("rank-filter plans as WindowGroupLimit (per-group top-k, no full sort)") {
@@ -185,9 +179,9 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val w = Window.partitionBy($"grp")
       .orderBy(md5($"doc_id".cast("string")).asc, $"doc_id".asc)
     val q = docs.withColumn("rk", row_number().over(w)).filter($"rk" <= 3)
-    val plan = executed(q)
-    assert(plan.contains("WindowGroupLimit"),
-      s"rank filter did not plan as a group limit:\n$plan")
+    q.collect()
+    assert(PlanShape.nodes(q).exists(_.isInstanceOf[WindowGroupLimitExec]),
+      s"rank filter did not plan as a group limit:\n${PlanShape.render(q)}")
   }
 
   test("q88 prefix sum: the single-partition exchange carries only bucket totals") {
@@ -197,12 +191,14 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // full document frame ever flowed through it, this count changes
     val q = graft.queries.TextDocs.queries("q88_token_shards")(
       spark, "/root/testdata/sf0.001")
-    val plan = executed(q)
-    val singles = "Exchange SinglePartition".r.findAllIn(plan).size
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    val text = PlanShape.render(q)
+    val singles = singlePartitionShuffles(plan)
     assert(singles == 1,
-      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$plan")
-    assert(plan.contains("hashpartitioning(bkt"),
-      s"per-doc window not partitioned by range bucket:\n$plan")
+      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$text")
+    assert(text.contains("hashpartitioning(bkt"),
+      s"per-doc window not partitioned by range bucket:\n$text")
   }
 
   test("q104 page stitch: candidates come from a hash equi-join on the gram key") {
@@ -211,11 +207,11 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // equi-join on the positioned k-gram key
     val q = graft.queries.CorpusOps.queries("q104_page_stitch")(
       spark, "/root/testdata/sf0.001")
-    val plan = executed(q)
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"page pairing fell off the key join:\n$plan")
-    assert(plan.contains("[key"), s"no equi-join on the gram key:\n$plan")
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    val text = PlanShape.render(q)
+    assert(!plan.exists(nestedLoop), s"page pairing fell off the key join:\n$text")
+    assert(text.contains("[key"), s"no equi-join on the gram key:\n$text")
   }
 
   test("q114 sparse similarity: candidates flow through the bucket equi-join") {
@@ -224,13 +220,13 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // never a nested-loop / cartesian pairing of documents
     val q = graft.queries.CorpusOps.queries("q114_sparse_topk")(
       spark, "/root/testdata/sf0.001")
-    val plan = executed(q)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"df/n_docs dimension tables did not broadcast:\n$plan")
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"pairing fell off the bucket equi-join:\n$plan")
-    assert(plan.contains("[bucket"), s"no equi-join on bucket:\n$plan")
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    val text = PlanShape.render(q)
+    assert(plan.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"df/n_docs dimension tables did not broadcast:\n$text")
+    assert(!plan.exists(nestedLoop), s"pairing fell off the bucket equi-join:\n$text")
+    assert(text.contains("[bucket"), s"no equi-join on bucket:\n$text")
   }
 
   test("spreadForExplosion pins the probe-side exchange to full task width (AQE must not coalesce it)") {
@@ -252,24 +248,10 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // failure mode this pins against is AQE coalescing that
     // partitioning to 1.
     val width = s.sessionState.conf.numShufflePartitions
-    val widths = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-            if h.expressions.exists(_.toString.contains("qid")) =>
-          widths += h.numPartitions
-        case _ =>
-      }
-      p.children.foreach(walk)
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(qs.plan)
-        case _ =>
-      }
+    val widths = PlanShape.nodes(q).map(_.outputPartitioning).collect {
+      case h: HashPartitioning if h.expressions.exists(_.toString.contains("qid")) =>
+        h.numPartitions
     }
-    walk(q.queryExecution.executedPlan)
     assert(widths.nonEmpty, "no qid-partitioned operator found in the plan")
     assert(widths.forall(_ == width),
       s"qid partitioning widths $widths != configured $width (one-task explosion trap)")
@@ -278,12 +260,14 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   test("q98 sequence packing: the single-partition exchange carries only bucket totals") {
     val q = graft.queries.CorpusOps.queries("q98_sequence_pack")(
       spark, "/root/testdata/sf0.001")
-    val plan = executed(q)
-    val singles = "Exchange SinglePartition".r.findAllIn(plan).size
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    val text = PlanShape.render(q)
+    val singles = singlePartitionShuffles(plan)
     assert(singles == 1,
-      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$plan")
-    assert(plan.contains("hashpartitioning(bkt"),
-      s"per-doc token cursor window not partitioned by range bucket:\n$plan")
+      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$text")
+    assert(text.contains("hashpartitioning(bkt"),
+      s"per-doc token cursor window not partitioned by range bucket:\n$text")
   }
 
   test("q96 training order: the single-partition window runs only over bucket counts") {
@@ -293,14 +277,16 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // per-bucket offset frame, which then broadcasts back
     val q = graft.queries.CorpusOps.queries("q96_training_order")(
       spark, "/root/testdata/sf0.001")
-    val plan = executed(q)
-    val singles = "Exchange SinglePartition".r.findAllIn(plan).size
+    q.collect()
+    val plan = PlanShape.nodes(q)
+    val text = PlanShape.render(q)
+    val singles = singlePartitionShuffles(plan)
     assert(singles == 1,
-      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$plan")
-    assert(plan.contains("hashpartitioning(bkt"),
-      s"per-doc ordering window not partitioned by range bucket:\n$plan")
-    assert("BroadcastExchange".r.findAllIn(plan).nonEmpty,
-      s"offset table did not broadcast back:\n$plan")
+      s"expected exactly one SinglePartition exchange (bucket offsets), got $singles:\n$text")
+    assert(text.contains("hashpartitioning(bkt"),
+      s"per-doc ordering window not partitioned by range bucket:\n$text")
+    assert(plan.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"offset table did not broadcast back:\n$text")
   }
 
   test("q89 percentiles: exact on language-sized groups, approx above the group limit") {
@@ -316,7 +302,8 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // expression anywhere in the plan
     val exact = graft.queries.TextDocs.percentilesByLang(
       docs, exactGroupLimit = 100L)
-    val exactPlan = executed(exact)
+    exact.collect()
+    val exactPlan = PlanShape.render(exact)
     assert(!exactPlan.contains("percentile_approx"),
       s"approx engaged below the group limit:\n$exactPlan")
     // "big" has even n=10: the exact median interpolates between the
@@ -328,7 +315,8 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // exact and keep their interpolated values
     val mixed = graft.queries.TextDocs.percentilesByLang(
       docs, exactGroupLimit = 5L)
-    val mixedPlan = executed(mixed)
+    mixed.collect()
+    val mixedPlan = PlanShape.render(mixed)
     assert(mixedPlan.contains("percentile_approx"),
       s"approx did not engage above the group limit:\n$mixedPlan")
     val mixedRows = mixed.collect().map(r =>
@@ -360,12 +348,10 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       Seq("k"), "t", "t", "rid", broadcast = Some(false))
       .filter($"k" === 3L)
       .selectExpr("lid", "asof.v AS v")
-    val plan = executed(q)
-    val scans = plan.split("\n").filter(_.contains("PushedFilters"))
-    // robust to path rendering: both scans must push EqualTo(k,3)
-    val pushed = scans.count(_.contains("EqualTo(k,3)"))
+    q.collect()
+    val pushed = scans(PlanShape.nodes(q)).count(_.metadata("PushedFilters").contains("EqualTo(k,3)"))
     assert(pushed === 2,
-      s"key predicate should reach both scans' PushedFilters ($pushed):\n$plan")
+      s"key predicate should reach both scans' PushedFilters ($pushed):\n${PlanShape.render(q)}")
     // and the answer is still the filtered as-of: k=3's left rows are
     // lid 3,13,…,193 at t=3·lid; the earliest k=3 right row sits at
     // t=15, so only lid=3 (t=9) precedes all candidates
@@ -373,55 +359,5 @@ class PlanAuditSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(rows.length === 20)
     assert(rows.count(_.get(1) == null) === 1)
     assert(rows.filter(_.get(1) == null).map(_.getLong(0)).toSeq === Seq(3L))
-  }
-}
-
-object PlanAuditSpec {
-  /** One operator of a formatted plan (`explain("formatted")`, the
-    * shape of the plans/ dumps): name, node id, and its `Keys`,
-    * `Functions` and `Arguments` detail lines. */
-  final case class PlanNode(name: String, id: Int,
-      children: Seq[PlanNode], details: Map[String, String]) {
-    /** (shuffle origin, hash keys without expression ids) of a hash
-      * exchange. */
-    def hashShuffle: Option[(String, Set[String])] =
-      details.get("Arguments").collect {
-        case HashShuffle(keys, _, origin) =>
-          origin -> topLevel(keys).map(stripIds).toSet
-      }
-    /** The operator's input columns, without expression ids. */
-    def input: Set[String] = details.get("Input")
-      .map(i => topLevel(i.stripPrefix("[").stripSuffix("]")).map(stripIds).toSet)
-      .getOrElse(Set.empty)
-    /** The nearest exchanges below this operator. */
-    def feedingExchanges: Seq[PlanNode] =
-      children.flatMap(c => if (c.name.endsWith("Exchange")) Seq(c) else c.feedingExchanges)
-    def all: Seq[PlanNode] = this +: children.flatMap(_.all)
-  }
-
-  /** `<tree prefix><operator> (<id>)[, <statistics>]` */
-  private val TreeLine = """^([\s:|+\-]*)(.+?) \((\d+)\)(?:, .*)?$""".r
-  /** `(<id>) <operator>` opening a node's detail block */
-  private val DetailHeader = """^\((\d+)\) (.+)$""".r
-  private val DetailLine = """^(\w+)(?: \[\d+\])?: (.*)$""".r
-  private val HashShuffle = """^hashpartitioning\((.*), (\d+)\), (\w+).*$""".r
-
-  private def stripIds(expr: String): String = expr.replaceAll("#\\d+L?", "")
-
-  /** Splits `a, f(b, c), d` at its top-level commas. */
-  private def topLevel(args: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    args.indices.foreach { i =>
-      args(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          parts += args.substring(start, i).trim; start = i + 1
-        case _ =>
-      }
-    }
-    (parts += args.substring(start).trim).result()
   }
 }

@@ -105,7 +105,7 @@ class StitchVocabSpec extends AnyFunSuite {
     val out = Vocab.coverage(docs, "text", vocabSize = 5)
     assert(out.count() === 5)
     // the limit must plan as a partial top-k, not a global sort
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = PlanShape.render(out)
     assert(plan.contains("TakeOrderedAndProject"),
       s"expected TakeOrderedAndProject in:\n$plan")
   }

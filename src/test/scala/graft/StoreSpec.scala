@@ -24,15 +24,11 @@ class StoreSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def executedPlan(df: DataFrame): String = {
-    df.collect()
-    df.queryExecution.executedPlan.toString
-  }
-
   test("q91 answers from the persisted sketch tables and matches the in-cache path") {
     val s = spark
     val q91 = graft.queries.LlmOps.queries("q91_incremental_dedup_stored")(s, sf)
-    val plan = executedPlan(q91)
+    q91.collect()
+    val plan = PlanShape.render(q91)
     for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands",
         "graft_sketch_chunks"))
       assert(plan.contains(tbl), s"persisted table $tbl not in plan:\n$plan")
@@ -60,7 +56,8 @@ class StoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val out = Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
       batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
-    val plan = executedPlan(out)
+    out.collect()
+    val plan = PlanShape.render(out)
     assert(!plan.contains("documents.parquet"),
       s"corpus text re-read from parquet:\n$plan")
     val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -72,7 +69,8 @@ class StoreSpec extends AnyFunSuite {
   test("q92 answers from the persisted cosine index; member layout is cell-prunable") {
     val s = spark
     val q92 = graft.queries.LlmOps.queries("q92_embedding_incremental_stored")(s, sf)
-    val plan = executedPlan(q92)
+    q92.collect()
+    val plan = PlanShape.render(q92)
     for (tbl <- Seq("graft_cosidx_cents", "graft_cosidx_members"))
       assert(plan.contains(tbl), s"persisted table $tbl not in plan:\n$plan")
     val stored = q92.collect()
@@ -86,15 +84,13 @@ class StoreSpec extends AnyFunSuite {
     val (_, members) = graft.queries.LlmOps.cosineStore(s, sf)
     val oneCell = members.select("cell").limit(1).collect()(0).get(0)
     val pruned = members.filter(col("cell") === lit(oneCell))
-    val prunedPlan = executedPlan(pruned)
+    pruned.collect()
+    val prunedPlan = PlanShape.render(pruned)
     assert(prunedPlan.contains("PartitionFilters") &&
       prunedPlan.contains("cell"),
       s"cell filter not a partition filter:\n$prunedPlan")
-    val scans = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.execution.FileSourceScanExec]
-    pruned.queryExecution.executedPlan.foreach {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => scans += f
-      case _ =>
+    val scans = PlanShape.nodes(pruned).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.nonEmpty, s"no file scan found:\n$prunedPlan")
     assert(scans.head.metrics("numPartitions").value === 1L,
@@ -125,7 +121,8 @@ class StoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val out = Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
       batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
-    val plan = executedPlan(out)
+    out.collect()
+    val plan = PlanShape.render(out)
     for ((tbl, key) <- Seq("graft_sketch_shingles" -> "doc",
         "graft_sketch_bands" -> "band_hash",
         "graft_sketch_chunks" -> "chunk_value")) {
@@ -154,7 +151,8 @@ class StoreSpec extends AnyFunSuite {
     val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
     val pairs = Dedup.multiSketchPairsFromStore(sh, bands, chunks,
       threshold = 0.8)
-    val pairsPlan = executedPlan(pairs)
+    pairs.collect()
+    val pairsPlan = PlanShape.render(pairs)
     for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands",
         "graft_sketch_chunks"))
       assert(pairsPlan.contains(tbl),
@@ -173,7 +171,8 @@ class StoreSpec extends AnyFunSuite {
     val (cents, members) = graft.queries.LlmOps.cosineStore(s, sf)
     val pairs = EmbeddingDedup.cosinePairsWithinStore(cents, members,
       threshold = 0.4)
-    val pairsPlan = executedPlan(pairs)
+    pairs.collect()
+    val pairsPlan = PlanShape.render(pairs)
     for (tbl <- Seq("graft_cosidx_cents", "graft_cosidx_members"))
       assert(pairsPlan.contains(tbl),
         s"persisted table $tbl not in pairs plan:\n$pairsPlan")
@@ -183,7 +182,8 @@ class StoreSpec extends AnyFunSuite {
     // labels): its lazy plan must still draw the id universe from the
     // member table, never the original embedding parquet
     val q120 = graft.queries.LlmOps.queries("q120_semantic_dedup_stored")(s, sf)
-    val plan = executedPlan(q120)
+    q120.collect()
+    val plan = PlanShape.render(q120)
     assert(plan.contains("graft_cosidx_members"),
       s"id universe not read from the member table:\n$plan")
     assert(!plan.contains("embeddings.parquet"),
@@ -1471,7 +1471,8 @@ class StoreSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val q115 = graft.queries.CorpusOps.queries("q115_sparse_topk_stored")(s, sf)
-    val plan = executedPlan(q115)
+    q115.collect()
+    val plan = PlanShape.render(q115)
     for (tbl <- Seq("graft_sparse_stats", "graft_sparse_components"))
       assert(plan.contains(tbl), s"persisted table $tbl not in plan:\n$plan")
     graft.engine.CacheRegistry.releaseAll()
@@ -1485,7 +1486,8 @@ class StoreSpec extends AnyFunSuite {
       graft.operators.SparseVectors.hashedTfidfWithStats(
         batch, "doc_id", "text", stats, topM = 16),
       comp, k = 3, bucketCap = 64)
-    val probePlan = executedPlan(out)
+    out.collect()
+    val probePlan = PlanShape.render(out)
     assert(!probePlan.contains("documents.parquet"),
       s"corpus text re-read from parquet:\n$probePlan")
     graft.engine.CacheRegistry.releaseAll()
