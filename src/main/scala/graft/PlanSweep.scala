@@ -67,8 +67,8 @@ object PlanSweep {
   /** Reruns of a query whose row differs from the one on file. A few
     * final plans depend on which of two concurrent stages AQE sees
     * finish first: it picks a runtime broadcast join's build side, and
-    * with it the codegen spans (q38, q102, q120 move `wscg` by one in
-    * about one run in six). A row on file that a rerun reproduces is
+    * with it the codegen spans (q38 moves `wscg` by one in about one
+    * run in six). A row on file that a rerun reproduces is
     * kept; one that no rerun reproduces has moved. */
   private val Retries = 4
 

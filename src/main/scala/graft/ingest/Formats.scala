@@ -628,11 +628,11 @@ object NormalizeUsers {
 
   /** Contributors dimension rows implied by a nested batch (either
     * submissions or users): deterministic id keyed by name, api_key
-    * unknown at ingest time. */
+    * unknown at ingest time. One row per snapshot, not per contributor:
+    * `Storage.upsertDimension` dedupes on the id, which the name fixes. */
   def contributorsOf(nested: DataFrame): DataFrame =
     nested.select(
       Normalize.contributorId(col("contributor_name")).as("contributor_id"),
       col("contributor_name").as("name"),
       lit(null).cast("string").as("api_key"))
-      .distinct()
 }

@@ -17,15 +17,15 @@ import org.apache.spark.sql.functions._
   * md5 for xxhash64 % B with no other change. The IDF convention is
   * q68's: ln((N+1)/(df+1)).
   *
-  * Scale shape of the vector build: tf is one shuffle keyed
-  * (doc, term); df one shuffle keyed term with the result broadcast
-  * back (vocab-sized, so the tf side never re-shuffles for the join);
-  * the corpus doc count rides a 1-row broadcast hash equi-join on a
-  * constant key — NOT a cross join, so no BroadcastNestedLoopJoin
-  * node anywhere in the plan (plan-audited); the bucket aggregation
-  * re-keys by (doc, bucket) with map-side partial aggregation; the
-  * norm + top-m cut are doc-keyed aggregations over each doc's ≤B
-  * bucket rows.
+  * Scale shape of the vector build: one token pass. The explode rows
+  * shuffle once on term; tf groups (doc, term) in those partitions
+  * and df is a count window over them (the tf rows ARE the distinct
+  * (doc, term) pairs). The corpus doc count rides a 1-row broadcast
+  * hash equi-join on a constant key — never a nested-loop join
+  * (plan-audited). One doc_id shuffle then serves the bucket sums,
+  * the L2 norm (a sum window) and the top-m cut: no statistic is
+  * joined back onto the frame it came from, so nothing is derived
+  * twice (SparseVectorsSpec pins one Generate per build).
   *
   * Pairing ([[sparseTopK]]) is a truncated impact-ordered postings
   * join — the classic IR bound, not LSH bucket sizing. Round 8's
@@ -57,7 +57,7 @@ object SparseVectors {
   private def termStream(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
     // NOT spread (round-18 A/B): the scan side is only tokenize +
-    // explode — the md5/bucket work runs AFTER the (doc, term) shuffle,
+    // explode — the md5/bucket work runs AFTER the first shuffle,
     // already distributed — and the extra exchange of raw text rows
     // measured as a regression (q113 2.25→2.80, q114 3.44→3.88)
     docs.select(col(idCol).as("doc_id"),
@@ -67,18 +67,47 @@ object SparseVectors {
     * distinct term plus the corpus doc count attached to every row.
     * Vocab-sized; this is the table the at-rest layout persists so a
     * later batch can be vectorized with CORPUS IDF without touching
-    * corpus text. The 1-row count joins in via a constant-key
-    * broadcast hash join (`pmod(x,1)=0` on both sides — non-foldable,
-    * so Catalyst keeps the equi-join and never plans a nested-loop
-    * cross). */
+    * corpus text. */
   def corpusStats(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val df = termStream(docs, idCol, textCol)
-      .select("doc_id", "term").distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_docs"))
+      textCol: String): DataFrame =
+    withDocCount(termStream(docs, idCol, textCol).distinct()
+      .groupBy("term").agg(count(lit(1)).as("df")), "df",
+      docs.agg(count(lit(1)).as("n_docs")))
+
+  /** The 1-row `n` (n_docs) onto every row of `df`: a constant-key
+    * broadcast hash join (`pmod(x,1)=0` on both sides, `keyCol` a
+    * non-null long — non-foldable, so Catalyst keeps the equi-join and
+    * never plans a nested-loop cross). */
+  private def withDocCount(df: DataFrame, keyCol: String,
+      n: DataFrame): DataFrame =
     df.join(broadcast(n),
-      pmod(col("df"), lit(1L)) === pmod(col("n_docs"), lit(1L)))
+      pmod(col(keyCol), lit(1L)) === pmod(col("n_docs"), lit(1L)))
+
+  /** The weighting core of both builds: (doc_id, term, tf, df) rows
+    * and the 1-row n_docs frame to (doc_id, bucket, wgt, comp_rank). */
+  private def components(tf: DataFrame, n: DataFrame, topM: Int): DataFrame = {
+    val byDoc = Window.partitionBy(col("doc_id"))
+    withDocCount(tf, "tf", n)
+      .select(col("doc_id"), substring(md5(col("term")), 1, 3).as("bucket"),
+        (signOf(col("term")) * col("tf") *
+          log((col("n_docs") + 1).cast("double") / (col("df") + 1)))
+          .as("contrib"))
+      // keyed doc_id once: the bucket sums, the norm window and the
+      // top-m window all run on these partitions
+      .repartition(col("doc_id"))
+      .groupBy("doc_id", "bucket").agg(sum(col("contrib")).as("wraw"))
+      .withColumn("nn", sqrt(sum(col("wraw") * col("wraw")).over(byDoc)))
+      // a zero-norm document (every bucket cancelled, or every term
+      // at IDF 0 under empty stats) has no direction: emit NO
+      // components rather than NaN = 0/0 weights
+      .filter(col("nn") > 0)
+      .select(col("doc_id"), col("bucket"),
+        // + 0.0 normalizes IEEE -0.0 (a bucket whose contributions
+        // cancel) so both engines emit the same zero
+        (round(col("wraw") / col("nn"), 6) + lit(0.0)).as("wgt"))
+      .withColumn("comp_rank", row_number()
+        .over(byDoc.orderBy(abs(col("wgt")).desc, col("bucket").asc)).cast("long"))
+      .filter(col("comp_rank") <= topM)
   }
 
   /** Sparse hashed-TF-IDF components of `docs` under EXTERNAL corpus
@@ -95,51 +124,28 @@ object SparseVectors {
       textCol: String, stats: DataFrame, topM: Int = 16): DataFrame = {
     val tf = termStream(docs, idCol, textCol)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // coalesce: an EMPTY stats frame must degrade to N=0 (every term
-    // df=0, IDF ln(1/(df+1)) — i.e. "no corpus knowledge"), not to a
-    // NULL n_docs that nulls the join condition and silently drops
-    // every tf row
-    val n = stats.agg(coalesce(max(col("n_docs")), lit(0L)).as("n_docs"))
-    val w0 = tf
-      // 1-row corpus count onto every tf row: constant-key broadcast
-      // HASH join (build side is one row — free, stays in codegen)
-      .join(broadcast(n),
-        pmod(col("tf"), lit(1L)) === pmod(col("n_docs"), lit(1L)))
       // vocab-sized df broadcast; left join so batch-only terms
       // survive with df=0
       .join(broadcast(stats.select(col("term"), col("df"))),
         Seq("term"), "left")
       .withColumn("df", coalesce(col("df"), lit(0L)))
-      .select(col("doc_id"), substring(md5(col("term")), 1, 3).as("bucket"),
-        (signOf(col("term")) * col("tf") *
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)))
-          .as("contrib"))
-      .groupBy("doc_id", "bucket").agg(sum(col("contrib")).as("wraw"))
-    val nrm = w0.groupBy("doc_id")
-      .agg(sqrt(sum(col("wraw") * col("wraw"))).as("nn"))
-    val win = Window.partitionBy(col("doc_id"))
-      .orderBy(abs(col("wgt")).desc, col("bucket").asc)
-    w0.join(nrm, Seq("doc_id"))
-      // a zero-norm document (every bucket cancelled — or EVERY term
-      // scoring IDF 0 under empty stats, where N=0 makes ln(1/(df+1))
-      // vanish) has no direction: emit NO components rather than
-      // NaN = 0/0 weights
-      .filter(col("nn") > 0)
-      .select(col("doc_id"), col("bucket"),
-        // + 0.0 normalizes IEEE -0.0 (a bucket whose contributions
-        // cancel) so both engines emit the same zero
-        (round(col("wraw") / col("nn"), 6) + lit(0.0)).as("wgt"))
-      .withColumn("comp_rank", row_number().over(win).cast("long"))
-      .filter(col("comp_rank") <= topM)
+    // coalesce: EMPTY stats must degrade to N=0 (every IDF 0, "no
+    // corpus knowledge"), not to a NULL n_docs that nulls the join
+    // condition and silently drops every tf row
+    components(tf,
+      stats.agg(coalesce(max(col("n_docs")), lit(0L)).as("n_docs")), topM)
   }
 
   /** Sparse hashed-TF-IDF components with stats drawn from `docs`
     * itself — the whole-corpus (q113) entry point; see
     * [[hashedTfidfWithStats]] for the shape and contract. */
   def hashedTfidf(docs: DataFrame, idCol: String, textCol: String,
-      topM: Int = 16): DataFrame =
-    hashedTfidfWithStats(docs, idCol, textCol,
-      corpusStats(docs, idCol, textCol), topM)
+      topM: Int = 16): DataFrame = {
+    val tf = termStream(docs, idCol, textCol).repartition(col("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+    components(tf, docs.agg(count(lit(1)).as("n_docs")), topM)
+  }
 
   /** `corpus` components cut to each bucket's `bucketCap`
     * highest-|weight| rows (ties by doc id) — the truncated
@@ -218,24 +224,18 @@ object SparseVectors {
     * query = corpus).
     *
     * The components frame is retained ([[graft.engine.CacheRegistry]],
-    * the same contract Dedup/Similarity use) before the self-join:
-    * without it the executed plan re-derives the whole term-stream →
-    * tf → df → normalize build on BOTH sides of the pairing (judge-
-    * measured ~4× at round 9), because the divergent window cuts on
-    * each side defeat Spark's exchange reuse. With the retain the
-    * build materializes once and both sides scan the in-memory
-    * relation.
+    * the same contract Dedup/Similarity use) before the self-join, so
+    * the build runs once and both sides scan the in-memory relation.
+    * Without it AQE still reuses the build's doc_id shuffle (one
+    * Generate), but the doc-keyed sums and windows run on both sides:
+    * on perfbench's `analytics` corpus that is 8 stages instead of 10,
+    * yet ×1.4 executor CPU per warm call and `step2_per_s` 344 → 269.
     *
-    * @note RELEASE OBLIGATION: the retained build is NOT scoped here —
-    *       unpersisting before the returned (lazy) frame materializes
-    *       would forfeit the reuse this method exists for. After
-    *       materializing the result, the caller must release it:
-    *       either wrap the query in
-    *       [[graft.engine.CacheRegistry.withRetained]] or call
-    *       [[graft.engine.CacheRegistry.releaseAll]] at the query
-    *       boundary (Bench's per-run clearCache subsumes this). A
-    *       caller that does neither leaks the cached build until LRU
-    *       eviction. */
+    * @note RELEASE OBLIGATION: the retained build is not scoped here
+    *       (releasing it before the lazy result runs would forfeit the
+    *       reuse): wrap the query in [[graft.engine.CacheRegistry
+    *       .withRetained]] or call [[graft.engine.CacheRegistry
+    *       .releaseAll]] once it has run, or the build stays cached. */
   def sparseTopK(components: DataFrame, k: Int = 3,
       bucketCap: Int = 64): DataFrame = {
     val c = graft.engine.CacheRegistry.retain(components)

@@ -236,8 +236,7 @@ object LlmOps {
     * At 100 TB: pairs shuffle only on cell keys (q82's scale
     * argument), components converge in O(cluster diameter) rounds over
     * the edge frame (edges ∝ near-dup pairs, not corpus), and the
-    * size/keep annotation is one grouped agg plus a co-partitioned
-    * join on the cluster key. */
+    * size/keep annotation is one count window on the cluster key. */
   private val q102SemanticDedup: Q = (s, d) => {
     import s.implicits._
     import graft.operators.EmbeddingDedup
@@ -256,17 +255,15 @@ object LlmOps {
   private def semanticDedupDecision(s: SparkSession, ids: DataFrame,
       pairs: DataFrame): DataFrame = {
     import s.implicits._
-    val labeled = ids
+    import org.apache.spark.sql.expressions.Window
+    ids
       .join(Dedup.connectedComponents(pairs, "id_a", "id_b")
           .select($"node".as("vec_id"), $"cluster"),
         Seq("vec_id"), "left")
       .select($"vec_id", coalesce($"cluster", $"vec_id").as("sem_cluster"))
-    val sizes = labeled.groupBy($"sem_cluster")
-      .agg(count(lit(1)).as("cluster_size"))
-    labeled.join(sizes, Seq("sem_cluster"))
       .select($"vec_id", $"sem_cluster",
         ($"vec_id" === $"sem_cluster").cast("long").as("is_kept"),
-        $"cluster_size")
+        count(lit(1)).over(Window.partitionBy($"sem_cluster")).as("cluster_size"))
   }
 
   /** One k-means training step for the IVF index (the pass that slots
