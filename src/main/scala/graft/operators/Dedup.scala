@@ -12,12 +12,26 @@ import org.apache.spark.sql.functions._
   * whole family stays inside WholeStageCodegen until the LSH-bucket
   * shuffle.
   *
-  * Scale design:
-  *  - shingling/signatures are per-row narrow projections (no shuffle);
-  *  - LSH banding shuffles once on (band_id, band_hash) — the classic
-  *    O(n·bands) candidate generation instead of O(n²) pairs;
-  *  - candidate verification joins only within buckets; skewed buckets
-  *    (boilerplate shingles) can be salted or capped upstream.
+  * Scale design: one pipeline, sketch → candidates → verify.
+  *  - Sketch. [[corpusSketch]] is the one per-doc sketch build
+  *    (shingles, minhash signature, simhash), a narrow projection with
+  *    no shuffle. [[explodedBands]] and [[explodedChunks]] turn it into
+  *    the two bucket-key tables, in memory or at rest.
+  *  - Candidates. Minhash bands bucket on (band_id, band_hash), simhash
+  *    chunks on (chunk_idx, chunk_value): O(n·bands) candidate
+  *    generation instead of O(n²) pairs. Within a corpus each table
+  *    self-joins ([[multiSketchPairsFromStore]]); a batch probes a
+  *    corpus by joining its key tables to the corpus's
+  *    ([[incrementalPairsBetweenStores]]).
+  *  - Verify. Every path hands its candidate pairs to one exact-Jaccard
+  *    core ([[verifiedByJaccard]]). A lossless filter ahead of exact
+  *    Jaccard (length, prefix) goes there, and every path inherits it.
+  *
+  * The text-taking entry points ([[multiSketchPairs]],
+  * [[incrementalMinhashPairsFromStore]]) sketch once and delegate to
+  * the store variants; the single-family paths ([[minhashLshPairs]],
+  * [[SimhashPairs]]) sketch only their own family and share the
+  * candidate and verification steps.
   */
 object Dedup {
 
@@ -38,23 +52,6 @@ object Dedup {
     * scale. */
   def minhashSignature(sh: Column, k: Int = 32): Column =
     graft.functions.TextHashes.minhashSignature(sh, k)
-
-  /** The pure-functions formulation kept for reference/portability: a
-    * single left fold maintaining all k mins at once (an outer
-    * per-permutation lambda would re-evaluate the whole upstream
-    * shingle subtree per permutation after CollapseProject — measured
-    * 20× slower; the native expression above is another ~10× over this
-    * because nested higher-order functions evaluate interpreted with
-    * per-element boxing). */
-  def minhashSignatureHof(sh: Column, k: Int = 32): Column = {
-    val base = transform(sh, s => xxhash64(s))
-    aggregate(base,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(k - 1)), i => xxhash64(h, i)),
-        (a, x) => least(a, x)))
-  }
 
   /** LSH band keys: split the signature into `bands` bands of
     * `rows = k/bands` and hash each; docs sharing any (band, hash) are
@@ -118,33 +115,50 @@ object Dedup {
     * 30 cores idle. Keyed on the first verification join's key so the
     * exchange doubles as that join's left-side distribution — at any
     * scale the join needed this shuffle anyway. */
-  private def spreadForVerify(cands: DataFrame, key: String): DataFrame =
+  private[operators] def spreadForVerify(cands: DataFrame, key: String): DataFrame =
     graft.engine.Spread.spreadForExplosion(cands, col(key))
 
-  /** Bucketed candidate self-join over a (keys..., doc, simhash)
-    * sketch table: (doc_a, doc_b) pairs sharing the bucket key, each
-    * generated exactly once. With `saltSlices > 1` the left side
-    * hashes into sub-buckets and the right side replicates over every
-    * slice, spreading a hot bucket's O(n²) pair generation across
-    * saltSlices tasks — template-biased fingerprints can put 25%+ of a
-    * corpus into single chunk buckets, and AQE skew-join thresholds
-    * (hundreds of MB) never fire at sketch sizes. Default 1 adds no
-    * salt machinery at all: replication costs more than the skew saves
-    * below ~10k-doc buckets (DedupSpec asserts salted == unsalted). */
-  private[operators] def bucketSelfJoinPairs(
-      chunked: DataFrame, keys: Seq[String], saltSlices: Int): DataFrame = {
-    val aBase = chunked.select(keys.map(col) ++ Seq(
-      col("doc").as("doc_a"), col("simhash").as("sim_a")): _*)
-    val bBase = chunked.select(keys.map(col) ++ Seq(
-      col("doc").as("doc_b"), col("simhash").as("sim_b")): _*)
-    val joined =
-      if (saltSlices <= 1) aBase.join(bBase, keys)
-      else aBase
-        .withColumn("salt", pmod(xxhash64(col("doc_a")), lit(saltSlices)).cast("int"))
-        .join(bBase.withColumn("salt",
-          explode(sequence(lit(0), lit(saltSlices - 1)))), keys :+ "salt")
-    joined.filter(col("doc_a") < col("doc_b"))
-  }
+  /** The verification step of every sketch path: candidate pairs
+    * (`aCol`, `bCol`) meet their shingle arrays — `left` (doc, sh) on
+    * `aCol`, `right` (doc, sh) on `bCol` — the lossless
+    * [[sizeRatioAtLeast]] cut drops pairs whose lengths already rule
+    * the threshold out, and exact [[jaccard]] >= `threshold` decides.
+    * Returns (`aCol`, `bCol`, jaccard). Callers set the candidate
+    * frame's width ([[spreadForVerify]]) and prune an at-rest side
+    * ([[pruneToCandidateDocs]]) before calling; the joins carry no
+    * hint, so AQE sizes them from the runtime shingle tables. */
+  private[operators] def verifiedByJaccard(cands: DataFrame,
+      aCol: String, bCol: String, left: DataFrame, right: DataFrame,
+      threshold: Double): DataFrame =
+    cands
+      .join(left.select(col("doc").as(aCol), col("sh").as("sh_a")), Seq(aCol))
+      .join(right.select(col("doc").as(bCol), col("sh").as("sh_b")), Seq(bCol))
+      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(aCol), col(bCol), col("jaccard"))
+
+  /** Within-table minhash candidates: (doc_a, doc_b) pairs of a band
+    * table ([[explodedBands]]) sharing a (band_id, band_hash) bucket,
+    * doc_a < doc_b, once per shared band. */
+  private def bandSelfJoinPairs(banded: DataFrame): DataFrame =
+    banded.select(col("band_id"), col("band_hash"), col("doc").as("doc_a"))
+      .join(banded.select(col("band_id"), col("band_hash"), col("doc").as("doc_b")),
+        Seq("band_id", "band_hash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b")
+
+  /** Within-table simhash candidates: (doc_a, doc_b, sim_a, sim_b)
+    * pairs of a chunk table ([[explodedChunks]]) sharing a
+    * (chunk_idx, chunk_value) bucket, doc_a < doc_b, once per shared
+    * chunk. Callers cut on Hamming distance. */
+  private[operators] def bucketSelfJoinPairs(chunked: DataFrame): DataFrame =
+    chunked.select(col("chunk_idx"), col("chunk_value"),
+        col("doc").as("doc_a"), col("simhash").as("sim_a"))
+      .join(chunked.select(col("chunk_idx"), col("chunk_value"),
+          col("doc").as("doc_b"), col("simhash").as("sim_b")),
+        Seq("chunk_idx", "chunk_value"))
+      .filter(col("doc_a") < col("doc_b"))
 
   /** MinHash+LSH candidate pairs with exact-Jaccard verification.
     * Returns (doc_a, doc_b, jaccard) for candidates with
@@ -164,35 +178,23 @@ object Dedup {
         shingles(col(textCol)).as("sh")))
     // band the ids only — the heavy shingle arrays are joined back in
     // just for the (much smaller) candidate set
-    val banded = sh
-      .select(col("doc"),
-        explode(bandKeys(minhashSignature(col("sh"), k), k, bands)).as("band"))
-      .select(col("doc"),
-        col("band.band_id").as("band_id"), col("band.band_hash").as("band_hash"))
-    val pairs = banded.select(col("band_id"), col("band_hash"), col("doc").as("doc_a"))
-      .join(banded.select(col("band_id"), col("band_hash"), col("doc").as("doc_b")),
-        Seq("band_id", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
+    val pairs = bandSelfJoinPairs(explodedBands(
+        sh.select(col("doc"), minhashSignature(col("sh"), k).as("sig")), k, bands))
       .distinct() // a pair may collide in several bands
-    spreadForVerify(pairs, "doc_a")
-      .join(sh.select(col("doc").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedByJaccard(spreadForVerify(pairs, "doc_a"), "doc_a", "doc_b",
+      sh, sh, threshold)
   }
 
-  /** Per-doc sketch frame (doc, sh, sig, simhash) — the table a
-    * production deployment persists ONCE per corpus so later ingest
-    * batches never re-read or re-hash the corpus text (at 100 TB,
-    * additionally persist the exploded band/chunk tables bucketed by
-    * their bucket keys; [[incrementalMinhashPairs]] derives them
-    * narrowly when absent). Carries BOTH sketch families: single-
-    * sketch banding recall is probabilistic (measured at sf0.1:
-    * minhash 4×8 misses a few J 0.9+ pairs, simhash chunks miss
-    * others, the union misses none — see [[multiSketchPairs]]). */
+  /** Per-doc sketch frame (doc, sh, sig, simhash) — the one sketch
+    * build of the family, and the table a production deployment
+    * persists ONCE per corpus so later ingest batches never re-read or
+    * re-hash the corpus text (at 100 TB, additionally persist the
+    * exploded band/chunk tables bucketed by their bucket keys;
+    * [[incrementalMinhashPairs]] derives them narrowly when absent).
+    * Carries BOTH sketch families: single-sketch banding recall is
+    * probabilistic (measured at sf0.1: minhash 4×8 misses a few J 0.9+
+    * pairs, simhash chunks miss others, the union misses none — see
+    * [[multiSketchPairs]]). */
   def corpusSketch(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 32): DataFrame =
     spread(docs.select(col(idCol), col(textCol)))
@@ -270,8 +272,10 @@ object Dedup {
     * read from persisted storage, so an ingest batch never re-reads or
     * re-hashes corpus text even across JVMs (the in-JVM-cache variant
     * above derives them from the sketch frame and delegates here).
-    * Same contract: batch/corpus ids disjoint, broadcast hint only
-    * under `maxBroadcastBatchDocs`. */
+    * The batch is sketched once ([[corpusSketch]], retained) and probes
+    * through [[incrementalPairsBetweenStores]]. Same contract:
+    * batch/corpus ids disjoint, broadcast hint only under
+    * `maxBroadcastBatchDocs`. */
   def incrementalMinhashPairsFromStore(
       corpusShingles: DataFrame, corpusBands: DataFrame,
       corpusChunks: DataFrame, batch: DataFrame,
@@ -279,40 +283,11 @@ object Dedup {
       chunks: Int = 8, threshold: Double = 0.8,
       maxBroadcastBatchDocs: Long = 1000000L): DataFrame = {
     val batchSk = graft.engine.CacheRegistry.retain(
-      spread(batch.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("doc"), shingles(col(textCol)).as("sh"),
-          simhash(col(textCol)).as("simhash"))
-        .withColumn("sig", minhashSignature(col("sh"), k)))
-    val hintBatch: DataFrame => DataFrame =
-      if (batchSk.count() <= maxBroadcastBatchDocs) broadcast else identity
-    val batchBands = explodedBands(batchSk, k, bands)
-      .select(col("doc").as("batch_doc"), col("band_id"), col("band_hash"))
-    val batchChunks = explodedChunks(batchSk, chunks)
-      .select(col("doc").as("batch_doc"),
-        col("simhash").as("sim_a"), col("chunk_idx"), col("chunk_value"))
-    val mhCands = pruneToProbeKeys(corpusBands, "band_hash",
-        batchBands, "band_hash")
-      .join(hintBatch(batchBands), Seq("band_id", "band_hash"))
-      .select(col("batch_doc"), col("doc").as("corpus_doc"))
-    // pigeonhole: any pair within Hamming < chunks shares a chunk
-    val shCands = pruneToProbeKeys(corpusChunks, "chunk_value",
-        batchChunks, "chunk_value")
-      .join(hintBatch(batchChunks), Seq("chunk_idx", "chunk_value"))
-      .filter(hamming(col("sim_a"), col("simhash")) <= chunks - 1)
-      .select(col("batch_doc"), col("doc").as("corpus_doc"))
-    val cands = graft.engine.CacheRegistry.retain(
-      mhCands.unionByName(shCands)
-        .distinct()) // a pair may collide in several buckets/sketches
-    cands
-      .join(batchSk.select(col("doc").as("batch_doc"), col("sh").as("sh_a")),
-        Seq("batch_doc"))
-      .join(pruneToCandidateDocs(corpusShingles, cands, "corpus_doc")
-          .select(col("doc").as("corpus_doc"), col("sh").as("sh_b")),
-        Seq("corpus_doc"))
-      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_doc"), col("corpus_doc"), col("jaccard"))
+      corpusSketch(batch, idCol, textCol, k))
+    incrementalPairsBetweenStores(corpusShingles, corpusBands, corpusChunks,
+      batchSk.select(col("doc"), col("sh")), explodedBands(batchSk, k, bands),
+      explodedChunks(batchSk, chunks), chunks, threshold,
+      maxBroadcastBatchDocs)
   }
 
   /** The corpus-side shingle frame restricted to a probe's candidate
@@ -349,25 +324,25 @@ object Dedup {
       probe: DataFrame, probeCol: String): DataFrame =
     graft.engine.ProbePrune.pruneToProbeKeys(table, tableCol, probe, probeCol)
 
-  /** [[incrementalMinhashPairsFromStore]] with the BATCH side ALSO in
-    * sketch-table form: both ends of the probe are (shingles, bands,
-    * chunks) frames, so the operation hashes no text at all. This is
-    * the accept-lifecycle shape — acceptSketchBatch persists the
-    * batch's sketch before the cluster write-back runs, so
-    * [[graft.queries.LlmOps.acceptClusterRelabel]] probes with the
-    * partitions just written instead of re-shingling the batch text
-    * (which the inline variants do once per call — three sketch
-    * passes per accepted batch before this existed). The batch-side
-    * frames also come cheap from a single in-memory [[corpusSketch]]
-    * via [[explodedBands]]/[[explodedChunks]] (the q123 shape).
-    * Candidate generation broadcasts the batch-side key tables while
-    * the batch holds at most `maxBroadcastBatchDocs` docs — the same
-    * backfill guard, decided by one batch-sized count; verification
-    * joins the two shingle tables. Recall contract identical to the
-    * inline variant: the union of both sketch families' collisions,
-    * each pair verified once by exact Jaccard. Batch and corpus doc
-    * ids must be disjoint (the accept id guard enforces it). Returns
-    * (batch_doc, corpus_doc, jaccard >= threshold). */
+  /** Batch-vs-corpus near-dup pairs with BOTH ends in sketch-table
+    * form: each side is a (shingles, bands, chunks) triple, so the
+    * operation hashes no text at all. Every batch probe lands here:
+    * [[incrementalMinhashPairsFromStore]] sketches its batch text once
+    * and delegates; the accept lifecycle
+    * ([[graft.queries.LlmOps.acceptClusterRelabel]]) passes the batch
+    * partitions acceptSketchBatch just wrote, or one in-memory
+    * [[corpusSketch]] of the batch via [[explodedBands]]/
+    * [[explodedChunks]] (the q123 shape).
+    *
+    * One hint rule: the batch's narrow key tables (`bands` + `chunks`
+    * rows per doc) are broadcast while the batch holds at most
+    * `maxBroadcastBatchDocs` docs — the backfill guard, decided by one
+    * batch-sized count. The verification joins carry the whole shingle
+    * arrays and get no hint; AQE picks their strategy from runtime
+    * sizes. Recall contract: the union of both sketch families'
+    * collisions, each pair verified once by exact Jaccard. Batch and
+    * corpus doc ids must be disjoint (the accept id guard enforces
+    * it). Returns (batch_doc, corpus_doc, jaccard >= threshold). */
   def incrementalPairsBetweenStores(
       corpusShingles: DataFrame, corpusBands: DataFrame,
       corpusChunks: DataFrame, batchShingles: DataFrame,
@@ -394,17 +369,8 @@ object Dedup {
     val cands = graft.engine.CacheRegistry.retain(
       mhCands.unionByName(shCands)
         .distinct()) // a pair may collide in several buckets/sketches
-    cands
-      .join(hintBatch(batchShingles
-          .select(col("doc").as("batch_doc"), col("sh").as("sh_a"))),
-        Seq("batch_doc"))
-      .join(pruneToCandidateDocs(corpusShingles, cands, "corpus_doc")
-          .select(col("doc").as("corpus_doc"), col("sh").as("sh_b")),
-        Seq("corpus_doc"))
-      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_doc"), col("corpus_doc"), col("jaccard"))
+    verifiedByJaccard(cands, "batch_doc", "corpus_doc", batchShingles,
+      pruneToCandidateDocs(corpusShingles, cands, "corpus_doc"), threshold)
   }
 
   /** [[multiSketchPairs]] against the AT-REST corpus layout: WITHIN-
@@ -416,55 +382,32 @@ object Dedup {
     * With the tables bucketed by their bucket keys (the layout
     * [[corpusSketch]] prescribes and q91's store writes), both
     * candidate self-joins can run bucket-local — no Exchange on the
-    * n·bands candidate-generation side, which is the whole shuffle
-    * cost of the inline path (at gate scale the planner instead picks
-    * a broadcast build over one bucketed scan: also Exchange-free, and
-    * faster than the inline path even against its warm cache because
-    * the sketch compute is gone — the committed BENCH_FULL_latest.json
-    * carries the gate-level comparison, q119 vs q67).
-    * Verification reads the stored shingle arrays (doc-bucketed, so
-    * the verification joins co-partition at corpus scale).
-    * Recall contract identical to [[multiSketchPairs]]:
-    * the union of both sketch families' candidates, each pair verified
-    * exactly once by exact Jaccard. Returns (doc_a, doc_b, jaccard
-    * >= threshold) with doc_a < doc_b. */
+    * n·bands candidate-generation side (at gate scale the planner
+    * instead picks a broadcast build over one bucketed scan: also
+    * Exchange-free, and faster than the inline path even against its
+    * warm cache because the sketch compute is gone — the committed
+    * BENCH_FULL_latest.json carries the gate-level comparison, q119 vs
+    * q67). Verification reads the stored shingle arrays (doc-bucketed,
+    * so the verification joins co-partition at corpus scale).
+    * Bands and chunks self-join separately, so their bucket keys never
+    * need to be told apart. Recall contract: the union of both sketch
+    * families' candidates, each pair verified exactly once by exact
+    * Jaccard. `spreadVerify = false` is for BATCH-sized sketch frames
+    * (q123's internal-edge call), where the pinned exchange costs more
+    * than the full-width verification buys. Returns (doc_a, doc_b,
+    * jaccard >= threshold) with doc_a < doc_b. */
   def multiSketchPairsFromStore(corpusShingles: DataFrame,
       corpusBands: DataFrame, corpusChunks: DataFrame,
       threshold: Double = 0.8, chunks: Int = 8,
       spreadVerify: Boolean = true): DataFrame = {
-    val mhCands = corpusBands
-      .select(col("band_id"), col("band_hash"), col("doc").as("doc_a"))
-      .join(corpusBands.select(col("band_id"), col("band_hash"),
-          col("doc").as("doc_b")),
-        Seq("band_id", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val shCands = corpusChunks
-      .select(col("chunk_idx"), col("chunk_value"),
-        col("doc").as("doc_a"), col("simhash").as("sim_a"))
-      .join(corpusChunks.select(col("chunk_idx"), col("chunk_value"),
-          col("doc").as("doc_b"), col("simhash").as("sim_b")),
-        Seq("chunk_idx", "chunk_value"))
-      .filter(col("doc_a") < col("doc_b"))
+    val shCands = bucketSelfJoinPairs(corpusChunks)
       // pigeonhole: any pair within Hamming < chunks shares a chunk
       .filter(hamming(col("sim_a"), col("sim_b")) <= chunks - 1)
       .select("doc_a", "doc_b")
-    // a pair may collide in several buckets/sketches → distinct;
-    // spreadVerify=false for BATCH-sized sketch frames (q123's
-    // internal-edge call), where the pinned exchange costs more than
-    // the 32-way verification buys — the corpus-scale callers (q119)
-    // keep the full-width verification
-    val dedupedCands = mhCands.unionByName(shCands).distinct()
-    (if (spreadVerify) spreadForVerify(dedupedCands, "doc_a")
-     else dedupedCands)
-      .join(corpusShingles.select(col("doc").as("doc_a"), col("sh").as("sh_a")),
-        Seq("doc_a"))
-      .join(corpusShingles.select(col("doc").as("doc_b"), col("sh").as("sh_b")),
-        Seq("doc_b"))
-      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // a pair may collide in several buckets/sketches
+    val cands = bandSelfJoinPairs(corpusBands).unionByName(shCands).distinct()
+    verifiedByJaccard(if (spreadVerify) spreadForVerify(cands, "doc_a") else cands,
+      "doc_a", "doc_b", corpusShingles, corpusShingles, threshold)
   }
 
   /** Multi-sketch near-dup pair generation: the UNION of the
@@ -477,46 +420,18 @@ object Dedup {
     * missed. Unioning independent sketch families is the production
     * answer for recall at corpus scale.
     *
-    * One scan computes shingles, minhash signature, and simhash per
-    * doc into a single persisted sketch table; both candidate
-    * generators and both sides of the verification join read it, and
-    * each candidate pair is verified exactly once. */
+    * One scan sketches every doc into a retained [[corpusSketch]];
+    * [[multiSketchPairsFromStore]] then runs over its shingles and its
+    * exploded band and chunk tables, so each candidate pair is
+    * verified exactly once. */
   def multiSketchPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, k: Int = 32, bands: Int = 4,
-      chunks: Int = 8, saltSlices: Int = 1): DataFrame = {
-    val bits = 64 / chunks
-    val base = graft.engine.CacheRegistry.retain(
-      spread(docs.select(col(idCol), col(textCol)))
-        .select(col(idCol).as("doc"),
-          shingles(col(textCol)).as("sh"),
-          simhash(col(textCol)).as("simhash"))
-        .withColumn("sig", minhashSignature(col("sh"), k)))
-    val banded = base.select(col("doc"),
-      explode(bandKeys(col("sig"), k, bands)).as("band"))
-      .select(col("doc"), col("band.band_id").as("kind_key"),
-        col("band.band_hash").as("bucket"))
-    val chunked = base.select(col("doc"), col("simhash"),
-      explode(transform(sequence(lit(0), lit(chunks - 1)), c => struct(
-        (c + 1000).as("kind_key"), // offset: never collides with band ids
-        call_function("shiftright", col("simhash"), c * bits)
-          .bitwiseAND(lit((1L << bits) - 1)).as("bucket")))).as("ch"))
-      .select(col("doc"), col("simhash"),
-        col("ch.kind_key").as("kind_key"), col("ch.bucket").as("bucket"))
-    val mhCands = banded.select(col("kind_key"), col("bucket"), col("doc").as("doc_a"))
-      .join(banded.select(col("kind_key"), col("bucket"), col("doc").as("doc_b")),
-        Seq("kind_key", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    val shCands = bucketSelfJoinPairs(chunked, Seq("kind_key", "bucket"), saltSlices)
-      .filter(hamming(col("sim_a"), col("sim_b")) <= chunks - 1)
-      .select("doc_a", "doc_b")
-    spreadForVerify(mhCands.unionByName(shCands).distinct(), "doc_a")
-      .join(base.select(col("doc").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(base.select(col("doc").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .filter(sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      chunks: Int = 8): DataFrame = {
+    val sk = graft.engine.CacheRegistry.retain(
+      corpusSketch(docs, idCol, textCol, k))
+    multiSketchPairsFromStore(sk.select(col("doc"), col("sh")),
+      explodedBands(sk, k, bands), explodedChunks(sk, chunks),
+      threshold, chunks)
   }
 
   private def symEdges(e: DataFrame): DataFrame =
@@ -895,27 +810,16 @@ object Dedup {
   * with one shuffle — no O(n²) comparison.
   */
 object SimhashPairs {
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.{DataFrame}
 
   def pairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, saltSlices: Int = 1): DataFrame = {
+      maxHamming: Int = 3, chunks: Int = 4): DataFrame = {
     require(64 % chunks == 0, "chunks must divide 64")
-    val bits = 64 / chunks
     val sh = Dedup.spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol).as("doc"),
         Dedup.simhash(col(textCol)).as("simhash"))
-    val chunked = sh.select(col("doc"), col("simhash"),
-      explode(transform(sequence(lit(0), lit(chunks - 1)), c => struct(
-        c.as("chunk_idx"),
-        call_function("shiftright", col("simhash"), c * bits)
-          .bitwiseAND(lit((1L << bits) - 1)).as("chunk_value")))).as("ch"))
-      .select(col("doc"), col("simhash"),
-        col("ch.chunk_idx").as("chunk_idx"), col("ch.chunk_value").as("chunk_value"))
     // hamming is cheap per-row bit math — cut BEFORE the distinct so
-    // the dedup shuffle only carries surviving pairs (salting
-    // semantics: Dedup.bucketSelfJoinPairs)
-    Dedup.bucketSelfJoinPairs(chunked, Seq("chunk_idx", "chunk_value"), saltSlices)
+    // the dedup shuffle only carries surviving pairs
+    Dedup.bucketSelfJoinPairs(Dedup.explodedChunks(sh, chunks))
       .withColumn("hamming", Dedup.hamming(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming").distinct()
@@ -939,12 +843,7 @@ object SimhashPairs {
           Dedup.shingles(col(textCol)).as("sh")))
     val cands = pairs(docs, idCol, textCol, maxHamming = chunks - 1, chunks = chunks)
       .select(col("doc_a"), col("doc_b"))
-    graft.engine.Spread.spreadForExplosion(cands, col("doc_a"))
-      .join(sh.select(col("doc").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .filter(Dedup.sizeRatioAtLeast(col("sh_a"), col("sh_b"), threshold))
-      .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    Dedup.verifiedByJaccard(Dedup.spreadForVerify(cands, "doc_a"),
+      "doc_a", "doc_b", sh, sh, threshold)
   }
 }

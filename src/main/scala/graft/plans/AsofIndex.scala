@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   * candidates sorted ascending by (time, tieBreak) — `times` as the
   * binary-search axis, payload structs aligned with it. Built from the
   * broadcast dimension rows on the executor, ONCE per executor per
-  * broadcast (see [[AsofIndex.forBroadcast]]), never per task.
+  * broadcast (see [[AsofIndex.BuildSpec.indexFor]]), never per task.
   *
   * Why not build it inside the broadcast exchange (the HashedRelation
   * lifecycle, where the broadcast VALUE is the built structure):
@@ -91,37 +91,36 @@ object AsofIndex {
     def indexFor(
         b: org.apache.spark.broadcast.Broadcast[Array[InternalRow]])
         : AsofIndex =
-      forBroadcast(b.id, b.value, rightOutput, rightKeys, rightTime,
-        tieBreak, payload)
+      shared.get((b.id, this), new Callable[AsofIndex] {
+        override def call(): AsofIndex =
+          build(b.value, rightOutput, rightKeys, rightTime, tieBreak, payload)
+      })
   }
 
-  /** Executor-local share: one built index per live broadcast, keyed
-    * by broadcast id. Values are weak — the cache never pins memory
-    * beyond the tasks (and small id-keyed map) that hold the index;
-    * after they release it, GC may reclaim and a later task rebuilds.
-    * Guava's loading `get` serializes concurrent builders of the same
-    * key, so simultaneous first tasks build exactly once. */
+  /** Executor-local share: one built index per broadcast, held
+    * STRONGLY, so every task wave of every run over that broadcast
+    * probes the same index. Between waves no task holds the index, so
+    * a cache that held it only weakly would let a GC force a second
+    * build for one broadcast. Bound: at most [[maxPinned]] indexes stay
+    * pinned per JVM, least recently used evicted first; each is a
+    * sorted copy of one broadcast dimension's rows, so the pinned
+    * memory is at most that many dimensions. A broadcast evicted while
+    * still in use is rebuilt (correct, only slower). The key pairs the
+    * broadcast id with the build spec: a new SparkContext in the same
+    * JVM numbers its broadcasts from 0 again, and the spec's attribute
+    * ids, unique in the JVM, keep its broadcasts apart from the old
+    * one's. Guava's loading `get` serializes concurrent builders of
+    * the same key, so simultaneous first tasks build exactly once. */
+  private val maxPinned = 8L
+
   private val shared =
     com.google.common.cache.CacheBuilder.newBuilder()
-      .weakValues()
-      .build[java.lang.Long, AsofIndex]()
+      .maximumSize(maxPinned)
+      .build[(Long, BuildSpec), AsofIndex]()
 
   /** Observability hook for the build-once contract (AsofJoinSpec
     * pins: many fact partitions, one build per broadcast). */
   private[graft] val buildCount = new AtomicLong(0L)
-
-  def forBroadcast(
-      broadcastId: Long,
-      rows: Array[InternalRow],
-      rightOutput: Seq[Attribute],
-      rightKeys: Seq[Attribute],
-      rightTime: Attribute,
-      tieBreak: Attribute,
-      payload: Seq[Attribute]): AsofIndex =
-    shared.get(broadcastId, new Callable[AsofIndex] {
-      override def call(): AsofIndex =
-        build(rows, rightOutput, rightKeys, rightTime, tieBreak, payload)
-    })
 
   /** Group by key and sort each group's candidates by (time,
     * tieBreak). Null-time rows are dropped (they cannot satisfy

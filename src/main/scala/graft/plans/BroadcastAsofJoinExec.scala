@@ -34,7 +34,7 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
   *
   * The broadcast rows build a key → time-sorted-candidates probe index
   * ([[AsofIndex]]) ONCE PER EXECUTOR per broadcast — tasks share it
-  * through an id-keyed weak cache, so a fact-side stage with thousands
+  * through a bounded executor-side cache, so a fact-side stage with thousands
   * of tasks never repeats the dimension group-and-sort (see AsofIndex's
   * scaladoc for why the build cannot live inside the exchange itself).
   * Each left row then answers with one hash probe plus a binary search

@@ -497,36 +497,33 @@ object LlmOps {
     // the accept contract sketches the batch FIRST (acceptSketchBatch,
     // same id), so on the common path the batch's sketch is already AT
     // REST in its sketch_accept partitions — probe with those and hash
-    // no text in this verb at all (the inline variants would sketch
-    // the batch twice more). Fall back to inline sketching only when
-    // that accept is missing, or already folded into the base (where
-    // its rows are indistinguishable from corpus rows).
+    // no text in this verb at all. Sketch the batch inline (once, the
+    // q123 shape) only when that accept is missing, or already folded
+    // into the base (where its rows are indistinguishable from corpus
+    // rows).
     val sketchAtRest =
       !alreadyFolded(s, d, "sketch_accept", batchId) &&
         graft.storage.DurableStores
           .committedBatches(s, d, "sketch_accept").contains(batchId)
     graft.engine.CacheRegistry.withRetained {
-      val (bc, bb) = if (sketchAtRest) {
+      val (bsh, bbands, bchunks) = if (sketchAtRest) {
         def ownP(delta: DataFrame): DataFrame =
           delta.filter(col("batch_id") === batchId).drop("batch_id")
-        val (bsh, bbands, bchunks) = (ownP(ash), ownP(abands), ownP(achunks))
-        (Dedup.incrementalPairsBetweenStores(
-            sh.unionByName(prior(ash)), bands.unionByName(prior(abands)),
-            chunks.unionByName(prior(achunks)),
-            bsh, bbands, bchunks, threshold = 0.8)
-          .select(col("batch_doc"), col("corpus_doc")),
-         Dedup.multiSketchPairsFromStore(bsh, bbands, bchunks,
-            threshold = 0.8, spreadVerify = false) // batch-sized frames
-          .select(col("doc_a"), col("doc_b")))
+        (ownP(ash), ownP(abands), ownP(achunks))
       } else {
-        (Dedup.incrementalMinhashPairsFromStore(
-            sh.unionByName(prior(ash)), bands.unionByName(prior(abands)),
-            chunks.unionByName(prior(achunks)),
-            batch, idCol, textCol, k = 32, bands = 4, threshold = 0.8)
-          .select(col("batch_doc"), col("corpus_doc")),
-         Dedup.multiSketchPairs(batch, idCol, textCol, threshold = 0.8)
-          .select(col("doc_a"), col("doc_b")))
+        val bsk = graft.engine.CacheRegistry.retain(
+          Dedup.corpusSketch(batch, idCol, textCol))
+        (bsk.select(col("doc"), col("sh")),
+          Dedup.explodedBands(bsk, 32, 4), Dedup.explodedChunks(bsk, 8))
       }
+      val bc = Dedup.incrementalPairsBetweenStores(
+          sh.unionByName(prior(ash)), bands.unionByName(prior(abands)),
+          chunks.unionByName(prior(achunks)),
+          bsh, bbands, bchunks, threshold = 0.8)
+        .select(col("batch_doc"), col("corpus_doc"))
+      val bb = Dedup.multiSketchPairsFromStore(bsh, bbands, bchunks,
+          threshold = 0.8, spreadVerify = false) // batch-sized frames
+        .select(col("doc_a"), col("doc_b"))
       val delta = Dedup.incrementalConnectedComponentsDelta(
         effectiveClusterLabels(s, d, before = Some(batchId),
           lineage = lineage), bc, bb)

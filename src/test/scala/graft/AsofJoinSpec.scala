@@ -1071,6 +1071,25 @@ class AsofJoinSpec extends AnyFunSuite {
     assert(builds === 1L, s"expected one index build across 16 tasks, got $builds")
   }
 
+  test("broadcast asof keeps its probe index across a GC between task waves") {
+    val s = spark
+    import s.implicits._
+    // two runs of one executed plan are two waves over one broadcast;
+    // between them no task holds the index, so a forced GC is the
+    // moment a reclaimable index would be lost and built again
+    val left = (0L until 400L).map(i => (i % 7, i, i * 3L))
+      .toDF("k", "lid", "t").repartition(4)
+    val right = (0L until 50L).map(i => (i % 7, 1000L + i, i * 4L)).toDF("k", "rid", "t")
+    val q = AsofJoin.asofJoinNative(left, right, Seq("k"), "t", "t", "rid",
+      broadcast = Some(true)).selectExpr("lid", "asof.rid AS rid")
+    val before = graft.plans.AsofIndex.buildCount.get()
+    val first = q.collect().toSeq
+    System.gc()
+    assert(q.collect().toSeq === first)
+    val builds = graft.plans.AsofIndex.buildCount.get() - before
+    assert(builds === 1L, s"expected one index build across two waves, got $builds")
+  }
+
   test("broadcast asof: null times, empty right, ties resolve to max tieBreak") {
     val s = spark
     import s.implicits._

@@ -227,11 +227,6 @@ class DedupSpec extends AnyFunSuite {
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((0L, 3L))) // exact dup: hamming 0, all chunks match
     assert(pairs.find(p => p._1 == 0L && p._2 == 3L).get._3 === 0)
-    // the skew-spreading salted join must produce the identical pair set
-    val salted = graft.operators.SimhashPairs.pairs(docs, "doc_id", "text",
-      maxHamming = 16, chunks = 4, saltSlices = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(salted.sorted.toSeq === pairs.sorted.toSeq)
   }
 
   test("IVF ANN: identical vector found at rank 1; recall vs brute force") {
@@ -619,6 +614,23 @@ class DedupSpec extends AnyFunSuite {
     assert(stored === inline)
     assert(stored.exists(p => p._1 == 0L && p._2 == 3L && p._3 == 1.0))
     graft.engine.CacheRegistry.releaseAll()
+  }
+
+  test("multiSketchPairs is exactly the union of the simhash and minhash single-family paths") {
+    // the two single-family paths generate the same two candidate sets
+    // (simhash chunks = 8 at Hamming <= 7, minhash 32 × 4 bands) and
+    // verify them the same way, so the union is exact, not approximate
+    val docs = DedupPipelineSpec.frame(spark, DedupPipelineSpec.tieRich)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      graft.engine.CacheRegistry.withRetained(df.collect().map(_.toString).toSet)
+    val threshold = 0.6
+    val simhash = rows(graft.operators.SimhashPairs.verifiedPairs(docs, "doc_id", "text",
+      threshold, chunks = 8))
+    val minhash = rows(Dedup.minhashLshPairs(docs, "doc_id", "text",
+      k = 32, bands = 4, threshold = threshold))
+    val multi = rows(Dedup.multiSketchPairs(docs, "doc_id", "text", threshold))
+    assert(simhash.nonEmpty && minhash.nonEmpty)
+    assert(multi === simhash ++ minhash)
   }
 
   test("within-corpus cosine pairs from the stored index equal the bucketed inline path") {
