@@ -39,10 +39,12 @@ import graft.storage.DurableStores
   * family, not for source regeneration.
   *
   * `compact` FOLDS a snapshot of each accept family's committed
-  * delta batches into its write-once base (base rebuilt from base ∪
-  * snapshot deltas under the same manifest params; the snapshot's
-  * markers RETIRE into the store's folded LEDGER; exactly the
-  * snapshot's delta partitions are dropped) — probe answers are
+  * delta batches into its write-once base. Every family's compact
+  * verb runs the one protocol of [[DurableStores.compactBatches]]
+  * (accepts run [[DurableStores.acceptBatch]]): base rebuilt from
+  * base ∪ snapshot deltas under the same manifest params; the
+  * snapshot's markers RETIRE into the store's folded LEDGER; exactly
+  * the snapshot's delta partitions are dropped — probe answers are
   * unchanged (StoreSpec) and plans return to a single base scan. A
   * batch whose accept commits while the fold runs is outside the
   * snapshot and survives untouched, so a live ingest stream and an

@@ -109,7 +109,7 @@ object StoreChain {
           val (ash, abands, achunks) =
             queries.LlmOps.sketchAcceptStore(spark, dataDir)
           def own(df: DataFrame): DataFrame =
-            queries.LlmOps.committedDelta(spark, dataDir, "sketch_accept", df)
+            graft.storage.DurableStores.committedDelta(spark, dataDir, "sketch_accept", df)
               .filter(col("batch_id") === bid).drop("batch_id")
           val sketchPairs = Dedup.incrementalMinhashPairsFromStore(
             sh.unionByName(own(ash)), bands.unionByName(own(abands)),
@@ -120,7 +120,7 @@ object StoreChain {
             .map(r => s"[${r.getLong(0)},${r.getLong(1)},${r.getDouble(2)}]")
             .sorted
           val (cents, members) = queries.LlmOps.cosineStore(spark, dataDir)
-          val cosDelta = queries.LlmOps.committedDelta(spark, dataDir,
+          val cosDelta = graft.storage.DurableStores.committedDelta(spark, dataDir,
               "cosine_accept", queries.LlmOps.cosineAcceptStore(spark, dataDir))
             .filter(col("batch_id") === bid).drop("batch_id")
           val cosinePairs = EmbeddingDedup.cosinePairsFromStore(cents,

@@ -1,8 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (tools/selfcheck.py).
+  *
+  * Usage: `Verify <sfDir> <outDir> [query ...]`. With no query names
+  * every query is dumped and the plan audit runs afterwards; with
+  * names, only those queries are dumped (and only their oracle SQL
+  * written) and the audit is skipped — the targeted loop for a query
+  * under repair. An unknown name fails before any query runs. */
 object Verify {
 
   /** Run one query to parquet inside a [[graft.engine.CacheRegistry
@@ -22,7 +28,14 @@ object Verify {
     }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val named = args.drop(2).toSet
+    val unknown = named -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    def selected[V](all: Map[String, V]): Map[String, V] =
+      if (named.isEmpty) all else all.filter { case (n, _) => named(n) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
@@ -33,7 +46,7 @@ object Verify {
     GraftSession.requireSqlSurface(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected(SparkEntry.queries).foreach { case (name, fn) =>
       runOne(spark, sfDir, outDir, name, fn)
       // frames retained during the query were released by the scope;
       // anything still live would accumulate over an 85-query run
@@ -42,17 +55,18 @@ object Verify {
           s"${graft.engine.CacheRegistry.liveCount} retained frames")
       spark.catalog.clearCache()
     }
-    writeOracleJson(outDir, SparkEntry.oracleSql)
+    writeOracleJson(outDir, selected(SparkEntry.oracleSql))
     spark.stop()
     // PLAN_AUDIT.json must still describe the plans (its own session)
-    PlanSweep.check(sfDir).foreach(m => System.err.println(s"[verify] plan audit: $m"))
+    if (named.isEmpty)
+      PlanSweep.check(sfDir).foreach(m => System.err.println(s"[verify] plan audit: $m"))
   }
 
   /** Dump oracle SQL as the driver's oracle_sql.json. JSON string
     * escape covers backslash, quote, and ALL control chars (<0x20) —
     * a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's
-    * correctness. Shared with [[VerifyOne]] so a single-query dev dump
+    * correctness. A dump of named queries writes only their SQL, so it
     * is selfcheck-ready too. */
   def writeOracleJson(outDir: String, sql: Map[String, String]): Unit = {
     def q(s: String): String = "\"" + s.flatMap {

@@ -305,9 +305,7 @@ object EventsMerge {
     DurableStores.openOrBuild(s, d, "asof_dim", Seq(tbl),
         params = asofDimParams, migrate = asofDimMigration(s, d),
         foldGuards = Seq("asof_accept")) { st =>
-      buildAsofDimBase(s, d, st, tbl,
-        eventsTsMicros(s, d).filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id"), col("ts"), col("value")))
+      buildAsofDimBase(s, d, st, tbl, purchases(s, d))
     }
     s.table(tbl)
   }
@@ -441,54 +439,40 @@ object EventsMerge {
     * The base stays write-once and time-sorted at rest; deltas stay
     * batch-sized. */
   private[graft] def asofAcceptStore(s: SparkSession, d: String): DataFrame = {
-    import graft.storage.{DurableStores, Storage}
-    val tbl = Storage.tableNameFor("graft_asofacc", d)
-    DurableStores.openOrBuild(s, d, "asof_accept", Seq(tbl),
-        params = asofDimParams,
-        migrate = asofDimMigration(s, d)) { st =>
-      st.appendPartitioned(tbl,
-        eventsTsMicros(s, d).filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-          .limit(0).withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, tbl, Seq("batch_id")))
-    }
-    s.table(tbl)
+    graft.storage.DurableStores.openDeltaTables(s, d, "asof_accept",
+        Seq(asofAccTable(d)), asofDimParams, asofDimMigration(s, d))(
+      Seq(purchases(s, d)))
+    s.table(asofAccTable(d))
   }
+
+  private def asofAccTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_asofacc", d)
+
+  /** The dimension's rows: purchase events as (user_id, event_id, ts,
+    * value). */
+  private def purchases(s: SparkSession, d: String): DataFrame =
+    eventsTsMicros(s, d).filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
 
   /** ACCEPT a batch of new dimension rows (user_id, event_id, ts,
     * value): id-guard against the base and every other committed
     * batch (a doubled event_id would double-count in any downstream
     * read and silently skew tie resolution), write the batch's
-    * partition with dynamic overwrite (idempotent re-accept), marker
-    * last. A batch a compact already folded into the base replays as
-    * a no-op. Accept cost is batch-proportional — the base is only
-    * touched by the pruned single-column id-guard scan. */
+    * partition, widen the recorded time axis, marker last. A batch
+    * already committed or folded into the base replays as a no-op.
+    * Accept cost is batch-proportional — the base is only touched by
+    * the pruned single-column id-guard scan. */
   private[graft] def acceptAsofDimBatch(s: SparkSession, d: String,
       batchId: String, rows: DataFrame,
       lineage: Option[Set[String]] = None): Unit =
-    graft.storage.DurableStores.withWriterLease(s, d, "asof_accept") {
-    import graft.storage.{DurableStores, Storage}
-    val delta0 = asofAcceptStore(s, d)
-    // committed-or-folded replays are no-ops (LlmOps.alreadyAccepted
-    // rationale: the marker certifies the partition, ids identify
-    // immutable content — only a crashed partial accept re-runs)
-    if (LlmOps.alreadyAccepted(s, d, "asof_accept", batchId))
-      return
-    LlmOps.requireMonotoneBatchId(s, d, "asof_accept", batchId, lineage)
-    val others = LlmOps.committedDelta(s, d, "asof_accept", delta0)
-      .filter(col("batch_id") =!= batchId).select(col("event_id"))
-    LlmOps.requireFreshBatchIds(
-      asofDimStore(s, d).select(col("event_id")).unionByName(others),
-      "event_id", rows.select(col("event_id").as("id")).distinct(),
-      "asof_dim")
-    DurableStores.withDynamicPartitionOverwrite(s) {
-      rows.select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .insertInto(Storage.tableNameFor("graft_asofacc", d))
-    }
-    DurableStores.markBatchCommitted(s, d, "asof_accept", batchId)
+    graft.storage.DurableStores.acceptBatch(s, d, "asof_accept",
+        batchId, lineage)(asofAcceptStore(s, d)) { (delta, put) =>
+    import graft.storage.DurableStores
+    DurableStores.requireFreshBatchIds("asof_dim", batchId, "event_id",
+      asofDimStore(s, d), DurableStores.committedDelta(s, d, "asof_accept",
+        delta), rows.select(col("event_id")))
+    put(asofAccTable(d),
+      rows.select(col("user_id"), col("event_id"), col("ts"), col("value")))
     refreshAsofBounds(s, d, rows)
   }
 
@@ -500,10 +484,12 @@ object EventsMerge {
     * the last time bucket — answer-safe (the bucket floor clamps) but
     * the hot-key spread the split exists for erodes until compaction.
     * One tiny agg over the batch the accept already materialized.
-    * Runs AFTER the commit marker, still under the writer lease:
-    * idempotent (pure widening), and a crash between marker and
-    * refresh only leaves the old conservative bounds — healed by the
-    * next accept or compact. */
+    * Runs after the batch's partition is written and before its commit
+    * marker, under the writer lease: idempotent (pure widening), and
+    * answer-safe at every crash point — a crash before the marker
+    * leaves an axis that already covers a batch probes cannot see yet
+    * (a wider axis only coarsens the split's buckets), and the
+    * re-accept that heals the batch widens again as a no-op. */
   private def refreshAsofBounds(s: SparkSession, d: String,
       rows: DataFrame): Unit = {
     import graft.storage.DurableStores
@@ -551,8 +537,8 @@ object EventsMerge {
   private[graft] def asofJoinEffective(s: SparkSession, d: String,
       probe: DataFrame, lineage: Option[Set[String]] = None): DataFrame = {
     import s.implicits._
-    val committed = LlmOps.committedDelta(s, d, "asof_accept",
-      asofAcceptStore(s, d))
+    val committed = graft.storage.DurableStores.committedDelta(s, d,
+      "asof_accept", asofAcceptStore(s, d))
     val scopedIds = lineage
       .map(_.intersect(
         graft.storage.DurableStores.committedBatches(s, d, "asof_accept")))
@@ -600,7 +586,7 @@ object EventsMerge {
       DurableStores.committedBatches(s, d, "asof_accept"))
     if (ids.isEmpty) return 0L
     val st = new Storage(s, DurableStores.root(s))
-    val tableDir = new Path(st.path(Storage.tableNameFor("graft_asofacc", d)))
+    val tableDir = new Path(st.path(asofAccTable(d)))
     val f = tableDir.getFileSystem(s.sparkContext.hadoopConfiguration)
     ids.toSeq.map { id =>
       val p = new Path(tableDir, s"batch_id=$id")
@@ -633,14 +619,11 @@ object EventsMerge {
     * accepted idempotently under the a1/a2 lineage. */
   private def acceptSentinelBatches(s: SparkSession, d: String): Unit = {
     import s.implicits._
-    val purchases = eventsTsMicros(s, d)
-      .filter($"event_type" === "purchase")
-      .select($"user_id", $"event_id", $"ts", $"value")
-    val b1 = purchases.filter($"event_id" % 10 === 3)
+    val b1 = purchases(s, d).filter($"event_id" % 10 === 3)
       .select(($"user_id" + 10000000L).as("user_id"),
         ($"event_id" + 100000000L).as("event_id"),
         ($"ts" + 1000000L).as("ts"), ($"value" * 2).as("value"))
-    val b2 = purchases.filter($"event_id" % 10 === 7)
+    val b2 = purchases(s, d).filter($"event_id" % 10 === 7)
       .select(($"user_id" + 10000000L).as("user_id"),
         ($"event_id" + 200000000L).as("event_id"),
         ($"ts" + 2000000L).as("ts"), ($"value" * 3).as("value"))
@@ -670,32 +653,19 @@ object EventsMerge {
     * Same retention caveat as the sketch family: a later base refresh
     * rebuilds from source and discards folds. */
   private[graft] def compactAsofDimStore(s: SparkSession, d: String): Boolean =
-    graft.storage.DurableStores.withWriterLease(s, d, "asof_accept") {
-    import graft.storage.{DurableStores, Storage}
-    val accT = Seq(Storage.tableNameFor("graft_asofacc", d))
-    val delta = asofAcceptStore(s, d)
-    val foldIds = DurableStores.committedBatches(s, d, "asof_accept")
-    if (foldIds.isEmpty) {
-      DurableStores.dropFoldedPartitions(s, d, "asof_accept", accT)
-      return false
-    }
-    val tmp = DurableStores.compactTmp(s, "asofdim")
-    asofDimStore(s, d)
-      .unionByName(delta.filter(col("batch_id").isin(foldIds.toSeq: _*))
-        .drop("batch_id"))
-      .dropDuplicates(Seq("event_id"))
-      .write.mode("overwrite").parquet(s"$tmp/dim")
-    val tbl = Storage.tableNameFor("graft_asof_dim", d)
+    graft.storage.DurableStores.compactBatches(s, d, "asof_accept",
+        Seq(asofAccTable(d)), "asofdim")(asofAcceptStore(s, d)) {
+      (delta, ids, tmp) =>
+    import graft.storage.DurableStores
+    val folded = DurableStores.foldDelta(s, s"$tmp/dim", asofDimStore(s, d),
+      delta, ids, Seq("event_id"))
+    val tbl = graft.storage.Storage.tableNameFor("graft_asof_dim", d)
     DurableStores.drop(s, d, "asof_dim")
-    DurableStores.openOrBuild(s, d, "asof_dim", Seq(tbl),
-        params = asofDimParams) { st =>
+    DurableStores.openOrBuild(s, d, "asof_dim", Seq(tbl), asofDimParams) {
       // the folded base's axis may have EXTENDED past the old note —
       // the shared builder re-derives and re-records note + property
-      buildAsofDimBase(s, d, st, tbl, s.read.parquet(s"$tmp/dim"))
+      buildAsofDimBase(s, d, _, tbl, folded)
     }
-    DurableStores.retireFoldedBatches(s, d, "asof_accept", foldIds)
-    DurableStores.dropFoldedPartitions(s, d, "asof_accept", accT)
-    DurableStores.deleteDir(s, tmp)
     true
   }
 

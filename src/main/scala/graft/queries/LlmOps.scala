@@ -377,27 +377,37 @@ object LlmOps {
     * the sketch family before (or together with) this one
     * ([[graft.StoreAdmin]] refreshes in dependency order). */
   private[graft] def clusterStore(s: SparkSession, d: String): DataFrame = {
-    import graft.storage.{DurableStores, Storage}
-    val tbl = Storage.tableNameFor("graft_corpus_clusters", d)
-    // bucketed by node since round 12: the maintenance lifecycle's
-    // label lookups (effective-label override join, delta remaps) then
-    // run bucket-local on the base side — at 100 TB the base labels
-    // are the corpus-sized frame, so this is the join whose Exchange
-    // matters. The layout param invalidates pre-bucketed stores.
-    DurableStores.openOrBuild(s, d, "clusters", Seq(tbl),
+    import graft.storage.DurableStores
+    DurableStores.openOrBuild(s, d, "clusters", Seq(clusterTable(d)),
         params = clusterParams,
         migrate = DurableStores.reStampMigration(clusterParams,
           clusterLayoutKeys),
         foldGuards = Seq("cluster_accept")) { st =>
       graft.engine.CacheRegistry.withRetained {
         val (sh, bands, chunks) = sketchStore(s, d)
-        st.appendBucketed(tbl, Dedup.connectedComponents(
+        writeClusterBase(s, st, d, Dedup.connectedComponents(
           Dedup.multiSketchPairsFromStore(sh, bands, chunks, threshold = 0.8),
-          "doc_a", "doc_b"), Seq("node"), numBuckets = 16)
+          "doc_a", "doc_b"))
       }
-      Seq(DurableStores.TableMeta.bucketed(s, tbl, Seq("node"), 16))
     }
-    s.table(tbl)
+    s.table(clusterTable(d))
+  }
+
+  private def clusterTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_corpus_clusters", d)
+
+  /** The cluster base's at-rest layout, written by its source build and
+    * by compact's fold. Bucketed by node since round 12: the maintenance
+    * lifecycle's label lookups (effective-label override join, delta
+    * remaps) then run bucket-local on the base side — at 100 TB the
+    * base labels are the corpus-sized frame, so this is the join whose
+    * Exchange matters. The layout param invalidates pre-bucketed
+    * stores. */
+  private def writeClusterBase(s: SparkSession, st: graft.storage.Storage,
+      d: String, labels: DataFrame): Seq[graft.storage.DurableStores.TableMeta] = {
+    st.appendBucketed(clusterTable(d), labels, Seq("node"), numBuckets = 16)
+    Seq(graft.storage.DurableStores.TableMeta.bucketed(s, clusterTable(d),
+      Seq("node"), 16))
   }
 
   /** Mutable ACCEPT companion of [[clusterStore]] — the write-back
@@ -409,19 +419,16 @@ object LlmOps {
     * emits — changed corpus labels + new nodes. Same
     * fingerprint-coupled lifecycle and params as the base labels. */
   private[graft] def clusterAcceptStore(s: SparkSession, d: String): DataFrame = {
-    import graft.storage.{DurableStores, Storage}
-    val tbl = Storage.tableNameFor("graft_clusacc_labels", d)
-    DurableStores.openOrBuild(s, d, "cluster_accept", Seq(tbl),
-        params = clusterAcceptParams,
-        migrate = DurableStores.reStampMigration(clusterAcceptParams,
-          clusterLayoutKeys)) { st =>
-      st.appendPartitioned(tbl,
-        clusterStore(s, d).limit(0).withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, tbl, Seq("batch_id")))
-    }
-    s.table(tbl)
+    import graft.storage.DurableStores
+    DurableStores.openDeltaTables(s, d, "cluster_accept",
+        Seq(clusterAccTable(d)), clusterAcceptParams,
+        DurableStores.reStampMigration(clusterAcceptParams,
+          clusterLayoutKeys))(Seq(clusterStore(s, d)))
+    s.table(clusterAccTable(d))
   }
+
+  private def clusterAccTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_clusacc_labels", d)
 
   /** The CURRENT cluster labeling: base labels overridden by the
     * committed accept deltas, latest batch winning per node (batch ids
@@ -439,7 +446,8 @@ object LlmOps {
       lineage: Option[Set[String]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = clusterStore(s, d)
-    val deltas0 = committedDelta(s, d, "cluster_accept", clusterAcceptStore(s, d))
+    val deltas0 = graft.storage.DurableStores.committedDelta(s, d,
+      "cluster_accept", clusterAcceptStore(s, d))
     // lineage: restrict to a caller-owned batch-id set — the same
     // isolation q121/q122 apply with their own-batch partition prunes
     // (the delta store is durable and shared; a foreign accepted batch
@@ -477,19 +485,16 @@ object LlmOps {
   private[graft] def acceptClusterRelabel(s: SparkSession, d: String,
       batchId: String, batch: DataFrame, idCol: String,
       textCol: String, lineage: Option[Set[String]] = None): Unit =
-    graft.storage.DurableStores.withWriterLease(s, d, "cluster_accept") {
-    import graft.storage.{DurableStores, Storage}
-    clusterAcceptStore(s, d)
-    // replay of a compact-folded batch: the labels are in the base
-    if (alreadyAccepted(s, d, "cluster_accept", batchId)) return
-    requireMonotoneBatchId(s, d, "cluster_accept", batchId, lineage)
+    graft.storage.DurableStores.acceptBatch(s, d, "cluster_accept",
+        batchId, lineage)(clusterAcceptStore(s, d)) { (_, put) =>
+    import graft.storage.DurableStores
     val (sh, bands, chunks) = sketchStore(s, d)
     val (ash, abands, achunks) = sketchAcceptStore(s, d)
     // prior batches in the SAME lineage under this id (lexicographic
     // monotone contract); the lineage scope keeps an oracle-checked
     // gate's accept chain deterministic on a shared delta store
     def prior(delta: DataFrame): DataFrame = {
-      val committed = committedDelta(s, d, "sketch_accept", delta)
+      val committed = DurableStores.committedDelta(s, d, "sketch_accept", delta)
       lineage.map(ls => committed.filter(col("batch_id").isin(ls.toSeq: _*)))
         .getOrElse(committed)
         .filter(col("batch_id") < batchId).drop("batch_id")
@@ -502,20 +507,15 @@ object LlmOps {
     // into the base (where its rows are indistinguishable from corpus
     // rows).
     val sketchAtRest =
-      !alreadyFolded(s, d, "sketch_accept", batchId) &&
-        graft.storage.DurableStores
-          .committedBatches(s, d, "sketch_accept").contains(batchId)
+      !DurableStores.foldedBatches(s, d, "sketch_accept").contains(batchId) &&
+        DurableStores.committedBatches(s, d, "sketch_accept").contains(batchId)
     graft.engine.CacheRegistry.withRetained {
-      val (bsh, bbands, bchunks) = if (sketchAtRest) {
-        def ownP(delta: DataFrame): DataFrame =
-          delta.filter(col("batch_id") === batchId).drop("batch_id")
-        (ownP(ash), ownP(abands), ownP(achunks))
-      } else {
-        val bsk = graft.engine.CacheRegistry.retain(
-          Dedup.corpusSketch(batch, idCol, textCol))
-        (bsk.select(col("doc"), col("sh")),
-          Dedup.explodedBands(bsk, 32, 4), Dedup.explodedChunks(bsk, 8))
-      }
+      val Seq(bsh, bbands, bchunks) =
+        if (sketchAtRest)
+          Seq(ash, abands, achunks)
+            .map(_.filter(col("batch_id") === batchId).drop("batch_id"))
+        else sketchParts(graft.engine.CacheRegistry.retain(
+          Dedup.corpusSketch(batch, idCol, textCol)))
       val bc = Dedup.incrementalPairsBetweenStores(
           sh.unionByName(prior(ash)), bands.unionByName(prior(abands)),
           chunks.unionByName(prior(achunks)),
@@ -524,16 +524,10 @@ object LlmOps {
       val bb = Dedup.multiSketchPairsFromStore(bsh, bbands, bchunks,
           threshold = 0.8, spreadVerify = false) // batch-sized frames
         .select(col("doc_a"), col("doc_b"))
-      val delta = Dedup.incrementalConnectedComponentsDelta(
+      put(clusterAccTable(d), Dedup.incrementalConnectedComponentsDelta(
         effectiveClusterLabels(s, d, before = Some(batchId),
-          lineage = lineage), bc, bb)
-      withDynamicPartitionOverwrite(s) {
-        delta.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .insertInto(Storage.tableNameFor("graft_clusacc_labels", d))
-      }
+          lineage = lineage), bc, bb))
     }
-    DurableStores.markBatchCommitted(s, d, "cluster_accept", batchId)
   }
 
   /** q62's near-dup clustering brought up to date INCREMENTALLY — the
@@ -558,8 +552,7 @@ object LlmOps {
     // shingles and hashes the same batch text twice)
     val bsk = graft.engine.CacheRegistry.retain(
       Dedup.corpusSketch(batch, "doc_id", "text"))
-    val (bsh, bbands, bchunks) = (bsk.select($"doc", $"sh"),
-      Dedup.explodedBands(bsk, 32, 4), Dedup.explodedChunks(bsk, 8))
+    val Seq(bsh, bbands, bchunks) = sketchParts(bsk)
     val bc = Dedup.incrementalPairsBetweenStores(sh, bands, chunks,
       bsh, bbands, bchunks, threshold = 0.8)
       .select($"batch_doc", $"corpus_doc")
@@ -686,32 +679,49 @@ object LlmOps {
 
   private[graft] def sketchStore(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.storage.{DurableStores, Storage}
-    val shT = Storage.tableNameFor("graft_sketch_shingles", d)
-    val bandT = Storage.tableNameFor("graft_sketch_bands", d)
-    val chunkT = Storage.tableNameFor("graft_sketch_chunks", d)
-    DurableStores.openOrBuild(s, d, "sketch", Seq(shT, bandT, chunkT),
+    import graft.storage.DurableStores
+    DurableStores.openOrBuild(s, d, "sketch", sketchTables(d),
         params = sketchParams,
         migrate = DurableStores.reStampMigration(sketchParams,
           sketchLayoutKeys),
         foldGuards = Seq("sketch_accept")) { st =>
       graft.engine.CacheRegistry.withRetained {
-        val sk = graft.engine.CacheRegistry.retain(Dedup.corpusSketch(
-          t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text"))
-        st.appendBucketed(shT, sk.select("doc", "sh"),
-          Seq("doc"), numBuckets = 16)
-        st.appendBucketed(bandT, Dedup.explodedBands(sk, 32, 4),
-          Seq("band_id", "band_hash"), numBuckets = 16)
-        st.appendBucketed(chunkT, Dedup.explodedChunks(sk, 8),
-          Seq("chunk_idx", "chunk_value"), numBuckets = 16)
+        writeSketchBase(s, st, d, sketchParts(
+          graft.engine.CacheRegistry.retain(Dedup.corpusSketch(
+            t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
+            "doc_id", "text"))))
       }
-      Seq(DurableStores.TableMeta.bucketed(s, shT, Seq("doc"), 16),
-        DurableStores.TableMeta.bucketed(s, bandT, Seq("band_id", "band_hash"), 16),
-        DurableStores.TableMeta.bucketed(s, chunkT, Seq("chunk_idx", "chunk_value"), 16))
     }
-    (s.table(shT), s.table(bandT), s.table(chunkT))
+    val Seq(sh, bands, chunks) = sketchTables(d).map(s.table)
+    (sh, bands, chunks)
   }
+
+  /** A sketch's three at-rest parts, in table order: (doc, sh) shingles,
+    * exploded band keys, exploded chunk keys. */
+  private def sketchParts(sk: DataFrame): Seq[DataFrame] =
+    Seq(sk.select(col("doc"), col("sh")), Dedup.explodedBands(sk, 32, 4),
+      Dedup.explodedChunks(sk, 8))
+
+  private def sketchTables(d: String): Seq[String] =
+    Seq("graft_sketch_shingles", "graft_sketch_bands", "graft_sketch_chunks")
+      .map(graft.storage.Storage.tableNameFor(_, d))
+
+  private def sketchAccTables(d: String): Seq[String] =
+    Seq("graft_sketchacc_shingles", "graft_sketchacc_bands",
+      "graft_sketchacc_chunks").map(graft.storage.Storage.tableNameFor(_, d))
+
+  /** The sketch base's at-rest layout, written by its source build and
+    * by compact's fold: shingles bucketed by doc (the verification join
+    * key), band keys by (band_id, band_hash), chunk keys by
+    * (chunk_idx, chunk_value). */
+  private def writeSketchBase(s: SparkSession, st: graft.storage.Storage,
+      d: String, parts: Seq[DataFrame]): Seq[graft.storage.DurableStores.TableMeta] =
+    sketchTables(d).lazyZip(parts).lazyZip(Seq(Seq("doc"),
+        Seq("band_id", "band_hash"), Seq("chunk_idx", "chunk_value")))
+      .map { (tbl, rows, keys) =>
+        st.appendBucketed(tbl, rows, keys, numBuckets = 16)
+        graft.storage.DurableStores.TableMeta.bucketed(s, tbl, keys, 16)
+      }
 
   /** q86's incremental dedup driven from the PERSISTED sketch store:
     * same batch split, same oracle — but the corpus side reads only
@@ -735,10 +745,8 @@ object LlmOps {
   private[graft] def cosineStore(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.operators.EmbeddingDedup
-    import graft.storage.{DurableStores, Storage}
-    val centT = Storage.tableNameFor("graft_cosidx_cents", d)
-    val memT = Storage.tableNameFor("graft_cosidx_members", d)
-    DurableStores.openOrBuild(s, d, "cosine_index", Seq(centT, memT),
+    import graft.storage.DurableStores
+    DurableStores.openOrBuild(s, d, "cosine_index", cosineTables(d),
         params = cosineParams,
         migrate = DurableStores.reStampMigration(cosineParams,
           cosineLayoutKeys),
@@ -747,13 +755,28 @@ object LlmOps {
         val idx = EmbeddingDedup.buildCosineIndex(
           t(s, d, "embeddings").filter(col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", numCells = 16)
-        st.appendTable(centT, idx.cents)
-        st.appendPartitioned(memT, EmbeddingDedup.membersOf(idx), Seq("cell"))
+        writeCosineBase(s, st, d, idx.cents, EmbeddingDedup.membersOf(idx))
       }
-      Seq(DurableStores.TableMeta.plain(s, centT),
-        DurableStores.TableMeta.partitioned(s, memT, Seq("cell")))
     }
-    (s.table(centT), s.table(memT))
+    val Seq(cents, members) = cosineTables(d).map(s.table)
+    (cents, members)
+  }
+
+  private def cosineTables(d: String): Seq[String] =
+    Seq("graft_cosidx_cents", "graft_cosidx_members")
+      .map(graft.storage.Storage.tableNameFor(_, d))
+
+  /** The cosine base's at-rest layout, written by its source build and
+    * by compact's fold: centroids as a small plain table, members
+    * hive-partitioned by cell. */
+  private def writeCosineBase(s: SparkSession, st: graft.storage.Storage,
+      d: String, cents: DataFrame,
+      members: DataFrame): Seq[graft.storage.DurableStores.TableMeta] = {
+    import graft.storage.DurableStores.TableMeta
+    val Seq(centT, memT) = cosineTables(d)
+    st.appendTable(centT, cents)
+    st.appendPartitioned(memT, members, Seq("cell"))
+    Seq(TableMeta.plain(s, centT), TableMeta.partitioned(s, memT, Seq("cell")))
   }
 
   /** q90's incremental embedding near-dup driven from the PERSISTED
@@ -778,33 +801,17 @@ object LlmOps {
     * [[acceptSketchBatch]] fills one partition per ingest batch. */
   private[graft] def sketchAcceptStore(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.storage.{DurableStores, Storage}
-    val shT = Storage.tableNameFor("graft_sketchacc_shingles", d)
-    val bandT = Storage.tableNameFor("graft_sketchacc_bands", d)
-    val chunkT = Storage.tableNameFor("graft_sketchacc_chunks", d)
-    DurableStores.openOrBuild(s, d, "sketch_accept",
-      // same params as the base sketch store: if the base layout
-      // constants change and it rebuilds, deltas accepted under the
-      // old constants must not survive into the new store's probes
-      Seq(shT, bandT, chunkT), params = sketchAcceptParams,
-      migrate = DurableStores.reStampMigration(sketchAcceptParams,
-        sketchLayoutKeys)) { st =>
-      val empty = Dedup.corpusSketch(
-        t(s, d, "documents").limit(0), "doc_id", "text")
-      st.appendPartitioned(shT,
-        empty.select(col("doc"), col("sh"), lit("").as("batch_id")),
-        Seq("batch_id"))
-      st.appendPartitioned(bandT,
-        Dedup.explodedBands(empty, 32, 4).withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      st.appendPartitioned(chunkT,
-        Dedup.explodedChunks(empty, 8).withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, shT, Seq("batch_id")),
-        DurableStores.TableMeta.partitioned(s, bandT, Seq("batch_id")),
-        DurableStores.TableMeta.partitioned(s, chunkT, Seq("batch_id")))
-    }
-    (s.table(shT), s.table(bandT), s.table(chunkT))
+    import graft.storage.DurableStores
+    // same params as the base sketch store: if the base layout
+    // constants change and it rebuilds, deltas accepted under the old
+    // constants must not survive into the new store's probes
+    DurableStores.openDeltaTables(s, d, "sketch_accept", sketchAccTables(d),
+        sketchAcceptParams,
+        DurableStores.reStampMigration(sketchAcceptParams, sketchLayoutKeys))(
+      sketchParts(Dedup.corpusSketch(
+        t(s, d, "documents").limit(0), "doc_id", "text")))
+    val Seq(sh, bands, chunks) = sketchAccTables(d).map(s.table)
+    (sh, bands, chunks)
   }
 
   /** ACCEPT an ingest batch into the sketch store's delta tables: the
@@ -817,132 +824,26 @@ object LlmOps {
     * probes left open: probe (q91) → accept → later probes see the
     * accepted docs (q121). At scale, accept cost is batch-proportional
     * (the corpus is untouched); when deltas grow large, fold them into
-    * the base with `StoreAdmin refresh`. */
-  /** Delegates to [[graft.storage.DurableStores
-    * .withDynamicPartitionOverwrite]] — the session-conf flip is
-    * global, so every accept write in the JVM serializes on its one
-    * lock (two concurrent accepts racing the restore could flip a
-    * still-running overwrite to STATIC mode, a full-table overwrite). */
-  private def withDynamicPartitionOverwrite[A](s: SparkSession)(body: => A): A =
-    graft.storage.DurableStores.withDynamicPartitionOverwrite(s)(body)
-
-  /** `delta` restricted to batches whose accept fully COMMITTED (all
-    * delta tables written, then the marker — DurableStores
-    * .markBatchCommitted): a crashed multi-table accept leaves its
-    * partitions mutually inconsistent, and probing them would silently
-    * drop candidates at the verification join. The committed-id set is
-    * one marker-dir listing, batch-count-sized, applied as an isin
-    * partition filter (pruned scan). */
-  private[graft] def committedDelta(s: SparkSession, d: String,
-      store: String, delta: DataFrame): DataFrame = {
-    val ids = graft.storage.DurableStores.committedBatches(s, d, store)
-    delta.filter(col("batch_id").isin(ids.toSeq: _*))
-  }
-
-  /** Fail-fast id guard shared by the sketch and cosine accept verbs:
-    * once `StoreAdmin compact` folds a batch into the write-once
-    * base, its ids are corpus ids — re-accepting them would duplicate
-    * every row for those docs in probes' base ∪ delta union (doubled
-    * shingle/band/member rows mean silently wrong jaccard and cosine
-    * answers, not an error). The cluster family already fails fast
-    * through the incremental-CC precondition guard; this is the same
-    * contract for the other two accept families. Re-accepting an
-    * UNcompacted batch stays legal (partition-idempotent crash
-    * healing): the guard checks the BASE only, never the deltas.
-    * Cost per accept: one pruned single-column scan of the base id
-    * column against a batch-sized broadcast. */
-  private[graft] def requireFreshBatchIds(base: DataFrame, idCol: String,
-      batchIds: DataFrame, family: String): Unit = {
-    val clash = base
-      .join(broadcast(batchIds), base(idCol) === batchIds("id"), "left_semi")
-      .select(col(idCol)).limit(5).collect()
-    require(clash.isEmpty,
-      s"$family accept precondition violated: batch ids " +
-        clash.map(_.get(0)).mkString(", ") +
-        s" are already taken in the $family store (corpus ids, a " +
-        "previously compacted batch, or another accepted batch) — " +
-        "re-ingesting an existing doc is an upsert, not an accept; " +
-        "rebuild the store (StoreAdmin refresh) instead")
-  }
-
-  /** Enforce the lexicographic batch-id contract AT ACCEPT TIME: a NEW
-    * batch id must sort after every id already committed or folded
-    * into `store`. [[effectiveClusterLabels]] (and every other
-    * latest-batch-wins read) orders deltas by batch_id — "the
-    * daily-ingest id contract" — so an out-of-order id would silently
-    * win or lose per-node overrides instead of failing. Replays are
-    * exempt by construction: an id that is already committed (crash
-    * healing, streaming checkpoint replay) or already folded (the
-    * accept verbs no-op on those first) passes through — re-accepting
-    * a HISTORICAL batch followed by every later one remains the legal
-    * log-replay path, because each replayed accept recomputes against
-    * its original `before` cut. Cost: the marker-dir listing the verb
-    * already pays, no Spark job. */
-  private[graft] def requireMonotoneBatchId(s: SparkSession, d: String,
-      store: String, batchId: String,
-      lineage: Option[Set[String]] = None): Unit = {
-    import graft.storage.DurableStores
-    val committed = DurableStores.committedBatches(s, d, store)
-    val folded = DurableStores.foldedBatches(s, d, store)
-    if (committed.contains(batchId) || folded.contains(batchId)) return
-    // the ordering contract is per id lineage: latest-batch-wins reads
-    // scope to a lineage when the caller does, so an unrelated
-    // lineage's ids (another stream's prefix, another gate's batches)
-    // do not constrain this one
-    val universe = lineage
-      .map(ls => (committed ++ folded).intersect(ls))
-      .getOrElse(committed ++ folded)
-    val later = universe.filter(_ > batchId)
-    require(later.isEmpty,
-      s"$store accept precondition violated: new batch id '$batchId' " +
-        s"sorts before already-accepted ${later.toSeq.sorted.take(3)
-          .mkString("'", "', '", "'")} — batch ids must be " +
-        "lexicographically monotone in accept order (latest-batch-wins " +
-        "reads order by batch_id); replaying an EXISTING id is legal, " +
-        "minting an out-of-order new one is not")
-  }
-
+    * the base with `StoreAdmin compact`. The id guard's collision
+    * universe is the base AND every other committed delta batch — the
+    * same doc id under two batch ids would double probes' base ∪ delta
+    * rows just as silently as a base collision. */
   private[graft] def acceptSketchBatch(s: SparkSession, d: String,
       batchId: String, batch: DataFrame, idCol: String,
       textCol: String, lineage: Option[Set[String]] = None): Unit =
-    graft.storage.DurableStores.withWriterLease(s, d, "sketch_accept") {
-    import graft.storage.Storage
-    val (ash0, _, _) = sketchAcceptStore(s, d)
-    // replay of a batch compact already folded into the base: no-op
-    // (the rows answer from the base; re-writing them would double
-    // probes) — the path a streaming checkpoint replay takes after
-    // racing an admin compact
-    if (alreadyAccepted(s, d, "sketch_accept", batchId)) return
-    requireMonotoneBatchId(s, d, "sketch_accept", batchId, lineage)
-    val (baseSh, _, _) = sketchStore(s, d)
-    // collision universe: the base AND every other committed delta
-    // batch — the same doc id under two batch ids would double
-    // probes' base ∪ delta rows just as silently as a base collision
-    val others = committedDelta(s, d, "sketch_accept", ash0)
-      .filter(col("batch_id") =!= batchId).select(col("doc"))
-    requireFreshBatchIds(baseSh.select(col("doc")).unionByName(others),
-      "doc", batch.select(col(idCol).as("id")).distinct(), "sketch")
+    graft.storage.DurableStores.acceptBatch(s, d, "sketch_accept",
+        batchId, lineage)(sketchAcceptStore(s, d)) { case ((ash, _, _), put) =>
+    import graft.storage.DurableStores
+    DurableStores.requireFreshBatchIds("sketch", batchId, "doc",
+      sketchStore(s, d)._1, DurableStores.committedDelta(s, d,
+        "sketch_accept", ash), batch.select(col(idCol)))
     graft.engine.CacheRegistry.withRetained {
-      val sk = graft.engine.CacheRegistry.retain(
-        Dedup.corpusSketch(batch.select(col(idCol), col(textCol)),
-          idCol, textCol))
-      def put(table: String, df: DataFrame): Unit =
-        withDynamicPartitionOverwrite(s) {
-          df.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").insertInto(table)
-        }
-      put(Storage.tableNameFor("graft_sketchacc_shingles", d),
-        sk.select(col("doc"), col("sh")))
-      put(Storage.tableNameFor("graft_sketchacc_bands", d),
-        Dedup.explodedBands(sk, 32, 4))
-      put(Storage.tableNameFor("graft_sketchacc_chunks", d),
-        Dedup.explodedChunks(sk, 8))
+      val sk = graft.engine.CacheRegistry.retain(Dedup.corpusSketch(
+        batch.select(col(idCol), col(textCol)), idCol, textCol))
+      sketchAccTables(d).zip(sketchParts(sk)).foreach { case (tbl, rows) =>
+        put(tbl, rows)
+      }
     }
-    // marker LAST: the batch becomes visible to probes only once all
-    // three delta tables hold it; a crash above leaves it invisible
-    // until a (partition-idempotent) re-accept heals and commits it
-    graft.storage.DurableStores.markBatchCommitted(
-      s, d, "sketch_accept", batchId)
   }
 
   /** q121 — the full sketch-store ingest LIFECYCLE under the hard
@@ -965,7 +866,7 @@ object LlmOps {
     // accepted batch must not leak into this oracle's corpus side.
     // COMMITTED batches only — a crashed partial accept is invisible
     def own(delta: DataFrame): DataFrame =
-      committedDelta(s, d, "sketch_accept", delta)
+      graft.storage.DurableStores.committedDelta(s, d, "sketch_accept", delta)
         .filter($"batch_id" === "b1").drop("batch_id")
     Dedup.incrementalMinhashPairsFromStore(
       sh.unionByName(own(ash)),
@@ -982,24 +883,19 @@ object LlmOps {
   private[graft] def cosineAcceptStore(
       s: SparkSession, d: String): DataFrame = {
     import graft.operators.EmbeddingDedup
-    import graft.storage.{DurableStores, Storage}
-    val memT = Storage.tableNameFor("graft_cosacc_members", d)
+    import graft.storage.DurableStores
     // cells param mirrors the base cosine store: deltas are assigned
     // under its centroids and must die with them
-    DurableStores.openOrBuild(s, d, "cosine_accept", Seq(memT),
-        params = cosineParams,
-        migrate = DurableStores.reStampMigration(cosineParams,
-          cosineLayoutKeys)) { st =>
-      val (cents, _) = cosineStore(s, d)
-      st.appendPartitioned(memT,
-        EmbeddingDedup.assignToCells(cents,
-            t(s, d, "embeddings").limit(0), "vec_id", "embedding")
-          .withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, memT, Seq("batch_id")))
-    }
-    s.table(memT)
+    DurableStores.openDeltaTables(s, d, "cosine_accept", Seq(cosineAccTable(d)),
+        cosineParams,
+        DurableStores.reStampMigration(cosineParams, cosineLayoutKeys))(
+      Seq(EmbeddingDedup.assignToCells(cosineStore(s, d)._1,
+        t(s, d, "embeddings").limit(0), "vec_id", "embedding")))
+    s.table(cosineAccTable(d))
   }
+
+  private def cosineAccTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_cosacc_members", d)
 
   /** ACCEPT an embedding batch into the cosine index's delta member
     * table: the batch is assigned to cells under the STORED centroids
@@ -1011,27 +907,16 @@ object LlmOps {
   private[graft] def acceptCosineBatch(s: SparkSession, d: String,
       batchId: String, batch: DataFrame,
       lineage: Option[Set[String]] = None): Unit =
-    graft.storage.DurableStores.withWriterLease(s, d, "cosine_accept") {
+    graft.storage.DurableStores.acceptBatch(s, d, "cosine_accept",
+        batchId, lineage)(cosineAcceptStore(s, d)) { (delta, put) =>
     import graft.operators.EmbeddingDedup
-    import graft.storage.Storage
-    val delta0 = cosineAcceptStore(s, d)
-    if (alreadyAccepted(s, d, "cosine_accept", batchId)) return
-    requireMonotoneBatchId(s, d, "cosine_accept", batchId, lineage)
+    import graft.storage.DurableStores
     val (cents, members) = cosineStore(s, d)
-    val others = committedDelta(s, d, "cosine_accept", delta0)
-      .filter(col("batch_id") =!= batchId).select(col("vid"))
-    requireFreshBatchIds(members.select(col("vid")).unionByName(others),
-      "vid", batch.select(col("vec_id").as("id")).distinct(), "cosine")
-    withDynamicPartitionOverwrite(s) {
-      EmbeddingDedup.assignToCells(cents, batch, "vec_id", "embedding")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .insertInto(Storage.tableNameFor("graft_cosacc_members", d))
-    }
-    // single-table accept, but the same probe-side contract as the
-    // sketch store: only committed batches are probed
-    graft.storage.DurableStores.markBatchCommitted(
-      s, d, "cosine_accept", batchId)
+    DurableStores.requireFreshBatchIds("cosine", batchId, "vid", members,
+      DurableStores.committedDelta(s, d, "cosine_accept", delta),
+      batch.select(col("vec_id")))
+    put(cosineAccTable(d),
+      EmbeddingDedup.assignToCells(cents, batch, "vec_id", "embedding"))
   }
 
   /** q122 — the cosine-index ingest lifecycle under the hard gate:
@@ -1050,7 +935,8 @@ object LlmOps {
     // own-batch partition prune, same reasoning as q121: other
     // sessions' accepted batches must not leak into this oracle —
     // and committed batches only
-    val delta = committedDelta(s, d, "cosine_accept", cosineAcceptStore(s, d))
+    val delta = graft.storage.DurableStores.committedDelta(s, d,
+        "cosine_accept", cosineAcceptStore(s, d))
       .filter($"batch_id" === "b1").drop("batch_id")
     EmbeddingDedup.cosinePairsFromStore(cents,
       members.unionByName(delta),
@@ -1059,122 +945,27 @@ object LlmOps {
   }
 
   // ---- delta COMPACTION (StoreAdmin compact) ----------------------
-  //
-  // Accept deltas accumulate one partition per batch forever; probes
-  // read base ∪ N deltas. Compaction folds the deltas of a SNAPSHOT
-  // of the committed batch ids — taken once, up front — into the
-  // write-once base (rebuild base from base ∪ snapshot deltas through
-  // a temp location, re-manifest under the SAME params), RETIRES the
-  // snapshot's commit markers into the store's folded ledger
-  // (DurableStores.retireFoldedBatches), and drops exactly the
-  // snapshot's delta partitions. A batch whose accept commits while
-  // the fold runs is outside the snapshot: its partition and marker
-  // survive untouched and it folds next time — a live ingest stream
-  // and an admin compact can overlap without silent truncation.
-  // Probe answers are identical before and after (StoreSpec). Crash
-  // safety: a crash before the base rebuild leaves the pre-compact
-  // state intact (manifest-last semantics); a crash after the rebuild
-  // but before retirement leaves the snapshot batches in both places
-  // — re-running compact heals it (the fold dedups on each table's
-  // natural key); a crash after retirement but before the partition
-  // drop leaves orphaned partitions that are invisible to probes (no
-  // live marker) and are garbage-collected by the next compact
-  // (DurableStores.dropFoldedPartitions). Compact, like every store
-  // write, remains a single-writer admin action.
-  //
-  // The folded LEDGER is the durable record that a batch's rows
-  // answer from the base: re-accepting a ledgered batch id is a
-  // detectable REPLAY of a folded batch (a Structured Streaming
-  // checkpoint replay racing an admin compact is the canonical case)
-  // and each accept verb answers it with a no-op instead of wedging
-  // on the base id guard. A NEW batch id re-presenting folded doc ids
-  // is still an id collision, answered fail-fast by the guards.
-  // Retiring markers (rather than keeping one per batch forever)
-  // keeps committedBatches — and every isin predicate probes and
-  // guards build from it — bounded by the traffic since the last
-  // fold, not by the store's lifetime.
-
-  /** True when a compact folded `batchId` into the base (the folded
-    * ledger lists it). A re-accept of such a batch is a no-op, not an
-    * id collision: its rows already answer from the base. One ledger
-    * read, no Spark job. */
-  private def alreadyFolded(s: SparkSession, d: String, store: String,
-      batchId: String): Boolean =
-    graft.storage.DurableStores.foldedBatches(s, d, store).contains(batchId)
-
-  /** True when `batchId`'s accept is already fully visible — its
-    * commit marker is present (every delta table holds the batch: the
-    * marker writes LAST) or a compact folded it into the base. A
-    * replay is then a NO-OP by the store contract (round 16): batch
-    * ids identify immutable content (the id guards forbid the same
-    * row id under two batch ids), so re-running the verb could only
-    * rewrite byte-identical partitions — a batch-sized sketch plus
-    * partition rewrites bought nothing. The path that MUST do work —
-    * healing a crashed partial accept — never takes this exit: a
-    * crash before the marker leaves no marker, and the re-accept
-    * rewrites and then commits. One marker-dir listing + one ledger
-    * read, no Spark job. */
-  private[graft] def alreadyAccepted(s: SparkSession, d: String,
-      store: String, batchId: String): Boolean =
-    graft.storage.DurableStores.committedBatches(s, d, store)
-      .contains(batchId) || alreadyFolded(s, d, store, batchId)
+  // The protocol (snapshot, fold, ledger-first retirement, partition
+  // drop, crash healing) is DurableStores.compactBatches; each family
+  // below supplies only its fold.
 
   /** Fold committed sketch-accept batches into the sketch base.
     * Returns false (no-op) when nothing unfolded is committed. */
   private[graft] def compactSketchStore(s: SparkSession, d: String): Boolean =
-    graft.storage.DurableStores.withWriterLease(s, d, "sketch_accept") {
-    import graft.storage.{DurableStores, Storage}
-    val accT = Seq(
-      Storage.tableNameFor("graft_sketchacc_shingles", d),
-      Storage.tableNameFor("graft_sketchacc_bands", d),
-      Storage.tableNameFor("graft_sketchacc_chunks", d))
-    val (ash, abands, achunks) = sketchAcceptStore(s, d)
-    // the snapshot: every later read folds exactly this set — a batch
-    // committing mid-fold keeps its delta and marker for next time
-    val foldIds = DurableStores.committedBatches(s, d, "sketch_accept")
-    if (foldIds.isEmpty) {
-      // GC partitions orphaned by a crash after a previous fold's
-      // marker retirement (invisible to probes, dead bytes on disk)
-      DurableStores.dropFoldedPartitions(s, d, "sketch_accept", accT)
-      return false
-    }
+    graft.storage.DurableStores.compactBatches(s, d, "sketch_accept",
+        sketchAccTables(d), "sketch")(sketchAcceptStore(s, d)) {
+      case ((ash, abands, achunks), ids, tmp) =>
+    import graft.storage.DurableStores
     val (sh, bands, chunks) = sketchStore(s, d)
-    val tmp = DurableStores.compactTmp(s, "sketch")
-    def fold(base: DataFrame, delta: DataFrame, keys: Seq[String],
-        name: String): Unit =
-      base.unionByName(
-          delta.filter(col("batch_id").isin(foldIds.toSeq: _*))
-            .drop("batch_id"))
-        .dropDuplicates(keys)
-        .write.mode("overwrite").parquet(s"$tmp/$name")
-    fold(sh, ash, Seq("doc"), "shingles")
-    fold(bands, abands, Seq("doc", "band_id"), "bands")
-    fold(chunks, achunks, Seq("doc", "chunk_idx"), "chunks")
-    val shT = Storage.tableNameFor("graft_sketch_shingles", d)
-    val bandT = Storage.tableNameFor("graft_sketch_bands", d)
-    val chunkT = Storage.tableNameFor("graft_sketch_chunks", d)
+    val folded = Seq(
+      DurableStores.foldDelta(s, s"$tmp/shingles", sh, ash, ids, Seq("doc")),
+      DurableStores.foldDelta(s, s"$tmp/bands", bands, abands, ids,
+        Seq("doc", "band_id")),
+      DurableStores.foldDelta(s, s"$tmp/chunks", chunks, achunks, ids,
+        Seq("doc", "chunk_idx")))
     DurableStores.drop(s, d, "sketch")
-    DurableStores.openOrBuild(s, d, "sketch", Seq(shT, bandT, chunkT),
-        params = sketchParams) { st =>
-      st.appendBucketed(shT, s.read.parquet(s"$tmp/shingles"),
-        Seq("doc"), numBuckets = 16)
-      st.appendBucketed(bandT, s.read.parquet(s"$tmp/bands"),
-        Seq("band_id", "band_hash"), numBuckets = 16)
-      st.appendBucketed(chunkT, s.read.parquet(s"$tmp/chunks"),
-        Seq("chunk_idx", "chunk_value"), numBuckets = 16)
-      Seq(DurableStores.TableMeta.bucketed(s, shT, Seq("doc"), 16),
-        DurableStores.TableMeta.bucketed(s, bandT,
-          Seq("band_id", "band_hash"), 16),
-        DurableStores.TableMeta.bucketed(s, chunkT,
-          Seq("chunk_idx", "chunk_value"), 16))
-    }
-    // retire the snapshot's markers into the folded ledger (ledger
-    // first — the replay no-op can never miss a folded batch), then
-    // drop exactly the folded partitions; later-committed batches
-    // keep theirs
-    DurableStores.retireFoldedBatches(s, d, "sketch_accept", foldIds)
-    DurableStores.dropFoldedPartitions(s, d, "sketch_accept", accT)
-    DurableStores.deleteDir(s, tmp)
+    DurableStores.openOrBuild(s, d, "sketch", sketchTables(d), sketchParams)(
+      writeSketchBase(s, _, d, folded))
     true
   }
 
@@ -1182,36 +973,18 @@ object LlmOps {
     * member table (centroids unchanged — deltas were assigned under
     * them, so fold is a pure member union). */
   private[graft] def compactCosineStore(s: SparkSession, d: String): Boolean =
-    graft.storage.DurableStores.withWriterLease(s, d, "cosine_accept") {
-    import graft.storage.{DurableStores, Storage}
-    val accT = Seq(Storage.tableNameFor("graft_cosacc_members", d))
-    val delta = cosineAcceptStore(s, d)
-    val foldIds = DurableStores.committedBatches(s, d, "cosine_accept")
-    if (foldIds.isEmpty) {
-      DurableStores.dropFoldedPartitions(s, d, "cosine_accept", accT)
-      return false
-    }
+    graft.storage.DurableStores.compactBatches(s, d, "cosine_accept",
+        Seq(cosineAccTable(d)), "cosine_index")(cosineAcceptStore(s, d)) {
+      (delta, ids, tmp) =>
+    import graft.storage.DurableStores
     val (cents, members) = cosineStore(s, d)
-    val tmp = DurableStores.compactTmp(s, "cosine_index")
     cents.write.mode("overwrite").parquet(s"$tmp/cents")
-    members.unionByName(
-        delta.filter(col("batch_id").isin(foldIds.toSeq: _*))
-          .drop("batch_id"))
-      .dropDuplicates(Seq("vid"))
-      .write.mode("overwrite").parquet(s"$tmp/members")
-    val centT = Storage.tableNameFor("graft_cosidx_cents", d)
-    val memT = Storage.tableNameFor("graft_cosidx_members", d)
+    val folded = DurableStores.foldDelta(s, s"$tmp/members", members, delta,
+      ids, Seq("vid"))
     DurableStores.drop(s, d, "cosine_index")
-    DurableStores.openOrBuild(s, d, "cosine_index", Seq(centT, memT),
-        params = cosineParams) { st =>
-      st.appendTable(centT, s.read.parquet(s"$tmp/cents"))
-      st.appendPartitioned(memT, s.read.parquet(s"$tmp/members"), Seq("cell"))
-      Seq(DurableStores.TableMeta.plain(s, centT),
-        DurableStores.TableMeta.partitioned(s, memT, Seq("cell")))
-    }
-    DurableStores.retireFoldedBatches(s, d, "cosine_accept", foldIds)
-    DurableStores.dropFoldedPartitions(s, d, "cosine_accept", accT)
-    DurableStores.deleteDir(s, tmp)
+    DurableStores.openOrBuild(s, d, "cosine_index", cosineTables(d),
+        cosineParams)(
+      writeCosineBase(s, _, d, s.read.parquet(s"$tmp/cents"), folded))
     true
   }
 
@@ -1243,18 +1016,11 @@ object LlmOps {
     * the folded corpus sketch and the folded labels then describe
     * the same population. */
   private[graft] def compactClusterStore(s: SparkSession, d: String): Boolean =
-    graft.storage.DurableStores.withWriterLease(s, d, "cluster_accept") {
-    import graft.storage.{DurableStores, Storage}
-    val accT = Seq(Storage.tableNameFor("graft_clusacc_labels", d))
-    val accDelta = clusterAcceptStore(s, d)
-    val foldIds = DurableStores.committedBatches(s, d, "cluster_accept")
-    if (foldIds.isEmpty) {
-      DurableStores.dropFoldedPartitions(s, d, "cluster_accept", accT)
-      return false
-    }
-    val tmp = DurableStores.compactTmp(s, "clusters")
+    graft.storage.DurableStores.compactBatches(s, d, "cluster_accept",
+        Seq(clusterAccTable(d)), "clusters")(clusterAcceptStore(s, d)) {
+      (accDelta, ids, tmp) =>
     val evidence = clusterStore(s, d).unionByName(
-      accDelta.filter(col("batch_id").isin(foldIds.toSeq: _*))
+      accDelta.filter(col("batch_id").isin(ids.toSeq: _*))
         .select(col("node"), col("cluster")))
     val cc = Dedup.connectedComponents(evidence, "node", "cluster")
     // CC drops self-edges, so singleton nodes (node == cluster, no
@@ -1264,17 +1030,10 @@ object LlmOps {
       .join(cc.withColumnRenamed("cluster", "cl"), Seq("node"), "left")
       .select(col("node"), coalesce(col("cl"), col("node")).as("cluster"))
       .write.mode("overwrite").parquet(s"$tmp/labels")
-    val tbl = Storage.tableNameFor("graft_corpus_clusters", d)
-    DurableStores.drop(s, d, "clusters")
-    DurableStores.openOrBuild(s, d, "clusters", Seq(tbl),
-        params = clusterParams) { st =>
-      st.appendBucketed(tbl, s.read.parquet(s"$tmp/labels"),
-        Seq("node"), numBuckets = 16)
-      Seq(DurableStores.TableMeta.bucketed(s, tbl, Seq("node"), 16))
-    }
-    DurableStores.retireFoldedBatches(s, d, "cluster_accept", foldIds)
-    DurableStores.dropFoldedPartitions(s, d, "cluster_accept", accT)
-    DurableStores.deleteDir(s, tmp)
+    graft.storage.DurableStores.drop(s, d, "clusters")
+    graft.storage.DurableStores.openOrBuild(s, d, "clusters",
+        Seq(clusterTable(d)), clusterParams)(
+      writeClusterBase(s, _, d, s.read.parquet(s"$tmp/labels")))
     true
   }
 

@@ -177,19 +177,23 @@ object MergeScaleQ {
       cutoff: String): DataFrame = {
     import graft.storage.DurableStores
     val tbl = graft.storage.Storage.tableNameFor("graft_merged_base", d)
-    val keys = Seq("website_id", "site_submission_id")
     DurableStores.openOrBuild(s, d, "merged_base", Seq(tbl),
         params = s"cutoff=$cutoff,buckets=32",
         migrate = DurableStores.reStampMigration(
           s"cutoff=$cutoff,buckets=32", mergeLayoutKeys),
         foldGuards = Seq("merge_log")) { st =>
-      st.appendBucketed(tbl,
-        Merge.mergeSubmissions(bucketedNested(s, d)
-          .filter(col("scan_datetime") <= lit(cutoff).cast("timestamp"))),
-        keys, numBuckets = 32)
-      Seq(DurableStores.TableMeta.bucketed(s, tbl, keys, 32))
+      writeMergedBase(s, st, tbl, Merge.mergeSubmissions(bucketedNested(s, d)
+        .filter(col("scan_datetime") <= lit(cutoff).cast("timestamp"))))
     }
     s.table(tbl)
+  }
+
+  /** The merged base's at-rest layout, written by its source build and
+    * by compact's fold: bucketed by the entity key. */
+  private def writeMergedBase(s: SparkSession, st: graft.storage.Storage,
+      tbl: String, merged: DataFrame): Seq[graft.storage.DurableStores.TableMeta] = {
+    st.appendBucketed(tbl, merged, entityKeys, numBuckets = 32)
+    Seq(graft.storage.DurableStores.TableMeta.bucketed(s, tbl, entityKeys, 32))
   }
 
   /** q55's merge over the bucketed store, under q55's oracle: same
@@ -270,35 +274,25 @@ object MergeScaleQ {
     * recreates. Both share [[mergedBaseStore]]'s params. */
   private[graft] def mergeAcceptStore(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import graft.storage.{DurableStores, Storage}
-    val snapsT = Storage.tableNameFor("graft_mrgacc_snaps", d)
-    val mergedT = Storage.tableNameFor("graft_mrgacc_merged", d)
-    lazy val empty = bucketedNested(s, d).limit(0)
+    import graft.storage.DurableStores
     // gate=mball: invalidates delta stores whose permanent ingest log
     // predates q125's single-batch shape — the old mb1/mb2 partitions'
     // snapshot ids overlap the mball batch, and the cross-batch id
     // guard (correctly) refuses the overlap rather than double-merge
-    DurableStores.openOrBuild(s, d, "merge_log", Seq(snapsT),
-        params = s"cutoff=$incrementalCutoff,buckets=32,gate=mball",
-        migrate = DurableStores.reStampMigration(
-          s"cutoff=$incrementalCutoff,buckets=32,gate=mball",
-          mergeLayoutKeys)) { st =>
-      st.appendPartitioned(snapsT,
-        empty.withColumn("batch_id", lit("")), Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, snapsT, Seq("batch_id")))
-    }
-    DurableStores.openOrBuild(s, d, "merge_accept", Seq(mergedT),
-        params = s"cutoff=$incrementalCutoff,buckets=32,gate=mball",
-        migrate = DurableStores.reStampMigration(
-          s"cutoff=$incrementalCutoff,buckets=32,gate=mball",
-          mergeLayoutKeys)) { st =>
-      st.appendPartitioned(mergedT,
-        Merge.mergeSubmissions(empty).withColumn("batch_id", lit("")),
-        Seq("batch_id"))
-      Seq(DurableStores.TableMeta.partitioned(s, mergedT, Seq("batch_id")))
-    }
-    (s.table(snapsT), s.table(mergedT))
+    val params = s"cutoff=$incrementalCutoff,buckets=32,gate=mball"
+    val migrate = DurableStores.reStampMigration(params, mergeLayoutKeys)
+    DurableStores.openDeltaTables(s, d, "merge_log", Seq(snapsTable(d)),
+      params, migrate)(Seq(bucketedNested(s, d)))
+    DurableStores.openDeltaTables(s, d, "merge_accept", Seq(mergedTable(d)),
+      params, migrate)(Seq(Merge.mergeSubmissions(bucketedNested(s, d))))
+    (s.table(snapsTable(d)), s.table(mergedTable(d)))
   }
+
+  private def snapsTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_mrgacc_snaps", d)
+
+  private def mergedTable(d: String): String =
+    graft.storage.Storage.tableNameFor("graft_mrgacc_merged", d)
 
   /** COMMITTED delta rows (markers live with the `merge_log` store),
     * optionally lineage-scoped and replayed as of just before a batch
@@ -316,8 +310,9 @@ object MergeScaleQ {
 
   /** Committed view of a delta table whose markers live in the
     * PERMANENT `merge_log`. The accept families' committed filter
-    * ([[LlmOps.committedDelta]] — isin over live markers) is bounded
-    * there because compaction retires markers; the log keeps one
+    * ([[graft.storage.DurableStores.committedDelta]] — isin over live
+    * markers) is bounded there because compaction retires markers; the
+    * log keeps one
     * marker per batch FOREVER, so the same include-list would grow an
     * unbounded isin literal (plan size and driver memory scale with
     * log lifetime, not traffic). Invert it: list the batch partitions
@@ -349,11 +344,9 @@ object MergeScaleQ {
       before: Option[String] = None,
       lineage: Option[Set[String]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.storage.Storage
     val base = mergedBaseStore(s, d, incrementalCutoff)
     val (_, mergedD) = mergeAcceptStore(s, d)
-    val latest = scopedMergeDelta(s, d,
-        Storage.tableNameFor("graft_mrgacc_merged", d), mergedD,
+    val latest = scopedMergeDelta(s, d, mergedTable(d), mergedD,
         before, lineage)
       .withColumn("rk", row_number().over(
         Window.partitionBy(entityKeys.map(col): _*)
@@ -385,41 +378,31 @@ object MergeScaleQ {
     * `before` cut excludes the batch's own and later partitions, and
     * the guard skips the batch's own prior partition); accept cost is
     * batch-proportional — the only corpus-scale touch is the
-    * shuffle-free left_semi over the bucketed nested store. */
+    * shuffle-free left_semi over the bucketed nested store. A replay
+    * of a batch whose merged delta was compact-folded into the base is
+    * a NO-OP: recomputing it as-of its own cut and letting
+    * effectiveMerged's latest-wins override the (complete) folded base
+    * row would silently regress every entity a LATER folded batch also
+    * touched back to pre-that-batch state; the snapshot log still
+    * holds the batch's snapshots for future folds. */
   private[graft] def acceptMergeBatch(s: SparkSession, d: String,
       batchId: String, batchSnaps: DataFrame,
       lineage: Option[Set[String]] = None): Unit =
-    graft.storage.DurableStores.withWriterLease(s, d, "merge_log") {
-    import graft.storage.{DurableStores, Storage}
-    val (snapsD, _) = mergeAcceptStore(s, d)
-    // replay of a batch whose merged delta was compact-folded into
-    // the base: NO-OP. Recomputing it as-of its own cut and letting
-    // effectiveMerged's latest-wins override the (complete) folded
-    // base row would silently regress every entity a LATER folded
-    // batch also touched back to pre-that-batch state. The rows
-    // already answer from the base; the snapshot log still holds the
-    // batch's snapshots for future folds. A COMMITTED unfolded batch
-    // replays as a no-op too (round 16, LlmOps.alreadyAccepted
-    // rationale): the marker certifies both delta partitions, and
-    // batch ids identify immutable content.
-    if (LlmOps.alreadyAccepted(s, d, "merge_log", batchId))
-      return
-    LlmOps.requireMonotoneBatchId(s, d, "merge_log", batchId, lineage)
+    graft.storage.DurableStores.acceptBatch(s, d, "merge_log", batchId,
+        lineage)(mergeAcceptStore(s, d)) { case ((snapsD, _), put) =>
     val hist = baseHistory(s, d)
-    val snapsT = Storage.tableNameFor("graft_mrgacc_snaps", d)
-    val prior = scopedMergeDelta(s, d, snapsT, snapsD, Some(batchId), lineage)
+    val prior = scopedMergeDelta(s, d, snapsTable(d), snapsD, Some(batchId),
+        lineage)
       .drop("batch_id")
     val cols = hist.columns.map(col).toIndexedSeq
     val batch = batchSnaps.select(cols: _*)
     // collision universe: base history plus ALL committed accepts of
     // every lineage except this batch's own partition (whose presence
     // just means a replay) — an id accepted by ANY batch is taken
-    val others = committedLogDelta(s, d, snapsT, snapsD)
-      .filter(col("batch_id") =!= batchId).drop("batch_id")
-    LlmOps.requireFreshBatchIds(
-      hist.unionByName(others), "submission_snapshot_id",
-      batch.select(col("submission_snapshot_id").as("id")).distinct(),
-      "merge")
+    graft.storage.DurableStores.requireFreshBatchIds("merge", batchId,
+      "submission_snapshot_id", hist,
+      committedLogDelta(s, d, snapsTable(d), snapsD),
+      batch.select(col("submission_snapshot_id")))
     val touched = graft.engine.CacheRegistry.retain(
       batch.select(entityKeys.head, entityKeys.tail: _*).distinct())
     // prune the CORPUS-scale side (the bucketed, entity-key-sorted
@@ -429,17 +412,9 @@ object MergeScaleQ {
     val history = graft.engine.ProbePrune.pruneToProbeKeys(hist,
         "site_submission_id", touched, "site_submission_id")
       .unionByName(prior).unionByName(batch)
-    val refreshed = Merge.mergeSubmissions(
-      history.join(touched, entityKeys, "left_semi"))
-    DurableStores.withDynamicPartitionOverwrite(s) {
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .insertInto(Storage.tableNameFor("graft_mrgacc_snaps", d))
-      refreshed.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .insertInto(Storage.tableNameFor("graft_mrgacc_merged", d))
-    }
-    DurableStores.markBatchCommitted(s, d, "merge_log", batchId)
+    put(snapsTable(d), batch)
+    put(mergedTable(d), Merge.mergeSubmissions(
+      history.join(touched, entityKeys, "left_semi")))
   }
 
   /** Fold committed merge-accept batches into the merged base, so
@@ -469,32 +444,29 @@ object MergeScaleQ {
     * the log). Probes never read the log; its growth costs probe
     * plans nothing. */
   private[graft] def compactMergeStore(s: SparkSession, d: String): Boolean =
-    graft.storage.DurableStores.withWriterLease(s, d, "merge_log") {
-    import graft.storage.{DurableStores, Storage}
-    val mergedT = Storage.tableNameFor("graft_mrgacc_merged", d)
-    val (snapsD, mergedD) = mergeAcceptStore(s, d)
-    // the snapshot: all committed log batches as of NOW. Retirement
-    // and partition drops cover exactly this set, so an accept
-    // committing while the fold runs keeps its merged delta partition
-    // and marker and folds next time (no silent truncation under a
-    // live ingest stream). The fold READS through committedLogDelta
-    // (bounded exclude-uncommitted predicate, not an isin over the
-    // whole log) — a mid-fold commit may therefore contribute rows to
-    // this fold's recompute, which is safe: merge folds recompute
-    // from the ground-truth log, so extra snapshots only move a
-    // touched entity CLOSER to the final answer, and the unretired
-    // batch still folds (idempotently) next time.
-    val foldIds = DurableStores.committedBatches(s, d, "merge_log")
-    if (foldIds.isEmpty) return false
-    val snapsT = Storage.tableNameFor("graft_mrgacc_snaps", d)
-    val acceptedSnaps = committedLogDelta(s, d, snapsT, snapsD)
+    // the snapshot compactBatches takes is every committed log batch as
+    // of NOW; retirement and partition drops cover exactly that set.
+    // The fold READS through committedLogDelta (bounded
+    // exclude-uncommitted predicate, not an isin over the whole log) —
+    // a mid-fold commit may therefore contribute rows to this fold's
+    // recompute, which is safe: merge folds recompute from the
+    // ground-truth log, so extra snapshots only move a touched entity
+    // CLOSER to the final answer, and the unretired batch still folds
+    // (idempotently) next time. Markers stay (deleteMarkers = false):
+    // the snapshot log, its commit markers, and any batch that
+    // committed mid-fold are untouched — the log remains the id-guard
+    // universe and the ground truth of every later fold.
+    graft.storage.DurableStores.compactBatches(s, d, "merge_log",
+        Seq(mergedTable(d)), "merge", deleteMarkers = false)(
+        mergeAcceptStore(s, d)) { case ((snapsD, mergedD), _, tmp) =>
+    val acceptedSnaps = committedLogDelta(s, d, snapsTable(d), snapsD)
       .drop("batch_id")
     val foldedNested = baseHistory(s, d).unionByName(acceptedSnaps)
     // entities carried by UNFOLDED merged deltas (folded batches'
     // partitions are dropped at fold time, so rows present = accepted
     // since the last fold): the common path re-merges ONLY these —
     // fold cost tracks new work, not total log history...
-    val unfoldedMerged = committedLogDelta(s, d, mergedT, mergedD)
+    val unfoldedMerged = committedLogDelta(s, d, mergedTable(d), mergedD)
     val unfoldedEnts = unfoldedMerged
       .select(entityKeys.head, entityKeys.tail: _*).distinct()
     // ...but a `StoreAdmin refresh merged_base` rebuilds the base
@@ -514,39 +486,23 @@ object MergeScaleQ {
       .head.getLong(0)
     val histCount = foldedNested.join(rest, entityKeys, "left_semi").count()
     val needFull = baseCovered != histCount
-    val hasUnfolded = unfoldedMerged.limit(1).collect().nonEmpty
-    if (!needFull && !hasUnfolded) {
-      // GC merged-delta partitions orphaned by a crash between a
-      // previous fold's ledger write and its partition drop
-      DurableStores.dropFoldedPartitions(s, d, "merge_log", Seq(mergedT))
-      return false
+    // nothing to fold: compactBatches then only collects merged-delta
+    // partitions orphaned by a crash between a previous fold's ledger
+    // write and its partition drop
+    (needFull || unfoldedMerged.limit(1).collect().nonEmpty) && {
+      val newBatch =
+        if (needFull) acceptedSnaps
+        else acceptedSnaps.join(unfoldedEnts, entityKeys, "left_semi")
+      Merge.incrementalMergeSubmissions(
+          mergedBaseStore(s, d, incrementalCutoff), foldedNested, newBatch)
+        .write.mode("overwrite").parquet(s"$tmp/merged")
+      val baseT = graft.storage.Storage.tableNameFor("graft_merged_base", d)
+      graft.storage.DurableStores.drop(s, d, "merged_base")
+      graft.storage.DurableStores.openOrBuild(s, d, "merged_base", Seq(baseT),
+          s"cutoff=$incrementalCutoff,buckets=32")(
+        writeMergedBase(s, _, baseT, s.read.parquet(s"$tmp/merged")))
+      true
     }
-    val newBatch =
-      if (needFull) acceptedSnaps
-      else acceptedSnaps.join(unfoldedEnts, entityKeys, "left_semi")
-    val tmp = DurableStores.compactTmp(s, "merge")
-    Merge.incrementalMergeSubmissions(
-        mergedBaseStore(s, d, incrementalCutoff), foldedNested, newBatch)
-      .write.mode("overwrite").parquet(s"$tmp/merged")
-    val baseT = Storage.tableNameFor("graft_merged_base", d)
-    DurableStores.drop(s, d, "merged_base")
-    DurableStores.openOrBuild(s, d, "merged_base", Seq(baseT),
-        params = s"cutoff=$incrementalCutoff,buckets=32") { st =>
-      st.appendBucketed(baseT, s.read.parquet(s"$tmp/merged"),
-        entityKeys, numBuckets = 32)
-      Seq(DurableStores.TableMeta.bucketed(s, baseT, entityKeys, 32))
-    }
-    // the fold is complete: LEDGER the folded batch ids (the replay
-    // no-op in acceptMergeBatch keys off it) and drop exactly their
-    // merged-delta partitions. The snapshot log, its commit markers,
-    // and any batch that committed mid-fold are untouched — the log
-    // remains the id-guard universe and the ground truth of every
-    // later fold.
-    DurableStores.retireFoldedBatches(s, d, "merge_log", foldIds,
-      deleteMarkers = false)
-    DurableStores.dropFoldedPartitions(s, d, "merge_log", Seq(mergedT))
-    DurableStores.deleteDir(s, tmp)
-    true
   }
 
   /** q125 — the merge-maintenance WRITE-BACK lifecycle under the hard

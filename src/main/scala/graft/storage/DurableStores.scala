@@ -4,7 +4,9 @@ import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /** Cross-session lifecycle for the engine's write-once index stores
   * (the q83 bucketed nested store, the q91 sketch tables, the q92
@@ -283,7 +285,7 @@ object DurableStores {
     * listing of the table root plus one per partition dir, compared
     * against the catalog (names) and the JVM's last-seen signature to
     * decide whether RECOVER / refresh is needed. Store partition
-    * values are slug-like batch ids (the accept verbs and
+    * values are slug-like batch ids ([[acceptBatch]] and
     * [[dropBatchPartitions]] enforce it), so the dir-name comparison
     * is exact; any mismatch — including an escaping difference — errs
     * toward running RECOVER. The signature is
@@ -1213,19 +1215,6 @@ object DurableStores {
     f.create(new Path(dir, batchId + ".ok"), true).close()
   }
 
-  /** Scratch dir for a compact fold — shared by all four accept
-    * families so tmp-path and crash-cleanup policy can never drift
-    * between them. */
-  def compactTmp(s: SparkSession, family: String): String =
-    root(s) + s"/_compact/$family"
-
-  /** Recursive delete of a fold's scratch dir (Hadoop FS API — works
-    * on HDFS/S3A roots like every other store path). */
-  def deleteDir(s: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   /** Batch ids whose accept fully committed AND whose rows still live
     * in delta partitions — one marker-dir listing. Batches a compact
     * has folded into the base are NOT listed (their markers retire
@@ -1349,5 +1338,237 @@ object DurableStores {
       dropBatchPartitions(s, t, presentBatchPartitions(s, t).intersect(folded))
     }
   }
+
+  // ---- the accept/compact protocol of the delta-store families ------
+  //
+  // Five families keep write-once bases plus mutable accept deltas:
+  // sketch_accept, cosine_accept, cluster_accept, asof_accept and
+  // merge_log (whose markers also govern merge_accept). Each delta
+  // table is partitioned by `batch_id`, one partition per accepted
+  // batch; probes read base ∪ the COMMITTED deltas. [[acceptBatch]]
+  // and [[compactBatches]] are the only code that runs the protocol;
+  // a family supplies its open, its id guard and writes, and its fold.
+
+  /** `delta` restricted to batches whose accept fully COMMITTED (all
+    * delta tables written, then the marker — [[markBatchCommitted]]):
+    * a crashed multi-table accept leaves its partitions mutually
+    * inconsistent, and probing them would silently drop candidates at
+    * the verification join. The committed-id set is one marker-dir
+    * listing, batch-count-sized, applied as an isin partition filter
+    * (pruned scan). */
+  def committedDelta(s: SparkSession, d: String, store: String,
+      delta: DataFrame): DataFrame =
+    delta.filter(col("batch_id").isin(committedBatches(s, d, store).toSeq: _*))
+
+  /** A batch id names its partition directory (`batch_id=<id>`) and its
+    * marker file (`<id>.ok`), and compaction drops its partition through
+    * a quoted SQL literal. So it must be non-empty and come through
+    * Hive's partition-path escaping unchanged — which also excludes `/`
+    * (the marker would land in a subdirectory [[committedBatches]]
+    * never lists, so the batch could never commit) and `'` (the batch
+    * commits, but its compact fails after the ledger is written, and
+    * so does every later compact of the family). */
+  private def requireSafeBatchId(store: String, batchId: String): Unit =
+    require(batchId.nonEmpty &&
+      ExternalCatalogUtils.escapePathName(batchId) == batchId,
+      s"unsafe batch id '$batchId' for store '$store': a batch id must be " +
+        "non-empty and name its own partition directory (no '/', quote, " +
+        "'=', ':', '%' or other character Hive escapes in partition paths)")
+
+  /** True when `batchId`'s accept is already fully visible — its commit
+    * marker is present (every delta table holds the batch: the marker
+    * writes LAST) or a compact folded it into the base (the folded
+    * ledger lists it). A replay is then a NO-OP: batch ids identify
+    * immutable content (the id guards forbid the same row id under two
+    * batch ids), so re-running the body could only rewrite
+    * byte-identical partitions — or, for a folded batch, double probe
+    * rows and let a stale as-of-replay delta override the folded base.
+    * Healing a crashed partial accept never takes this exit: a crash
+    * before the marker leaves no marker, and the re-accept rewrites and
+    * then commits. One marker-dir listing + one ledger read, no Spark
+    * job. */
+  private def alreadyAccepted(s: SparkSession, d: String, store: String,
+      batchId: String): Boolean =
+    committedBatches(s, d, store).contains(batchId) ||
+      foldedBatches(s, d, store).contains(batchId)
+
+  /** Enforce the lexicographic batch-id contract AT ACCEPT TIME: a NEW
+    * batch id must sort after every id already committed or folded
+    * into `store`. Every latest-batch-wins read orders deltas by
+    * batch_id — "the daily-ingest id contract" — so an out-of-order id
+    * would silently win or lose per-entity overrides instead of
+    * failing. Replays never reach this check ([[alreadyAccepted]]
+    * answers them first), so re-accepting a HISTORICAL batch followed
+    * by every later one remains the legal log-replay path. The
+    * ordering is per id lineage when the caller names one: an
+    * unrelated lineage's ids (another stream's prefix, another gate's
+    * batches) do not constrain this one. Cost: the marker-dir listing
+    * the verb already pays, no Spark job. */
+  private def requireMonotoneBatchId(s: SparkSession, d: String,
+      store: String, batchId: String, lineage: Option[Set[String]]): Unit = {
+    val accepted = committedBatches(s, d, store) ++ foldedBatches(s, d, store)
+    val later = lineage.fold(accepted)(accepted.intersect).filter(_ > batchId)
+    require(later.isEmpty,
+      s"$store accept precondition violated: new batch id '$batchId' " +
+        s"sorts before already-accepted ${later.toSeq.sorted.take(3)
+          .mkString("'", "', '", "'")} — batch ids must be " +
+        "lexicographically monotone in accept order (latest-batch-wins " +
+        "reads order by batch_id); replaying an EXISTING id is legal, " +
+        "minting an out-of-order new one is not")
+  }
+
+  /** Fail-fast id guard of an accept body: the batch's ids (`batchIds`,
+    * one column) must be absent from the family's base and from every
+    * OTHER committed delta batch (`committed`, rows with `batch_id`).
+    * Once compact folds a batch into the write-once base its ids are
+    * base ids, and the same id under two batch ids would double
+    * probes' base ∪ delta rows just as silently — wrong jaccard,
+    * cosine, as-of and snapshot-count answers, not an error.
+    * Re-accepting an UNcommitted batch stays legal (partition-idempotent
+    * crash healing): its own partition is not part of the universe.
+    * Cost per accept: one pruned single-column scan of the base id
+    * column against a batch-sized broadcast. */
+  def requireFreshBatchIds(family: String, batchId: String, idCol: String,
+      base: DataFrame, committed: DataFrame, batchIds: DataFrame): Unit = {
+    val taken = base.select(col(idCol)).unionByName(
+      committed.filter(col("batch_id") =!= batchId).select(col(idCol)))
+    val ids = batchIds.toDF("id").distinct()
+    val clash = taken
+      .join(broadcast(ids), taken(idCol) === ids("id"), "left_semi")
+      .limit(5).collect()
+    require(clash.isEmpty,
+      s"$family accept precondition violated: batch ids " +
+        clash.map(_.get(0)).mkString(", ") +
+        s" are already taken in the $family store (corpus ids, a " +
+        "previously compacted batch, or another accepted batch) — " +
+        "re-ingesting an existing doc is an upsert, not an accept; " +
+        "rebuild the store (StoreAdmin refresh) instead")
+  }
+
+  /** Open (build-if-absent) a family's delta tables: each one EMPTY with
+    * the schema of its `rows` plus a `batch_id` string, partitioned by
+    * batch_id, under the same fingerprint as the family's base — so
+    * regenerated source data drops base AND deltas together. `rows` is
+    * evaluated only when the tables are built. */
+  def openDeltaTables(s: SparkSession, d: String, store: String,
+      tables: Seq[String], params: String, migrate: Migration)(
+      rows: => Seq[DataFrame]): Unit =
+    openOrBuild(s, d, store, tables, params, migrate) { st =>
+      tables.zip(rows).map { case (t, df) =>
+        st.appendPartitioned(t, df.limit(0).withColumn("batch_id", lit("")),
+          Seq("batch_id"))
+        TableMeta.partitioned(s, t, Seq("batch_id"))
+      }
+    }
+
+  /** ACCEPT one batch into `store`'s delta tables. The protocol, in
+    * order:
+    *  - refuse an unsafe id before anything is written;
+    *  - take the store's cross-process writer lease;
+    *  - `open` the family's tables (its value is handed to `body`);
+    *  - return on a replay of a committed or folded batch (a no-op —
+    *    [[alreadyAccepted]]);
+    *  - require a lexicographically monotone new id within `lineage`;
+    *  - run the family's `body`: its id guard
+    *    ([[requireFreshBatchIds]]) and its writes, each through
+    *    `put(table, rows)`, which adds the `batch_id` column and
+    *    overwrites only this batch's partition
+    *    ([[withDynamicPartitionOverwrite]]) — re-accepting rewrites its
+    *    own partition and nothing else, and distinct batches accumulate
+    *    as distinct partitions;
+    *  - write the commit marker LAST: the batch becomes visible to
+    *    probes only once every delta table holds it, and a crash
+    *    before that leaves it invisible until a re-accept heals it. */
+  def acceptBatch[A](s: SparkSession, d: String, store: String,
+      batchId: String, lineage: Option[Set[String]])(open: => A)(
+      body: (A, (String, DataFrame) => Unit) => Unit): Unit = {
+    requireSafeBatchId(store, batchId)
+    withWriterLease(s, d, store) {
+      val opened = open
+      if (!alreadyAccepted(s, d, store, batchId)) {
+        requireMonotoneBatchId(s, d, store, batchId, lineage)
+        body(opened, (table, rows) => withDynamicPartitionOverwrite(s) {
+          rows.withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").insertInto(table)
+        })
+        markBatchCommitted(s, d, store, batchId)
+      }
+    }
+  }
+
+  /** Scratch dir for a compact fold — one place for the tmp path of all
+    * five accept families, so tmp-path and crash-cleanup policy can
+    * never drift between them. */
+  private def compactTmp(s: SparkSession, family: String): String =
+    root(s) + s"/_compact/$family"
+
+  /** Recursive delete of a directory (Hadoop FS API — works on
+    * HDFS/S3A roots like every other store path). */
+  def deleteDir(s: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** The dedup fold shared by the families whose deltas are plain rows:
+    * `base` ∪ the `ids` batches of `delta`, deduplicated on the table's
+    * natural `keys` (so re-running a fold that crashed after its base
+    * rebuild cannot double rows), written to `dir` and read back. */
+  def foldDelta(s: SparkSession, dir: String, base: DataFrame,
+      delta: DataFrame, ids: Set[String], keys: Seq[String]): DataFrame = {
+    base.unionByName(
+        delta.filter(col("batch_id").isin(ids.toSeq: _*)).drop("batch_id"))
+      .dropDuplicates(keys)
+      .write.mode("overwrite").parquet(dir)
+    s.read.parquet(dir)
+  }
+
+  /** COMPACT `store`: fold its committed delta batches into the family's
+    * write-once base. Accept deltas accumulate one partition per batch
+    * forever and probes read base ∪ N deltas; after a fold they read
+    * one base again, with identical answers (StoreSpec). The protocol,
+    * in order:
+    *  - take the writer lease and `open` the family's tables;
+    *  - snapshot the committed batch ids, once, up front — a batch
+    *    whose accept commits while the fold runs is outside the
+    *    snapshot, keeps its partition and marker, and folds next time,
+    *    so a live ingest stream and an admin compact can overlap;
+    *  - if nothing is committed (or `fold` reports nothing to fold),
+    *    only garbage-collect partitions orphaned by an earlier crash
+    *    and return false;
+    *  - `fold(opened, ids, tmp)`: the family writes base ∪ the snapshot
+    *    deltas into the scratch dir `tmp`, then [[drop]]s its base and
+    *    rebuilds it from `tmp` under the same params;
+    *  - retire the ids into the folded ledger, ledger FIRST, then their
+    *    markers unless `deleteMarkers` is false (the merge family's
+    *    permanent ingest log) — [[retireFoldedBatches]];
+    *  - drop exactly the folded partitions of `deltaTables`
+    *    ([[dropFoldedPartitions]]);
+    *  - delete the scratch dir.
+    * Crash safety: before the rebuild the pre-compact state is intact
+    * (manifest-last); after the rebuild but before retirement the
+    * snapshot batches live in both places and re-running compact heals
+    * it (folds dedup on each table's natural key, or recompute); after
+    * retirement but before the drop, the orphaned partitions are
+    * invisible to probes (no live marker) and the next compact
+    * collects them. The ledger lets each accept answer a replay of a
+    * folded batch (a streaming checkpoint replay racing an admin
+    * compact) with a no-op; a NEW id re-presenting folded row ids is
+    * still refused by the id guards. Retiring markers keeps
+    * [[committedBatches]] — and every isin predicate built from it —
+    * bounded by the traffic since the last fold. */
+  def compactBatches[A](s: SparkSession, d: String, store: String,
+      deltaTables: Seq[String], scratch: String,
+      deleteMarkers: Boolean = true)(open: => A)(
+      fold: (A, Set[String], String) => Boolean): Boolean =
+    withWriterLease(s, d, store) {
+      val opened = open
+      val ids = committedBatches(s, d, store)
+      val tmp = compactTmp(s, scratch)
+      val folded = ids.nonEmpty && fold(opened, ids, tmp)
+      if (folded) retireFoldedBatches(s, d, store, ids, deleteMarkers)
+      dropFoldedPartitions(s, d, store, deltaTables)
+      if (folded) deleteDir(s, tmp)
+      folded
+    }
 
 }

@@ -1145,13 +1145,13 @@ class StoreSpec extends AnyFunSuite {
       val raw = graft.queries.LlmOps.sketchAcceptStore(s, sf)._1
       assert(raw.filter(col("batch_id") === "crashed").count() === 1L)
       // committed view: the crashed batch is filtered out
-      val committed = graft.queries.LlmOps.committedDelta(
+      val committed = graft.storage.DurableStores.committedDelta(
         s, sf, "sketch_accept", raw)
       assert(committed.filter(col("batch_id") === "crashed").count() === 0L)
       // once marked committed (what a healing re-accept ends with),
       // the batch becomes visible
       DurableStores.markBatchCommitted(s, sf, "sketch_accept", "crashed")
-      assert(graft.queries.LlmOps.committedDelta(s, sf, "sketch_accept",
+      assert(graft.storage.DurableStores.committedDelta(s, sf, "sketch_accept",
         graft.queries.LlmOps.sketchAcceptStore(s, sf)._1)
         .filter(col("batch_id") === "crashed").count() === 1L)
       graft.engine.CacheRegistry.releaseAll()

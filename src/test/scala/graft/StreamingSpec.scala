@@ -38,7 +38,7 @@ class StreamingSpec extends AnyFunSuite {
       val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
       val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
       def committed(df: org.apache.spark.sql.DataFrame) =
-        graft.queries.LlmOps.committedDelta(s, sf, "sketch_accept", df)
+        graft.storage.DurableStores.committedDelta(s, sf, "sketch_accept", df)
           .drop("batch_id")
       val out = graft.operators.Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(committed(ash)), bands.unionByName(committed(abands)),

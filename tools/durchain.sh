@@ -20,7 +20,7 @@ echo "=== JVM3 probe + gates"
 sbt -batch "runMain graft.StoreChain probe $D" > $OUT/jvm3.log 2>&1
 grep -h '{"phase"' $OUT/jvm3.log | tail -1 > $OUT/jvm3.json
 rm -rf /tmp/dur_verify
-SPARK_GRAFT_SF_DIR=$D SPARK_GRAFT_OUT_DIR=/tmp/dur_verify sbt -batch "runMain graft.VerifyOne q83_merge_scale_bucketed q91_incremental_dedup_stored q92_embedding_incremental_stored q112_batch_drift q115_sparse_topk_stored q117_incremental_merge_stored q119_curation_stored q120_semantic_dedup_stored q121_sketch_accept_probe q122_cosine_accept_probe q123_incremental_clusters q124_cluster_accept_probe q125_merge_accept_probe q128_asof_join_stored q129_asof_accept_probe" > $OUT/jvm3b.log 2>&1
+sbt -batch "runMain graft.Verify $D /tmp/dur_verify q83_merge_scale_bucketed q91_incremental_dedup_stored q92_embedding_incremental_stored q112_batch_drift q115_sparse_topk_stored q117_incremental_merge_stored q119_curation_stored q120_semantic_dedup_stored q121_sketch_accept_probe q122_cosine_accept_probe q123_incremental_clusters q124_cluster_accept_probe q125_merge_accept_probe q128_asof_join_stored q129_asof_accept_probe q139_asof_join_sql_effective" > $OUT/jvm3b.log 2>&1
 python3 tools/selfcheck.py $D /tmp/dur_verify > $OUT/jvm3_selfcheck.txt 2>&1
 snap 3
 echo "=== JVM4 compact + probe"
