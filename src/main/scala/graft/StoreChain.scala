@@ -109,8 +109,7 @@ object StoreChain {
           val (ash, abands, achunks) =
             queries.LlmOps.sketchAcceptStore(spark, dataDir)
           def own(df: DataFrame): DataFrame =
-            graft.storage.DurableStores.committedDelta(spark, dataDir, "sketch_accept", df)
-              .filter(col("batch_id") === bid).drop("batch_id")
+            df.filter(col("batch_id") === bid).drop("batch_id")
           val sketchPairs = Dedup.incrementalMinhashPairsFromStore(
             sh.unionByName(own(ash)), bands.unionByName(own(abands)),
             chunks.unionByName(own(achunks)),
@@ -120,8 +119,7 @@ object StoreChain {
             .map(r => s"[${r.getLong(0)},${r.getLong(1)},${r.getDouble(2)}]")
             .sorted
           val (cents, members) = queries.LlmOps.cosineStore(spark, dataDir)
-          val cosDelta = graft.storage.DurableStores.committedDelta(spark, dataDir,
-              "cosine_accept", queries.LlmOps.cosineAcceptStore(spark, dataDir))
+          val cosDelta = queries.LlmOps.cosineAcceptStore(spark, dataDir)
             .filter(col("batch_id") === bid).drop("batch_id")
           val cosinePairs = EmbeddingDedup.cosinePairsFromStore(cents,
             members.unionByName(cosDelta),

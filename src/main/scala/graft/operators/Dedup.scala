@@ -18,10 +18,12 @@ import org.apache.spark.sql.functions._
   *    no shuffle. [[explodedBands]] and [[explodedChunks]] turn it into
   *    the two bucket-key tables, in memory or at rest.
   *  - Candidates. Minhash bands bucket on (band_id, band_hash), simhash
-  *    chunks on (chunk_idx, chunk_value): O(n·bands) candidate
-  *    generation instead of O(n²) pairs. Within a corpus each table
-  *    self-joins ([[multiSketchPairsFromStore]]); a batch probes a
-  *    corpus by joining its key tables to the corpus's
+  *    chunks on (chunk_idx, chunk_value). The band join stays near the
+  *    near-dup pair count; the chunk join does not: 8-bit chunks put
+  *    about n/256 docs in each bucket, so its candidates grow as
+  *    n²/256 (about 40 000 for the 5 000 docs of sf0.1). Within a
+  *    corpus each table self-joins ([[multiSketchPairsFromStore]]); a
+  *    batch probes a corpus by joining its key tables to the corpus's
   *    ([[incrementalPairsBetweenStores]]).
   *  - Verify. Every path hands its candidate pairs to one exact-Jaccard
   *    core ([[verifiedByJaccard]]). A lossless filter ahead of exact

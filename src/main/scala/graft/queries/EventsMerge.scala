@@ -437,13 +437,11 @@ object EventsMerge {
     * (purchases) land as batch_id partitions, commit-marked last —
     * the same delta lifecycle as the sketch/cosine/merge families.
     * The base stays write-once and time-sorted at rest; deltas stay
-    * batch-sized. */
-  private[graft] def asofAcceptStore(s: SparkSession, d: String): DataFrame = {
+    * batch-sized. Returns the committed view. */
+  private[graft] def asofAcceptStore(s: SparkSession, d: String): DataFrame =
     graft.storage.DurableStores.openDeltaTables(s, d, "asof_accept",
         Seq(asofAccTable(d)), asofDimParams, asofDimMigration(s, d))(
-      Seq(purchases(s, d)))
-    s.table(asofAccTable(d))
-  }
+      Seq(purchases(s, d))).head
 
   private def asofAccTable(d: String): String =
     graft.storage.Storage.tableNameFor("graft_asofacc", d)
@@ -469,8 +467,7 @@ object EventsMerge {
         batchId, lineage)(asofAcceptStore(s, d)) { (delta, put) =>
     import graft.storage.DurableStores
     DurableStores.requireFreshBatchIds("asof_dim", batchId, "event_id",
-      asofDimStore(s, d), DurableStores.committedDelta(s, d, "asof_accept",
-        delta), rows.select(col("event_id")))
+      asofDimStore(s, d), delta, rows.select(col("event_id")))
     put(asofAccTable(d),
       rows.select(col("user_id"), col("event_id"), col("ts"), col("value")))
     refreshAsofBounds(s, d, rows)
@@ -537,8 +534,7 @@ object EventsMerge {
   private[graft] def asofJoinEffective(s: SparkSession, d: String,
       probe: DataFrame, lineage: Option[Set[String]] = None): DataFrame = {
     import s.implicits._
-    val committed = graft.storage.DurableStores.committedDelta(s, d,
-      "asof_accept", asofAcceptStore(s, d))
+    val committed = asofAcceptStore(s, d)
     val scopedIds = lineage
       .map(_.intersect(
         graft.storage.DurableStores.committedBatches(s, d, "asof_accept")))
@@ -947,17 +943,16 @@ object EventsMerge {
           ($"event_id" + 300000000L).as("event_id"), $"ts"))
         .createOrReplaceTempView("graft_asof_probe_eff")
       asofDimStore(s2, d)
-      asofAcceptStore(s2, d)
+      asofAcceptStore(s2, d).createOrReplaceTempView("graft_asof_acc_eff")
       val dimT = graft.storage.Storage.tableNameFor("graft_asof_dim", d)
-      val accT = graft.storage.Storage.tableNameFor("graft_asofacc", d)
-      // lineage-scoped delta leg (foreign accepts from StoreSpec or
-      // streams must not leak into the oracle compare); after a
-      // compact folds a1/a2 the partitions are gone and the same rows
-      // arrive from the base leg — the union is fold-invariant
+      // lineage-scoped committed delta leg (foreign accepts from
+      // StoreSpec or streams must not leak into the oracle compare);
+      // after a compact folds a1/a2 the partitions are gone and the
+      // same rows arrive from the base leg — the union is fold-invariant
       s2.sql(
         s"""SELECT user_id, event_id, ts, value FROM `$dimT`
            |UNION ALL
-           |SELECT user_id, event_id, ts, value FROM `$accT`
+           |SELECT user_id, event_id, ts, value FROM graft_asof_acc_eff
            |WHERE batch_id IN ('a1', 'a2')""".stripMargin)
         .createOrReplaceTempView("graft_asof_dim_eff")
       s2.sql(

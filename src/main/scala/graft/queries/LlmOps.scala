@@ -423,8 +423,7 @@ object LlmOps {
     DurableStores.openDeltaTables(s, d, "cluster_accept",
         Seq(clusterAccTable(d)), clusterAcceptParams,
         DurableStores.reStampMigration(clusterAcceptParams,
-          clusterLayoutKeys))(Seq(clusterStore(s, d)))
-    s.table(clusterAccTable(d))
+          clusterLayoutKeys))(Seq(clusterStore(s, d))).head
   }
 
   private def clusterAccTable(d: String): String =
@@ -446,8 +445,7 @@ object LlmOps {
       lineage: Option[Set[String]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = clusterStore(s, d)
-    val deltas0 = graft.storage.DurableStores.committedDelta(s, d,
-      "cluster_accept", clusterAcceptStore(s, d))
+    val deltas0 = clusterAcceptStore(s, d)
     // lineage: restrict to a caller-owned batch-id set — the same
     // isolation q121/q122 apply with their own-batch partition prunes
     // (the delta store is durable and shared; a foreign accepted batch
@@ -469,9 +467,9 @@ object LlmOps {
   /** ACCEPT an ingest batch's cluster relabel: compute the label DELTA
     * (changed + new labels only —
     * [[graft.operators.Dedup.incrementalConnectedComponentsDelta]])
-    * against the labeling as of before this batch, write it into the
-    * batch's partition of [[clusterAcceptStore]] with dynamic
-    * overwrite, and commit-mark it. Cross-edges probe the sketch base
+    * against the labeling as of before this batch, write it as the
+    * batch's partition of [[clusterAcceptStore]], and commit-mark it.
+    * Cross-edges probe the sketch base
     * plus PRIOR committed sketch-accept batches (batch_id <), so the
     * two accept families stay in lockstep under one id space — accept
     * the batch's sketches first ([[acceptSketchBatch]]), then its
@@ -493,12 +491,10 @@ object LlmOps {
     // prior batches in the SAME lineage under this id (lexicographic
     // monotone contract); the lineage scope keeps an oracle-checked
     // gate's accept chain deterministic on a shared delta store
-    def prior(delta: DataFrame): DataFrame = {
-      val committed = DurableStores.committedDelta(s, d, "sketch_accept", delta)
+    def prior(committed: DataFrame): DataFrame =
       lineage.map(ls => committed.filter(col("batch_id").isin(ls.toSeq: _*)))
         .getOrElse(committed)
         .filter(col("batch_id") < batchId).drop("batch_id")
-    }
     // the accept contract sketches the batch FIRST (acceptSketchBatch,
     // same id), so on the common path the batch's sketch is already AT
     // REST in its sketch_accept partitions — probe with those and hash
@@ -746,8 +742,8 @@ object LlmOps {
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.operators.EmbeddingDedup
     import graft.storage.DurableStores
-    DurableStores.openOrBuild(s, d, "cosine_index", cosineTables(d),
-        params = cosineParams,
+    val Seq(cents, members) = DurableStores.openOrBuild(s, d, "cosine_index",
+        cosineTables(d), params = cosineParams,
         migrate = DurableStores.reStampMigration(cosineParams,
           cosineLayoutKeys),
         foldGuards = Seq("cosine_accept")) { st =>
@@ -757,8 +753,7 @@ object LlmOps {
           "vec_id", "embedding", numCells = 16)
         writeCosineBase(s, st, d, idx.cents, EmbeddingDedup.membersOf(idx))
       }
-    }
-    val Seq(cents, members) = cosineTables(d).map(s.table)
+    }.map(DurableStores.read(s, _))
     (cents, members)
   }
 
@@ -767,16 +762,16 @@ object LlmOps {
       .map(graft.storage.Storage.tableNameFor(_, d))
 
   /** The cosine base's at-rest layout, written by its source build and
-    * by compact's fold: centroids as a small plain table, members
-    * hive-partitioned by cell. */
+    * by compact's fold: centroids as a small plain table, members as a
+    * path table hive-partitioned by cell. */
   private def writeCosineBase(s: SparkSession, st: graft.storage.Storage,
       d: String, cents: DataFrame,
       members: DataFrame): Seq[graft.storage.DurableStores.TableMeta] = {
-    import graft.storage.DurableStores.TableMeta
+    import graft.storage.DurableStores
     val Seq(centT, memT) = cosineTables(d)
     st.appendTable(centT, cents)
-    st.appendPartitioned(memT, members, Seq("cell"))
-    Seq(TableMeta.plain(s, centT), TableMeta.partitioned(s, memT, Seq("cell")))
+    Seq(DurableStores.TableMeta.plain(s, centT),
+      DurableStores.writePartitioned(st, memT, members, Seq("cell")))
   }
 
   /** q90's incremental embedding near-dup driven from the PERSISTED
@@ -798,27 +793,27 @@ object LlmOps {
     * same source fingerprint — regenerated source data drops base AND
     * deltas together, so a stale accepted batch can never outlive the
     * corpus it was accepted into. The build creates the tables EMPTY;
-    * [[acceptSketchBatch]] fills one partition per ingest batch. */
+    * [[acceptSketchBatch]] fills one partition per ingest batch.
+    * Returns the committed views. */
   private[graft] def sketchAcceptStore(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.storage.DurableStores
     // same params as the base sketch store: if the base layout
     // constants change and it rebuilds, deltas accepted under the old
     // constants must not survive into the new store's probes
-    DurableStores.openDeltaTables(s, d, "sketch_accept", sketchAccTables(d),
-        sketchAcceptParams,
+    val Seq(sh, bands, chunks) = DurableStores.openDeltaTables(s, d,
+        "sketch_accept", sketchAccTables(d), sketchAcceptParams,
         DurableStores.reStampMigration(sketchAcceptParams, sketchLayoutKeys))(
       sketchParts(Dedup.corpusSketch(
         t(s, d, "documents").limit(0), "doc_id", "text")))
-    val Seq(sh, bands, chunks) = sketchAccTables(d).map(s.table)
     (sh, bands, chunks)
   }
 
   /** ACCEPT an ingest batch into the sketch store's delta tables: the
-    * batch is sketched once (batch-sized, narrow) and written into the
-    * `batchId` partition of each delta table with DYNAMIC partition
-    * overwrite — re-accepting the same batch rewrites its own
-    * partition and nothing else, so the operation is idempotent
+    * batch is sketched once (batch-sized, narrow) and written as the
+    * `batchId` partition of each delta table — re-accepting the same
+    * batch rewrites its own partition and nothing else, so the
+    * operation is idempotent
     * (StoreSpec), and distinct batches accumulate as distinct
     * partitions. This closes the ingest lifecycle the incremental
     * probes left open: probe (q91) → accept → later probes see the
@@ -835,8 +830,7 @@ object LlmOps {
         batchId, lineage)(sketchAcceptStore(s, d)) { case ((ash, _, _), put) =>
     import graft.storage.DurableStores
     DurableStores.requireFreshBatchIds("sketch", batchId, "doc",
-      sketchStore(s, d)._1, DurableStores.committedDelta(s, d,
-        "sketch_accept", ash), batch.select(col(idCol)))
+      sketchStore(s, d)._1, ash, batch.select(col(idCol)))
     graft.engine.CacheRegistry.withRetained {
       val sk = graft.engine.CacheRegistry.retain(Dedup.corpusSketch(
         batch.select(col(idCol), col(textCol)), idCol, textCol))
@@ -866,8 +860,7 @@ object LlmOps {
     // accepted batch must not leak into this oracle's corpus side.
     // COMMITTED batches only — a crashed partial accept is invisible
     def own(delta: DataFrame): DataFrame =
-      graft.storage.DurableStores.committedDelta(s, d, "sketch_accept", delta)
-        .filter($"batch_id" === "b1").drop("batch_id")
+      delta.filter($"batch_id" === "b1").drop("batch_id")
     Dedup.incrementalMinhashPairsFromStore(
       sh.unionByName(own(ash)),
       bands.unionByName(own(abands)),
@@ -879,7 +872,8 @@ object LlmOps {
 
   /** Mutable ACCEPT companion of [[cosineStore]]: one delta member
     * table (member schema plus `batch_id`) partitioned by batch_id,
-    * same fingerprint-coupled lifecycle as [[sketchAcceptStore]]. */
+    * same fingerprint-coupled lifecycle as [[sketchAcceptStore]];
+    * returns its committed view. */
   private[graft] def cosineAcceptStore(
       s: SparkSession, d: String): DataFrame = {
     import graft.operators.EmbeddingDedup
@@ -890,8 +884,7 @@ object LlmOps {
         cosineParams,
         DurableStores.reStampMigration(cosineParams, cosineLayoutKeys))(
       Seq(EmbeddingDedup.assignToCells(cosineStore(s, d)._1,
-        t(s, d, "embeddings").limit(0), "vec_id", "embedding")))
-    s.table(cosineAccTable(d))
+        t(s, d, "embeddings").limit(0), "vec_id", "embedding"))).head
   }
 
   private def cosineAccTable(d: String): String =
@@ -899,9 +892,9 @@ object LlmOps {
 
   /** ACCEPT an embedding batch into the cosine index's delta member
     * table: the batch is assigned to cells under the STORED centroids
-    * (one broadcast pass, batch-sized) and written into its batch_id
-    * partition with dynamic overwrite — idempotent, accumulating,
-    * corpus untouched. Probes against base ∪ delta stay exact: the
+    * (one broadcast pass, batch-sized) and written as its batch_id
+    * partition — idempotent, accumulating, corpus untouched. Probes
+    * against base ∪ delta stay exact: the
     * per-cell radii fold over the union, so the triangle-inequality
     * completeness argument covers accepted members automatically. */
   private[graft] def acceptCosineBatch(s: SparkSession, d: String,
@@ -913,8 +906,7 @@ object LlmOps {
     import graft.storage.DurableStores
     val (cents, members) = cosineStore(s, d)
     DurableStores.requireFreshBatchIds("cosine", batchId, "vid", members,
-      DurableStores.committedDelta(s, d, "cosine_accept", delta),
-      batch.select(col("vec_id")))
+      delta, batch.select(col("vec_id")))
     put(cosineAccTable(d),
       EmbeddingDedup.assignToCells(cents, batch, "vec_id", "embedding"))
   }
@@ -935,8 +927,7 @@ object LlmOps {
     // own-batch partition prune, same reasoning as q121: other
     // sessions' accepted batches must not leak into this oracle —
     // and committed batches only
-    val delta = graft.storage.DurableStores.committedDelta(s, d,
-        "cosine_accept", cosineAcceptStore(s, d))
+    val delta = cosineAcceptStore(s, d)
       .filter($"batch_id" === "b1").drop("batch_id")
     EmbeddingDedup.cosinePairsFromStore(cents,
       members.unionByName(delta),

@@ -271,7 +271,8 @@ object MergeScaleQ {
     * visibility must outlive any fold of its derived rows.
     * `merge_accept` holds the re-merged rows of the entities each
     * batch touched; it is the foldable half compact drops and
-    * recreates. Both share [[mergedBaseStore]]'s params. */
+    * recreates. Both share [[mergedBaseStore]]'s params, and both are
+    * returned as their committed views under `merge_log`'s markers. */
   private[graft] def mergeAcceptStore(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.storage.DurableStores
@@ -281,11 +282,12 @@ object MergeScaleQ {
     // guard (correctly) refuses the overlap rather than double-merge
     val params = s"cutoff=$incrementalCutoff,buckets=32,gate=mball"
     val migrate = DurableStores.reStampMigration(params, mergeLayoutKeys)
-    DurableStores.openDeltaTables(s, d, "merge_log", Seq(snapsTable(d)),
-      params, migrate)(Seq(bucketedNested(s, d)))
-    DurableStores.openDeltaTables(s, d, "merge_accept", Seq(mergedTable(d)),
-      params, migrate)(Seq(Merge.mergeSubmissions(bucketedNested(s, d))))
-    (s.table(snapsTable(d)), s.table(mergedTable(d)))
+    val Seq(snaps) = DurableStores.openDeltaTables(s, d, "merge_log",
+      Seq(snapsTable(d)), params, migrate)(Seq(bucketedNested(s, d)))
+    val Seq(merged) = DurableStores.openDeltaTables(s, d, "merge_accept",
+        Seq(mergedTable(d)), params, migrate, markers = Some("merge_log"))(
+      Seq(Merge.mergeSubmissions(bucketedNested(s, d))))
+    (snaps, merged)
   }
 
   private def snapsTable(d: String): String =
@@ -294,41 +296,16 @@ object MergeScaleQ {
   private def mergedTable(d: String): String =
     graft.storage.Storage.tableNameFor("graft_mrgacc_merged", d)
 
-  /** COMMITTED delta rows (markers live with the `merge_log` store),
-    * optionally lineage-scoped and replayed as of just before a batch
-    * id — the same scoping contract as
+  /** Committed delta rows (`committed`, a view from
+    * [[mergeAcceptStore]]), optionally lineage-scoped and replayed as
+    * of just before a batch id — the same scoping contract as
     * [[LlmOps.effectiveClusterLabels]]. */
-  private def scopedMergeDelta(s: SparkSession, d: String, table: String,
-      delta: DataFrame, before: Option[String],
+  private def scopedMergeDelta(committed: DataFrame, before: Option[String],
       lineage: Option[Set[String]]): DataFrame = {
-    val committed = committedLogDelta(s, d, table, delta)
     val scoped = lineage
       .map(ls => committed.filter(col("batch_id").isin(ls.toSeq: _*)))
       .getOrElse(committed)
     before.map(b => scoped.filter(col("batch_id") < b)).getOrElse(scoped)
-  }
-
-  /** Committed view of a delta table whose markers live in the
-    * PERMANENT `merge_log`. The accept families' committed filter
-    * ([[graft.storage.DurableStores.committedDelta]] — isin over live
-    * markers) is bounded there because compaction retires markers; the
-    * log keeps one
-    * marker per batch FOREVER, so the same include-list would grow an
-    * unbounded isin literal (plan size and driver memory scale with
-    * log lifetime, not traffic). Invert it: list the batch partitions
-    * present on disk, subtract the marked ones, and EXCLUDE the
-    * difference — the predicate is sized by crashed (uncommitted)
-    * accepts, which is ~zero. Equivalent because log partitions are
-    * permanent and a marker without a partition (a folded merged
-    * delta) contributes no rows either way. */
-  private def committedLogDelta(s: SparkSession, d: String,
-      table: String, delta: DataFrame): DataFrame = {
-    import graft.storage.DurableStores
-    val uncommitted = DurableStores.presentBatchPartitions(s, table) --
-      DurableStores.committedBatches(s, d, "merge_log")
-    if (uncommitted.isEmpty) delta
-    else delta.filter(col("batch_id").isNotNull &&
-      !col("batch_id").isin(uncommitted.toSeq: _*))
   }
 
   private val entityKeys = Seq("website_id", "site_submission_id")
@@ -346,8 +323,7 @@ object MergeScaleQ {
     import org.apache.spark.sql.expressions.Window
     val base = mergedBaseStore(s, d, incrementalCutoff)
     val (_, mergedD) = mergeAcceptStore(s, d)
-    val latest = scopedMergeDelta(s, d, mergedTable(d), mergedD,
-        before, lineage)
+    val latest = scopedMergeDelta(mergedD, before, lineage)
       .withColumn("rk", row_number().over(
         Window.partitionBy(entityKeys.map(col): _*)
           .orderBy(col("batch_id").desc)))
@@ -391,8 +367,7 @@ object MergeScaleQ {
     graft.storage.DurableStores.acceptBatch(s, d, "merge_log", batchId,
         lineage)(mergeAcceptStore(s, d)) { case ((snapsD, _), put) =>
     val hist = baseHistory(s, d)
-    val prior = scopedMergeDelta(s, d, snapsTable(d), snapsD, Some(batchId),
-        lineage)
+    val prior = scopedMergeDelta(snapsD, Some(batchId), lineage)
       .drop("batch_id")
     val cols = hist.columns.map(col).toIndexedSeq
     val batch = batchSnaps.select(cols: _*)
@@ -400,8 +375,7 @@ object MergeScaleQ {
     // every lineage except this batch's own partition (whose presence
     // just means a replay) — an id accepted by ANY batch is taken
     graft.storage.DurableStores.requireFreshBatchIds("merge", batchId,
-      "submission_snapshot_id", hist,
-      committedLogDelta(s, d, snapsTable(d), snapsD),
+      "submission_snapshot_id", hist, snapsD,
       batch.select(col("submission_snapshot_id")))
     val touched = graft.engine.CacheRegistry.retain(
       batch.select(entityKeys.head, entityKeys.tail: _*).distinct())
@@ -445,28 +419,22 @@ object MergeScaleQ {
     * plans nothing. */
   private[graft] def compactMergeStore(s: SparkSession, d: String): Boolean =
     // the snapshot compactBatches takes is every committed log batch as
-    // of NOW; retirement and partition drops cover exactly that set.
-    // The fold READS through committedLogDelta (bounded
-    // exclude-uncommitted predicate, not an isin over the whole log) —
-    // a mid-fold commit may therefore contribute rows to this fold's
-    // recompute, which is safe: merge folds recompute from the
-    // ground-truth log, so extra snapshots only move a touched entity
-    // CLOSER to the final answer, and the unretired batch still folds
-    // (idempotently) next time. Markers stay (deleteMarkers = false):
+    // of NOW; retirement and partition drops cover exactly that set,
+    // and the committed views the fold reads were opened after it.
+    // Markers stay (deleteMarkers = false):
     // the snapshot log, its commit markers, and any batch that
     // committed mid-fold are untouched — the log remains the id-guard
     // universe and the ground truth of every later fold.
     graft.storage.DurableStores.compactBatches(s, d, "merge_log",
         Seq(mergedTable(d)), "merge", deleteMarkers = false)(
         mergeAcceptStore(s, d)) { case ((snapsD, mergedD), _, tmp) =>
-    val acceptedSnaps = committedLogDelta(s, d, snapsTable(d), snapsD)
-      .drop("batch_id")
+    val acceptedSnaps = snapsD.drop("batch_id")
     val foldedNested = baseHistory(s, d).unionByName(acceptedSnaps)
     // entities carried by UNFOLDED merged deltas (folded batches'
     // partitions are dropped at fold time, so rows present = accepted
     // since the last fold): the common path re-merges ONLY these —
     // fold cost tracks new work, not total log history...
-    val unfoldedMerged = committedLogDelta(s, d, mergedTable(d), mergedD)
+    val unfoldedMerged = mergedD
     val unfoldedEnts = unfoldedMerged
       .select(entityKeys.head, entityKeys.tail: _*).distinct()
     // ...but a `StoreAdmin refresh merged_base` rebuilds the base

@@ -4,9 +4,11 @@ import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Cross-session lifecycle for the engine's write-once index stores
   * (the q83 bucketed nested store, the q91 sketch tables, the q92
@@ -28,7 +30,11 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *    layout metadata). Every later opener — same JVM or a cold one —
   *    finds the manifest, verifies the fingerprint, and RE-REGISTERS
   *    the at-rest files in its catalog via DDL without touching a
-  *    byte of data.
+  *    byte of data. Hive-partitioned tables (the accept deltas, the
+  *    cosine members) are PATH tables instead: never in the catalog,
+  *    read from their directories with the recorded schema, so what a
+  *    read sees is decided by the directories present (and, for the
+  *    deltas, the commit markers) at the moment it opens.
   *  - **overwrite-on-refresh**: a fingerprint mismatch (the source
   *    data was regenerated under the same path), a build-params
   *    mismatch (the caller's layout constants changed), or an explicit
@@ -79,9 +85,41 @@ object DurableStores {
         props: Seq[(String, String)] = Nil): TableMeta =
       TableMeta(name, "bucketed", cols, numBuckets,
         s.table(name).schema.toDDL, sortCols, props)
-    def partitioned(s: SparkSession, name: String,
-        cols: Seq[String]): TableMeta =
-      TableMeta(name, "partitioned", cols, 0, s.table(name).schema.toDDL)
+    /** A path table hive-partitioned by `cols`: the recorded schema
+      * is `schema` with the partition columns moved to the end, the
+      * order a partitioned read returns. */
+    def partitioned(name: String, cols: Seq[String],
+        schema: StructType): TableMeta =
+      TableMeta(name, "partitioned", cols, 0, StructType(
+        schema.filterNot(f => cols.contains(f.name)) ++
+          cols.map(schema(_))).toDDL)
+  }
+
+  /** Write `df` as the path table `name`, hive-partitioned by `cols`. */
+  def writePartitioned(st: Storage, name: String, df: DataFrame,
+      cols: Seq[String]): TableMeta = {
+    df.write.partitionBy(cols: _*).parquet(st.path(name))
+    TableMeta.partitioned(name, cols, df.schema)
+  }
+
+  /** A store table as a frame: a path table read whole from its
+    * directory, any other table from the catalog. */
+  def read(s: SparkSession, t: TableMeta): DataFrame =
+    if (t.layout == "partitioned")
+      readPaths(s, t, Seq(new Storage(s, root(s)).path(t.name)))
+    else s.table(t.name)
+
+  /** Path table `t` restricted to `dirs` (the table directory or some
+    * of its partition directories), read with the recorded schema —
+    * so a partition value such as `001` stays a string. No directory
+    * gives an empty relation of that schema. */
+  private def readPaths(s: SparkSession, t: TableMeta,
+      dirs: Seq[String]): DataFrame = {
+    val schema = StructType.fromDDL(t.schemaDdl)
+    if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else s.read.schema(schema)
+      .option("basePath", new Storage(s, root(s)).path(t.name))
+      .parquet(dirs: _*)
   }
 
   def root(s: SparkSession): String =
@@ -225,12 +263,12 @@ object DurableStores {
     } finally in.close()
   }
 
-  /** Re-register one at-rest table in the current catalog — pure DDL
-    * over the existing files, no data IO. Bucketed layouts restore
+  /** Re-register one at-rest catalog table — pure DDL over the
+    * existing files, no data IO. Bucketed layouts restore
     * CLUSTERED/SORTED BY (bucket ids ride in the part-file names
-    * Spark wrote, so bucketed scans work immediately); partitioned
-    * layouts re-discover their hive directories via RECOVER
-    * PARTITIONS. */
+    * Spark wrote, so bucketed scans work immediately). Path tables
+    * (layout "partitioned") are never registered: [[read]] and
+    * [[openDeltaTables]] open them from their directories. */
   private def register(s: SparkSession, st: Storage, t: TableMeta): Unit = {
     val loc = st.path(t.name)
     val clause = t.layout match {
@@ -239,8 +277,6 @@ object DurableStores {
         val sc = (if (t.sortCols.isEmpty) t.layoutCols else t.sortCols)
           .map(c => s"`$c`").mkString(", ")
         s"CLUSTERED BY ($bc) SORTED BY ($sc) INTO ${t.numBuckets} BUCKETS"
-      case "partitioned" =>
-        s"PARTITIONED BY (${t.layoutCols.map(c => s"`$c`").mkString(", ")})"
       case _ => ""
     }
     val propsClause =
@@ -252,14 +288,6 @@ object DurableStores {
       }.mkString("TBLPROPERTIES (", ", ", ") ")
     s.sql(s"CREATE TABLE `${t.name}` (${t.schemaDdl}) USING parquet " +
       s"$clause ${propsClause}LOCATION '$loc'")
-    if (t.layout == "partitioned") {
-      s.sql(s"ALTER TABLE `${t.name}` RECOVER PARTITIONS")
-      // seed the freshness signature so the very next open's
-      // conditional-RECOVER check can skip (the registration itself
-      // just recovered everything)
-      partitionSigCache((root(s), t.name)) =
-        partitionDirSignatures(s, st, t)
-    }
   }
 
   /** (root, store, dataDir) combinations already fingerprint-checked
@@ -270,78 +298,60 @@ object DurableStores {
   private val verified =
     scala.collection.mutable.Map.empty[(String, String, String), Seq[TableMeta]]
 
+  /** Per session, the registration (see [[registration]]) of each
+    * store table as that session last served it. A session caches a
+    * table's relation, file listing included, on its first read; when
+    * another session has since re-registered the name (another root,
+    * or a rebuild), this session must refresh it before serving it or
+    * it reads files that may be gone. Keyed by session (one relation
+    * cache each) and weakly, so a session that is no longer referenced
+    * takes its entries with it. */
+  private val servedBySession =
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.mutable.Map[String, (Path, Long)]]()
+
   /** For specs simulating a cold JVM: forget fingerprint checks and
-    * partition freshness signatures. */
+    * what each session has served. */
   private[graft] def resetVerifiedForTest(): Unit =
-    synchronized { verified.clear(); partitionSigCache.clear() }
+    synchronized { verified.clear(); servedBySession.clear() }
 
-  /** How many opens actually ran RECOVER PARTITIONS (not skipped by
-    * the partition-set comparison) — observability for the spec. */
-  private[graft] val recoverCount =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  /** The catalog's registration of `name` — its qualified location and
+    * creation time, which a drop and re-register always changes — or
+    * None. A same-name TEMP VIEW passes tableExists but has no table
+    * metadata (getTableMetadata throws), so it counts as no
+    * registration: the caller drops the view and registers. */
+  private def registration(s: SparkSession, name: String): Option[(Path, Long)] =
+    if (!s.catalog.tableExists(name)) None
+    else try {
+      val m = s.sessionState.catalog.getTableMetadata(TableIdentifier(name))
+      val loc = new Path(m.location)
+      Some((fs(s, loc.toString).makeQualified(loc), m.createTime))
+    } catch {
+      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
+        None
+    }
 
-  /** The partition directories present on disk for a partitioned
-    * table (name, e.g. "batch_id=b1" → a freshness signature) — one FS
-    * listing of the table root plus one per partition dir, compared
-    * against the catalog (names) and the JVM's last-seen signature to
-    * decide whether RECOVER / refresh is needed. Store partition
-    * values are slug-like batch ids ([[acceptBatch]] and
-    * [[dropBatchPartitions]] enforce it), so the dir-name comparison
-    * is exact; any mismatch — including an escaping difference — errs
-    * toward running RECOVER. The signature is
-    * "mtime|fileCount|totalLen" (ADVICE r17): a dir mtime alone misses
-    * in-place rewrites landing within the filesystem's mtime
-    * granularity, and dir mtimes are meaningless on some object stores
-    * — folding in the direct children's count and total byte length
-    * catches a same-second rewrite too. Residual (acknowledged): a
-    * rewrite swapping files of identical count AND total length inside
-    * the granularity window still slips past — the PRIMARY invariant
-    * (no verb rewrites files under an existing partition; every
-    * mutation adds or removes whole partition dirs) remains the real
-    * guarantee, this signature is defense in depth. The per-dir
-    * listings are bounded by unfolded accept traffic (delta-table
-    * partition counts), one RPC each. */
-  private def partitionDirSignatures(s: SparkSession, st: Storage,
-      t: TableMeta): Map[String, String] = {
-    val p = new Path(st.path(t.name))
-    val f = fs(s, st.path(t.name))
-    if (!f.exists(p)) Map.empty
-    else f.listStatus(p).toSeq
-      .filter(x => x.isDirectory && x.getPath.getName.contains("="))
-      .map { x =>
-        val kids = f.listStatus(x.getPath).toSeq.filter(_.isFile)
-        x.getPath.getName ->
-          s"${x.getModificationTime}|${kids.size}|${kids.map(_.getLen).sum}"
-      }.toMap
-  }
-
-  /** Last-seen (name → dir signature) per registered partitioned
-    * table — the cheap freshness check backing the conditional-RECOVER
-    * skip (see the open loop in [[openOrBuild]]). Bounded by the
-    * partitioned tables a JVM touches. */
-  private val partitionSigCache =
-    scala.collection.mutable.Map.empty[(String, String), Map[String, String]]
-
-  /** True when `name` is registered in the catalog AND its location is
-    * the current root's path for it. A same-name table pointing
-    * elsewhere is a relic of a different store root earlier in this
-    * JVM — serving it would silently answer from the wrong root's
-    * files, so the caller must drop and re-register. A same-name TEMP
-    * VIEW passes tableExists but has no table metadata
-    * (getTableMetadata throws) — treated as not-registered-here, so
-    * the caller drops the view and re-registers instead of crashing. */
-  private def registeredHere(s: SparkSession, st: Storage,
-      name: String): Boolean =
-    s.catalog.tableExists(name) && {
-      try {
-        val want = new Path(st.path(name))
-        val loc = new Path(s.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(name)).location)
-        fs(s, want.toString).makeQualified(want) ==
-          fs(s, loc.toString).makeQualified(loc)
-      } catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
-          false
+  /** Make catalog table `t` servable in this session from the current
+    * root: register it unless the catalog already has it at this
+    * root's path (a same-name table pointing elsewhere is a relic of a
+    * different root earlier in this JVM — serving it would answer from
+    * the wrong root's files), then refresh this session's cached
+    * relation if the registration is not the one it last served. Path
+    * tables need neither. */
+  private def serveHere(s: SparkSession, st: Storage, t: TableMeta): Unit =
+    if (t.layout != "partitioned") {
+      val want = new Path(st.path(t.name))
+      val here = fs(s, want.toString).makeQualified(want)
+      val reg = registration(s, t.name).filter(_._1 == here).orElse {
+        dropRelation(s, t.name)
+        register(s, st, t)
+        registration(s, t.name)
+      }
+      val served = servedBySession.computeIfAbsent(s,
+        _ => scala.collection.mutable.Map.empty)
+      if (served.get(t.name) != reg) {
+        s.sessionState.catalog.refreshTable(TableIdentifier(t.name))
+        reg.foreach(served(t.name) = _)
       }
     }
 
@@ -357,28 +367,6 @@ object DurableStores {
       else s.sql(s"DROP TABLE `$name`")
     }
 
-  /** Ensure `store`'s tables (the declared `tableNames`) exist in this
-    * session's catalog, backed by at-rest files under [[root]]:
-    * register them if the files and a current manifest exist,
-    * otherwise run `build` (which must create/populate every declared
-    * table through the given [[Storage]] — e.g.
-    * appendBucketed/appendTable — and return the metadata needed to
-    * re-register each one later). "Current" means the source-data
-    * fingerprint AND the caller's `params` string (the build constants
-    * baked into the at-rest layout: sketch k/bands/chunks, index cell
-    * counts, merge cutoffs, bucket counts) both match — a code change
-    * to any build parameter invalidates the store exactly like
-    * regenerated source data does, UNLESS the caller supplies a
-    * `migrate` hook that upgrades the old layout in place (round 17;
-    * see [[Migration]]). When no migration applies and the mismatch is
-    * params-only, the rebuild is VETOED while any `foldGuards` store
-    * (or this store itself) has a non-empty folded ledger: compacted
-    * accept batches live ONLY in this base, and a silent rebuild from
-    * source would discard them unrecoverably. Before a build, stale same-name
-    * catalog entries (a store built under a different root earlier in
-    * this JVM) and leftover location files from a crashed build are
-    * dropped, so the build always starts clean and append-mode writes
-    * can never double rows. */
   /** Params-only upgrade hook for [[openOrBuild]]: invoked when the
     * manifest's source fingerprint still matches but its build-params
     * string differs — a CODE upgrade over unchanged data. Receives
@@ -465,11 +453,39 @@ object DurableStores {
     readManifest(s, manifestPath(s, store, dataDir))
       .map { case (_, p, tables) => (p, tables.map(_.name)) }
 
+  /** Ensure `store`'s tables (the declared `tableNames`) are servable
+    * in this session from at-rest files under [[root]], and return
+    * their metadata: open them if the files and a current manifest
+    * exist, otherwise run `build` (which must create/populate every
+    * declared table through the given [[Storage]] — e.g.
+    * appendBucketed/appendTable/[[writePartitioned]] — and return the
+    * metadata needed to open each one later). Opening registers a
+    * catalog table that is missing or registered at another root, and
+    * refreshes one whose registration changed since this session last
+    * served it ([[serveHere]]); a path table has no catalog entry, and
+    * what it holds is whatever its directories hold when a read opens
+    * it — which is also how partitions another process added become
+    * visible, with no catalog step. "Current" means the source-data
+    * fingerprint AND the caller's `params` string (the build constants
+    * baked into the at-rest layout: sketch k/bands/chunks, index cell
+    * counts, merge cutoffs, bucket counts) both match — a code change
+    * to any build parameter invalidates the store exactly like
+    * regenerated source data does, UNLESS the caller supplies a
+    * `migrate` hook that upgrades the old layout in place (round 17;
+    * see [[Migration]]). When no migration applies and the mismatch is
+    * params-only, the rebuild is VETOED while any `foldGuards` store
+    * (or this store itself) has a non-empty folded ledger: compacted
+    * accept batches live ONLY in this base, and a silent rebuild from
+    * source would discard them unrecoverably. Before a build, stale
+    * same-name catalog entries (a store built under a different root
+    * earlier in this JVM) and leftover location files from a crashed
+    * build are dropped, so the build always starts clean and
+    * append-mode writes can never double rows. */
   def openOrBuild(s: SparkSession, dataDir: String, store: String,
       tableNames: Seq[String], params: String = "",
       migrate: Migration = noMigration,
       foldGuards: Seq[String] = Nil)(
-      build: Storage => Seq[TableMeta]): Unit =
+      build: Storage => Seq[TableMeta]): Seq[TableMeta] =
     synchronized {
       val r = root(s)
       val st = new Storage(s, r)
@@ -496,12 +512,7 @@ object DurableStores {
             // registration happens here, not earlier, so a
             // plain-rebuild path never pays catalog churn for tables
             // about to be dropped
-            tables.foreach { t =>
-              if (!registeredHere(s, st, t.name)) {
-                dropRelation(s, t.name)
-                register(s, st, t)
-              }
-            }
+            tables.foreach(serveHere(s, st, _))
             migrate(oldP, st, tables).map { newTables =>
               writeManifest(s, mp, fp, params, newTables)
               migrationLog += ((store, oldP, params))
@@ -543,73 +554,18 @@ object DurableStores {
         use.foreach(tables => verified(key) = tables)
         use
       }
-      cached match {
-        case Some(tables) =>
-          tables.foreach { t =>
-            if (!registeredHere(s, st, t.name)) {
-              dropRelation(s, t.name)
-              register(s, st, t)
-            } else if (t.layout == "partitioned") {
-              // partitions added by ANOTHER process since this JVM
-              // registered the table (cross-process accepts) are
-              // invisible until re-discovered — one partition-dir FS
-              // listing per open (delta-table-sized) detects them.
-              // RECOVER runs ONLY when the on-disk set differs from
-              // the catalog's: unconditional recovery (round 15)
-              // charged every store probe a catalog rewrite AND
-              // invalidated the table's cached file index, forcing
-              // the next scan to re-list every file — a fixed tax on
-              // every open of every partitioned store in a sweep.
-              // INVARIANT the skip leans on (ADVICE r16): committed
-              // partitions are immutable at the file level — every
-              // mutating verb ADDS or REMOVES a partition dir
-              // (accepts write new batch dirs, replays no-op, folds
-              // delete dirs), never rewrites files under an existing
-              // one. As hardening against a future verb breaking it,
-              // the comparison also includes each partition dir's
-              // mtime|fileCount|totalLen signature against the JVM's
-              // last-seen one (see partitionDirSignatures for the
-              // granularity rationale and the acknowledged residual),
-              // so an in-place rewrite triggers a cache refresh here
-              // instead of serving stale file listings.
-              // the cheap dir-name comparison covers the single-column
-              // layouts every current store uses; a (future) nested
-              // layout falls back to unconditional recovery
-              val sigKey = (r, t.name)
-              val onDisk = partitionDirSignatures(s, st, t)
-              // no cached signature yet (first open after an in-JVM
-              // build): names matching the catalog is the r16 check —
-              // skip and ADOPT the current mtimes as the baseline;
-              // later opens then notice in-place rewrites against it
-              val skip = t.layoutCols.size == 1 && {
-                val inCatalog = s.sessionState.catalog
-                  .listPartitionNames(
-                    org.apache.spark.sql.catalyst.TableIdentifier(t.name))
-                  .toSet
-                onDisk.keySet == inCatalog &&
-                  partitionSigCache.get(sigKey).forall(_ == onDisk)
-              }
-              if (skip) partitionSigCache(sigKey) = onDisk
-              else {
-                recoverCount.incrementAndGet()
-                s.sql(s"ALTER TABLE `${t.name}` RECOVER PARTITIONS")
-                // refresh the cached file index too: RECOVER fixes
-                // partition NAMES; an mtime-only difference means
-                // files changed under known partitions
-                s.catalog.refreshTable(t.name)
-                partitionSigCache(sigKey) = onDisk
-              }
-            }
-          }
-        case None =>
-          tableNames.foreach { n =>
-            dropRelation(s, n)
-            fs(s, st.path(n)).delete(new Path(st.path(n)), true)
-          }
-          val tables = build(st)
-          writeManifest(s, mp, fingerprint(s, dataDir), params, tables)
-          verified(key) = tables
+      val tables = cached.getOrElse {
+        tableNames.foreach { n =>
+          dropRelation(s, n)
+          fs(s, st.path(n)).delete(new Path(st.path(n)), true)
+        }
+        val built = build(st)
+        writeManifest(s, mp, fingerprint(s, dataDir), params, built)
+        verified(key) = built
+        built
       }
+      tables.foreach(serveHere(s, st, _))
+      tables
     }
 
   /** Remove a store's catalog entries, at-rest files, and manifest. */
@@ -715,10 +671,10 @@ object DurableStores {
   // ---- cross-process writer lease ------------------------------------
 
   /** In-JVM lease state per lease file: nested or concurrent writers
-    * in the SAME process share the process's lease (the in-JVM locks —
-    * [[withDynamicPartitionOverwrite]], the openOrBuild monitor —
-    * already serialize their writes); the file only guards OTHER
-    * processes. Acquisition is atomic with registration: the per-key
+    * in the SAME process share the process's lease (each accept writes
+    * only its own batch's partition, and the openOrBuild monitor
+    * serializes builds); the file only guards OTHER processes.
+    * Acquisition is atomic with registration: the per-key
     * monitor is held ACROSS the file acquisition, so a second in-JVM
     * thread blocks until the lease file actually exists (or the
     * acquisition failed) instead of running its verb in the window
@@ -1168,28 +1124,7 @@ object DurableStores {
     token
   }
 
-  // ---- accept-write serialization + per-batch commit markers --------
-
-  private val dpoLock = new Object
-
-  /** Run `body` with DYNAMIC partition-overwrite semantics (an
-    * overwrite-mode insertInto then rewrites only the partitions
-    * present in the written data; the DataFrameWriter-level option of
-    * the same name is NOT honored by insertInto — only the session
-    * conf is). The conf flip is session-GLOBAL, so all such writes in
-    * the JVM serialize on one lock: two concurrent accepts could
-    * otherwise race the restore, flipping a still-running overwrite
-    * back to static mode — a full-table overwrite that silently
-    * deletes every other accepted batch partition. Cross-PROCESS
-    * writers are excluded by the store's writer lease
-    * ([[withWriterLease]] — every mutating verb holds it). */
-  def withDynamicPartitionOverwrite[A](s: SparkSession)(body: => A): A =
-    dpoLock.synchronized {
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(key)
-      s.conf.set(key, "dynamic")
-      try body finally s.conf.set(key, prev)
-    }
+  // ---- per-batch commit markers ------------------------------------
 
   private def markerDir(mp: Path): Path =
     new Path(mp.getParent, mp.getName.stripSuffix(".meta") + ".accepted")
@@ -1201,7 +1136,7 @@ object DurableStores {
     * silently drop candidates at the verification join. Probes
     * therefore read only batches listed by [[committedBatches]]; a
     * crashed accept is invisible until re-accepted (idempotent — the
-    * partition rewrite heals it, then the marker commits it). The
+    * partition swap heals it, then the marker commits it). The
     * marker doubles as the replay short-circuit: once it exists the
     * accept verbs treat the batch's replay as a NO-OP (batch ids
     * identify immutable content under the id guards), so only a
@@ -1215,12 +1150,14 @@ object DurableStores {
     f.create(new Path(dir, batchId + ".ok"), true).close()
   }
 
-  /** Batch ids whose accept fully committed AND whose rows still live
-    * in delta partitions — one marker-dir listing. Batches a compact
-    * has folded into the base are NOT listed (their markers retire
-    * into the folded ledger), so the isin predicates probes and
-    * guards build from this set stay bounded by the accept traffic
-    * since the last fold, not by the store's lifetime. */
+  /** Batch ids whose accept fully committed — one marker-dir listing.
+    * The partition directories a delta read opens are the ones present
+    * on disk AND listed here ([[openDeltaTables]]), so a marker alone
+    * decides whether probes see a batch. Batches a compact has folded
+    * into the base are NOT listed (their markers retire into the
+    * folded ledger, except the merge log's permanent ones), so the
+    * set stays bounded by the accept traffic since the last fold, not
+    * by the store's lifetime. */
   def committedBatches(s: SparkSession, dataDir: String,
       store: String): Set[String] = {
     val dir = markerDir(manifestPath(s, store, dataDir))
@@ -1305,37 +1242,20 @@ object DurableStores {
       .map(_.stripPrefix("batch_id=")).toSet
   }
 
-  /** Drop specific `batch_id` partitions of a delta table — catalog
-    * entry AND files (the tables are external, so ALTER TABLE alone
-    * keeps the data). This is compaction's truncate: only the batches
-    * the fold actually covered are removed; a batch whose accept
-    * committed while the fold ran keeps its partition and marker and
-    * folds next time. */
-  def dropBatchPartitions(s: SparkSession, table: String,
-      ids: Set[String]): Unit = {
-    if (ids.isEmpty) return
-    val st = new Storage(s, root(s))
-    ids.foreach { id =>
-      require(!id.contains("'") && !id.contains("/"),
-        s"unsafe batch id for partition drop: $id")
-      s.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (batch_id='$id')")
-      fs(s, st.path(table))
-        .delete(new Path(st.path(table), s"batch_id=$id"), true)
-    }
-    s.catalog.refreshTable(table)
-  }
-
-  /** Remove every on-disk delta partition the ledger says is folded —
-    * compaction's truncate plus garbage collection of partitions
-    * orphaned by a crash between marker retirement and partition
-    * drop (such partitions are invisible to probes — no live marker —
-    * but hold dead bytes). */
+  /** Delete every on-disk delta partition directory the ledger says is
+    * folded — compaction's truncate (only the batches the fold covered:
+    * a batch whose accept committed while the fold ran keeps its
+    * partition and marker and folds next time) plus garbage collection
+    * of partitions orphaned by a crash between marker retirement and
+    * partition drop (invisible to probes — no live marker — but dead
+    * bytes). */
   def dropFoldedPartitions(s: SparkSession, dataDir: String, store: String,
       tables: Seq[String]): Unit = {
     val folded = foldedBatches(s, dataDir, store)
-    if (folded.isEmpty) return
-    tables.foreach { t =>
-      dropBatchPartitions(s, t, presentBatchPartitions(s, t).intersect(folded))
+    if (folded.nonEmpty) tables.foreach { t =>
+      val dir = new Storage(s, root(s)).path(t)
+      (presentBatchPartitions(s, t) intersect folded).foreach(id =>
+        fs(s, dir).delete(new Path(dir, s"batch_id=$id"), true))
     }
   }
 
@@ -1345,29 +1265,18 @@ object DurableStores {
   // sketch_accept, cosine_accept, cluster_accept, asof_accept and
   // merge_log (whose markers also govern merge_accept). Each delta
   // table is partitioned by `batch_id`, one partition per accepted
-  // batch; probes read base ∪ the COMMITTED deltas. [[acceptBatch]]
-  // and [[compactBatches]] are the only code that runs the protocol;
-  // a family supplies its open, its id guard and writes, and its fold.
-
-  /** `delta` restricted to batches whose accept fully COMMITTED (all
-    * delta tables written, then the marker — [[markBatchCommitted]]):
-    * a crashed multi-table accept leaves its partitions mutually
-    * inconsistent, and probing them would silently drop candidates at
-    * the verification join. The committed-id set is one marker-dir
-    * listing, batch-count-sized, applied as an isin partition filter
-    * (pruned scan). */
-  def committedDelta(s: SparkSession, d: String, store: String,
-      delta: DataFrame): DataFrame =
-    delta.filter(col("batch_id").isin(committedBatches(s, d, store).toSeq: _*))
+  // batch; probes read base ∪ the COMMITTED deltas, which
+  // [[openDeltaTables]] opens by path. [[acceptBatch]] and
+  // [[compactBatches]] are the only code that runs the protocol; a
+  // family supplies its open, its id guard and writes, and its fold.
 
   /** A batch id names its partition directory (`batch_id=<id>`) and its
-    * marker file (`<id>.ok`), and compaction drops its partition through
-    * a quoted SQL literal. So it must be non-empty and come through
-    * Hive's partition-path escaping unchanged — which also excludes `/`
-    * (the marker would land in a subdirectory [[committedBatches]]
-    * never lists, so the batch could never commit) and `'` (the batch
-    * commits, but its compact fails after the ledger is written, and
-    * so does every later compact of the family). */
+    * marker file (`<id>.ok`), and a delta read takes it back from the
+    * directory name through Hive's partition-path unescaping. So it
+    * must be non-empty and come through Hive's partition-path escaping
+    * unchanged — which also excludes `/` (the marker would land in a
+    * subdirectory [[committedBatches]] never lists, so the batch could
+    * never commit). */
   private def requireSafeBatchId(store: String, batchId: String): Unit =
     require(batchId.nonEmpty &&
       ExternalCatalogUtils.escapePathName(batchId) == batchId,
@@ -1445,21 +1354,68 @@ object DurableStores {
         "rebuild the store (StoreAdmin refresh) instead")
   }
 
-  /** Open (build-if-absent) a family's delta tables: each one EMPTY with
-    * the schema of its `rows` plus a `batch_id` string, partitioned by
-    * batch_id, under the same fingerprint as the family's base — so
-    * regenerated source data drops base AND deltas together. `rows` is
-    * evaluated only when the tables are built. */
+  /** Open (build-if-absent) a family's delta tables and return their
+    * COMMITTED views. Each table is a path table hive-partitioned by
+    * `batch_id`, whose recorded schema is its `rows`' schema plus a
+    * `batch_id` string, built empty under the same fingerprint as the
+    * family's base — so regenerated source data drops base AND deltas
+    * together. `rows` is evaluated only when the tables are built. The
+    * view reads the partition directories present on disk whose batch
+    * has a commit marker in `markers`' store (the merge family's
+    * tables both follow `merge_log`), listed when the view is opened;
+    * with none, it is an empty relation of the recorded schema. A
+    * crashed multi-table accept leaves its partitions mutually
+    * inconsistent, and probing them would silently drop candidates at
+    * the verification join, so they stay out until the marker lands. */
   def openDeltaTables(s: SparkSession, d: String, store: String,
-      tables: Seq[String], params: String, migrate: Migration)(
-      rows: => Seq[DataFrame]): Unit =
-    openOrBuild(s, d, store, tables, params, migrate) { st =>
+      tables: Seq[String], params: String, migrate: Migration,
+      markers: Option[String] = None)(
+      rows: => Seq[DataFrame]): Seq[DataFrame] = {
+    val metas = openOrBuild(s, d, store, tables, params, migrate) { st =>
       tables.zip(rows).map { case (t, df) =>
-        st.appendPartitioned(t, df.limit(0).withColumn("batch_id", lit("")),
-          Seq("batch_id"))
-        TableMeta.partitioned(s, t, Seq("batch_id"))
+        fs(s, st.path(t)).mkdirs(new Path(st.path(t)))
+        TableMeta.partitioned(t, Seq("batch_id"),
+          df.schema.add("batch_id", StringType))
       }
     }
+    val committed = committedBatches(s, d, markers.getOrElse(store))
+    val st = new Storage(s, root(s))
+    tables.map { t =>
+      readPaths(s, metas.find(_.name == t).get,
+        (presentBatchPartitions(s, t) intersect committed).toSeq.sorted
+          .map(id => s"${st.path(t)}/batch_id=$id"))
+    }
+  }
+
+  /** Write `rows` as `table`'s `batch_id=<batchId>` partition, the
+    * writer behind [[acceptBatch]]'s `put`: the rows, cast by name to
+    * the table's recorded schema (so a union that widened a timestamp
+    * column is stored as the type the table declares), land in a
+    * private staging dir under the store root, then replace the
+    * partition directory with one delete and one rename. No marker is
+    * written — until one is, the partition is invisible, which also
+    * covers a crash between the delete and the rename. The table must
+    * have been opened ([[openDeltaTables]]) under the current root. */
+  private[graft] def writeBatchPartition(s: SparkSession, table: String,
+      batchId: String, rows: DataFrame): Unit = {
+    val r = root(s)
+    val meta = synchronized {
+      verified.iterator.collect { case ((`r`, _, _), ts) => ts }.flatten
+        .find(_.name == table)
+    }.getOrElse(sys.error(s"delta table $table is not open under $r"))
+    val cols = StructType.fromDDL(meta.schemaDdl).filter(_.name != "batch_id")
+      .map(f => col(f.name).cast(f.dataType))
+    val staging = new Path(s"$r/_staging/${table}_${java.util.UUID.randomUUID}")
+    val dst = new Path(new Storage(s, r).path(table), s"batch_id=$batchId")
+    val f = fs(s, staging.toString)
+    try {
+      rows.select(cols: _*).write.parquet(staging.toString)
+      f.delete(dst, true)
+      f.mkdirs(dst.getParent)
+      if (!f.rename(staging, dst))
+        throw new java.io.IOException(s"could not move $staging to $dst")
+    } finally f.delete(staging, true)
+  }
 
   /** ACCEPT one batch into `store`'s delta tables. The protocol, in
     * order:
@@ -1471,11 +1427,10 @@ object DurableStores {
     *  - require a lexicographically monotone new id within `lineage`;
     *  - run the family's `body`: its id guard
     *    ([[requireFreshBatchIds]]) and its writes, each through
-    *    `put(table, rows)`, which adds the `batch_id` column and
-    *    overwrites only this batch's partition
-    *    ([[withDynamicPartitionOverwrite]]) — re-accepting rewrites its
-    *    own partition and nothing else, and distinct batches accumulate
-    *    as distinct partitions;
+    *    `put(table, rows)`, which replaces this batch's partition
+    *    directory and nothing else ([[writeBatchPartition]]) —
+    *    re-accepting rewrites its own partition, and distinct batches
+    *    accumulate as distinct partitions;
     *  - write the commit marker LAST: the batch becomes visible to
     *    probes only once every delta table holds it, and a crash
     *    before that leaves it invisible until a re-accept heals it. */
@@ -1487,10 +1442,8 @@ object DurableStores {
       val opened = open
       if (!alreadyAccepted(s, d, store, batchId)) {
         requireMonotoneBatchId(s, d, store, batchId, lineage)
-        body(opened, (table, rows) => withDynamicPartitionOverwrite(s) {
-          rows.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").insertInto(table)
-        })
+        body(opened, (table, rows) =>
+          writeBatchPartition(s, table, batchId, rows))
         markBatchCommitted(s, d, store, batchId)
       }
     }
@@ -1527,9 +1480,12 @@ object DurableStores {
     * forever and probes read base ∪ N deltas; after a fold they read
     * one base again, with identical answers (StoreSpec). The protocol,
     * in order:
-    *  - take the writer lease and `open` the family's tables;
-    *  - snapshot the committed batch ids, once, up front — a batch
-    *    whose accept commits while the fold runs is outside the
+    *  - take the writer lease;
+    *  - snapshot the committed batch ids, once, up front, and only
+    *    then `open` the family's tables, so the committed views the
+    *    fold reads hold every snapshot id (an id whose marker the open
+    *    removed — a rebuild removes them all — leaves the snapshot); a
+    *    batch whose accept commits while the fold runs is outside the
     *    snapshot, keeps its partition and marker, and folds next time,
     *    so a live ingest stream and an admin compact can overlap;
     *  - if nothing is committed (or `fold` reports nothing to fold),
@@ -1554,15 +1510,16 @@ object DurableStores {
     * folded batch (a streaming checkpoint replay racing an admin
     * compact) with a no-op; a NEW id re-presenting folded row ids is
     * still refused by the id guards. Retiring markers keeps
-    * [[committedBatches]] — and every isin predicate built from it —
-    * bounded by the traffic since the last fold. */
+    * [[committedBatches]] bounded by the traffic since the last
+    * fold. */
   def compactBatches[A](s: SparkSession, d: String, store: String,
       deltaTables: Seq[String], scratch: String,
       deleteMarkers: Boolean = true)(open: => A)(
       fold: (A, Set[String], String) => Boolean): Boolean =
     withWriterLease(s, d, store) {
+      val before = committedBatches(s, d, store)
       val opened = open
-      val ids = committedBatches(s, d, store)
+      val ids = committedBatches(s, d, store) intersect before
       val tmp = compactTmp(s, scratch)
       val folded = ids.nonEmpty && fold(opened, ids, tmp)
       if (folded) retireFoldedBatches(s, d, store, ids, deleteMarkers)

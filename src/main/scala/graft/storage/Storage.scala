@@ -193,20 +193,6 @@ class Storage(spark: SparkSession, root: String) {
     * lives there; a bare parquet read would lose it). */
   def readBucketed(table: String): DataFrame = spark.table(table)
 
-  /** Catalog-registered append, hive-partitioned by `partitionCols`
-    * — the at-rest layout for probe-style reads (e.g. the cosine
-    * index member table partitioned by cell): a reader filtering on
-    * the partition column touches only the matching directories
-    * (static or dynamic partition pruning). */
-  def appendPartitioned(table: String, df: DataFrame,
-      partitionCols: Seq[String]): Unit = {
-    df.write.mode(SaveMode.Append)
-      .format("parquet")
-      .option("path", path(table))
-      .partitionBy(partitionCols: _*)
-      .saveAsTable(table)
-  }
-
   /** Catalog-registered plain append (small unpartitioned tables that
     * travel with a partitioned/bucketed store, e.g. centroids). */
   def appendTable(table: String, df: DataFrame): Unit =

@@ -66,8 +66,10 @@ class DurableStoreSpec extends AnyFunSuite {
     out.toMap
   }
 
+  /** Drop `tables` from the catalog (path tables have no entry to
+    * drop) and forget the in-JVM fingerprint checks. */
   private def coldCatalog(tables: String*): Unit = {
-    tables.foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     DurableStores.resetVerifiedForTest()
   }
 
@@ -143,58 +145,44 @@ class DurableStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("partitioned store opens RECOVER only when the disk differs from the catalog") {
-    // round 16 (headline-tail trim): unconditional RECOVER PARTITIONS
-    // on every open charged each store probe a catalog rewrite and
-    // invalidated the cached file index; the open now compares the
-    // on-disk partition dirs against the catalog (one FS listing) and
-    // recovers only on a difference — cross-process visibility intact.
+  test("a batch dir landed on disk is served once marked, re-listed after a rewrite") {
+    // delta tables are path tables: each open lists the partition
+    // directories on disk and keeps those with a commit marker, so a
+    // partition another process lands needs no catalog step to become
+    // visible — and its marker alone decides when it does
     withScratch(Seq("asof_accept")) { (root, data) =>
       val s = spark
       import s.implicits._
-      graft.queries.EventsMerge.asofAcceptStore(s, data) // build
+      def open(): org.apache.spark.sql.DataFrame =
+        graft.queries.EventsMerge.asofAcceptStore(s, data)
+      def events(delta: org.apache.spark.sql.DataFrame): Set[Long] =
+        delta.filter($"batch_id" === "007").select("event_id")
+          .collect().map(_.getLong(0)).toSet
+      open() // build
       val tbl = Storage.tableNameFor("graft_asofacc", data)
-      val before = DurableStores.recoverCount.get()
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      assert(DurableStores.recoverCount.get() === before,
-        "a no-change open must skip RECOVER")
-      // a FOREIGN process lands a partition on disk behind this
-      // catalog's back (no in-JVM insertInto, no catalog update)
-      val st = new Storage(s, root)
-      Seq((990000001L, 990000002L, 3L, 4.0))
-        .toDF("user_id", "event_id", "ts", "value")
-        .write.mode("overwrite").parquet(st.path(tbl) + "/batch_id=zz9")
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      assert(DurableStores.recoverCount.get() === before + 1,
-        "a new on-disk partition must trigger RECOVER")
-      assert(s.table(tbl).filter($"batch_id" === "zz9").count() === 1L,
-        "the foreign partition must be visible after the open")
-      // and the next open is quiet again
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      assert(DurableStores.recoverCount.get() === before + 1)
-      // ADVICE r16: a cross-process IN-PLACE rewrite under an EXISTING
-      // partition dir (names unchanged — the catalog comparison alone
-      // would skip) bumps the dir's mtime; the signature check must
-      // refresh instead of serving the stale cached file listing
-      s.table(tbl).filter($"batch_id" === "zz9").count() // warm the index
-      Thread.sleep(1100) // local-FS dir mtimes are second-granular
-      Seq((990000001L, 990000003L, 5L, 6.0))
-        .toDF("user_id", "event_id", "ts", "value")
-        .write.mode("overwrite").parquet(st.path(tbl) + "/batch_id=zz9")
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      assert(DurableStores.recoverCount.get() === before + 2,
-        "an in-place partition rewrite must trigger a refresh")
-      assert(s.table(tbl).filter($"batch_id" === "zz9")
-        .select("event_id").collect().map(_.getLong(0)).toSet
-        === Set(990000003L),
-        "the rewritten partition's files must be re-listed")
-      graft.queries.EventsMerge.asofAcceptStore(s, data)
-      assert(DurableStores.recoverCount.get() === before + 2)
+      // a FOREIGN process lands a partition on disk, no marker yet
+      def land(eventId: Long): Unit =
+        Seq((990000001L, eventId, 3L, 4.0))
+          .toDF("user_id", "event_id", "ts", "value")
+          .write.mode("overwrite")
+          .parquet(new Storage(s, root).path(tbl) + "/batch_id=007")
+      land(990000002L)
+      assert(DurableStores.presentBatchPartitions(s, tbl) === Set("007"))
+      assert(events(open()).isEmpty, "an unmarked partition must stay invisible")
+      DurableStores.markBatchCommitted(s, data, "asof_accept", "007")
+      val marked = open()
+      assert(events(marked) === Set(990000002L),
+        "a marked partition must be visible at the next open")
+      assert(marked.select("batch_id").distinct().as[String].collect().toSeq
+        === Seq("007"), "the batch id must read back as the string it names")
+      // an in-place rewrite of the same partition dir
+      land(990000003L)
+      assert(events(open()) === Set(990000003L),
+        "the rewritten partition's files must be re-listed at the next open")
     }
   }
 
-  test("partitioned cosine store: partitions are recovered in the new catalog and still prune") {
+  test("cosine store: a cold open answers the same and cells still prune") {
     withScratch(Seq("cosine_index")) { (root, data) =>
       val s = spark
       val centT = Storage.tableNameFor("graft_cosidx_cents", data)
@@ -211,18 +199,18 @@ class DurableStoreSpec extends AnyFunSuite {
       graft.engine.CacheRegistry.releaseAll()
       assert(second === first)
       assert(storeMtimes(root) === builtAt, "re-open rebuilt the cosine index")
-      // pruning still works through the re-registered table
+      // the member path table still prunes by cell
       val (_, members) = graft.queries.LlmOps.cosineStore(s, data)
       val oneCell = members.select("cell").limit(1).collect()(0).get(0)
       val pruned = members.filter(col("cell") === lit(oneCell))
       pruned.collect()
       val prunedPlan = PlanShape.render(pruned)
       assert(prunedPlan.contains("PartitionFilters") && prunedPlan.contains("cell"),
-        s"cell filter no longer a partition filter after re-registration:\n$prunedPlan")
+        s"cell filter no longer a partition filter after a cold open:\n$prunedPlan")
     }
   }
 
-  test("accept deltas survive a cold catalog: partitions recovered, probe finds accepted docs") {
+  test("accept deltas survive a cold open: the probe finds accepted docs") {
     withScratch(Seq("sketch", "sketch_accept")) { (root, data) =>
       val s = spark
       import s.implicits._
@@ -241,7 +229,7 @@ class DurableStoreSpec extends AnyFunSuite {
         Storage.tableNameFor("graft_sketchacc_chunks", data))
       val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, data)
       val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, data)
-      // RECOVER PARTITIONS found the accepted batch in the new catalog
+      // the cold open lists the committed batch from disk
       assert(ash.count() === 1)
       val pairs = graft.operators.Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(ash.drop("batch_id")),
@@ -702,6 +690,61 @@ class DurableStoreSpec extends AnyFunSuite {
       s.conf.unset("spark.graft.store.root")
       DurableStores.resetVerifiedForTest()
       Seq(rootA, rootB, data).foreach { d =>
+        scala.util.Using.resource(Files.walk(Paths.get(d))) {
+          _.sorted(Comparator.reverseOrder[Path]())
+            .forEach(p => Files.deleteIfExists(p))
+        }
+      }
+    }
+  }
+
+  test("a session re-serves store tables another session re-registered") {
+    // sessions share the catalog but each caches the relations it has
+    // read, file listings included: after another session re-registers
+    // a store's tables at a new root and the old root is deleted, the
+    // first session must serve the new registration, not its cache
+    val s = spark
+    val first = s.newSession()
+    val data = Files.createTempDirectory("graft_xsession_data").toString
+    Files.list(Paths.get("/root/testdata/sf0.001")).forEach(p =>
+      Files.copy(p, Paths.get(data, p.getFileName.toString)))
+    val r1 = Files.createTempDirectory("graft_xsession_r1").toString
+    val r2 = Files.createTempDirectory("graft_xsession_r2").toString
+    val dup = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    def accept(x: SparkSession, docs: Seq[Long]): Unit =
+      graft.queries.LlmOps.acceptSketchBatch(x, data, "b1",
+        x.createDataFrame(docs.map(d => (d, s"$dup $d"))).toDF("doc_id", "text"),
+        "doc_id", "text")
+    // (base shingle rows, committed delta doc ids)
+    def read(x: SparkSession): (Long, Set[Long]) = {
+      val (sh, _, _) = graft.queries.LlmOps.sketchStore(x, data)
+      val (ash, _, _) = graft.queries.LlmOps.sketchAcceptStore(x, data)
+      val out = (sh.count(), ash.select("doc").collect().map(_.getLong(0)).toSet)
+      graft.engine.CacheRegistry.releaseAll()
+      out
+    }
+    try {
+      first.conf.set("spark.graft.store.root", r1)
+      accept(first, Seq(900001L))
+      assert(read(first)._2 === Set(900001L))
+      s.conf.set("spark.graft.store.root", r2)
+      accept(s, Seq(900002L, 900003L))
+      val atR2 = read(s)
+      assert(atR2._2 === Set(900002L, 900003L))
+      scala.util.Using.resource(Files.walk(Paths.get(r1))) {
+        _.sorted(Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+      }
+      first.conf.set("spark.graft.store.root", r2)
+      assert(read(first) === atR2,
+        "the first session must serve the second's registration at r2")
+    } finally {
+      s.conf.set("spark.graft.store.root", r2)
+      Seq("sketch", "sketch_accept").foreach(DurableStores.drop(s, data, _))
+      s.conf.unset("spark.graft.store.root")
+      DurableStores.resetVerifiedForTest()
+      graft.engine.CacheRegistry.releaseAll()
+      Seq(r1, r2, data).filter(d => Files.exists(Paths.get(d))).foreach { d =>
         scala.util.Using.resource(Files.walk(Paths.get(d))) {
           _.sorted(Comparator.reverseOrder[Path]())
             .forEach(p => Files.deleteIfExists(p))

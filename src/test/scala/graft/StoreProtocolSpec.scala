@@ -44,14 +44,11 @@ class StoreProtocolSpec extends AnyFunSuite {
       val plantUnmarked: String => Unit,
       val plantedVisible: () => Boolean)
 
-  /** The committed view of a delta table (rows of marked batches). */
-  private def committedView(store: String, delta: DataFrame): DataFrame =
-    graft.storage.DurableStores.committedDelta(spark, sf, store, delta)
-
-  private def insertUnmarked(table: String, rows: DataFrame): Unit =
-    DurableStores.withDynamicPartitionOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(Storage.tableNameFor(table, sf))
-    }
+  /** A crashed accept: `rows` written as batch `id`'s partition of
+    * `table` by the writer accepts use, with no commit marker. */
+  private def insertUnmarked(table: String, id: String, rows: DataFrame): Unit =
+    DurableStores.writeBatchPartition(spark, Storage.tableNameFor(table, sf),
+      id, rows)
 
   /** (table/file -> mtime) of every file under one batch partition of
     * the given delta tables; empty for partitions that do not exist. */
@@ -114,8 +111,8 @@ class StoreProtocolSpec extends AnyFunSuite {
 
     // planted into the LAST delta table of each family
     f.plantUnmarked("p_b3")
-    assert(s.table(Storage.tableNameFor(f.deltaTables.last, sf))
-      .filter(col("batch_id") === "p_b3").count() > 0L,
+    assert(DurableStores.presentBatchPartitions(s,
+        Storage.tableNameFor(f.deltaTables.last, sf)).contains("p_b3"),
       s"${f.store}: the planted partition is missing")
     assert(!f.plantedVisible(),
       s"${f.store}: a partition with no marker is in the committed read")
@@ -149,13 +146,12 @@ class StoreProtocolSpec extends AnyFunSuite {
       (id, lin) => graft.queries.LlmOps.acceptSketchBatch(s, sf, id,
         docs(id), "doc_id", "text", lineage = lin),
       () => graft.queries.LlmOps.compactSketchStore(s, sf),
-      id => insertUnmarked("graft_sketchacc_shingles",
+      id => insertUnmarked("graft_sketchacc_shingles", id,
         graft.operators.Dedup.corpusSketch(
           Seq((930100L, "an unmarked partial batch row")).toDF("doc_id", "text"),
           "doc_id", "text")
-          .select(col("doc"), col("sh"), lit(id).as("batch_id"))),
-      () => committedView("sketch_accept",
-        graft.queries.LlmOps.sketchAcceptStore(s, sf)._1)
+          .select(col("doc"), col("sh"))),
+      () => graft.queries.LlmOps.sketchAcceptStore(s, sf)._1
         .filter(col("batch_id") === "p_b3").count() > 0L))
   }
 
@@ -172,13 +168,11 @@ class StoreProtocolSpec extends AnyFunSuite {
       (id, lin) => graft.queries.LlmOps.acceptCosineBatch(s, sf, id,
         vecs(id), lineage = lin),
       () => graft.queries.LlmOps.compactCosineStore(s, sf),
-      id => insertUnmarked("graft_cosacc_members",
+      id => insertUnmarked("graft_cosacc_members", id,
         graft.operators.EmbeddingDedup.assignToCells(
           graft.queries.LlmOps.cosineStore(s, sf)._1,
-          vecs("p_b9"), "vec_id", "embedding")
-          .withColumn("batch_id", lit(id))),
-      () => committedView("cosine_accept",
-        graft.queries.LlmOps.cosineAcceptStore(s, sf))
+          vecs("p_b9"), "vec_id", "embedding")),
+      () => graft.queries.LlmOps.cosineAcceptStore(s, sf)
         .filter(col("batch_id") === "p_b3").count() > 0L))
   }
 
@@ -189,9 +183,8 @@ class StoreProtocolSpec extends AnyFunSuite {
       (id, lin) => graft.queries.LlmOps.acceptClusterRelabel(s, sf, id,
         docs(id), "doc_id", "text", lineage = lin),
       () => graft.queries.LlmOps.compactClusterStore(s, sf),
-      id => insertUnmarked("graft_clusacc_labels",
-        Seq((930300L, 930300L)).toDF("node", "cluster")
-          .withColumn("batch_id", lit(id))),
+      id => insertUnmarked("graft_clusacc_labels", id,
+        Seq((930300L, 930300L)).toDF("node", "cluster")),
       () => graft.queries.LlmOps.effectiveClusterLabels(s, sf)
         .filter(col("node") === 930300L).count() > 0L))
   }
@@ -208,10 +201,9 @@ class StoreProtocolSpec extends AnyFunSuite {
       (id, lin) => graft.queries.EventsMerge.acceptAsofDimBatch(s, sf, id,
         rows(id), lineage = lin),
       () => graft.queries.EventsMerge.compactAsofDimStore(s, sf),
-      id => insertUnmarked("graft_asofacc",
+      id => insertUnmarked("graft_asofacc", id,
         Seq((990000088L, 990000699L, 400000L, 7.0))
-          .toDF("user_id", "event_id", "ts", "value")
-          .withColumn("batch_id", lit(id))),
+          .toDF("user_id", "event_id", "ts", "value")),
       () => graft.queries.EventsMerge.asofJoinEffective(s, sf,
           Seq((990000088L, 1L, 900000L)).toDF("user_id", "event_id", "ts"))
         .filter(col("asof_eff").isNotNull).count() > 0L))
@@ -233,9 +225,8 @@ class StoreProtocolSpec extends AnyFunSuite {
       (id, lin) => MergeScaleQ.acceptMergeBatch(s, sf, id,
         snaps(s"p_entity_$id", 990100000L + id.last.asDigit), lineage = lin),
       () => MergeScaleQ.compactMergeStore(s, sf),
-      id => insertUnmarked("graft_mrgacc_merged",
-        graft.engine.Merge.mergeSubmissions(snaps("p_ghost", 990100099L))
-          .withColumn("batch_id", lit(id))),
+      id => insertUnmarked("graft_mrgacc_merged", id,
+        graft.engine.Merge.mergeSubmissions(snaps("p_ghost", 990100099L))),
       () => MergeScaleQ.effectiveMerged(s, sf)
         .filter(col("site_submission_id") === "p_ghost").count() > 0L))
   }

@@ -1102,12 +1102,9 @@ class StoreSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val own2 = Some(Set("rp_b1", "rp_b2"))
       val sk = Dedup.corpusSketch(b2, "doc_id", "text")
-      DurableStores.withDynamicPartitionOverwrite(s) {
-        sk.select(col("doc"), col("sh"))
-          .withColumn("batch_id", lit("rp_b2"))
-          .write.mode("overwrite")
-          .insertInto(Storage.tableNameFor("graft_sketchacc_shingles", sf))
-      }
+      DurableStores.writeBatchPartition(s,
+        Storage.tableNameFor("graft_sketchacc_shingles", sf), "rp_b2",
+        sk.select(col("doc"), col("sh")))
       assert(!DurableStores.committedBatches(s, sf, "sketch_accept")
         .contains("rp_b2"))
       graft.queries.LlmOps.acceptSketchBatch(s, sf, "rp_b2", b2,
@@ -1131,28 +1128,21 @@ class StoreSpec extends AnyFunSuite {
     try {
       // simulate a crash mid-accept: one delta table gets the batch's
       // rows, the others don't, and no marker is written
-      val (ash, _, _) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
+      graft.queries.LlmOps.sketchAcceptStore(s, sf)
+      val tbl = graft.storage.Storage.tableNameFor("graft_sketchacc_shingles", sf)
       val sk = Dedup.corpusSketch(
         Seq((900009L, "orphan partial batch row")).toDF("doc_id", "text"),
         "doc_id", "text")
-      DurableStores.withDynamicPartitionOverwrite(s) {
-        sk.select(col("doc"), col("sh"))
-          .withColumn("batch_id", lit("crashed"))
-          .write.mode("overwrite")
-          .insertInto(graft.storage.Storage.tableNameFor(
-            "graft_sketchacc_shingles", sf))
-      }
-      val raw = graft.queries.LlmOps.sketchAcceptStore(s, sf)._1
-      assert(raw.filter(col("batch_id") === "crashed").count() === 1L)
-      // committed view: the crashed batch is filtered out
-      val committed = graft.storage.DurableStores.committedDelta(
-        s, sf, "sketch_accept", raw)
-      assert(committed.filter(col("batch_id") === "crashed").count() === 0L)
+      DurableStores.writeBatchPartition(s, tbl, "crashed",
+        sk.select(col("doc"), col("sh")))
+      assert(DurableStores.presentBatchPartitions(s, tbl).contains("crashed"))
+      // committed view: the crashed batch is left out
+      assert(graft.queries.LlmOps.sketchAcceptStore(s, sf)._1
+        .filter(col("batch_id") === "crashed").count() === 0L)
       // once marked committed (what a healing re-accept ends with),
       // the batch becomes visible
       DurableStores.markBatchCommitted(s, sf, "sketch_accept", "crashed")
-      assert(graft.storage.DurableStores.committedDelta(s, sf, "sketch_accept",
-        graft.queries.LlmOps.sketchAcceptStore(s, sf)._1)
+      assert(graft.queries.LlmOps.sketchAcceptStore(s, sf)._1
         .filter(col("batch_id") === "crashed").count() === 1L)
       graft.engine.CacheRegistry.releaseAll()
     } finally {
@@ -1435,10 +1425,8 @@ class StoreSpec extends AnyFunSuite {
       graft.queries.LlmOps.clusterAcceptStore(s, sf)
       val tbl = graft.storage.Storage.tableNameFor("graft_clusacc_labels", sf)
       def putDelta(batch: String, rows: Seq[(Long, Long)]): Unit = {
-        DurableStores.withDynamicPartitionOverwrite(s) {
-          rows.toDF("node", "cluster").withColumn("batch_id", lit(batch))
-            .write.mode("overwrite").insertInto(tbl)
-        }
+        DurableStores.writeBatchPartition(s, tbl, batch,
+          rows.toDF("node", "cluster"))
         DurableStores.markBatchCommitted(s, sf, "cluster_accept", batch)
       }
       // lineage A merges n2's cluster into n1; lineage Z — computed

@@ -37,9 +37,7 @@ class StreamingSpec extends AnyFunSuite {
     def probe(text: String): Set[Long] = {
       val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
       val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
-      def committed(df: org.apache.spark.sql.DataFrame) =
-        graft.storage.DurableStores.committedDelta(s, sf, "sketch_accept", df)
-          .drop("batch_id")
+      def committed(df: org.apache.spark.sql.DataFrame) = df.drop("batch_id")
       val out = graft.operators.Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(committed(ash)), bands.unionByName(committed(abands)),
         chunks.unionByName(committed(achunks)),
