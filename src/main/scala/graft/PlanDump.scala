@@ -27,9 +27,9 @@ object PlanDump {
         Tables.t(s, d, "documents"), "doc_id", "text",
         threshold = 0.8, chunks = 8)),
     "op_minhash_lsh_pairs" -> ((s, d) =>
-      graft.operators.Dedup.minhashLshPairs(
+      graft.operators.Dedup.multiSketchPairs(
         Tables.t(s, d, "documents"), "doc_id", "text",
-        k = 32, bands = 4, threshold = 0.8)))
+        threshold = 0.8, k = 32, bands = 4)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -18,6 +18,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: `runMain graft.PlanSweep [sfDir] [out]` (defaults: the
   * sf0.001 fixture directory and `PLAN_AUDIT.json`); a row already in `out`
   * stays when a rerun reproduces it, so only moved plans change the file.
+  * A query that throws keeps its row on file (a failed run measures no
+  * plan), is named on stderr, and makes the sweep exit non-zero.
   */
 object PlanSweep {
 
@@ -31,7 +33,11 @@ object PlanSweep {
     val out = if (args.length > 1) args(1) else AuditFile
     val spark = session()
     spark.sparkContext.setLogLevel("ERROR")
-    val rows = audit(spark, sfDir, Width, filedRows(new java.io.File(out)))
+    val filed = filedRows(new java.io.File(out))
+    val fresh = audit(spark, sfDir, Width, filed)
+    val bad = fresh.filter(_.has("err"))
+    val rows: Seq[JsonNode] = fresh.map(r =>
+      if (r.has("err")) filed.getOrElse(r.get("q").asText, r) else r)
     val carts = rows.filter(r => Seq("cartesian", "bnlj").exists(f => r.path(f).asInt > 0))
       .map(_.get("q").asText)
     val head = json.createObjectNode()
@@ -55,13 +61,13 @@ object PlanSweep {
     val text = json.writeValueAsString(head).stripSuffix("}") +
       rows.map(json.writeValueAsString).mkString(",\"queries\":[\n", ",\n", "\n]}\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(out), text.getBytes("UTF-8"))
-    val bad = rows.filter(_.has("err"))
     System.err.println(s"[plansweep] ${rows.size} queries audited, " +
       s"${carts.size} with nested-loop joins (declared brute twins / " +
       s"broadcast-size non-equi sides), ${bad.size} errors")
     bad.foreach(r => System.err.println(
       s"[plansweep] ERR ${r.get("q").asText}: ${r.get("err").asText}"))
     spark.stop()
+    if (bad.nonEmpty) sys.exit(1)
   }
 
   /** Reruns of a query whose row differs from the one on file. A few

@@ -144,20 +144,18 @@ object ScaleEvidence {
     spark.read.parquet(s"$root/$name")
   }
 
-  /** The at-rest sketch-table layout (sh/bands/chunks) for a text
-    * corpus — the corpus side every store-path sweep probes. The
-    * sketch frame is retained once for the three writes, then
-    * released. */
+  /** The at-rest sketch-table layout (sh/bands) for a text corpus —
+    * the corpus side every store-path sweep probes. The sketch frame
+    * is retained once for the two writes, then released. */
   private def sketchAtRest(spark: SparkSession, root: String,
-      corpusDocs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      corpusDocs: DataFrame): (DataFrame, DataFrame) = {
     import graft.operators.Dedup
     val sk = graft.engine.CacheRegistry.retain(
       Dedup.corpusSketch(corpusDocs, "doc_id", "text"))
     val sh = writeRead(spark, root, sk.select("doc", "sh"), "sh")
-    val bands = writeRead(spark, root, Dedup.explodedBands(sk, 32, 4), "bands")
-    val chunks = writeRead(spark, root, Dedup.explodedChunks(sk, 8), "chunks")
+    val bands = writeRead(spark, root, Dedup.explodedBands(sk), "bands")
     graft.engine.CacheRegistry.releaseAll()
-    (sh, bands, chunks)
+    (sh, bands)
   }
 
   /** Deterministic n-doc text corpus with twin near-dups: docs (2j,
@@ -230,12 +228,12 @@ object ScaleEvidence {
         .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
         .persist()
       batch.count()
-      val (sh, bands, chunks) = sketchAtRest(spark, root, corpusDocs)
-      def stored = Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
-        batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+      val (sh, bands) = sketchAtRest(spark, root, corpusDocs)
+      def stored = Dedup.incrementalMinhashPairsFromStore(sh, bands,
+        batch, "doc_id", "text", threshold = 0.8)
       def inline = Dedup.incrementalMinhashPairs(
         Dedup.corpusSketch(corpusDocs, "doc_id", "text"),
-        batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+        batch, "doc_id", "text", threshold = 0.8)
       val storeSec = timeNoop(stored)
       val inlineSec = timeNoop(inline)
       val pairs = stored.count()
@@ -319,7 +317,7 @@ object ScaleEvidence {
       def universe = textCorpus(spark, n + nBatches * batchN, textTokens)
       val corpusDocs =
         writeRead(spark, root, universe.filter(col("doc_id") < n), "docs")
-      val (sh0, bands0, chunks0) = sketchAtRest(spark, root, corpusDocs)
+      val (sh0, bands0) = sketchAtRest(spark, root, corpusDocs)
       val probe = universe
         .filter((col("doc_id") < batchN ||
           (col("doc_id") >= n && col("doc_id") < n + batchN)) &&
@@ -335,24 +333,21 @@ object ScaleEvidence {
           Dedup.corpusSketch(batch, "doc_id", "text"))
         bsk.select("doc", "sh")
           .write.mode("overwrite").parquet(s"$root/acc_sh/b$k")
-        Dedup.explodedBands(bsk, 32, 4)
+        Dedup.explodedBands(bsk)
           .write.mode("overwrite").parquet(s"$root/acc_bands/b$k")
-        Dedup.explodedChunks(bsk, 8)
-          .write.mode("overwrite").parquet(s"$root/acc_chunks/b$k")
         graft.engine.CacheRegistry.releaseAll()
         val acceptSec = (System.nanoTime() - t0) / 1e9
         def probed = Dedup.incrementalMinhashPairsFromStore(
           sh0.unionByName(spark.read.parquet(s"$root/acc_sh/*")),
           bands0.unionByName(spark.read.parquet(s"$root/acc_bands/*")),
-          chunks0.unionByName(spark.read.parquet(s"$root/acc_chunks/*")),
-          probe, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+          probe, "doc_id", "text", threshold = 0.8)
         val probeSec = timeNoop(probed)
         val pairs = probed.count()
         graft.engine.CacheRegistry.releaseAll()
         val diff = if (k == nBatches - 1) {
           val inline = Dedup.incrementalMinhashPairs(
             Dedup.corpusSketch(universe, "doc_id", "text"),
-            probe, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+            probe, "doc_id", "text", threshold = 0.8)
           val d = probed.exceptAll(inline).count() +
             inline.exceptAll(probed).count()
           graft.engine.CacheRegistry.releaseAll()
@@ -391,9 +386,9 @@ object ScaleEvidence {
       def universe = textCorpus(spark, n + batchN, textTokens)
       val corpusDocs =
         writeRead(spark, root, universe.filter(col("doc_id") < n), "docs")
-      val (sh, bands, chunks) = sketchAtRest(spark, root, corpusDocs)
+      val (sh, bands) = sketchAtRest(spark, root, corpusDocs)
       val labels = writeRead(spark, root, Dedup.connectedComponents(
-        Dedup.multiSketchPairsFromStore(sh, bands, chunks, threshold = 0.8),
+        Dedup.multiSketchPairsFromStore(sh, bands, threshold = 0.8),
         "doc_a", "doc_b"), "labels")
       graft.engine.CacheRegistry.releaseAll()
       val batch = universe
@@ -403,8 +398,7 @@ object ScaleEvidence {
         .persist()
       batch.count()
       def crossEdges = Dedup.incrementalMinhashPairsFromStore(
-        sh, bands, chunks, batch,
-          "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+        sh, bands, batch, "doc_id", "text", threshold = 0.8)
         .select(col("batch_doc"), col("corpus_doc"))
       def innerEdges = Dedup.multiSketchPairs(batch, "doc_id", "text",
           threshold = 0.8)

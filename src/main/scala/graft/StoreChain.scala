@@ -105,16 +105,14 @@ object StoreChain {
         }
         val (sp, cp, cl, mg) = graft.engine.CacheRegistry.withRetained {
           import graft.operators.{Dedup, EmbeddingDedup}
-          val (sh, bands, chunks) = queries.LlmOps.sketchStore(spark, dataDir)
-          val (ash, abands, achunks) =
-            queries.LlmOps.sketchAcceptStore(spark, dataDir)
+          val (sh, bands) = queries.LlmOps.sketchStore(spark, dataDir)
+          val (ash, abands) = queries.LlmOps.sketchAcceptStore(spark, dataDir)
           def own(df: DataFrame): DataFrame =
             df.filter(col("batch_id") === bid).drop("batch_id")
           val sketchPairs = Dedup.incrementalMinhashPairsFromStore(
             sh.unionByName(own(ash)), bands.unionByName(own(abands)),
-            chunks.unionByName(own(achunks)),
             Seq((990000100L, txt)).toDF("doc_id", "text"),
-            "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+            "doc_id", "text", threshold = 0.8)
             .collect()
             .map(r => s"[${r.getLong(0)},${r.getLong(1)},${r.getDouble(2)}]")
             .sorted

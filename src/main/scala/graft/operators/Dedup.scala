@@ -14,28 +14,35 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: one pipeline, sketch → candidates → verify.
   *  - Sketch. [[corpusSketch]] is the one per-doc sketch build
-  *    (shingles, minhash signature, simhash), a narrow projection with
-  *    no shuffle. [[explodedBands]] and [[explodedChunks]] turn it into
-  *    the two bucket-key tables, in memory or at rest.
-  *  - Candidates. Minhash bands bucket on (band_id, band_hash), simhash
-  *    chunks on (chunk_idx, chunk_value). The band join stays near the
-  *    near-dup pair count; the chunk join does not: 8-bit chunks put
-  *    about n/256 docs in each bucket, so its candidates grow as
-  *    n²/256 (about 40 000 for the 5 000 docs of sf0.1). Within a
-  *    corpus each table self-joins ([[multiSketchPairsFromStore]]); a
-  *    batch probes a corpus by joining its key tables to the corpus's
-  *    ([[incrementalPairsBetweenStores]]).
+  *    (shingles, minhash signature), a narrow projection with no
+  *    shuffle. [[explodedBands]] turns it into the bucket-key table, in
+  *    memory or at rest.
+  *  - Candidates. One sketch family: the signature banded as
+  *    [[SketchBands]] bands of [[SketchK]]/[[SketchBands]] rows, docs
+  *    bucketed on (band_id, band_hash). At 8 × 4 a pair at Jaccard
+  *    0.8 collides in some band with probability 1 − (1 − 0.8⁴)⁸ ≈
+  *    0.9996, and the candidate count stays near the true pair count
+  *    (measured: 256 candidates for the 256 pairs of sf0.1). Within a
+  *    corpus the band table self-joins ([[multiSketchPairsFromStore]]);
+  *    a batch probes a corpus by joining its band table to the
+  *    corpus's ([[incrementalPairsBetweenStores]]).
   *  - Verify. Every path hands its candidate pairs to one exact-Jaccard
   *    core ([[verifiedByJaccard]]). A lossless filter ahead of exact
   *    Jaccard (length, prefix) goes there, and every path inherits it.
   *
   * The text-taking entry points ([[multiSketchPairs]],
   * [[incrementalMinhashPairsFromStore]]) sketch once and delegate to
-  * the store variants; the single-family paths ([[minhashLshPairs]],
-  * [[SimhashPairs]]) sketch only their own family and share the
-  * candidate and verification steps.
+  * the store variants. q27's simhash path ([[SimhashPairs]]) keeps its
+  * own chunk buckets and shares the verification step.
   */
 object Dedup {
+
+  /** The one banding every store and probe uses: [[SketchK]] minhash
+    * slots in [[SketchBands]] bands. The sketch stores' build params
+    * are written from these, so a probe can never band differently
+    * from the table it reads. */
+  val SketchK = 32
+  val SketchBands = 8
 
   /** Whitespace tokens, lowercased. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
@@ -52,13 +59,13 @@ object Dedup {
     * hashing a fixed-width long k times is ~20× cheaper than hashing
     * the string k times, which dominates signature cost at corpus
     * scale. */
-  def minhashSignature(sh: Column, k: Int = 32): Column =
+  def minhashSignature(sh: Column, k: Int = SketchK): Column =
     graft.functions.TextHashes.minhashSignature(sh, k)
 
   /** LSH band keys: split the signature into `bands` bands of
     * `rows = k/bands` and hash each; docs sharing any (band, hash) are
     * candidates. */
-  def bandKeys(sig: Column, k: Int = 32, bands: Int = 8): Column = {
+  def bandKeys(sig: Column, k: Int = SketchK, bands: Int = SketchBands): Column = {
     val r = k / bands
     transform(sequence(lit(0), lit(bands - 1)),
       j => struct(j.as("band_id"),
@@ -153,7 +160,8 @@ object Dedup {
   /** Within-table simhash candidates: (doc_a, doc_b, sim_a, sim_b)
     * pairs of a chunk table ([[explodedChunks]]) sharing a
     * (chunk_idx, chunk_value) bucket, doc_a < doc_b, once per shared
-    * chunk. Callers cut on Hamming distance. */
+    * chunk. Callers cut on Hamming distance. q27's [[SimhashPairs]]
+    * only. */
   private[operators] def bucketSelfJoinPairs(chunked: DataFrame): DataFrame =
     chunked.select(col("chunk_idx"), col("chunk_value"),
         col("doc").as("doc_a"), col("simhash").as("sim_a"))
@@ -162,101 +170,69 @@ object Dedup {
         Seq("chunk_idx", "chunk_value"))
       .filter(col("doc_a") < col("doc_b"))
 
-  /** MinHash+LSH candidate pairs with exact-Jaccard verification.
-    * Returns (doc_a, doc_b, jaccard) for candidates with
-    * jaccard >= threshold.
-    */
-  def minhashLshPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8, threshold: Double = 0.7): DataFrame = {
-    // shingles are computed once and persisted: the banding pass and
-    // both sides of the candidate verification join reuse this frame
-    // (at corpus scale this is the materialized signature table every
-    // LSH pipeline keeps; registered for CacheRegistry.releaseAll so
-    // long-lived sessions can drop it after materialization)
-    val sh = graft.engine.CacheRegistry.retain(
-      spread(docs.select(col(idCol), col(textCol))).select(
-        col(idCol).as("doc"),
-        shingles(col(textCol)).as("sh")))
-    // band the ids only — the heavy shingle arrays are joined back in
-    // just for the (much smaller) candidate set
-    val pairs = bandSelfJoinPairs(explodedBands(
-        sh.select(col("doc"), minhashSignature(col("sh"), k).as("sig")), k, bands))
-      .distinct() // a pair may collide in several bands
-    verifiedByJaccard(spreadForVerify(pairs, "doc_a"), "doc_a", "doc_b",
-      sh, sh, threshold)
-  }
-
-  /** Per-doc sketch frame (doc, sh, sig, simhash) — the one sketch
-    * build of the family, and the table a production deployment
-    * persists ONCE per corpus so later ingest batches never re-read or
-    * re-hash the corpus text (at 100 TB, additionally persist the
-    * exploded band/chunk tables bucketed by their bucket keys;
-    * [[incrementalMinhashPairs]] derives them narrowly when absent).
-    * Carries BOTH sketch families: single-sketch banding recall is
-    * probabilistic (measured at sf0.1: minhash 4×8 misses a few J 0.9+
-    * pairs, simhash chunks miss others, the union misses none — see
-    * [[multiSketchPairs]]). */
+  /** Per-doc sketch frame (doc, sh, sig) — the one sketch build of the
+    * family, and the table a production deployment persists ONCE per
+    * corpus so later ingest batches never re-read or re-hash the
+    * corpus text (at 100 TB, additionally persist the exploded band
+    * table bucketed by its bucket key; [[incrementalMinhashPairs]]
+    * derives it narrowly when absent). Banding 8 × 4 reaches every
+    * exact pair on the corpora measured (perfbench seeds 1, 3 and 7,
+    * sf0.01, sf0.1 — see [[multiSketchPairs]]), so the sketch carries
+    * no second family. */
   def corpusSketch(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 32): DataFrame =
+      k: Int = SketchK): DataFrame =
     spread(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc"), shingles(col(textCol)).as("sh"),
-        simhash(col(textCol)).as("simhash"))
+      .select(col(idCol).as("doc"), shingles(col(textCol)).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), k))
 
   /** Incremental cross-batch near-dup detection — the daily-ingest
     * shape of fuzzy dedup at corpus scale: a NEW batch of documents
     * is checked against an EXISTING corpus via the corpus's persisted
     * sketch table ([[corpusSketch]]); text is shingled and sketched
-    * only for the batch. Candidates are the UNION of minhash-band and
-    * simhash-chunk collisions (the [[multiSketchPairs]] recall
-    * argument, applied cross-batch), each generated by broadcasting
-    * the batch's bucket keys over the corpus-side table, so the
-    * corpus streams with no shuffle and no recompute — cost per
-    * ingest is O(batch · buckets) + candidate verification,
-    * independent of corpus size. Returns
+    * only for the batch. Candidates are minhash-band collisions,
+    * generated by broadcasting the batch's band keys over the
+    * corpus-side band table, so the corpus streams with no shuffle and
+    * no recompute — cost per ingest is O(batch · bands) + candidate
+    * verification, independent of corpus size. Returns
     * (batch_doc, corpus_doc, jaccard >= threshold).
     *
     * Batch and corpus ids must be DISJOINT (a shared id would emit a
     * degenerate self-pair); the daily-ingest contract guarantees it.
     *
     * The broadcast hint is applied only while the batch holds at most
-    * `maxBroadcastBatchDocs` documents (each contributes `bands` +
-    * `chunks` narrow key rows to the broadcast tables). A
+    * `maxBroadcastBatchDocs` documents (each contributes
+    * [[SketchBands]] narrow key rows to the broadcast table). A
     * backfill-sized batch above the threshold gets NO hint — the
-    * candidate joins then shuffle on the bucket keys (AQE may still
+    * candidate join then shuffles on the bucket keys (AQE may still
     * choose a broadcast from actual sizes), which is slower but
     * cannot hit Spark's broadcast hard limit. The count that decides
     * this materializes the retained batch sketch, work the candidate
-    * joins were about to do anyway.
+    * join was about to do anyway.
     */
   def incrementalMinhashPairs(corpusSketch: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String, k: Int = 32, bands: Int = 4,
-      chunks: Int = 8, threshold: Double = 0.8,
+      idCol: String, textCol: String, threshold: Double = 0.8,
       maxBroadcastBatchDocs: Long = 1000000L): DataFrame = {
     val corpus = graft.engine.CacheRegistry.retain(corpusSketch)
     incrementalMinhashPairsFromStore(
-      corpus.select(col("doc"), col("sh")),
-      explodedBands(corpus, k, bands), explodedChunks(corpus, chunks),
-      batch, idCol, textCol, k, bands, chunks, threshold,
-      maxBroadcastBatchDocs)
+      corpus.select(col("doc"), col("sh")), explodedBands(corpus),
+      batch, idCol, textCol, threshold, maxBroadcastBatchDocs)
   }
 
   /** Exploded minhash band-key table (doc, band_id, band_hash) of a
     * [[corpusSketch]] frame — at rest, persisted bucketed by
     * (band_id, band_hash) so candidate joins read bucket-local data. */
-  def explodedBands(sketch: DataFrame, k: Int = 32,
-      bands: Int = 4): DataFrame =
+  def explodedBands(sketch: DataFrame, k: Int = SketchK,
+      bands: Int = SketchBands): DataFrame =
     sketch.select(col("doc"),
       explode(bandKeys(col("sig"), k, bands)).as("band"))
       .select(col("doc"), col("band.band_id").as("band_id"),
         col("band.band_hash").as("band_hash"))
 
   /** Exploded simhash chunk table (doc, simhash, chunk_idx,
-    * chunk_value) of a [[corpusSketch]] frame — at rest, persisted
-    * bucketed by (chunk_idx, chunk_value). Carries the full simhash so
-    * the pigeonhole Hamming filter runs without a join back. */
-  def explodedChunks(sketch: DataFrame, chunks: Int = 8): DataFrame = {
+    * chunk_value) of a (doc, simhash) frame — q27's candidate buckets
+    * ([[SimhashPairs]]). Carries the full simhash so the pigeonhole
+    * Hamming filter runs without a join back. */
+  private[operators] def explodedChunks(sketch: DataFrame, chunks: Int): DataFrame = {
     val bits = 64 / chunks
     sketch.select(col("doc"), col("simhash"),
       explode(transform(sequence(lit(0), lit(chunks - 1)), c => struct(
@@ -268,28 +244,24 @@ object Dedup {
   }
 
   /** [[incrementalMinhashPairs]] against the AT-REST corpus layout:
-    * the three corpus-side tables a production deployment writes once
-    * per corpus — `corpusShingles` (doc, sh), `corpusBands`
-    * ([[explodedBands]]), `corpusChunks` ([[explodedChunks]]) — are
-    * read from persisted storage, so an ingest batch never re-reads or
-    * re-hashes corpus text even across JVMs (the in-JVM-cache variant
-    * above derives them from the sketch frame and delegates here).
-    * The batch is sketched once ([[corpusSketch]], retained) and probes
-    * through [[incrementalPairsBetweenStores]]. Same contract:
-    * batch/corpus ids disjoint, broadcast hint only under
-    * `maxBroadcastBatchDocs`. */
+    * the two corpus-side tables a production deployment writes once
+    * per corpus — `corpusShingles` (doc, sh) and `corpusBands`
+    * ([[explodedBands]]) — are read from persisted storage, so an
+    * ingest batch never re-reads or re-hashes corpus text even across
+    * JVMs (the in-JVM-cache variant above derives them from the sketch
+    * frame and delegates here). The batch is sketched once
+    * ([[corpusSketch]], retained) and probes through
+    * [[incrementalPairsBetweenStores]]. Same contract: batch/corpus
+    * ids disjoint, broadcast hint only under `maxBroadcastBatchDocs`. */
   def incrementalMinhashPairsFromStore(
-      corpusShingles: DataFrame, corpusBands: DataFrame,
-      corpusChunks: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String, k: Int = 32, bands: Int = 4,
-      chunks: Int = 8, threshold: Double = 0.8,
+      corpusShingles: DataFrame, corpusBands: DataFrame, batch: DataFrame,
+      idCol: String, textCol: String, threshold: Double = 0.8,
       maxBroadcastBatchDocs: Long = 1000000L): DataFrame = {
     val batchSk = graft.engine.CacheRegistry.retain(
-      corpusSketch(batch, idCol, textCol, k))
-    incrementalPairsBetweenStores(corpusShingles, corpusBands, corpusChunks,
-      batchSk.select(col("doc"), col("sh")), explodedBands(batchSk, k, bands),
-      explodedChunks(batchSk, chunks), chunks, threshold,
-      maxBroadcastBatchDocs)
+      corpusSketch(batch, idCol, textCol))
+    incrementalPairsBetweenStores(corpusShingles, corpusBands,
+      batchSk.select(col("doc"), col("sh")), explodedBands(batchSk),
+      threshold, maxBroadcastBatchDocs)
   }
 
   /** The corpus-side shingle frame restricted to a probe's candidate
@@ -299,10 +271,10 @@ object Dedup {
     * shingle array to verify a candidate set that names a fraction of
     * a percent of the docs (measured 2.8 s of a 4.4 s probe at 262k
     * docs × 300 tokens). The candidate ids are batch-bounded (batch
-    * docs × collisions per sketch family), so collect them — a
-    * bounded coordinator read of the same class as the union-find
-    * edge collect — and filter the at-rest table with an exact-values
-    * IN predicate. [[graft.storage.Storage.appendBucketed]] sorts the
+    * docs × band collisions), so collect them — a bounded coordinator
+    * read of the same class as the union-find edge collect — and
+    * filter the at-rest table with an exact-values IN predicate.
+    * [[graft.storage.Storage.appendBucketed]] sorts the
     * shingle store by `doc` inside each bucket, so parquet row-group
     * stats and page indexes skip the non-candidate bulk; the skip
     * fraction grows with corpus size (at gate scale the table is a
@@ -319,121 +291,107 @@ object Dedup {
     * batch-bounded probe frame actually names — the
     * [[graft.engine.ProbePrune]] contract (bounded collect, InSet row
     * filter, range-cover pushdown). Also applied to the
-    * candidate-generation scans (bands on `band_hash`, chunks on
-    * `chunk_value` — a SUPERSET of the composite join key, which the
-    * following equi-join re-tightens, so semantics are unchanged). */
+    * candidate-generation scan (bands on `band_hash` — a SUPERSET of
+    * the composite join key, which the following equi-join
+    * re-tightens, so semantics are unchanged). */
   private def pruneToProbeKeys(table: DataFrame, tableCol: String,
       probe: DataFrame, probeCol: String): DataFrame =
     graft.engine.ProbePrune.pruneToProbeKeys(table, tableCol, probe, probeCol)
 
   /** Batch-vs-corpus near-dup pairs with BOTH ends in sketch-table
-    * form: each side is a (shingles, bands, chunks) triple, so the
-    * operation hashes no text at all. Every batch probe lands here:
+    * form: each side is a (shingles, bands) pair, so the operation
+    * hashes no text at all. Every batch probe lands here:
     * [[incrementalMinhashPairsFromStore]] sketches its batch text once
     * and delegates; the accept lifecycle
     * ([[graft.queries.LlmOps.acceptClusterRelabel]]) passes the batch
     * partitions acceptSketchBatch just wrote, or one in-memory
-    * [[corpusSketch]] of the batch via [[explodedBands]]/
-    * [[explodedChunks]] (the q123 shape).
+    * [[corpusSketch]] of the batch via [[explodedBands]] (the q123
+    * shape). Both band tables must be banded at [[SketchK]] ×
+    * [[SketchBands]] — the layout the sketch stores record in their
+    * params.
     *
-    * One hint rule: the batch's narrow key tables (`bands` + `chunks`
-    * rows per doc) are broadcast while the batch holds at most
+    * One hint rule: the batch's narrow band table ([[SketchBands]]
+    * rows per doc) is broadcast while the batch holds at most
     * `maxBroadcastBatchDocs` docs — the backfill guard, decided by one
     * batch-sized count. The verification joins carry the whole shingle
     * arrays and get no hint; AQE picks their strategy from runtime
-    * sizes. Recall contract: the union of both sketch families'
-    * collisions, each pair verified once by exact Jaccard. Batch and
-    * corpus doc ids must be disjoint (the accept id guard enforces
-    * it). Returns (batch_doc, corpus_doc, jaccard >= threshold). */
+    * sizes. Each candidate pair is verified once by exact Jaccard.
+    * Batch and corpus doc ids must be disjoint (the accept id guard
+    * enforces it). Returns (batch_doc, corpus_doc, jaccard >=
+    * threshold). */
   def incrementalPairsBetweenStores(
       corpusShingles: DataFrame, corpusBands: DataFrame,
-      corpusChunks: DataFrame, batchShingles: DataFrame,
-      batchBands: DataFrame, batchChunks: DataFrame,
-      chunks: Int = 8, threshold: Double = 0.8,
+      batchShingles: DataFrame, batchBands: DataFrame,
+      threshold: Double = 0.8,
       maxBroadcastBatchDocs: Long = 1000000L): DataFrame = {
     val hintBatch: DataFrame => DataFrame =
       if (batchShingles.count() <= maxBroadcastBatchDocs) broadcast
       else identity
-    val mhCands = pruneToProbeKeys(corpusBands, "band_hash",
-        batchBands, "band_hash")
-      .join(hintBatch(batchBands.select(col("doc").as("batch_doc"),
-          col("band_id"), col("band_hash"))),
-        Seq("band_id", "band_hash"))
-      .select(col("batch_doc"), col("doc").as("corpus_doc"))
-    // pigeonhole: any pair within Hamming < chunks shares a chunk
-    val shCands = pruneToProbeKeys(corpusChunks, "chunk_value",
-        batchChunks, "chunk_value")
-      .join(hintBatch(batchChunks.select(col("doc").as("batch_doc"),
-          col("simhash").as("sim_a"), col("chunk_idx"), col("chunk_value"))),
-        Seq("chunk_idx", "chunk_value"))
-      .filter(hamming(col("sim_a"), col("simhash")) <= chunks - 1)
-      .select(col("batch_doc"), col("doc").as("corpus_doc"))
     val cands = graft.engine.CacheRegistry.retain(
-      mhCands.unionByName(shCands)
-        .distinct()) // a pair may collide in several buckets/sketches
+      pruneToProbeKeys(corpusBands, "band_hash", batchBands, "band_hash")
+        .join(hintBatch(batchBands.select(col("doc").as("batch_doc"),
+            col("band_id"), col("band_hash"))),
+          Seq("band_id", "band_hash"))
+        .select(col("batch_doc"), col("doc").as("corpus_doc"))
+        .distinct()) // a pair may collide in several bands
     verifiedByJaccard(cands, "batch_doc", "corpus_doc", batchShingles,
       pruneToCandidateDocs(corpusShingles, cands, "corpus_doc"), threshold)
   }
 
   /** [[multiSketchPairs]] against the AT-REST corpus layout: WITHIN-
     * corpus near-dup pairs computed entirely from the persisted sketch
-    * tables — `corpusShingles` (doc, sh), `corpusBands`
-    * ([[explodedBands]]), `corpusChunks` ([[explodedChunks]]) — so a
-    * periodic whole-corpus dedup, or the near-dup stage of a curation
-    * run (q119), never re-shingles or re-hashes a byte of corpus text.
-    * With the tables bucketed by their bucket keys (the layout
-    * [[corpusSketch]] prescribes and q91's store writes), both
-    * candidate self-joins can run bucket-local — no Exchange on the
-    * n·bands candidate-generation side (at gate scale the planner
-    * instead picks a broadcast build over one bucketed scan: also
-    * Exchange-free, and faster than the inline path even against its
-    * warm cache because the sketch compute is gone — the committed
-    * BENCH_FULL_latest.json carries the gate-level comparison, q119 vs
-    * q67). Verification reads the stored shingle arrays (doc-bucketed,
-    * so the verification joins co-partition at corpus scale).
-    * Bands and chunks self-join separately, so their bucket keys never
-    * need to be told apart. Recall contract: the union of both sketch
-    * families' candidates, each pair verified exactly once by exact
-    * Jaccard. `spreadVerify = false` is for BATCH-sized sketch frames
-    * (q123's internal-edge call), where the pinned exchange costs more
-    * than the full-width verification buys. Returns (doc_a, doc_b,
-    * jaccard >= threshold) with doc_a < doc_b. */
+    * tables — `corpusShingles` (doc, sh) and `corpusBands`
+    * ([[explodedBands]]) — so a periodic whole-corpus dedup, or the
+    * near-dup stage of a curation run (q119), never re-shingles or
+    * re-hashes a byte of corpus text. With the band table bucketed by
+    * its bucket key (the layout [[corpusSketch]] prescribes and q91's
+    * store writes), the candidate self-join can run bucket-local — no
+    * Exchange on the n·bands candidate-generation side (at gate scale
+    * the planner instead picks a broadcast build over one bucketed
+    * scan: also Exchange-free, and faster than the inline path even
+    * against its warm cache because the sketch compute is gone — the
+    * committed BENCH_FULL_latest.json carries the gate-level
+    * comparison, q119 vs q67). Verification reads the stored shingle
+    * arrays (doc-bucketed, so the verification joins co-partition at
+    * corpus scale). Each candidate pair is verified exactly once by
+    * exact Jaccard. `spreadVerify = false` is for BATCH-sized sketch
+    * frames (q123's internal-edge call), where the pinned exchange
+    * costs more than the full-width verification buys. Returns
+    * (doc_a, doc_b, jaccard >= threshold) with doc_a < doc_b. */
   def multiSketchPairsFromStore(corpusShingles: DataFrame,
-      corpusBands: DataFrame, corpusChunks: DataFrame,
-      threshold: Double = 0.8, chunks: Int = 8,
+      corpusBands: DataFrame, threshold: Double = 0.8,
       spreadVerify: Boolean = true): DataFrame = {
-    val shCands = bucketSelfJoinPairs(corpusChunks)
-      // pigeonhole: any pair within Hamming < chunks shares a chunk
-      .filter(hamming(col("sim_a"), col("sim_b")) <= chunks - 1)
-      .select("doc_a", "doc_b")
-    // a pair may collide in several buckets/sketches
-    val cands = bandSelfJoinPairs(corpusBands).unionByName(shCands).distinct()
+    // a pair may collide in several bands
+    val cands = bandSelfJoinPairs(corpusBands).distinct()
     verifiedByJaccard(if (spreadVerify) spreadForVerify(cands, "doc_a") else cands,
       "doc_a", "doc_b", corpusShingles, corpusShingles, threshold)
   }
 
-  /** Multi-sketch near-dup pair generation: the UNION of the
-    * minhash-banding and simhash-chunk candidate sets, verified once
-    * by exact Jaccard. Single-sketch recall is probabilistic —
-    * measured on the synthetic corpus at sf0.1: minhash (4×8 bands)
-    * missed 3 of ~256 true pairs (J 0.91–0.96 banding misses),
-    * simhash (Hamming<=7) missed 15 (fingerprint distance above the
-    * pigeonhole bound) — while each covered every pair the other
-    * missed. Unioning independent sketch families is the production
-    * answer for recall at corpus scale.
+  /** Within-corpus near-dup pairs: minhash-band candidates verified
+    * once by exact Jaccard. Returns (doc_a, doc_b, jaccard >=
+    * threshold) with doc_a < doc_b.
+    *
+    * Banding decides recall, and exact verification decides every
+    * emitted pair. The default 8 bands × 4 rows found every pair with
+    * all-pairs exact Jaccard >= 0.8 on the five corpora measured —
+    * perfbench `analytics` seeds 1, 3 and 7 (120 pairs each, planted
+    * at J 0.8–1.0), sf0.01 (25) and sf0.1 (256) — at 1.0–1.3
+    * candidates per true pair. 4 × 8 (each of its bands covers two
+    * 8 × 4 bands, so its candidates are a subset) missed up to 25 of
+    * the 120 perfbench pairs; a simhash-chunk family unioned on top
+    * added thousands of candidates and no pair 8 × 4 missed. q28
+    * keeps `bands = 4` over the corpus it is oracle-checked on.
     *
     * One scan sketches every doc into a retained [[corpusSketch]];
     * [[multiSketchPairsFromStore]] then runs over its shingles and its
-    * exploded band and chunk tables, so each candidate pair is
-    * verified exactly once. */
+    * exploded band table. */
   def multiSketchPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 32, bands: Int = 4,
-      chunks: Int = 8): DataFrame = {
+      threshold: Double = 0.8, k: Int = SketchK,
+      bands: Int = SketchBands): DataFrame = {
     val sk = graft.engine.CacheRegistry.retain(
       corpusSketch(docs, idCol, textCol, k))
     multiSketchPairsFromStore(sk.select(col("doc"), col("sh")),
-      explodedBands(sk, k, bands), explodedChunks(sk, chunks),
-      threshold, chunks)
+      explodedBands(sk, k, bands), threshold)
   }
 
   private def symEdges(e: DataFrame): DataFrame =

@@ -52,13 +52,15 @@ object LlmOps {
     * LSH pipeline reached full recall on this corpus, not just that it
     * produced rows.
     *
-    * Band tuning: 4 bands × 8 rows targets the 0.8-Jaccard near-dup
-    * regime ((1/b)^(1/r) ≈ 0.84). The synthetic corpus has a small
-    * vocabulary, so looser banding (8×4) floods the candidate stage
-    * with moderately-similar pairs — 250s→2s at sf0.1. */
+    * Band tuning: 4 bands × 8 rows, the tighter banding ((1/b)^(1/r)
+    * ≈ 0.84), which reaches every pair of this corpus at sf0.01 (25 of
+    * 25) with no spare candidate. The engine's default 8 × 4
+    * ([[Dedup.multiSketchPairs]]) is the safer choice elsewhere: it
+    * finds all 256 pairs of sf0.1 from 256 candidates, where 4 × 8
+    * misses 3. */
   private val q28MinhashLsh: Q = (s, d) =>
-    Dedup.minhashLshPairs(t(s, d, "documents"), "doc_id", "text",
-      k = 32, bands = 4, threshold = 0.8)
+    Dedup.multiSketchPairs(t(s, d, "documents"), "doc_id", "text",
+      threshold = 0.8, k = 32, bands = 4)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
 
   /** LSH-bucketed ANN with engine-portable hyperplanes: the DuckDB
@@ -208,8 +210,7 @@ object LlmOps {
       emb.filter($"vec_id" < 20), k = 3, nprobe = 4)
   }
 
-  /** Near-dup clusters: multi-sketch verified pairs (minhash ∪
-    * simhash candidates — each sketch covers the other's misses; see
+  /** Near-dup clusters: verified minhash-band pairs (see
     * Dedup.multiSketchPairs recall measurements) → connected
     * components → (doc_id, cluster_id = min id in component). The
     * DuckDB oracle recomputes components from the exact all-pairs
@@ -357,10 +358,10 @@ object LlmOps {
     * subset, recursive-CTE cluster representatives included. */
   private val q119CurationStored: Q = (s, d) => {
     import s.implicits._
-    val (sh, bands, chunks) = sketchStore(s, d)
+    val (sh, bands) = sketchStore(s, d)
     curationDecisions(s,
       t(s, d, "documents").filter($"doc_id" % 10 =!= 0),
-      Dedup.multiSketchPairsFromStore(sh, bands, chunks, threshold = 0.8))
+      Dedup.multiSketchPairsFromStore(sh, bands, threshold = 0.8))
   }
 
   /** The ninth store family: the materialized near-dup cluster labels
@@ -370,9 +371,13 @@ object LlmOps {
     * reaches the whole-table decision only after folding in the
     * ingest batch's edges). Built once from the persisted sketch
     * tables (no corpus text touched even at build) and probed forever
-    * by the cluster-maintenance lifecycle. Params mirror the sketch
-    * store's sketch constants plus the clustering threshold: any
-    * change invalidates the labels with the layout. Depends on the
+    * by the cluster-maintenance lifecycle. The labels are exact-
+    * threshold decisions — every candidate is verified by exact
+    * Jaccard — so only the threshold and the table layout invalidate
+    * them; a change of candidate banding re-stamps the store in place.
+    * A label store re-stamped from the two-family layout (minhash 4 × 8
+    * ∪ simhash chunks) keeps any merge the old simhash half found,
+    * which is a true pair at the threshold all the same. Depends on the
     * sketch store — after an in-place source regeneration, refresh
     * the sketch family before (or together with) this one
     * ([[graft.StoreAdmin]] refreshes in dependency order). */
@@ -384,9 +389,9 @@ object LlmOps {
           clusterLayoutKeys),
         foldGuards = Seq("cluster_accept")) { st =>
       graft.engine.CacheRegistry.withRetained {
-        val (sh, bands, chunks) = sketchStore(s, d)
+        val (sh, bands) = sketchStore(s, d)
         writeClusterBase(s, st, d, Dedup.connectedComponents(
-          Dedup.multiSketchPairsFromStore(sh, bands, chunks, threshold = 0.8),
+          Dedup.multiSketchPairsFromStore(sh, bands, threshold = 0.8),
           "doc_a", "doc_b"))
       }
     }
@@ -417,7 +422,8 @@ object LlmOps {
     * partitioned by batch_id, holding per accepted batch exactly the
     * rows [[graft.operators.Dedup.incrementalConnectedComponentsDelta]]
     * emits — changed corpus labels + new nodes. Same
-    * fingerprint-coupled lifecycle and params as the base labels. */
+    * fingerprint-coupled lifecycle, params and re-stamp migration as
+    * the base labels. */
   private[graft] def clusterAcceptStore(s: SparkSession, d: String): DataFrame = {
     import graft.storage.DurableStores
     DurableStores.openDeltaTables(s, d, "cluster_accept",
@@ -445,16 +451,8 @@ object LlmOps {
       lineage: Option[Set[String]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = clusterStore(s, d)
-    val deltas0 = clusterAcceptStore(s, d)
-    // lineage: restrict to a caller-owned batch-id set — the same
-    // isolation q121/q122 apply with their own-batch partition prunes
-    // (the delta store is durable and shared; a foreign accepted batch
-    // must not leak into an oracle-checked gate's label universe)
-    val deltas1 = lineage
-      .map(ls => deltas0.filter(col("batch_id").isin(ls.toSeq: _*)))
-      .getOrElse(deltas0)
-    val deltas = before.map(b => deltas1.filter(col("batch_id") < b))
-      .getOrElse(deltas1)
+    val deltas = graft.storage.DurableStores.scopedDelta(
+      clusterAcceptStore(s, d), lineage, before)
     val latest = deltas
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("node")).orderBy(col("batch_id").desc)))
@@ -486,15 +484,14 @@ object LlmOps {
     graft.storage.DurableStores.acceptBatch(s, d, "cluster_accept",
         batchId, lineage)(clusterAcceptStore(s, d)) { (_, put) =>
     import graft.storage.DurableStores
-    val (sh, bands, chunks) = sketchStore(s, d)
-    val (ash, abands, achunks) = sketchAcceptStore(s, d)
+    val (sh, bands) = sketchStore(s, d)
+    val (ash, abands) = sketchAcceptStore(s, d)
     // prior batches in the SAME lineage under this id (lexicographic
     // monotone contract); the lineage scope keeps an oracle-checked
     // gate's accept chain deterministic on a shared delta store
     def prior(committed: DataFrame): DataFrame =
-      lineage.map(ls => committed.filter(col("batch_id").isin(ls.toSeq: _*)))
-        .getOrElse(committed)
-        .filter(col("batch_id") < batchId).drop("batch_id")
+      DurableStores.scopedDelta(committed, lineage, Some(batchId))
+        .drop("batch_id")
     // the accept contract sketches the batch FIRST (acceptSketchBatch,
     // same id), so on the common path the batch's sketch is already AT
     // REST in its sketch_accept partitions — probe with those and hash
@@ -506,18 +503,17 @@ object LlmOps {
       !DurableStores.foldedBatches(s, d, "sketch_accept").contains(batchId) &&
         DurableStores.committedBatches(s, d, "sketch_accept").contains(batchId)
     graft.engine.CacheRegistry.withRetained {
-      val Seq(bsh, bbands, bchunks) =
+      val Seq(bsh, bbands) =
         if (sketchAtRest)
-          Seq(ash, abands, achunks)
+          Seq(ash, abands)
             .map(_.filter(col("batch_id") === batchId).drop("batch_id"))
         else sketchParts(graft.engine.CacheRegistry.retain(
           Dedup.corpusSketch(batch, idCol, textCol)))
       val bc = Dedup.incrementalPairsBetweenStores(
           sh.unionByName(prior(ash)), bands.unionByName(prior(abands)),
-          chunks.unionByName(prior(achunks)),
-          bsh, bbands, bchunks, threshold = 0.8)
+          bsh, bbands, threshold = 0.8)
         .select(col("batch_doc"), col("corpus_doc"))
-      val bb = Dedup.multiSketchPairsFromStore(bsh, bbands, bchunks,
+      val bb = Dedup.multiSketchPairsFromStore(bsh, bbands,
           threshold = 0.8, spreadVerify = false) // batch-sized frames
         .select(col("doc_a"), col("doc_b"))
       put(clusterAccTable(d), Dedup.incrementalConnectedComponentsDelta(
@@ -539,20 +535,20 @@ object LlmOps {
     * (doc, cluster) decision, merges across batch bridges included. */
   private val q123IncrementalClusters: Q = (s, d) => {
     import s.implicits._
-    val (sh, bands, chunks) = sketchStore(s, d)
+    val (sh, bands) = sketchStore(s, d)
     val stored = clusterStore(s, d)
     val batch = t(s, d, "documents").filter($"doc_id" % 10 === 0)
-    // sketch the batch ONCE, derive both candidate families from the
-    // cached frame (the naive shape — incrementalMinhashPairsFromStore
-    // for cross-edges plus multiSketchPairs for internal edges —
-    // shingles and hashes the same batch text twice)
+    // sketch the batch ONCE, derive both edge sets from the cached
+    // frame (the naive shape — incrementalMinhashPairsFromStore for
+    // cross-edges plus multiSketchPairs for internal edges — shingles
+    // and hashes the same batch text twice)
     val bsk = graft.engine.CacheRegistry.retain(
       Dedup.corpusSketch(batch, "doc_id", "text"))
-    val Seq(bsh, bbands, bchunks) = sketchParts(bsk)
-    val bc = Dedup.incrementalPairsBetweenStores(sh, bands, chunks,
-      bsh, bbands, bchunks, threshold = 0.8)
+    val Seq(bsh, bbands) = sketchParts(bsk)
+    val bc = Dedup.incrementalPairsBetweenStores(sh, bands,
+      bsh, bbands, threshold = 0.8)
       .select($"batch_doc", $"corpus_doc")
-    val bb = Dedup.multiSketchPairsFromStore(bsh, bbands, bchunks,
+    val bb = Dedup.multiSketchPairsFromStore(bsh, bbands,
       threshold = 0.8, spreadVerify = false) // batch-sized frames
       .select($"doc_a", $"doc_b")
     Dedup.incrementalConnectedComponents(stored, bc, bb)
@@ -620,7 +616,7 @@ object LlmOps {
     Dedup.incrementalMinhashPairs(
       Dedup.corpusSketch(docs.filter($"doc_id" % 10 =!= 0), "doc_id", "text"),
       docs.filter($"doc_id" % 10 === 0),
-      "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+      "doc_id", "text", threshold = 0.8)
       .select($"batch_doc", $"corpus_doc", round($"jaccard", 6).as("jaccard"))
   }
 
@@ -640,25 +636,27 @@ object LlmOps {
   }
 
   /** q91's backing store: the corpus sketch written ONCE per data
-    * dir as three catalog parquet tables — shingles bucketed by
-    * doc (the verification join key), band keys bucketed by
-    * (band_id, band_hash), chunk keys bucketed by (chunk_idx,
-    * chunk_value) — the at-rest layout [[graft.operators.Dedup
-    * .corpusSketch]]'s docstring promises. The write-once/read-forever
-    * pattern is q83's (MergeScaleQ.bucketedNested), and the store is
-    * DURABLE via [[graft.storage.DurableStores]] — a later session
-    * re-registers the at-rest files, never rebuilds
-    * (DurableStoreSpec); the gate proves a later ingest batch needs
-    * ONLY these tables, never the corpus text. */
+    * dir as two catalog parquet tables — shingles bucketed by doc (the
+    * verification join key) and band keys bucketed by
+    * (band_id, band_hash) — the at-rest layout [[graft.operators.Dedup
+    * .corpusSketch]]'s docstring promises. The bands are the signature
+    * banded at [[Dedup.SketchK]] × [[Dedup.SketchBands]], the banding
+    * every probe applies to its batch; the params record it. The
+    * write-once/read-forever pattern is q83's
+    * (MergeScaleQ.bucketedNested), and the store is DURABLE via
+    * [[graft.storage.DurableStores]] — a later session re-registers the
+    * at-rest files, never rebuilds (DurableStoreSpec); the gate proves a
+    * later ingest batch needs ONLY these tables, never the corpus
+    * text. */
   // build-params baked into each at-rest layout, shared between the
   // accessor (build-if-absent) and StoreAdmin compact (fold-rebuild):
   // the two writers MUST stamp identical params or the next open would
   // see a mismatch and silently rebuild from source, dropping folds
-  private val sketchParams = "k=32,bands=4,chunks=8,buckets=16"
-  private val sketchAcceptParams = "k=32,bands=4,chunks=8"
+  private val sketchAcceptParams = s"k=${Dedup.SketchK},bands=${Dedup.SketchBands}"
+  private val sketchParams = s"$sketchAcceptParams,buckets=16"
   private val cosineParams = "cells=16"
-  private val clusterParams = "threshold=0.8,k=32,bands=4,chunks=8,layout=bucketed16"
-  private val clusterAcceptParams = "threshold=0.8,k=32,bands=4,chunks=8"
+  private val clusterParams = "threshold=0.8,layout=bucketed16"
+  private val clusterAcceptParams = "threshold=0.8"
 
   // LAYOUT keys per fold family (round 18, r17 verdict item 2): the
   // params keys that determine the at-rest bytes. Every openOrBuild
@@ -667,19 +665,56 @@ object LlmOps {
   // "bounds=prop" shape of the r16 asof bump) upgrades stores in place
   // — builder never runs, folds kept — instead of wedging deployments
   // behind the fold-guard veto. Anyone adding a param that changes
-  // built content MUST add its key to the family's set here.
-  private val sketchLayoutKeys = Set("k", "bands", "chunks", "buckets")
+  // built content MUST add its key to the family's set here. The
+  // cluster labels are exact-threshold decisions, so the candidate
+  // banding is not among their keys.
+  private val sketchLayoutKeys = Set("k", "bands", "buckets")
   private val cosineLayoutKeys = Set("cells")
-  private val clusterLayoutKeys =
-    Set("threshold", "k", "bands", "chunks", "layout")
+  private val clusterLayoutKeys = Set("threshold", "layout")
+
+  /** The sketch families' migration. A bump outside the layout keys
+    * re-stamps in place, like every fold family's. A change of banding
+    * (`k`, `bands`), or a store still holding the simhash-chunk table
+    * of the two-family layout, re-derives the band table from the
+    * stored shingles — the sketch's one input — through `reband`, and
+    * drops every old table the family no longer declares (openOrBuild
+    * deletes them once the new manifest has landed). Nothing is rebuilt
+    * from source, so folded and committed-but-unfolded accept batches
+    * both survive. `reband` gets the kept metas in `tables` order. A
+    * bucket-count change would rewrite the shingles too; it falls
+    * through to the rebuild contract. */
+  private def sketchMigration(params: String, tables: Seq[String])(
+      reband: Seq[graft.storage.DurableStores.TableMeta] => Unit)
+      : graft.storage.DurableStores.Migration = {
+    import graft.storage.DurableStores
+    val sameLayout = DurableStores.reStampMigration(params, sketchLayoutKeys)
+    val sameShingles = DurableStores.reStampMigration(params, Set("buckets"))
+    (oldParams, st, old) => {
+      val kept = tables.flatMap(n => old.find(_.name == n))
+      if (kept.size < tables.size) None
+      else if (kept.size == old.size && sameLayout(oldParams, st, old).isDefined)
+        Some(old)
+      else sameShingles(oldParams, st, kept).map { metas =>
+        reband(metas)
+        metas
+      }
+    }
+  }
+
+  /** The band table of stored (doc, sh) rows, banded as the stores are. */
+  private def bandsOfShingles(sh: DataFrame): DataFrame =
+    Dedup.explodedBands(sh.withColumn("sig", Dedup.minhashSignature(col("sh"))))
 
   private[graft] def sketchStore(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+      s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.storage.DurableStores
-    DurableStores.openOrBuild(s, d, "sketch", sketchTables(d),
+    val tables @ Seq(shT, bandsT) = sketchTables(d)
+    DurableStores.openOrBuild(s, d, "sketch", tables,
         params = sketchParams,
-        migrate = DurableStores.reStampMigration(sketchParams,
-          sketchLayoutKeys),
+        migrate = sketchMigration(sketchParams, tables) {
+          case Seq(_, bandsM) =>
+            DurableStores.rewriteBucketed(s, bandsM, bandsOfShingles(s.table(shT)))
+        },
         foldGuards = Seq("sketch_accept")) { st =>
       graft.engine.CacheRegistry.withRetained {
         writeSketchBase(s, st, d, sketchParts(
@@ -688,32 +723,29 @@ object LlmOps {
             "doc_id", "text"))))
       }
     }
-    val Seq(sh, bands, chunks) = sketchTables(d).map(s.table)
-    (sh, bands, chunks)
+    (s.table(shT), s.table(bandsT))
   }
 
-  /** A sketch's three at-rest parts, in table order: (doc, sh) shingles,
-    * exploded band keys, exploded chunk keys. */
+  /** A sketch's two at-rest parts, in table order: (doc, sh) shingles
+    * and exploded band keys. */
   private def sketchParts(sk: DataFrame): Seq[DataFrame] =
-    Seq(sk.select(col("doc"), col("sh")), Dedup.explodedBands(sk, 32, 4),
-      Dedup.explodedChunks(sk, 8))
+    Seq(sk.select(col("doc"), col("sh")), Dedup.explodedBands(sk))
 
   private def sketchTables(d: String): Seq[String] =
-    Seq("graft_sketch_shingles", "graft_sketch_bands", "graft_sketch_chunks")
+    Seq("graft_sketch_shingles", "graft_sketch_bands")
       .map(graft.storage.Storage.tableNameFor(_, d))
 
   private def sketchAccTables(d: String): Seq[String] =
-    Seq("graft_sketchacc_shingles", "graft_sketchacc_bands",
-      "graft_sketchacc_chunks").map(graft.storage.Storage.tableNameFor(_, d))
+    Seq("graft_sketchacc_shingles", "graft_sketchacc_bands")
+      .map(graft.storage.Storage.tableNameFor(_, d))
 
   /** The sketch base's at-rest layout, written by its source build and
     * by compact's fold: shingles bucketed by doc (the verification join
-    * key), band keys by (band_id, band_hash), chunk keys by
-    * (chunk_idx, chunk_value). */
+    * key), band keys by (band_id, band_hash). */
   private def writeSketchBase(s: SparkSession, st: graft.storage.Storage,
       d: String, parts: Seq[DataFrame]): Seq[graft.storage.DurableStores.TableMeta] =
     sketchTables(d).lazyZip(parts).lazyZip(Seq(Seq("doc"),
-        Seq("band_id", "band_hash"), Seq("chunk_idx", "chunk_value")))
+        Seq("band_id", "band_hash")))
       .map { (tbl, rows, keys) =>
         st.appendBucketed(tbl, rows, keys, numBuckets = 16)
         graft.storage.DurableStores.TableMeta.bucketed(s, tbl, keys, 16)
@@ -726,10 +758,10 @@ object LlmOps {
     * StoreSpec). */
   private val q91IncrementalDedupStored: Q = (s, d) => {
     import s.implicits._
-    val (sh, bands, chunks) = sketchStore(s, d)
-    Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
+    val (sh, bands) = sketchStore(s, d)
+    Dedup.incrementalMinhashPairsFromStore(sh, bands,
       t(s, d, "documents").filter($"doc_id" % 10 === 0),
-      "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+      "doc_id", "text", threshold = 0.8)
       .select($"batch_doc", $"corpus_doc", round($"jaccard", 6).as("jaccard"))
   }
 
@@ -787,26 +819,34 @@ object LlmOps {
       "vec_id", "embedding", threshold = 0.4)
   }
 
-  /** Mutable ACCEPT companion of [[sketchStore]]: three delta tables
+  /** Mutable ACCEPT companion of [[sketchStore]]: two delta tables
     * (same schemas plus a `batch_id` string) hive-partitioned by
     * batch_id, managed by [[graft.storage.DurableStores]] under the
     * same source fingerprint — regenerated source data drops base AND
     * deltas together, so a stale accepted batch can never outlive the
     * corpus it was accepted into. The build creates the tables EMPTY;
-    * [[acceptSketchBatch]] fills one partition per ingest batch.
+    * [[acceptSketchBatch]] fills one partition per ingest batch. A
+    * banding change re-derives the band partition of every batch
+    * present on disk from its shingle partition, as the base does.
     * Returns the committed views. */
   private[graft] def sketchAcceptStore(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+      s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.storage.DurableStores
-    // same params as the base sketch store: if the base layout
+    // same banding params as the base sketch store: if the base layout
     // constants change and it rebuilds, deltas accepted under the old
     // constants must not survive into the new store's probes
-    val Seq(sh, bands, chunks) = DurableStores.openDeltaTables(s, d,
+    val Seq(sh, bands) = DurableStores.openDeltaTables(s, d,
         "sketch_accept", sketchAccTables(d), sketchAcceptParams,
-        DurableStores.reStampMigration(sketchAcceptParams, sketchLayoutKeys))(
+        sketchMigration(sketchAcceptParams, sketchAccTables(d)) {
+          case Seq(shM, bandsM) =>
+            DurableStores.presentBatchPartitions(s, shM.name).foreach { id =>
+              DurableStores.replaceBatchPartition(s, bandsM, id, bandsOfShingles(
+                DurableStores.read(s, shM).filter(col("batch_id") === id)))
+            }
+        })(
       sketchParts(Dedup.corpusSketch(
         t(s, d, "documents").limit(0), "doc_id", "text")))
-    (sh, bands, chunks)
+    (sh, bands)
   }
 
   /** ACCEPT an ingest batch into the sketch store's delta tables: the
@@ -827,7 +867,7 @@ object LlmOps {
       batchId: String, batch: DataFrame, idCol: String,
       textCol: String, lineage: Option[Set[String]] = None): Unit =
     graft.storage.DurableStores.acceptBatch(s, d, "sketch_accept",
-        batchId, lineage)(sketchAcceptStore(s, d)) { case ((ash, _, _), put) =>
+        batchId, lineage)(sketchAcceptStore(s, d)) { case ((ash, _), put) =>
     import graft.storage.DurableStores
     DurableStores.requireFreshBatchIds("sketch", batchId, "doc",
       sketchStore(s, d)._1, ash, batch.select(col(idCol)))
@@ -852,8 +892,8 @@ object LlmOps {
     val docs = t(s, d, "documents")
     acceptSketchBatch(s, d, "b1", docs.filter($"doc_id" % 20 === 0),
       "doc_id", "text", lineage = Some(Set("b1")))
-    val (sh, bands, chunks) = sketchStore(s, d)
-    val (ash, abands, achunks) = sketchAcceptStore(s, d)
+    val (sh, bands) = sketchStore(s, d)
+    val (ash, abands) = sketchAcceptStore(s, d)
     // the delta scan selects ONLY this gate's accepted batch (a
     // partition-pruned read): the delta tables are durable and
     // accumulate real batches across sessions, and an unrelated
@@ -864,9 +904,8 @@ object LlmOps {
     Dedup.incrementalMinhashPairsFromStore(
       sh.unionByName(own(ash)),
       bands.unionByName(own(abands)),
-      chunks.unionByName(own(achunks)),
       docs.filter($"doc_id" % 20 === 10),
-      "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+      "doc_id", "text", threshold = 0.8)
       .select($"batch_doc", $"corpus_doc", round($"jaccard", 6).as("jaccard"))
   }
 
@@ -945,15 +984,13 @@ object LlmOps {
   private[graft] def compactSketchStore(s: SparkSession, d: String): Boolean =
     graft.storage.DurableStores.compactBatches(s, d, "sketch_accept",
         sketchAccTables(d), "sketch")(sketchAcceptStore(s, d)) {
-      case ((ash, abands, achunks), ids, tmp) =>
+      case ((ash, abands), ids, tmp) =>
     import graft.storage.DurableStores
-    val (sh, bands, chunks) = sketchStore(s, d)
+    val (sh, bands) = sketchStore(s, d)
     val folded = Seq(
       DurableStores.foldDelta(s, s"$tmp/shingles", sh, ash, ids, Seq("doc")),
       DurableStores.foldDelta(s, s"$tmp/bands", bands, abands, ids,
-        Seq("doc", "band_id")),
-      DurableStores.foldDelta(s, s"$tmp/chunks", chunks, achunks, ids,
-        Seq("doc", "chunk_idx")))
+        Seq("doc", "band_id")))
     DurableStores.drop(s, d, "sketch")
     DurableStores.openOrBuild(s, d, "sketch", sketchTables(d), sketchParams)(
       writeSketchBase(s, _, d, folded))

@@ -296,18 +296,6 @@ object MergeScaleQ {
   private def mergedTable(d: String): String =
     graft.storage.Storage.tableNameFor("graft_mrgacc_merged", d)
 
-  /** Committed delta rows (`committed`, a view from
-    * [[mergeAcceptStore]]), optionally lineage-scoped and replayed as
-    * of just before a batch id — the same scoping contract as
-    * [[LlmOps.effectiveClusterLabels]]. */
-  private def scopedMergeDelta(committed: DataFrame, before: Option[String],
-      lineage: Option[Set[String]]): DataFrame = {
-    val scoped = lineage
-      .map(ls => committed.filter(col("batch_id").isin(ls.toSeq: _*)))
-      .getOrElse(committed)
-    before.map(b => scoped.filter(col("batch_id") < b)).getOrElse(scoped)
-  }
-
   private val entityKeys = Seq("website_id", "site_submission_id")
 
   /** The CURRENT merged table: [[mergedBaseStore]] with every entity
@@ -323,7 +311,7 @@ object MergeScaleQ {
     import org.apache.spark.sql.expressions.Window
     val base = mergedBaseStore(s, d, incrementalCutoff)
     val (_, mergedD) = mergeAcceptStore(s, d)
-    val latest = scopedMergeDelta(mergedD, before, lineage)
+    val latest = graft.storage.DurableStores.scopedDelta(mergedD, lineage, before)
       .withColumn("rk", row_number().over(
         Window.partitionBy(entityKeys.map(col): _*)
           .orderBy(col("batch_id").desc)))
@@ -367,7 +355,7 @@ object MergeScaleQ {
     graft.storage.DurableStores.acceptBatch(s, d, "merge_log", batchId,
         lineage)(mergeAcceptStore(s, d)) { case ((snapsD, _), put) =>
     val hist = baseHistory(s, d)
-    val prior = scopedMergeDelta(snapsD, Some(batchId), lineage)
+    val prior = graft.storage.DurableStores.scopedDelta(snapsD, lineage, Some(batchId))
       .drop("batch_id")
     val cols = hist.columns.map(col).toIndexedSeq
     val batch = batchSnaps.select(cols: _*)

@@ -367,13 +367,36 @@ object DurableStores {
       else s.sql(s"DROP TABLE `$name`")
     }
 
+  /** Replace the rows of bucketed catalog table `t` — a migration's
+    * rewrite of one derived table. `rows` are written whole, bucketed
+    * as `t` is, to a staging table first (so they may read any store
+    * table, `t` included); the staged directory then replaces `t`'s
+    * with one delete and one rename. `t`'s catalog entry is dropped, so
+    * the next open re-registers it and every session refreshes its
+    * cached relation. */
+  def rewriteBucketed(s: SparkSession, t: TableMeta, rows: DataFrame): Unit = {
+    val st = new Storage(s, root(s))
+    val staging = t.name + "_staging"
+    val (src, dst) = (new Path(st.path(staging)), new Path(st.path(t.name)))
+    val f = fs(s, dst.toString)
+    dropRelation(s, staging)
+    f.delete(src, true)
+    st.appendBucketed(staging, rows, t.layoutCols, t.numBuckets)
+    dropRelation(s, staging)
+    dropRelation(s, t.name)
+    f.delete(dst, true)
+    if (!f.rename(src, dst))
+      throw new java.io.IOException(s"could not move $src to $dst")
+  }
+
   /** Params-only upgrade hook for [[openOrBuild]]: invoked when the
     * manifest's source fingerprint still matches but its build-params
     * string differs — a CODE upgrade over unchanged data. Receives
     * (oldParams, storage, old table metas; the old tables are already
     * registered in the catalog so the hook can ALTER/scan them) and
     * returns the re-stamped metas to record under the NEW params for
-    * an in-place migration, or None to fall through to the historical
+    * an in-place migration (an old table they leave out is deleted once
+    * that manifest has landed), or None to fall through to the historical
     * drop-and-rebuild (which the fold guard may veto — see
     * [[openOrBuild]]). */
   type Migration = (String, Storage, Seq[TableMeta]) => Option[Seq[TableMeta]]
@@ -433,16 +456,17 @@ object DurableStores {
       out
     }
 
-  /** Spec-only: rewrite `store`'s manifest params line in place (the
-    * at-rest files and table metas stay) — simulates a manifest
-    * written by OLDER code so migration paths can be exercised without
-    * keeping old binaries around. */
+  /** Spec-only: rewrite `store`'s manifest params line in place, and
+    * its table metas by `tables` (the at-rest files stay) — simulates a
+    * manifest written by OLDER code so migration paths can be exercised
+    * without keeping old binaries around. */
   private[graft] def reStampManifestParamsForTest(s: SparkSession,
-      dataDir: String, store: String, oldParams: String): Unit =
+      dataDir: String, store: String, oldParams: String,
+      tables: Seq[TableMeta] => Seq[TableMeta] = identity): Unit =
     synchronized {
       val mp = manifestPath(s, store, dataDir)
-      readManifest(s, mp).foreach { case (fp, _, tables) =>
-        writeManifest(s, mp, fp, oldParams, tables)
+      readManifest(s, mp).foreach { case (fp, _, ts) =>
+        writeManifest(s, mp, fp, oldParams, tables(ts))
       }
       verified -= ((root(s), store, dataDir))
     }
@@ -467,7 +491,7 @@ object DurableStores {
     * it — which is also how partitions another process added become
     * visible, with no catalog step. "Current" means the source-data
     * fingerprint AND the caller's `params` string (the build constants
-    * baked into the at-rest layout: sketch k/bands/chunks, index cell
+    * baked into the at-rest layout: sketch k/bands, index cell
     * counts, merge cutoffs, bucket counts) both match — a code change
     * to any build parameter invalidates the store exactly like
     * regenerated source data does, UNLESS the caller supplies a
@@ -516,6 +540,12 @@ object DurableStores {
             migrate(oldP, st, tables).map { newTables =>
               writeManifest(s, mp, fp, params, newTables)
               migrationLog += ((store, oldP, params))
+              // tables the migration dropped go only once the manifest
+              // that no longer lists them has landed: a crash before it
+              // leaves every old table in place, and the next open
+              // reruns the migration
+              dropFiles(s, st, tables.filterNot(t =>
+                newTables.exists(_.name == t.name)))
               newTables
             }
           }
@@ -549,7 +579,7 @@ object DurableStores {
                 "exit), or drop the store explicitly (StoreAdmin drop / " +
                 "DurableStores.drop) to accept the loss.")
           }
-          dropFiles(s, st, mp, m.get._3)
+          dropStore(s, st, mp, m.get._3)
         }
         use.foreach(tables => verified(key) = tables)
         use
@@ -573,17 +603,20 @@ object DurableStores {
     synchronized {
       val st = new Storage(s, root(s))
       val mp = manifestPath(s, store, dataDir)
-      readManifest(s, mp).foreach { case (_, _, t) => dropFiles(s, st, mp, t) }
+      readManifest(s, mp).foreach { case (_, _, t) => dropStore(s, st, mp, t) }
       verified -= ((root(s), store, dataDir))
     }
 
-  private def dropFiles(s: SparkSession, st: Storage, mp: Path,
-      tables: Seq[TableMeta]): Unit = {
+  private def dropFiles(s: SparkSession, st: Storage,
+      tables: Seq[TableMeta]): Unit =
     tables.foreach { t =>
       dropRelation(s, t.name)
-      val f = fs(s, st.path(t.name))
-      f.delete(new Path(st.path(t.name)), true)
+      fs(s, st.path(t.name)).delete(new Path(st.path(t.name)), true)
     }
+
+  private def dropStore(s: SparkSession, st: Storage, mp: Path,
+      tables: Seq[TableMeta]): Unit = {
+    dropFiles(s, st, tables)
     // commit markers, the folded-batch ledger, any writer lease, and
     // sidecar notes live and die with the store's manifest
     fs(s, mp.toString).delete(markerDir(mp), true)
@@ -1130,8 +1163,8 @@ object DurableStores {
     new Path(mp.getParent, mp.getName.stripSuffix(".meta") + ".accepted")
 
   /** Record that EVERY delta-table write of `batchId`'s accept
-    * completed. A multi-table accept (sketch: shingles + bands +
-    * chunks) that crashes partway leaves the delta tables mutually
+    * completed. A multi-table accept (sketch: shingles + bands)
+    * that crashes partway leaves the delta tables mutually
     * inconsistent for that batch — bands without shingles make probes
     * silently drop candidates at the verification join. Probes
     * therefore read only batches listed by [[committedBatches]]; a
@@ -1387,6 +1420,20 @@ object DurableStores {
     }
   }
 
+  /** Committed delta rows (a view [[openDeltaTables]] returned) scoped
+    * the way every replaying reader scopes them: to the batch ids of
+    * `lineage` when one is named — a foreign accepted batch on the
+    * shared store must not leak into an oracle-checked gate — then to
+    * the ids sorting before `before` when one is named, the state an
+    * accept of that batch computes against (lexicographically
+    * monotone ids). */
+  def scopedDelta(committed: DataFrame, lineage: Option[Set[String]],
+      before: Option[String]): DataFrame = {
+    val inLineage = lineage.fold(committed)(ls =>
+      committed.filter(col("batch_id").isin(ls.toSeq: _*)))
+    before.fold(inLineage)(b => inLineage.filter(col("batch_id") < b))
+  }
+
   /** Write `rows` as `table`'s `batch_id=<batchId>` partition, the
     * writer behind [[acceptBatch]]'s `put`: the rows, cast by name to
     * the table's recorded schema (so a union that widened a timestamp
@@ -1403,10 +1450,18 @@ object DurableStores {
       verified.iterator.collect { case ((`r`, _, _), ts) => ts }.flatten
         .find(_.name == table)
     }.getOrElse(sys.error(s"delta table $table is not open under $r"))
+    replaceBatchPartition(s, meta, batchId, rows)
+  }
+
+  /** [[writeBatchPartition]] for a table named by its metadata — also
+    * how a migration rewrites a derived delta table batch by batch. */
+  private[graft] def replaceBatchPartition(s: SparkSession, meta: TableMeta,
+      batchId: String, rows: DataFrame): Unit = {
+    val r = root(s)
     val cols = StructType.fromDDL(meta.schemaDdl).filter(_.name != "batch_id")
       .map(f => col(f.name).cast(f.dataType))
-    val staging = new Path(s"$r/_staging/${table}_${java.util.UUID.randomUUID}")
-    val dst = new Path(new Storage(s, r).path(table), s"batch_id=$batchId")
+    val staging = new Path(s"$r/_staging/${meta.name}_${java.util.UUID.randomUUID}")
+    val dst = new Path(new Storage(s, r).path(meta.name), s"batch_id=$batchId")
     val f = fs(s, staging.toString)
     try {
       rows.select(cols: _*).write.parquet(staging.toString)

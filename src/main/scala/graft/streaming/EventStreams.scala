@@ -130,17 +130,12 @@ object EventStreams {
       stream, dim, keys, eventTime, dimTime, tieBreak, broadcast, maxStale)
   }
 
-  case class SketchedDoc(kind_key: Int, bucket: Long, doc_id: Long,
-      sig: Seq[Long], simhash: Long)
+  case class SketchedDoc(band_id: Int, bucket: Long, doc_id: Long,
+      sig: Seq[Long])
   case class NearDupHit(doc_id: Long, dup_of: Long, est_jaccard: Double)
 
-  /** Chunk bucket keys live at kind_key >= this offset so they can
-    * never collide with band ids (same scheme as the batch
-    * [[graft.operators.Dedup.multiSketchPairs]]). */
-  private val ChunkKindOffset = 1000
-
   /** Streaming NEAR-dup detection — the stateful LSH counterpart of
-    * [[graft.operators.Dedup.minhashLshPairs]]: each doc's minhash
+    * [[graft.operators.Dedup.multiSketchPairs]]: each doc's minhash
     * signature is banded, state lives per (band, hash) bucket, and a
     * new doc is compared only against its bucket's retained signatures
     * (the matching-component fraction is the unbiased minhash estimate
@@ -148,27 +143,16 @@ object EventStreams {
     * threshold.
     *
     * Scale/state design: state per bucket is a FIFO-capped list of
-    * (doc_id, k longs, simhash) — `maxPerBucket` bounds a boilerplate
-    * bucket's state at the cost of missing dups of evicted docs (the
-    * batch LSH job is the backstop, mirroring the reference's
-    * repair-job pattern). A pair colliding in several bands is emitted
-    * ONCE per sketch family: only the LOWEST band whose signature
-    * slices match emits (each band can recompute the colliding-band
-    * set from the two full signatures it already holds, so suppression
-    * needs no extra shuffle or state). Under FIFO eviction, if the
-    * older doc was evicted from that lowest band's bucket but survives
-    * in a higher band's, the BAND family misses the pair.
-    *
-    * Multi-sketch recovery (`chunks > 0`): docs additionally register
-    * in simhash-chunk buckets — the streaming mirror of the batch
-    * [[graft.operators.Dedup.multiSketchPairs]] candidate union.
-    * Chunk buckets verify with the SAME minhash estimate and suppress
-    * within their own family (lowest colliding chunk emits), so a
-    * pair the band family lost to eviction is still emitted in-stream
-    * when any chunk bucket retains the older doc. The two families
-    * are independent: a pair caught by both emits up to twice (once
-    * per family) — downstream dedup consumers key on (doc_id, dup_of)
-    * and are idempotent, exactly like the batch union's `.distinct()`.
+    * (doc_id, k longs) — `maxPerBucket` bounds a boilerplate bucket's
+    * state at the cost of missing dups of evicted docs (the batch LSH
+    * job is the backstop, mirroring the reference's repair-job
+    * pattern). A pair colliding in several bands is emitted ONCE:
+    * only the LOWEST band whose signature slices match emits (each
+    * band can recompute the colliding-band set from the two full
+    * signatures it already holds, so suppression needs no extra
+    * shuffle or state). Under FIFO eviction, if the older doc was
+    * evicted from that lowest band's bucket but survives in a higher
+    * band's, the pair is missed.
     *
     * Determinism: each micro-batch's bucket members are processed in
     * doc_id order, so emissions don't depend on partition arrival
@@ -184,81 +168,52 @@ object EventStreams {
       bands: Int = 8,
       threshold: Double = 0.7,
       maxPerBucket: Int = 64,
-      stateTtlMs: Long = 0L,
-      chunks: Int = 0): Dataset[NearDupHit] = {
+      stateTtlMs: Long = 0L): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
     import graft.operators.Dedup
-    val sketched = docs
+    val keyed = docs
       .select(col("doc_id"),
-        graft.functions.TextHashes.minhashSignature(
-          Dedup.shingles(col("text")), k).as("sig"),
-        Dedup.simhash(col("text")).as("simhash"))
-    val banded = sketched
-      .select(col("doc_id"), col("sig"), col("simhash"),
+        Dedup.minhashSignature(Dedup.shingles(col("text")), k).as("sig"))
+      .select(col("doc_id"), col("sig"),
         explode(Dedup.bandKeys(col("sig"), k, bands)).as("band"))
-      .select(col("band.band_id").cast("int").as("kind_key"),
-        col("band.band_hash").as("bucket"),
-        col("doc_id"), col("sig"), col("simhash"))
-    val bits = if (chunks > 0) 64 / chunks else 0
-    val keyed = (if (chunks <= 0) banded else {
-      val chunked = sketched
-        .select(col("doc_id"), col("sig"), col("simhash"),
-          explode(transform(sequence(lit(0), lit(chunks - 1)), c => struct(
-            (c + ChunkKindOffset).cast("int").as("kind_key"),
-            call_function("shiftright", col("simhash"), c * bits)
-              .bitwiseAND(lit((1L << bits) - 1)).as("bucket")))).as("ch"))
-        .select(col("ch.kind_key").as("kind_key"), col("ch.bucket").as("bucket"),
-          col("doc_id"), col("sig"), col("simhash"))
-      banded.unionByName(chunked)
-    }).as[SketchedDoc]
+      .select(col("band.band_id").cast("int").as("band_id"),
+        col("band.band_hash").as("bucket"), col("doc_id"), col("sig"))
+      .as[SketchedDoc]
     val timeoutConf =
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     val rows = k / bands
     keyed
-      .groupByKey(b => (b.kind_key, b.bucket))
-      .flatMapGroupsWithState[List[(Long, Seq[Long], Long)], NearDupHit](
+      .groupByKey(b => (b.band_id, b.bucket))
+      .flatMapGroupsWithState[List[(Long, Seq[Long])], NearDupHit](
         OutputMode.Append, timeoutConf) {
         (key, batch: Iterator[SketchedDoc],
-            state: GroupState[List[(Long, Seq[Long], Long)]]) =>
+            state: GroupState[List[(Long, Seq[Long])]]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            // family-local suppression: the lowest colliding bucket OF
-            // THIS FAMILY emits the pair (each bucket recomputes the
-            // colliding set from the two sketches it already holds) —
-            // families stay independent so one can recover the
-            // other's eviction miss
+            // the lowest colliding band emits the pair (each bucket
+            // recomputes the colliding set from the two signatures it
+            // already holds)
             def firstCollidingBand(a: Seq[Long], b: Seq[Long]): Int =
               (0 until bands).find { j =>
                 (j * rows until (j + 1) * rows).forall(i => a(i) == b(i))
               }.getOrElse(key._1)
-            def firstCollidingChunk(a: Long, b: Long): Int = {
-              val mask = (1L << bits) - 1
-              (0 until chunks).find { c =>
-                ((a >>> (c * bits)) & mask) == ((b >>> (c * bits)) & mask)
-              }.map(_ + ChunkKindOffset).getOrElse(key._1)
-            }
-            val isChunkBucket = key._1 >= ChunkKindOffset
             var seen = state.getOption.getOrElse(Nil)
             val hits = List.newBuilder[NearDupHit]
             batch.toSeq.sortBy(_.doc_id).foreach { d =>
-              seen.foreach { case (prevId, prevSig, prevSim) =>
+              seen.foreach { case (prevId, prevSig) =>
                 if (prevId != d.doc_id) {
                   val matches = prevSig.iterator.zip(d.sig.iterator).count {
                     case (a, b) => a == b
                   }
                   val est = matches.toDouble / k
-                  val emits =
-                    if (isChunkBucket)
-                      firstCollidingChunk(prevSim, d.simhash) == key._1
-                    else firstCollidingBand(prevSig, d.sig) == key._1
-                  if (est >= threshold && emits)
+                  if (est >= threshold && firstCollidingBand(prevSig, d.sig) == key._1)
                     hits += NearDupHit(d.doc_id, prevId, est)
                 }
               }
-              seen = ((d.doc_id, d.sig, d.simhash) :: seen).take(maxPerBucket)
+              seen = ((d.doc_id, d.sig) :: seen).take(maxPerBucket)
             }
             state.update(seen)
             if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)

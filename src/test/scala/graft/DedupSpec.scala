@@ -78,8 +78,8 @@ class DedupSpec extends AnyFunSuite {
     // 16 bands of 2 rows: catch probability at jaccard 0.6 is ~99.9%
     // (the default 8×4 banding leaves ~33% miss chance for this pair);
     // false candidates are removed by the exact-jaccard filter anyway
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      k = 32, bands = 16, threshold = 0.5)
+    val pairs = Dedup.multiSketchPairs(docs, "doc_id", "text",
+      threshold = 0.5, k = 32, bands = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((0L, 3L))) // exact dup
@@ -107,10 +107,10 @@ class DedupSpec extends AnyFunSuite {
     val corpus = all.filter($"doc_id" % 2 =!= 0)
     val inc = Dedup.incrementalMinhashPairs(
       Dedup.corpusSketch(corpus, "doc_id", "text"), batch,
-      "doc_id", "text", k = 32, bands = 16, threshold = 0.5)
+      "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // ground truth: EXACT batch-vs-corpus Jaccard (no sketch) — the
-    // multi-sketch candidates must reach every true pair here
+    // band candidates must reach every true pair here
     val whole = batch
       .select($"doc_id".as("ba"), Dedup.shingles($"text").as("sa"))
       .crossJoin(corpus
@@ -147,7 +147,7 @@ class DedupSpec extends AnyFunSuite {
       }
       def run(maxBroadcastDocs: Long) = Dedup.incrementalMinhashPairs(
         Dedup.corpusSketch(corpus, "doc_id", "text"), batch,
-        "doc_id", "text", k = 32, bands = 16, threshold = 0.5,
+        "doc_id", "text", threshold = 0.5,
         maxBroadcastBatchDocs = maxBroadcastDocs)
       // batch over the threshold: NO broadcast hint — the candidate
       // joins shuffle instead of risking the broadcast hard limit
@@ -157,9 +157,9 @@ class DedupSpec extends AnyFunSuite {
       assert(bigPairs === Set((0L, 1L), (2L, 3L))) // answer unchanged
       graft.engine.CacheRegistry.releaseAll()
       // batch under the threshold: hint applies, corpus side never
-      // shuffles for candidate generation (both candidate joins BHJ)
+      // shuffles for candidate generation (the band join is a BHJ)
       val small = run(maxBroadcastDocs = 1000000L)
-      assert(bhjCount(small) >= 2, "small batch must broadcast its bucket keys")
+      assert(bhjCount(small) >= 1, "small batch must broadcast its bucket keys")
       assert(small.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
         Set((0L, 1L), (2L, 3L)))
     } finally {
@@ -607,30 +607,11 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val sk = Dedup.corpusSketch(corpus, "doc_id", "text")
     val stored = Dedup.multiSketchPairsFromStore(
-      sk.select($"doc", $"sh"),
-      Dedup.explodedBands(sk, 32, 4), Dedup.explodedChunks(sk, 8),
-      threshold = 0.5)
+      sk.select($"doc", $"sh"), Dedup.explodedBands(sk), threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(stored === inline)
     assert(stored.exists(p => p._1 == 0L && p._2 == 3L && p._3 == 1.0))
     graft.engine.CacheRegistry.releaseAll()
-  }
-
-  test("multiSketchPairs is exactly the union of the simhash and minhash single-family paths") {
-    // the two single-family paths generate the same two candidate sets
-    // (simhash chunks = 8 at Hamming <= 7, minhash 32 × 4 bands) and
-    // verify them the same way, so the union is exact, not approximate
-    val docs = DedupPipelineSpec.frame(spark, DedupPipelineSpec.tieRich)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      graft.engine.CacheRegistry.withRetained(df.collect().map(_.toString).toSet)
-    val threshold = 0.6
-    val simhash = rows(graft.operators.SimhashPairs.verifiedPairs(docs, "doc_id", "text",
-      threshold, chunks = 8))
-    val minhash = rows(Dedup.minhashLshPairs(docs, "doc_id", "text",
-      k = 32, bands = 4, threshold = threshold))
-    val multi = rows(Dedup.multiSketchPairs(docs, "doc_id", "text", threshold))
-    assert(simhash.nonEmpty && minhash.nonEmpty)
-    assert(multi === simhash ++ minhash)
   }
 
   test("within-corpus cosine pairs from the stored index equal the bucketed inline path") {

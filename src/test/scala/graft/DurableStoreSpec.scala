@@ -223,20 +223,17 @@ class DurableStoreSpec extends AnyFunSuite {
       coldCatalog(
         Storage.tableNameFor("graft_sketch_shingles", data),
         Storage.tableNameFor("graft_sketch_bands", data),
-        Storage.tableNameFor("graft_sketch_chunks", data),
         Storage.tableNameFor("graft_sketchacc_shingles", data),
-        Storage.tableNameFor("graft_sketchacc_bands", data),
-        Storage.tableNameFor("graft_sketchacc_chunks", data))
-      val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, data)
-      val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, data)
+        Storage.tableNameFor("graft_sketchacc_bands", data))
+      val (sh, bands) = graft.queries.LlmOps.sketchStore(s, data)
+      val (ash, abands) = graft.queries.LlmOps.sketchAcceptStore(s, data)
       // the cold open lists the committed batch from disk
       assert(ash.count() === 1)
       val pairs = graft.operators.Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(ash.drop("batch_id")),
         bands.unionByName(abands.drop("batch_id")),
-        chunks.unionByName(achunks.drop("batch_id")),
         Seq((900100L, dup)).toDF("doc_id", "text"),
-        "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+        "doc_id", "text", threshold = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(pairs.toSeq === Seq((900100L, 900001L, 1.0)))
       graft.engine.CacheRegistry.releaseAll()
@@ -468,13 +465,16 @@ class DurableStoreSpec extends AnyFunSuite {
         assert(s.table(tables.head).count() > 0,
           s"$store: the migrated store must still serve")
       }
-      // a LAYOUT-key bump must still fall through to the rebuild
-      // contract — which the fold guard vetoes while folds exist, with
-      // the veto message naming the non-destructive exit (r17 item 6)
+      // a LAYOUT-key bump no migration can re-derive (the sketch
+      // family re-derives its bands from the shingles, but a bucket
+      // count is the shingles' own layout) must still fall through to
+      // the rebuild contract — which the fold guard vetoes while folds
+      // exist, with the veto message naming the non-destructive exit
+      // (r17 item 6)
       val Some((skParams, skTables)) =
         DurableStores.manifestSummaryForTest(s, data, "sketch")
       DurableStores.reStampManifestParamsForTest(s, data, "sketch",
-        skParams.replace("k=32", "k=31"))
+        skParams.replace("buckets=16", "buckets=8"))
       coldCatalog(skTables: _*)
       val ex = intercept[RuntimeException] {
         graft.queries.LlmOps.sketchStore(s, data)
@@ -594,6 +594,98 @@ class DurableStoreSpec extends AnyFunSuite {
         s"migration must record the bounds property, got $props")
       assert(DurableStores.readNote(s, data, "asof_dim", "ts_bounds")
         .isDefined, "migration must re-derive the bounds note")
+    }
+  }
+
+  test("a two-family sketch store upgrades in place: bands re-derived, chunk tables gone, folded and unfolded batches kept") {
+    // the layout before one-family banding: 4 × 8 bands plus a simhash
+    // chunk table, in the base and in the accept store, with params
+    // naming both. A rebuild from source would be vetoed (a folded
+    // batch lives only in the base) and would drop the committed but
+    // unfolded batch; the migration re-derives the 8 × 4 bands from the
+    // stored shingles instead
+    withScratch(Seq("sketch", "sketch_accept")) { (root, data) =>
+      val s = spark
+      import s.implicits._
+      import graft.operators.Dedup
+      import graft.queries.LlmOps
+      import DurableStores.TableMeta
+      val foldedText = "migration folded batch alpha beta gamma delta epsilon zeta eta"
+      val unfoldedText = "migration unfolded batch one two three four five six seven"
+      LlmOps.sketchStore(s, data)
+      LlmOps.acceptSketchBatch(s, data, "m1",
+        Seq((990001L, foldedText)).toDF("doc_id", "text"), "doc_id", "text")
+      assert(LlmOps.compactSketchStore(s, data))
+      LlmOps.acceptSketchBatch(s, data, "m2",
+        Seq((990002L, unfoldedText)).toDF("doc_id", "text"), "doc_id", "text")
+      graft.engine.CacheRegistry.releaseAll()
+      val st = new Storage(s, root)
+      val Seq(shT, bandsT, chunksT) = Seq("graft_sketch_shingles",
+        "graft_sketch_bands", "graft_sketch_chunks").map(Storage.tableNameFor(_, data))
+      val Seq(ashT, abandsT, achunksT) = Seq("graft_sketchacc_shingles",
+        "graft_sketchacc_bands", "graft_sketchacc_chunks").map(Storage.tableNameFor(_, data))
+      def oldBands(sh: org.apache.spark.sql.DataFrame) = Dedup.explodedBands(
+        sh.withColumn("sig", Dedup.minhashSignature($"sh")), 32, 4)
+      // the chunk rows' layout is what matters here, not their values
+      def oldChunks(sh: org.apache.spark.sql.DataFrame) = sh
+        .select($"doc", graft.functions.TextHashes.simhash64($"sh").as("simhash"))
+        .select($"doc", $"simhash", explode(sequence(lit(0), lit(7))).as("chunk_idx"))
+        .withColumn("chunk_value", call_function("shiftright", $"simhash",
+          $"chunk_idx" * 8).bitwiseAND(lit(255L)))
+      // the base in the old layout
+      DurableStores.rewriteBucketed(s,
+        TableMeta.bucketed(s, bandsT, Seq("band_id", "band_hash"), 16),
+        oldBands(s.table(shT)))
+      st.appendBucketed(chunksT, oldChunks(s.table(shT)),
+        Seq("chunk_idx", "chunk_value"), 16)
+      DurableStores.reStampManifestParamsForTest(s, data, "sketch",
+        "k=32,bands=4,chunks=8,buckets=16",
+        _ :+ TableMeta.bucketed(s, chunksT, Seq("chunk_idx", "chunk_value"), 16))
+      // the accept store in the old layout: the unfolded batch's bands
+      // and chunks
+      val (ash, abands) = LlmOps.sketchAcceptStore(s, data)
+      val accMetas = Seq(ashT -> ash, abandsT -> abands)
+        .map { case (t, df) => TableMeta.partitioned(t, Seq("batch_id"), df.schema) }
+      val m2 = DurableStores.read(s, accMetas(0)).filter($"batch_id" === "m2")
+      DurableStores.replaceBatchPartition(s, accMetas(1), "m2", oldBands(m2))
+      val achunks = oldChunks(m2)
+      val achunksMeta = TableMeta.partitioned(achunksT, Seq("batch_id"),
+        achunks.withColumn("batch_id", lit("m2")).schema)
+      DurableStores.replaceBatchPartition(s, achunksMeta, "m2", achunks)
+      DurableStores.reStampManifestParamsForTest(s, data, "sketch_accept",
+        "k=32,bands=4,chunks=8", _ :+ achunksMeta)
+      graft.engine.CacheRegistry.releaseAll()
+      def shingleFiles() = storeMtimes(root)
+        .filter(f => f._1.contains(shT) || f._1.contains(ashT))
+      val shingledAt = shingleFiles()
+      assert(shingledAt.nonEmpty)
+      coldCatalog(shT, bandsT, chunksT)
+      DurableStores.drainMigrationLog()
+      val (sh, bands) = LlmOps.sketchStore(s, data)
+      val (ash2, abands2) = LlmOps.sketchAcceptStore(s, data)
+      val ran = DurableStores.drainMigrationLog()
+      assert(ran.map(r => (r._1, r._2)).toSet === Set(
+        ("sketch", "k=32,bands=4,chunks=8,buckets=16"),
+        ("sketch_accept", "k=32,bands=4,chunks=8")), s"migrations logged: $ran")
+      assert(shingleFiles() === shingledAt, "the migration rebuilt the shingles")
+      assert(!Files.exists(Paths.get(st.path(chunksT))) &&
+        !Files.exists(Paths.get(st.path(achunksT))), "chunk tables left on disk")
+      assert(DurableStores.manifestSummaryForTest(s, data, "sketch")
+        .map(_._2) === Some(Seq(shT, bandsT)))
+      assert(DurableStores.manifestSummaryForTest(s, data, "sketch_accept")
+        .map(_._2) === Some(Seq(ashT, abandsT)))
+      assert(bands.select("band_id").distinct().count() === 8L)
+      assert(abands2.select("band_id").distinct().count() === 8L)
+      assert(DurableStores.foldedBatches(s, data, "sketch_accept") === Set("m1"))
+      assert(DurableStores.committedBatches(s, data, "sketch_accept") === Set("m2"))
+      val pairs = Dedup.incrementalMinhashPairsFromStore(
+          sh.unionByName(ash2.drop("batch_id")),
+          bands.unionByName(abands2.drop("batch_id")),
+          Seq((990101L, foldedText), (990102L, unfoldedText)).toDF("doc_id", "text"),
+          "doc_id", "text", threshold = 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.engine.CacheRegistry.releaseAll()
+      assert(pairs === Set((990101L, 990001L), (990102L, 990002L)))
     }
   }
 
@@ -717,8 +809,8 @@ class DurableStoreSpec extends AnyFunSuite {
         "doc_id", "text")
     // (base shingle rows, committed delta doc ids)
     def read(x: SparkSession): (Long, Set[Long]) = {
-      val (sh, _, _) = graft.queries.LlmOps.sketchStore(x, data)
-      val (ash, _, _) = graft.queries.LlmOps.sketchAcceptStore(x, data)
+      val (sh, _) = graft.queries.LlmOps.sketchStore(x, data)
+      val (ash, _) = graft.queries.LlmOps.sketchAcceptStore(x, data)
       val out = (sh.count(), ash.select("doc").collect().map(_.getLong(0)).toSet)
       graft.engine.CacheRegistry.releaseAll()
       out

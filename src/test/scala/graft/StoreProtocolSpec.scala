@@ -141,8 +141,7 @@ class StoreProtocolSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     checkProtocol(new Family("sketch_accept",
-      Seq("graft_sketchacc_bands", "graft_sketchacc_chunks",
-        "graft_sketchacc_shingles"),
+      Seq("graft_sketchacc_bands", "graft_sketchacc_shingles"),
       (id, lin) => graft.queries.LlmOps.acceptSketchBatch(s, sf, id,
         docs(id), "doc_id", "text", lineage = lin),
       () => graft.queries.LlmOps.compactSketchStore(s, sf),

@@ -29,8 +29,7 @@ class StoreSpec extends AnyFunSuite {
     val q91 = graft.queries.LlmOps.queries("q91_incremental_dedup_stored")(s, sf)
     q91.collect()
     val plan = PlanShape.render(q91)
-    for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands",
-        "graft_sketch_chunks"))
+    for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands"))
       assert(plan.contains(tbl), s"persisted table $tbl not in plan:\n$plan")
     val stored = q91.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -47,15 +46,15 @@ class StoreSpec extends AnyFunSuite {
     // batch arrives as a fresh in-memory frame — the plan must contain
     // no parquet scan of the documents table anywhere, proving the
     // corpus text is never re-read once the sketch is at rest
-    val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
+    val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
     val corpusText = Tables.t(s, sf, "documents")
       .filter($"doc_id" % 10 =!= 0)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val batch = Seq((1000000L, corpusText.head._2), // dup of a corpus doc
       (1000001L, "a fresh never seen sentence about nothing in particular"))
       .toDF("doc_id", "text")
-    val out = Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
-      batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+    val out = Dedup.incrementalMinhashPairsFromStore(sh, bands,
+      batch, "doc_id", "text", threshold = 0.8)
     out.collect()
     val plan = PlanShape.render(out)
     assert(!plan.contains("documents.parquet"),
@@ -102,7 +101,7 @@ class StoreSpec extends AnyFunSuite {
     import s.implicits._
     // a batch-bounded probe must not STREAM the corpus-scale sketch
     // tables: the candidate doc ids (verification) and the batch's
-    // band/chunk keys (candidate generation) are collected — bounded,
+    // band keys (candidate generation) are collected — bounded,
     // batch-proportional — and pushed into the parquet scans as an
     // exact InSet row filter plus a range-cover pushdown, so sorted
     // row groups/pages outside the candidate set never decode. The
@@ -112,20 +111,19 @@ class StoreSpec extends AnyFunSuite {
     // this gate-scale fixture.)
     System.setProperty("graft.probe.prune", "force")
     try {
-    val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
+    val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
     val corpusText = Tables.t(s, sf, "documents")
       .filter($"doc_id" % 10 =!= 0)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val batch = Seq((1000000L, corpusText.head._2),
       (1000001L, "a fresh never seen sentence about nothing at all"))
       .toDF("doc_id", "text")
-    val out = Dedup.incrementalMinhashPairsFromStore(sh, bands, chunks,
-      batch, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+    val out = Dedup.incrementalMinhashPairsFromStore(sh, bands,
+      batch, "doc_id", "text", threshold = 0.8)
     out.collect()
     val plan = PlanShape.render(out)
     for ((tbl, key) <- Seq("graft_sketch_shingles" -> "doc",
-        "graft_sketch_bands" -> "band_hash",
-        "graft_sketch_chunks" -> "chunk_value")) {
+        "graft_sketch_bands" -> "band_hash")) {
       val scanLine = plan.linesIterator
         .find(l => l.contains(tbl) && l.contains("PushedFilters"))
       assert(scanLine.exists(l => l.contains(s"($key,")),
@@ -148,13 +146,12 @@ class StoreSpec extends AnyFunSuite {
     // short-circuit at this edge count), so the store contract is
     // pinned on the PAIRS plan — the stage the store exists to
     // amortize; the full query's decision ledger is checked after
-    val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
-    val pairs = Dedup.multiSketchPairsFromStore(sh, bands, chunks,
+    val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
+    val pairs = Dedup.multiSketchPairsFromStore(sh, bands,
       threshold = 0.8)
     pairs.collect()
     val pairsPlan = PlanShape.render(pairs)
-    for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands",
-        "graft_sketch_chunks"))
+    for (tbl <- Seq("graft_sketch_shingles", "graft_sketch_bands"))
       assert(pairsPlan.contains(tbl),
         s"persisted table $tbl not in pairs plan:\n$pairsPlan")
     assert(!pairsPlan.contains("documents.parquet"),
@@ -216,20 +213,19 @@ class StoreSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       graft.queries.LlmOps.acceptSketchBatch(s, sf, "spec_b2", b2, "doc_id", "text",
         lineage = Some(Set("spec_b1", "spec_b2")))
-      val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
+      val (ash, abands) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
       assert(ash.count() === n1 + 1)
       assert(ash.select("batch_id").distinct().collect().map(_.getString(0)).toSet
         === Set("spec_b1", "spec_b2"))
       // a later probe batch duplicating an ACCEPTED doc finds it through
       // base ∪ delta — the lifecycle the accept path exists for
-      val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
+      val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
       val probe = Seq((900100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
         .toDF("doc_id", "text")
       val pairs = Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(ash.drop("batch_id")),
         bands.unionByName(abands.drop("batch_id")),
-        chunks.unionByName(achunks.drop("batch_id")),
-        probe, "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+        probe, "doc_id", "text", threshold = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(pairs.toSeq === Seq((900100L, 900001L, 1.0)))
       graft.engine.CacheRegistry.releaseAll()
@@ -1078,8 +1074,7 @@ class StoreSpec extends AnyFunSuite {
         "doc_id", "text", lineage = own)
       def partitionMtimes(): Map[String, Long] = {
         val root = DurableStores.root(s)
-        Seq("graft_sketchacc_shingles", "graft_sketchacc_bands",
-          "graft_sketchacc_chunks").flatMap { t =>
+        Seq("graft_sketchacc_shingles", "graft_sketchacc_bands").flatMap { t =>
           val p = new Path(
             s"$root/${Storage.tableNameFor(t, sf)}/batch_id=rp_b1")
           val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1096,7 +1091,7 @@ class StoreSpec extends AnyFunSuite {
         "a committed batch's replay must not rewrite partitions")
       // crash simulation: a second batch's rows land in ONE table with
       // no marker (the mid-accept crash window) — the accept must NOT
-      // short-circuit, it heals all three tables and then commits
+      // short-circuit, it heals both tables and then commits
       val b2 = Seq(
         (910052L, "healing path evidence document unique hobgoblinry"))
         .toDF("doc_id", "text")
@@ -1111,7 +1106,7 @@ class StoreSpec extends AnyFunSuite {
         "doc_id", "text", lineage = own2)
       assert(DurableStores.committedBatches(s, sf, "sketch_accept")
         .contains("rp_b2"), "the healing re-accept must commit")
-      val (_, abands, _) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
+      val (_, abands) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
       assert(abands.filter(col("batch_id") === "rp_b2").count() > 0L,
         "the healing re-accept must fill the tables the crash missed")
       graft.engine.CacheRegistry.releaseAll()
@@ -1161,14 +1156,13 @@ class StoreSpec extends AnyFunSuite {
         Seq((910001L, text)).toDF("doc_id", "text"), "doc_id", "text",
         lineage = Some(Set("cpt_b1")))
       def probePairs(): Set[(Long, Long, Double)] = {
-        val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
-        val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
+        val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
+        val (ash, abands) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
         val out = Dedup.incrementalMinhashPairsFromStore(
           sh.unionByName(ash.drop("batch_id")),
           bands.unionByName(abands.drop("batch_id")),
-          chunks.unionByName(achunks.drop("batch_id")),
           Seq((910100L, text)).toDF("doc_id", "text"),
-          "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+          "doc_id", "text", threshold = 0.8)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         graft.engine.CacheRegistry.releaseAll()
         out
@@ -1187,7 +1181,7 @@ class StoreSpec extends AnyFunSuite {
         .contains("cpt_b1"))
       // identical probe answers from the base alone
       assert(probePairs() === before)
-      val (sh2, _, _) = graft.queries.LlmOps.sketchStore(s, sf)
+      val (sh2, _) = graft.queries.LlmOps.sketchStore(s, sf)
       assert(sh2.filter(col("doc") === 910001L).count() === 1L)
       // idempotent: nothing left to fold
       assert(!graft.queries.LlmOps.compactSketchStore(s, sf))
@@ -1200,7 +1194,7 @@ class StoreSpec extends AnyFunSuite {
       assert(graft.queries.LlmOps.sketchAcceptStore(s, sf)._1.count() === 0L)
       assert(probePairs() === before)
       // a NEW batch id re-presenting the folded doc id is a real
-      // collision — it would double every shingle/band/chunk row in
+      // collision — it would double every shingle/band row in
       // probes' base ∪ delta union — and fails fast
       val ex = intercept[IllegalArgumentException] {
         graft.queries.LlmOps.acceptSketchBatch(s, sf, "cpt_b1_again",

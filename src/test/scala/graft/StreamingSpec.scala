@@ -35,14 +35,13 @@ class StreamingSpec extends AnyFunSuite {
         .write.mode("append").parquet(s"$dir/in")
     // the q121 probe shape: base ∪ COMMITTED deltas
     def probe(text: String): Set[Long] = {
-      val (sh, bands, chunks) = graft.queries.LlmOps.sketchStore(s, sf)
-      val (ash, abands, achunks) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
+      val (sh, bands) = graft.queries.LlmOps.sketchStore(s, sf)
+      val (ash, abands) = graft.queries.LlmOps.sketchAcceptStore(s, sf)
       def committed(df: org.apache.spark.sql.DataFrame) = df.drop("batch_id")
       val out = graft.operators.Dedup.incrementalMinhashPairsFromStore(
         sh.unionByName(committed(ash)), bands.unionByName(committed(abands)),
-        chunks.unionByName(committed(achunks)),
         Seq((999999L, text)).toDF("doc_id", "text"),
-        "doc_id", "text", k = 32, bands = 4, threshold = 0.8)
+        "doc_id", "text", threshold = 0.8)
         .collect().map(_.getLong(1)).toSet
       graft.engine.CacheRegistry.releaseAll()
       out
@@ -305,112 +304,17 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(ctrlHits.contains((3L, 1L)),
       s"control without eviction should emit the pair, got $ctrlHits")
+    assert(!ctrlHits.exists(h => Set(h._1, h._2).contains(2L)),
+      s"filler must stay clean, got $ctrlHits")
     // and the batch LSH job is the backstop that recovers exactly it
-    val batchPairs = Dedup.minhashLshPairs(
+    val batchPairs = Dedup.multiSketchPairs(
       Seq((1L, texts(aId)), (2L, texts(fId)), (3L, texts(bId)))
-        .toDF("doc_id", "text"), "doc_id", "text", k, bands, threshold)
+        .toDF("doc_id", "text"), "doc_id", "text", threshold, k, bands)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.engine.CacheRegistry.releaseAll()
     assert(batchPairs.contains((1L, 3L)),
       s"batch backstop must recover the evicted pair, got $batchPairs")
-  }
-
-  test("near-dup stream multi-sketch: a band-eviction miss is recovered in-stream by a chunk collision") {
-    val s = spark
-    import s.implicits._
-    import graft.operators.Dedup
-    val k = 32; val bands = 8; val threshold = 0.7
-    val chunks = 8; val bits = 64 / chunks; val mask = (1L << bits) - 1
-    // Same adversarial triple shape as the eviction test — (A, B) a
-    // true near-dup pair, F filler that evicts A from their LOWEST
-    // colliding band bucket at maxPerBucket=1 — plus two chunk-side
-    // conditions: (A, B) share at least one simhash chunk, and F does
-    // NOT occupy A's bucket at their lowest shared chunk (so the chunk
-    // family retains A where the band family lost it).
-    val rnd = new scala.util.Random(99)
-    val baseWords = (0 until 40).map(i => s"tok$i")
-    val aText = baseWords.mkString(" ")
-    val bCandidates = (0 until 12).map { i =>
-      baseWords.updated(30 + i % 9, s"chg$i").mkString(" ") }
-    val fCandidates = (0 until 400).map { i =>
-      var w = baseWords
-      val n = 8 + rnd.nextInt(12)
-      (0 until n).foreach(_ =>
-        w = w.updated(rnd.nextInt(40), s"f${i}x${rnd.nextInt(1000)}"))
-      w.mkString(" ")
-    }
-    val all = (Seq(aText) ++ bCandidates ++ fCandidates).zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }
-    val info = all.toDF("id", "text")
-      .select($"id",
-        Dedup.minhashSignature(Dedup.shingles($"text"), k).as("sig"),
-        Dedup.bandKeys(
-          Dedup.minhashSignature(Dedup.shingles($"text"), k), k, bands)
-          .as("bk"),
-        Dedup.simhash($"text").as("sim"))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getSeq[Long](1),
-        r.getSeq[org.apache.spark.sql.Row](2).map(_.getLong(1)),
-        r.getLong(3))))
-      .toMap
-    def est(x: Long, y: Long): Double =
-      info(x)._1.zip(info(y)._1).count(p => p._1 == p._2).toDouble / k
-    def collidingBands(x: Long, y: Long): Seq[Int] =
-      (0 until bands).filter(j => info(x)._2(j) == info(y)._2(j))
-    def chunkVal(x: Long, c: Int): Long = (info(x)._3 >>> (c * bits)) & mask
-    def collidingChunks(x: Long, y: Long): Seq[Int] =
-      (0 until chunks).filter(c => chunkVal(x, c) == chunkVal(y, c))
-    val aId = 0L
-    val found = (for {
-      bId <- (1L to bCandidates.length.toLong).iterator
-      if est(aId, bId) >= threshold
-      cBands = collidingBands(aId, bId)
-      if cBands.nonEmpty
-      j = cBands.min
-      cChunks = collidingChunks(aId, bId)
-      if cChunks.nonEmpty
-      cm = cChunks.min
-      fId <- (bCandidates.length + 1L until all.length.toLong).iterator
-      if est(fId, aId) < threshold && est(fId, bId) < threshold
-      if info(fId)._2(j) == info(aId)._2(j) // F evicts A from band j
-      if chunkVal(fId, cm) != chunkVal(aId, cm) // A survives in chunk cm
-    } yield (bId, fId)).buffered.headOption
-    assert(found.isDefined,
-      "seeded search found no (B, F) triple with a chunk-recoverable band miss")
-    val (bId, fId) = found.get
-    val texts = all.toMap
-    def runStream(chunksOn: Int, name: String): Seq[(Long, Long)] = {
-      val dir = Files.createTempDirectory(s"graft_msk_$name").toString
-      new java.io.File(s"$dir/in").mkdirs()
-      def writeBatch(rows: Seq[(Long, String)]): Unit =
-        rows.toDF("doc_id", "text").write.mode("append").parquet(s"$dir/in")
-      writeBatch(Seq((1L, texts(aId))))
-      val schema = s.read.parquet(s"$dir/in").schema
-      val q = EventStreams.nearDupDocStream(
-        s.readStream.schema(schema).parquet(s"$dir/in"),
-        k = k, bands = bands, threshold = threshold, maxPerBucket = 1,
-        chunks = chunksOn)
-        .writeStream.format("memory").queryName(s"msk_$name")
-        .outputMode("append").option("checkpointLocation", s"$dir/ckpt").start()
-      q.processAllAvailable()
-      writeBatch(Seq((2L, texts(fId))))
-      q.processAllAvailable()
-      writeBatch(Seq((3L, texts(bId))))
-      q.processAllAvailable(); q.stop()
-      s.table(s"msk_$name")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-    // bands only: the documented eviction miss
-    val bandHits = runStream(chunksOn = 0, "bandsonly")
-    assert(!bandHits.contains((3L, 1L)),
-      s"band family should miss under eviction, got $bandHits")
-    // multi-sketch: the chunk family emits the SAME pair in-stream
-    val unionHits = runStream(chunksOn = chunks, "union")
-    assert(unionHits.contains((3L, 1L)),
-      s"chunk family should recover the band eviction, got $unionHits")
-    assert(!unionHits.exists(h => Set(h._1, h._2).contains(2L)),
-      s"filler must stay clean, got $unionHits")
   }
 
   test("streaming merged-users maintenance: each micro-batch leaves the materialized table hash-equal to the full merge") {
