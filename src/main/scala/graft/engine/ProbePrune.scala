@@ -30,10 +30,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * [[graft.storage.Storage.appendBucketed]] sorts every store by its
   * bucket keys at write time, so the skip fraction grows with corpus
   * size: at gate scale a table is a handful of row groups, at 100 TB
-  * it is millions, of which a batch names thousands. Above `maxIds` —
-  * a backfill-sized probe — the prune is skipped and the join reverts
-  * to the full stream (at that batch size the scan amortizes; an
-  * unbounded collect would not).
+  * it is millions, of which a batch names thousands. Past
+  * [[DriverLocal]]'s bound — a backfill-sized probe — the prune is
+  * skipped and the join reverts to the full stream (at that batch size
+  * the scan amortizes; an unbounded collect would not).
   *
   * Below `minTableBytes` the table is returned as it is, with no probe
   * job. The gate measures what the table scans: the summed
@@ -45,23 +45,17 @@ import org.apache.spark.sql.functions.{col, lit}
   * 256 MB, so every incremental refresh paid the probe. */
 object ProbePrune {
 
-  /** Ops escape hatch (and the A/B lever the measured claims come
-    * from): GRAFT_PROBE_PRUNE=off disables pruning entirely, =inset
-    * keeps only the row-level InSet filter (no range pushdown),
-    * =force prunes regardless of table size (specs pin the pushdown
-    * plan on gate-scale fixtures). The system property
-    * graft.probe.prune overrides, for in-JVM tests. */
-  private def mode: String =
-    sys.props.get("graft.probe.prune")
-      .orElse(sys.env.get("GRAFT_PROBE_PRUNE")).getOrElse("full")
+  /** The system property `graft.probe.prune=force` prunes regardless
+    * of table size: specs pin the pushdown plan on gate-scale
+    * fixtures. */
+  private def forced = sys.props.get("graft.probe.prune").contains("force")
 
   /** `table` restricted to the values of `probe`'s `probeCol` in its
     * `tableCol`, with the bounded-collect / InSet / range-cover
     * contract above. */
   def pruneToProbeKeys(table: DataFrame, tableCol: String,
-      probe: DataFrame, probeCol: String, maxIds: Int = 100000,
+      probe: DataFrame, probeCol: String,
       maxRanges: Int = 256, minTableBytes: Long = 256L << 20): DataFrame = {
-    if (mode == "off") return table
     // pruning has a FIXED cost (a bounded collect job on the probe
     // side, plus per-row predicate evaluation on the rows that do
     // decode) and a benefit proportional to the table bytes skipped —
@@ -70,23 +64,19 @@ object ProbePrune {
     // gate-scale accept probes ran ~1.5x slower with pruning forced
     // on, while the 262k-doc sweep point ran 1.8x faster with it).
     // Catalyst file-level stats make the decision free.
-    if (mode != "force" && scannedBytes(table) < BigInt(minTableBytes))
+    if (!forced && scannedBytes(table) < BigInt(minTableBytes))
       return table
-    val ids = probe.select(col(probeCol)).distinct().limit(maxIds + 1)
-      .collect().map(_.get(0))
-    if (ids.length > maxIds) table
-    else if (ids.isEmpty) table.limit(0)
-    else if (mode == "inset") table.filter(col(tableCol).isInCollection(ids))
-    else {
-      val exact = table.filter(col(tableCol).isInCollection(ids))
-      rangeCover(ids, maxRanges) match {
-        case Some(ranges) =>
+    DriverLocal.collect(probe.select(col(probeCol)).distinct()) match {
+      case None => table
+      case Some(rows) if rows.isEmpty => table.limit(0)
+      case Some(rows) =>
+        val ids = rows.map(_.get(0))
+        val exact = table.filter(col(tableCol).isInCollection(ids))
+        rangeCover(ids, maxRanges).fold(exact)(ranges =>
           exact.filter(orTree(ranges.map { case (lo, hi) =>
             if (lo == hi) col(tableCol) === lit(lo)
             else col(tableCol) >= lit(lo) && col(tableCol) <= lit(hi)
-          }))
-        case None => exact
-      }
+          })))
     }
   }
 

@@ -38,10 +38,9 @@ object BpeTrain {
     * (numMerges+1, '&lt;eos&gt;', '&lt;eos&gt;', Σ freq·|symbols|)
     * row that pins the post-merge segmentation of EVERY word. */
   def learnMerges(docs: DataFrame, textCol: String,
-      numMerges: Int = 5,
-      localMaxWords: Long = localLearnMaxWords): DataFrame = {
+      numMerges: Int = 5): DataFrame = {
     val spark = docs.sparkSession
-    val (merges, words) = learn(docs, textCol, numMerges, localMaxWords)
+    val (merges, words) = learn(docs, textCol, numMerges)
     val totalSyms = words.agg(sum(col("freq") * size(col("s"))))
       .collect()(0).getLong(0)
     spark.createDataFrame(
@@ -54,27 +53,11 @@ object BpeTrain {
     * the vocab-sized dictionary a tokenization pass broadcasts.
     * (word, freq, n_syms, syms = '|'-joined segmentation). */
   def segmentations(docs: DataFrame, textCol: String,
-      numMerges: Int = 5,
-      localMaxWords: Long = localLearnMaxWords): DataFrame =
-    learn(docs, textCol, numMerges, localMaxWords)._2
+      numMerges: Int = 5): DataFrame =
+    learn(docs, textCol, numMerges)._2
       .select(col("word"), col("freq"),
         size(col("s")).cast("long").as("n_syms"),
         array_join(col("s"), "|").as("syms"))
-
-  /** Word-count bound for the driver-local learning short-circuit
-    * (round 18): the distinct-word table is vocab-sized by
-    * construction, and the per-merge loop is `numMerges` dependent
-    * TakeOrdered(1) + fold rounds — pure job-launch latency at gate
-    * scale (ProfileQ: q105's warm wall was 1.5 s of which total task
-    * time was 0.25 s). At or below the bound the word table is
-    * collected once and the loop runs on the driver with EXACTLY the
-    * distributed semantics: argmax by (count desc, left asc, right
-    * asc) under UTF8String's unsigned-byte string order, and the same
-    * greedy left-to-right merge fold (BpeTrainSpec pins local ==
-    * distributed on a tie-rich corpus). Past the bound — vocabularies
-    * are millions of rows at 100 TB — the distributed loop runs
-    * unchanged. */
-  private[graft] val localLearnMaxWords = 65536L
 
   /** Spark string ordering = unsigned byte order over UTF-8
     * (UTF8String.binaryCompare) — NOT java.lang.String's UTF-16 order
@@ -109,13 +92,25 @@ object BpeTrain {
     out.toArray
   }
 
+  /** Driver-local learning short-circuit (round 18): the
+    * distinct-word table is vocab-sized by construction, and the
+    * per-merge loop is `numMerges` dependent TakeOrdered(1) + fold
+    * rounds — pure job-launch latency at gate scale (ProfileQ: q105's
+    * warm wall was 1.5 s of which total task time was 0.25 s). When
+    * the word table fits [[graft.engine.DriverLocal]]'s bound it is
+    * collected once and the loop runs on the driver with EXACTLY the
+    * distributed semantics: argmax by (count desc, left asc, right
+    * asc) under UTF8String's unsigned-byte string order, and the same
+    * greedy left-to-right merge fold (BpeTrainSpec pins local ==
+    * distributed on a tie-rich corpus). Past the bound — vocabularies
+    * are millions of rows at 100 TB — the distributed loop runs
+    * unchanged. */
   private def learnLocal(spark: org.apache.spark.sql.SparkSession,
-      words0: DataFrame, numMerges: Int)
+      rows: Array[org.apache.spark.sql.Row], numMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     import spark.implicits._
-    var words = words0.select(col("word"), col("freq"), col("s")).collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        r.getSeq[String](2).toArray))
+    var words = rows.map(r => (r.getString(0), r.getLong(1),
+      r.getSeq[String](2).toArray))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     for (step <- 1 to numMerges) {
       val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
@@ -153,8 +148,7 @@ object BpeTrain {
       }).toDF("word", "freq", "s"))
   }
 
-  private def learn(docs: DataFrame, textCol: String, numMerges: Int,
-      localMaxWords: Long = localLearnMaxWords)
+  private def learn(docs: DataFrame, textCol: String, numMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -163,9 +157,10 @@ object BpeTrain {
       .groupBy($"word").agg(count(lit(1)).as("freq"))
       .withColumn("s", transform(sequence(lit(1), length($"word")),
         i => $"word".substr(i, lit(1)))))
-    // one count materializes the retained cache either way
-    if (words.count() <= localMaxWords)
-      return learnLocal(spark, words, numMerges)
+    graft.engine.DriverLocal.collect(words) match {
+      case Some(rows) => return learnLocal(spark, rows, numMerges)
+      case None =>
+    }
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     for (step <- 1 to numMerges) {
       // Spark's sequence() counts DOWN when start > stop — guard the

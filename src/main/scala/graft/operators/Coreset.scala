@@ -80,41 +80,28 @@ object Coreset {
     assignTo(base, selectLandmarks(base, k))
   }
 
-  /** Row bound for the driver-local selection short-circuit (round 18):
-    * at or below it the cached base is collected ONCE and the greedy
-    * traversal runs on the driver — the k+1 driver-coordinated jobs
-    * (seed + k−1 TakeOrdered(1) rounds, each ~a job-launch latency;
-    * measured at sf0.1: q110's warm wall was ~1.9 s of which total task
-    * time was 0.3 s — pure scheduling) collapse to 2 (count + collect).
-    * 128k rows × 64-float vectors ≈ 33 MB — the bounded
-    * coordinator-read class of the CC edge collect (Dedup); a second
-    * rows×dim guard below caps the collect at ~32 MB of floats for
-    * wider embeddings. Past the bound the distributed loop runs
-    * unchanged (at 100 TB: over a deterministic hash-sample, per
-    * [[kCenterAssign]]'s note). */
-  private[graft] val localSelectMaxRows = 131072L
-
   /** The greedy farthest-point traversal itself. `base` must have
-    * columns (vec_id: long, v: array<float>). Below
-    * [[localSelectMaxRows]] the traversal runs on the driver over one
-    * bounded collect; above it, driver-coordinated k−1 TakeOrdered(1)
-    * rounds over the cached base. Both paths compute the SAME doubles
-    * (float→double promotion, index-order fold — [[selectLocal]]
-    * mirrors DotProductExpr's loop) with the SAME orderings (NaN
-    * largest, least() skips NaN, ties by id), so the selected landmark
-    * sequence is identical — CoresetSpec pins local == distributed. */
-  private[graft] def selectLandmarks(base: DataFrame, k: Int,
-      localMaxRows: Long = localSelectMaxRows): Vector[(Long, Array[Float])] = {
+    * columns (vec_id: long, v: array<float>). When `base` fits
+    * [[graft.engine.DriverLocal]]'s bound the traversal runs on the
+    * driver over its one collect: the k+1 driver-coordinated jobs
+    * (seed + k−1 TakeOrdered(1) rounds, each ~a job-launch latency;
+    * measured at sf0.1 in round 18: q110's warm wall was ~1.9 s of
+    * which total task time was 0.3 s — pure scheduling) collapse to
+    * one. Above it, driver-coordinated k−1 TakeOrdered(1) rounds run
+    * over the cached base (at 100 TB: over a deterministic
+    * hash-sample, per [[kCenterAssign]]'s note). Both paths compute
+    * the SAME doubles (float→double promotion, index-order fold —
+    * [[selectLocal]] mirrors DotProductExpr's loop) with the SAME
+    * orderings (NaN largest, least() skips NaN, ties by id), so the
+    * selected landmark sequence is identical — CoresetChunkerSpec pins
+    * local == distributed. */
+  private[graft] def selectLandmarks(base: DataFrame,
+      k: Int): Vector[(Long, Array[Float])] = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // one count materializes the callers' retained cache either way
-    val n = base.count()
-    if (n > 0 && n <= localMaxRows) {
-      val pts = base.collect().map(r =>
-        (r.getLong(0), r.getSeq[Float](1).toArray))
-      // rows × dim cap: the row bound alone would let a 4096-dim
-      // corpus collect GBs
-      if (pts(0)._2.length.toLong * n <= (8L << 20))
-        return selectLocal(pts, k)
+    graft.engine.DriverLocal.collect(base) match {
+      case Some(rows) if rows.nonEmpty => return selectLocal(
+        rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)), k)
+      case _ =>
     }
     def distTo(lm: Array[Float]): Column =
       lit(1.0) - cosFF(col("v"), typedlit(lm))

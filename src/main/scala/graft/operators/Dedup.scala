@@ -134,7 +134,7 @@ object Dedup {
     * the threshold out, and exact [[jaccard]] >= `threshold` decides.
     * Returns (`aCol`, `bCol`, jaccard). Callers set the candidate
     * frame's width ([[spreadForVerify]]) and prune an at-rest side
-    * ([[pruneToCandidateDocs]]) before calling; the joins carry no
+    * ([[graft.engine.ProbePrune]]) before calling; the joins carry no
     * hint, so AQE sizes them from the runtime shingle tables. */
   private[operators] def verifiedByJaccard(cands: DataFrame,
       aCol: String, bCol: String, left: DataFrame, right: DataFrame,
@@ -264,40 +264,6 @@ object Dedup {
       threshold, maxBroadcastBatchDocs)
   }
 
-  /** The corpus-side shingle frame restricted to a probe's candidate
-    * doc ids, pushed into the SCAN: the verification join of the
-    * incremental probes is batch-proportional in rows matched but was
-    * corpus-proportional in bytes read — it streamed every corpus
-    * shingle array to verify a candidate set that names a fraction of
-    * a percent of the docs (measured 2.8 s of a 4.4 s probe at 262k
-    * docs × 300 tokens). The candidate ids are batch-bounded (batch
-    * docs × band collisions), so collect them — a bounded coordinator
-    * read of the same class as the union-find edge collect — and
-    * filter the at-rest table with an exact-values IN predicate.
-    * [[graft.storage.Storage.appendBucketed]] sorts the
-    * shingle store by `doc` inside each bucket, so parquet row-group
-    * stats and page indexes skip the non-candidate bulk; the skip
-    * fraction grows with corpus size (at gate scale the table is a
-    * handful of row groups, at 100 TB it is millions, of which a
-    * batch touches thousands). Above `maxIds` — a backfill-sized
-    * probe — the prune is skipped and the join reverts to the full
-    * stream (AT that batch size the scan amortizes; an unbounded
-    * collect would not). */
-  private def pruneToCandidateDocs(corpusShingles: DataFrame,
-      cands: DataFrame, idCol: String): DataFrame =
-    pruneToProbeKeys(corpusShingles, "doc", cands, idCol)
-
-  /** Restrict an at-rest sorted table to the key values a
-    * batch-bounded probe frame actually names — the
-    * [[graft.engine.ProbePrune]] contract (bounded collect, InSet row
-    * filter, range-cover pushdown). Also applied to the
-    * candidate-generation scan (bands on `band_hash` — a SUPERSET of
-    * the composite join key, which the following equi-join
-    * re-tightens, so semantics are unchanged). */
-  private def pruneToProbeKeys(table: DataFrame, tableCol: String,
-      probe: DataFrame, probeCol: String): DataFrame =
-    graft.engine.ProbePrune.pruneToProbeKeys(table, tableCol, probe, probeCol)
-
   /** Batch-vs-corpus near-dup pairs with BOTH ends in sketch-table
     * form: each side is a (shingles, bands) pair, so the operation
     * hashes no text at all. Every batch probe lands here:
@@ -327,15 +293,25 @@ object Dedup {
     val hintBatch: DataFrame => DataFrame =
       if (batchShingles.count() <= maxBroadcastBatchDocs) broadcast
       else identity
+    // pruning the bands on `band_hash` alone keeps a SUPERSET of the
+    // composite join key; the equi-join below re-tightens it
     val cands = graft.engine.CacheRegistry.retain(
-      pruneToProbeKeys(corpusBands, "band_hash", batchBands, "band_hash")
+      graft.engine.ProbePrune.pruneToProbeKeys(
+          corpusBands, "band_hash", batchBands, "band_hash")
         .join(hintBatch(batchBands.select(col("doc").as("batch_doc"),
             col("band_id"), col("band_hash"))),
           Seq("band_id", "band_hash"))
         .select(col("batch_doc"), col("doc").as("corpus_doc"))
         .distinct()) // a pair may collide in several bands
+    // the corpus shingles pruned to the candidate docs in the SCAN: the
+    // verification join is batch-proportional in rows matched but
+    // streamed every corpus shingle array (measured 2.8 s of a 4.4 s
+    // probe at 262k docs × 300 tokens); the store is sorted by `doc`
+    // inside each bucket (Storage.appendBucketed), so row-group stats
+    // skip the non-candidate bulk
     verifiedByJaccard(cands, "batch_doc", "corpus_doc", batchShingles,
-      pruneToCandidateDocs(corpusShingles, cands, "corpus_doc"), threshold)
+      graft.engine.ProbePrune.pruneToProbeKeys(
+        corpusShingles, "doc", cands, "corpus_doc"), threshold)
   }
 
   /** [[multiSketchPairs]] against the AT-REST corpus layout: WITHIN-
@@ -630,54 +606,39 @@ object Dedup {
     * (one-hop rounds run, star-contraction rounds run) — the numbers
     * `ScaleEvidence`'s convergence sweep records.
     *
-    * Scale-adaptive short-circuit: the edge table is counted anyway
-    * (to materialize it ahead of the checkpoint loop), and when the
-    * count is at or below `localEdgeThreshold` the labels are solved
-    * with a driver-side min-id union-find instead of the distributed
-    * loop — the same runtime size-switch philosophy as AQE's
-    * broadcast decision. Below the threshold the edge list is a
-    * dimension-sized table (≤ 16 MB of (long, long) at the 1M
-    * default) and the ~10 driver-coordinated label-propagation /
-    * star-contraction rounds are pure job-scheduling latency
-    * (measured: the CC stage of q102 cost ~3 s at a few hundred
-    * edges, all of it round overhead); past the threshold the
-    * distributed loop below engages unchanged. This collect is a
-    * documented bounded coordinator read — the contract of the k-row
-    * landmark and centroid collects — NOT a data-scale collect: the
-    * bound is on the near-dup PAIR count, which the callers' banded /
-    * celled candidate generation keeps linear in corpus size. The
-    * union-find reproduces the loop's labels exactly (component min
-    * id, deterministic); ScaleEvidence's convergence sweep passes
-    * threshold 0 so it always measures the distributed rounds. */
+    * Scale-adaptive short-circuit: when the edge table fits
+    * [[graft.engine.DriverLocal]]'s bound, the labels are solved with
+    * a driver-side min-id union-find over its one collect instead of
+    * the distributed loop — the same runtime size-switch philosophy as
+    * AQE's broadcast decision. Below the bound the edge list is a
+    * dimension-sized table and the ~10 driver-coordinated
+    * label-propagation / star-contraction rounds are pure
+    * job-scheduling latency (measured: the CC stage of q102 cost ~3 s
+    * at a few hundred edges, all of it round overhead). The bound is
+    * on the near-dup PAIR count, which the callers' banded / celled
+    * candidate generation keeps linear in corpus size. The union-find
+    * reproduces the loop's labels exactly (component min id,
+    * deterministic); ScaleEvidence's convergence sweep sets the bound
+    * to 0 so it always measures the distributed rounds. */
   private[graft] def connectedComponentsWithStats(
       pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, oneHopRounds: Int = 4,
-      localEdgeThreshold: Long = 1L << 20): (DataFrame, Int, Int) = {
+      maxIter: Int = 20, oneHopRounds: Int = 4): (DataFrame, Int, Int) = {
     val edges = symEdges(pairs
         .select(col(aCol).as("src"), col(bCol).as("dst"))
         .filter(col("src") =!= col("dst")))
-      .distinct().persist()
-    // Materialize the edge table through the Dataset path BEFORE the
-    // loop: the loop's localCheckpoint compiles its lineage via
-    // queryExecution.toRdd, which is statically planned — no AQE — so
-    // an unmaterialized pair pipeline would re-run with sort-merge
-    // joins and no runtime broadcast/coalescing (measured 3× slower).
-    // After this count the loops read only the cached edges.
-    val edgeCount = edges.count()
+      .distinct()
     // the short-circuit only engages for integral id columns: the
     // union-find works on longs, and only an integral input type
     // survives the long roundtrip losslessly — any other id type
     // (string, decimal, ...) takes the distributed loop, which is
     // type-agnostic, instead of risking a silently-corrupting cast
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val idType = edges.schema("src").dataType
-    val integralIds = idType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (edgeCount <= localEdgeThreshold && integralIds) {
+    val local =
+      if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idType)) None
+      else graft.engine.DriverLocal.collect(
+        edges.select(col("src").cast("long"), col("dst").cast("long")))
+    local.foreach { rows =>
       val spark = pairs.sparkSession
       import spark.implicits._
       val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -688,25 +649,29 @@ object Dedup {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-        .foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          // union-by-min: the surviving root is always the smaller id,
-          // so every final root is its component's global min — the
-          // exact label the distributed loop converges to
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
+      rows.map(r => (r.getLong(0), r.getLong(1))).foreach { case (a, b) =>
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val ra = find(a); val rb = find(b)
+        // union-by-min: the surviving root is always the smaller id,
+        // so every final root is its component's global min — the
+        // exact label the distributed loop converges to
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
       val labels = parent.keysIterator.map(n => (n, find(n))).toVector
-      edges.unpersist()
       // cast back to the INPUT id type so the output schema does not
       // depend on which path the runtime edge count selected
       return (spark.createDataset(labels).toDF("node", "cluster")
         .select(col("node").cast(idType).as("node"),
           col("cluster").cast(idType).as("cluster")), 0, 0)
     }
+    // Persist and materialize the edge table through the Dataset path
+    // BEFORE the loop: the loop's localCheckpoint compiles its lineage via
+    // queryExecution.toRdd, which is statically planned — no AQE — so
+    // an unmaterialized pair pipeline would re-run with sort-merge
+    // joins and no runtime broadcast/coalescing (measured 3× slower).
+    // After this count the loops read only the cached edges.
+    edges.persist().count()
     // the first propagation round is folded into initialization:
     // label = min(node, neighbors) — identical to one step from
     // label = node, one fewer distributed round

@@ -200,56 +200,47 @@ object IvfAnn {
     * that a raw hash-sample leaves huge whenever a real cluster drew no
     * sample point. Cells that lose every member simply drop out. At
     * 100 TB, refine over a sample — the cell geometry converges long
-    * before the full corpus is seen — then assign the full corpus once. */
-  /** Row bound for the driver-local refine short-circuit (round 18):
-    * refine's callers pass a bounded 1-in-4 hash sample, and the
-    * distributed loop costs `iters` dependent assign→mean pipelines —
-    * ~6 sequential stages of pure latency at gate scale (ProfileQ:
-    * q90's warm wall was 2.5 s of which total task time was 1.0 s).
-    * One `limit(bound + 1)` collect both tests the bound and, at or
-    * below it, is the sample Lloyd then runs on the driver (above it,
-    * the bound + 1 rows read are dropped and the loop runs distributed).
+    * before the full corpus is seen — then assign the full corpus once.
+    *
+    * Driver-local short-circuit (round 18): refine's callers
+    * pass a bounded 1-in-4 hash sample, and the distributed loop costs
+    * `iters` dependent assign→mean pipelines — ~6 sequential stages of
+    * pure latency at gate scale (ProfileQ: q90's warm wall was 2.5 s
+    * of which total task time was 1.0 s). When the sample fits
+    * [[graft.engine.DriverLocal]]'s bound, its one collect both tests
+    * the bound and is the sample Lloyd then runs on the driver.
     * Centroid VALUES may differ from the distributed
     * mean in the last ulp (double summation order) — which is exactly
     * as nondeterministic as the distributed mean already is across
     * partition orders, and provably irrelevant to every caller: the
     * cell-bucketed operators' outputs are centroid-independent (their
     * probe rule is complete for ANY centroid set and candidates are
-    * exact-verified — see [[EmbeddingDedup.cosinePairsBucketed]]).
-    * Same bounded-coordinator-read class as the CC edge collect and
-    * the k-center local traversal. */
-  private[graft] val localRefineMaxRows = 131072L
-
+    * exact-verified — see [[EmbeddingDedup.cosinePairsBucketed]]). */
   def refine(embeddings: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, iters: Int = 2,
-      localMaxRows: Long = localRefineMaxRows): DataFrame = {
-    // one bounded probe answers both "is the sample empty?" and "does
-    // it fit the local bound?" — and, when it fits, is the local input
-    val bound = (localMaxRows max 0L min (Int.MaxValue - 1L)).toInt
-    val probe = embeddings.select(col(vecCol)).limit(bound + 1).collect()
-    // empty sample: no refinement — return the seeds unchanged (the
-    // callers' exactness contract needs a NON-EMPTY centroid set, and
-    // a Lloyd pass over nothing would drop every cell). Folding the
-    // check here saves the callers' separate isEmpty() job.
-    if (probe.isEmpty) return cents
-    if (probe.length <= bound) {
-      val pts = probe.map(_.getSeq[Float](0).toArray)
-      if (pts(0).length.toLong * pts.length <= (8L << 20))
-        return refineLocal(embeddings.sparkSession, pts, cents, iters)
+      cents: DataFrame, iters: Int = 2): DataFrame = {
+    graft.engine.DriverLocal.collect(embeddings.select(col(vecCol))) match {
+      // empty sample: no refinement — return the seeds unchanged (the
+      // callers' exactness contract needs a NON-EMPTY centroid set, and
+      // a Lloyd pass over nothing would drop every cell). Folding the
+      // check here saves the callers' separate isEmpty() job.
+      case Some(rows) if rows.isEmpty => cents
+      case Some(rows) => refineLocal(embeddings.sparkSession,
+        rows.map(_.getSeq[Float](0).toArray), cents, iters)
+      case None =>
+        var c = cents
+        for (_ <- 1 to iters) {
+          c = assign(embeddings, idCol, vecCol, c)
+            .select(col("centroid"), posexplode(col(vecCol)).as(Seq("pos", "x")))
+            .groupBy(col("centroid"), col("pos"))
+            .agg(avg(col("x").cast("double")).as("m"))
+            .groupBy(col("centroid"))
+            .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
+            .select(col("centroid").as("centroid_id"),
+              transform(col("ps"), p => p.getField("m").cast("float"))
+                .as("centroid_vec"))
+        }
+        c
     }
-    var c = cents
-    for (_ <- 1 to iters) {
-      c = assign(embeddings, idCol, vecCol, c)
-        .select(col("centroid"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(col("centroid"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("m"))
-        .groupBy(col("centroid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
-        .select(col("centroid").as("centroid_id"),
-          transform(col("ps"), p => p.getField("m").cast("float"))
-            .as("centroid_vec"))
-    }
-    c
   }
 
   /** Driver-local Lloyd: nearest-centroid assignment mirrors

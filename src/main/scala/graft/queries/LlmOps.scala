@@ -1037,7 +1037,7 @@ object LlmOps {
     * divergence) it reproduces the effective labeling unchanged —
     * StoreSpec pins both. Cost: one CC over corpus-sized star edges
     * (label chains have depth ≤ lineage length, so the min-label
-    * loop converges in a round or two; below the 1M-edge threshold
+    * loop converges in a round or two; within DriverLocal's bound
     * the driver union-find short-circuit answers it outright) —
     * admin-verb cost, not probe cost. Fold sketch and cluster
     * families together when both have accepted the same batches —

@@ -81,11 +81,9 @@ class BpeTrainSpec extends AnyFunSuite {
     // tie-break on both paths
     val docs = Seq("aaab ab xy xy aaaa", "baba abab aaab",
       "zz zz yy yy").toDF("text")
-    def run(localMax: Long) = {
-      val m = rows(BpeTrain.learnMerges(docs, "text", numMerges = 4,
-        localMaxWords = localMax))
-      val seg = BpeTrain.segmentations(docs, "text", numMerges = 4,
-        localMaxWords = localMax)
+    def run(localMax: Long) = DriverLocalSpec.withMaxRows(s, localMax) {
+      val m = rows(BpeTrain.learnMerges(docs, "text", numMerges = 4))
+      val seg = BpeTrain.segmentations(docs, "text", numMerges = 4)
         .collect().map(r => (r.getString(0), r.getLong(1),
           r.getLong(2), r.getString(3))).toSet
       (m, seg)

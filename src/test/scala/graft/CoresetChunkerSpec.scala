@@ -250,7 +250,9 @@ class CoresetChunkerSpec extends AnyFunSuite {
       val base = graft.engine.CacheRegistry.retain(
         emb.select(col("vec_id").cast("long").as("vec_id"), col("v")))
       val local = Coreset.selectLandmarks(base, 6)
-      val dist = Coreset.selectLandmarks(base, 6, localMaxRows = 0L)
+      val dist = DriverLocalSpec.withMaxRows(s, 0L) {
+        Coreset.selectLandmarks(base, 6)
+      }
       assert(local.map(_._1) === dist.map(_._1),
         s"landmark id sequences diverge: local=${local.map(_._1)} " +
           s"distributed=${dist.map(_._1)}")

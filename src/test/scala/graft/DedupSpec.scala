@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.DriverLocal
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 /** Semantics of the hash-based LLM-pipeline operators (MinHash/LSH,
@@ -257,8 +258,9 @@ class DedupSpec extends AnyFunSuite {
       (i, Array.tabulate(16)(j => math.sin(i * 17 + j).toFloat).toSeq)
     }.toDF("vec_id", "embedding").repartition(3)
     val seeds = IvfAnn.centroids(emb, "vec_id", "embedding", c = 4)
-    def refine(in: DataFrame, maxRows: Long) =
-      IvfAnn.refine(in, "vec_id", "embedding", seeds, localMaxRows = maxRows)
+    def refine(in: DataFrame, maxRows: Long) = DriverLocalSpec.withMaxRows(s, maxRows) {
+      IvfAnn.refine(in, "vec_id", "embedding", seeds)
+    }
     def isLocal(df: DataFrame) =
       df.queryExecution.analyzed.isInstanceOf[LocalRelation]
     def cells(df: DataFrame) = df.collect()
@@ -275,7 +277,7 @@ class DedupSpec extends AnyFunSuite {
       }
     }
     // the default bound runs locally; a bound of 0 forces the loop
-    val local = refine(emb, IvfAnn.localRefineMaxRows)
+    val local = refine(emb, DriverLocal.DefaultMaxRows)
     val distributed = refine(emb, 0L)
     assert(isLocal(local) && !isLocal(distributed))
     assertSameCells(local, distributed)
@@ -286,7 +288,7 @@ class DedupSpec extends AnyFunSuite {
     assertSameCells(atBound, overBound)
     assertSameCells(overBound, distributed)
     // an empty sample returns the seeds themselves on either path
-    Seq(IvfAnn.localRefineMaxRows, 0L).foreach { m =>
+    Seq(DriverLocal.DefaultMaxRows, 0L).foreach { m =>
       assert(refine(emb.filter(lit(false)), m) eq seeds)
     }
   }
@@ -503,10 +505,12 @@ class DedupSpec extends AnyFunSuite {
     val blob = Seq.fill(60)((4000L + rnd.nextInt(50), 4000L + rnd.nextInt(50)))
       .filter(p => p._1 != p._2)
     val edges = (path ++ twins ++ star ++ blob).toDF("a", "b")
-    val viaUnionFind = Dedup.connectedComponentsWithStats(
-      edges, "a", "b", localEdgeThreshold = Long.MaxValue)
-    val viaLoop = Dedup.connectedComponentsWithStats(
-      edges, "a", "b", localEdgeThreshold = 0L)
+    val viaUnionFind = DriverLocalSpec.withMaxRows(s, Long.MaxValue) {
+      Dedup.connectedComponentsWithStats(edges, "a", "b")
+    }
+    val viaLoop = DriverLocalSpec.withMaxRows(s, 0L) {
+      Dedup.connectedComponentsWithStats(edges, "a", "b")
+    }
     assert(viaUnionFind._2 === 0, "threshold=MaxValue must take the local path")
     assert(viaLoop._2 > 0, "threshold=0 must take the distributed loop")
     assert(viaUnionFind._1.schema === viaLoop._1.schema,
@@ -522,8 +526,9 @@ class DedupSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val intEdges = Seq((5, 6), (6, 7), (10, 11)).toDF("a", "b")
-    val viaLocal = Dedup.connectedComponentsWithStats(
-      intEdges, "a", "b", localEdgeThreshold = Long.MaxValue)._1
+    val viaLocal = DriverLocalSpec.withMaxRows(s, Long.MaxValue) {
+      Dedup.connectedComponentsWithStats(intEdges, "a", "b")._1
+    }
     assert(viaLocal.schema("node").dataType ===
       org.apache.spark.sql.types.IntegerType)
     assert(viaLocal.collect().map(r => (r.getInt(0), r.getInt(1))).toSet ===
@@ -531,8 +536,9 @@ class DedupSpec extends AnyFunSuite {
     // string ids cannot roundtrip through the long union-find — the
     // short-circuit must defer to the type-agnostic distributed loop
     val strEdges = Seq(("x", "y"), ("y", "z")).toDF("a", "b")
-    val stats = Dedup.connectedComponentsWithStats(
-      strEdges, "a", "b", localEdgeThreshold = Long.MaxValue)
+    val stats = DriverLocalSpec.withMaxRows(s, Long.MaxValue) {
+      Dedup.connectedComponentsWithStats(strEdges, "a", "b")
+    }
     assert(stats._2 > 0, "non-integral ids must take the distributed loop")
     assert(stats._1.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
       Set(("x", "x"), ("y", "x"), ("z", "x")))
