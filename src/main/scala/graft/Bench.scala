@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.metrics.JobMetrics
+
 /** Per-round benchmark main (driver contract): times the HEADLINE
   * query set (or every SparkEntry query under
   * SPARK_GRAFT_BENCH_MODE=all) against SPARK_GRAFT_SF_DIR and prints
@@ -96,6 +98,14 @@ import org.apache.spark.sql.SparkSession
   * BENCH_FULL_latest.json is produced). Durable stores are built
   * BEFORE the measurement clock starts, so pass 1 no longer bills
   * one-time build cost to whichever store query runs first.
+  *
+  * Per-query work: each measured query runs inside
+  * [[graft.metrics.JobMetrics.during]], whose flush job runs after the
+  * sample's clock stops. The artifact's `query_metrics` holds, per
+  * query, the record of its last completed pass: jobs, stages, tasks,
+  * executor run and CPU seconds, shuffle-write MB, the longest task and
+  * the call site of the stage with the most executor time. Profiling
+  * one query is `SPARK_GRAFT_BENCH_ONLY=<q> runMain graft.Bench`.
   */
 object Bench {
 
@@ -381,7 +391,8 @@ object Bench {
   /** One artifact JSON line over `results` = (name, min, median, max,
     * n samples) per query — extracted pure so BenchSpec pins the
     * contract fields (`n_samples`, `statistic`, `calibration_sec`)
-    * without a session. */
+    * without a session. `queryMetrics` lands last, as `query_metrics`,
+    * so every earlier field reads as it did before it existed. */
   private[graft] def renderArtifactJson(
       results: Seq[(String, Double, Double, Double, Int)],
       calCpuSec: Double, calScanSec: Double, calFsMetaSec: Double,
@@ -390,7 +401,8 @@ object Bench {
       budgetSec: Double, budgetExceeded: Boolean, partialPass: Boolean,
       queryCapSec: Double, capped: Seq[String],
       billed: Map[String, Double] = Map.empty,
-      demoted: Seq[String] = Nil): String = {
+      demoted: Seq[String] = Nil,
+      queryMetrics: Map[String, JobMetrics.Record] = Map.empty): String = {
     val qs = results.map { case (k, _, med, _, _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
     // [min, median, max] per query so a cross-round swing on
@@ -419,7 +431,23 @@ object Bench {
     // calibration_sec stays cpu+scan (cross-round comparability);
     // fsmeta_sec rides the breakdown only — see [[fsMetaProbe]]
     val calibrationSec = calCpuSec + calScanSec
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"n_samples":$nSamples,"statistic":"median_lower_middle","calibration_sec":$calibrationSec,"calibration":{"cpu_sec":$calCpuSec,"scan_sec":$calScanSec,"fsmeta_sec":$calFsMetaSec},"sf":"$sfDir","mode":"$mode","n_queries":$nQueries,"passes":$passes,"pass_started_at":$passesJson,"budget_sec":$budgetSec,"budget_exceeded":$budgetExceeded,"partial_pass":$partialPass,"query_cap_sec":$queryCapSec,"capped":$cappedJson,"billed_sec":$billedJson,"demoted":$demotedJson}"""
+    val metricsJson = results.flatMap { case (k, _, _, _, _) =>
+      queryMetrics.get(k).map(r => "\"" + k + "\":" + recordJson(r)) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"n_samples":$nSamples,"statistic":"median_lower_middle","calibration_sec":$calibrationSec,"calibration":{"cpu_sec":$calCpuSec,"scan_sec":$calScanSec,"fsmeta_sec":$calFsMetaSec},"sf":"$sfDir","mode":"$mode","n_queries":$nQueries,"passes":$passes,"pass_started_at":$passesJson,"budget_sec":$budgetSec,"budget_exceeded":$budgetExceeded,"partial_pass":$partialPass,"query_cap_sec":$queryCapSec,"capped":$cappedJson,"billed_sec":$billedJson,"demoted":$demotedJson,"query_metrics":$metricsJson}"""
+  }
+
+  /** One query's `query_metrics` entry; seconds to the millisecond,
+    * megabytes to the kilobyte. */
+  private def recordJson(r: JobMetrics.Record): String = {
+    def r3(x: Double) = math.rint(x * 1000) / 1000
+    val site = r.slowestStage.fold("")(_.callSite)
+      .replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"jobs":${r.jobs.size},"stages":${r.stages.size},"tasks":${r.tasks},""" +
+      s""""executor_run_sec":${r3(r.executorRunMs / 1e3)},""" +
+      s""""executor_cpu_sec":${r3(r.executorCpuNs / 1e9)},""" +
+      s""""shuffle_write_mb":${r3(r.shuffleWriteBytes / 1e6)},""" +
+      s""""max_task_sec":${r3(r.maxTaskMs / 1e3)},"slowest_stage":"$site"}"""
   }
 
   private[graft] final case class PassOutcome(
@@ -578,6 +606,7 @@ object Bench {
       .withDefaultValue(Nil)
     val capped = collection.mutable.LinkedHashSet.empty[String]
     val billed = collection.mutable.Map.empty[String, Double]
+    val queryMetrics = collection.mutable.Map.empty[String, JobMetrics.Record]
     // wall-clock start of each pass (UTC): this machine swings between
     // a fast and a slow band run-to-run (observed 5–15× single-shot
     // spreads), so a pass-3 outlier must be attributable to WHEN the
@@ -602,7 +631,7 @@ object Bench {
       val json = renderArtifactJson(results, calCpuSec, calScanSec,
         calFsMetaSec, sfDir, mode, names.size, passes,
         passStartedAt.toSeq, budgetSec, budgetExceeded, partialPass,
-        queryCapSec, capped.toSeq, billed.toMap, demoted)
+        queryCapSec, capped.toSeq, billed.toMap, demoted, queryMetrics.toMap)
       // the driver snapshot keeps only a truncated tail of stdout, so
       // the full per-query map is also persisted to a committed file
       val target =
@@ -635,14 +664,19 @@ object Bench {
         // per-query job group so the cap watchdog can cancel exactly
         // this query's jobs — nothing else shares the group
         val group = s"graft-bench-$name"
-        spark.sparkContext.setJobGroup(group, s"bench $name",
-          interruptOnCancel = true)
-        val sample =
+        // the scope's flush job runs after runWithCap returns: it is
+        // never billed to the sample
+        val (sample, record) = JobMetrics.during(spark) {
+          spark.sparkContext.setJobGroup(group, s"bench $name",
+            interruptOnCancel = true)
           try runWithCap(name, queryCapSec,
             cancel = () => spark.sparkContext.cancelJobGroup(group),
             run = () => fnByName(name)(spark, sfDir)
               .write.format("noop").mode("overwrite").save())
           finally spark.sparkContext.clearJobGroup()
+        }
+        // a cancelled pass ran part of the query: keep the last whole one
+        if (!sample.cancelled) queryMetrics(name) = record
         // queries persist() internally; no cross-run reuse — and drop
         // the registry's references so they don't accumulate over
         // 92 queries × runs

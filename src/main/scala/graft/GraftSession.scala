@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's recommended Spark session configuration — one place
-  * for the settings every entry point (Bench, Verify, QTime, library
-  * users) needs, so they can't drift:
+  * for the settings every entry point (Bench, Verify, library users)
+  * needs, so they can't drift:
   *
   *  - AQE on, INCLUDING cached plans: operators persist sketch tables,
   *    and without `canChangeCachedPlanOutputPartitioning` their builds

@@ -6,6 +6,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.DriverLocal
+
 /** Whole-surface physical-plan audit: runs every SparkEntry query at
   * fixture scale and records, per query, the plan-shape numbers a
   * 100 TB reviewer asks first ([[PlanShape.counts]]) in one JSON
@@ -85,8 +87,10 @@ object PlanSweep {
   /** One row per SparkEntry query, sorted by name: its
     * [[PlanShape.Counts]] after a run, or the error it raised. Runs on
     * `spark`, whose task slots must equal `width`, with an isolated
-    * store root and an empty cache before each query, so a row depends
-    * only on its query; `filed` holds the rows on file by query name. */
+    * store root, the default driver-local bound (the caller's is
+    * restored after) and an empty cache before each query, so a row
+    * depends only on its query; `filed` holds the rows on file by query
+    * name. */
   def audit(spark: SparkSession, sfDir: String, width: Int,
       filed: Map[String, JsonNode]): Seq[ObjectNode] = {
     require(spark.sparkContext.defaultParallelism == width,
@@ -97,6 +101,10 @@ object PlanSweep {
     // them out of the shared warehouse root
     val auditRoot = java.nio.file.Files.createTempDirectory("graft_plansweep_root")
     spark.conf.set("spark.graft.store.root", auditRoot.toString)
+    // rows are filed at the default bound: a flipped bound would audit
+    // the distributed twins' plans against the shortcuts' rows
+    val callerMaxRows = spark.conf.getOption(DriverLocal.MaxRowsConf)
+    spark.conf.set(DriverLocal.MaxRowsConf, DriverLocal.DefaultMaxRows)
     try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
       def run(): ObjectNode = {
         graft.engine.CacheRegistry.releaseAll()
@@ -121,6 +129,8 @@ object PlanSweep {
         Iterator.continually(run()).take(Retries).find(_ == want).getOrElse(first)
       }
     } finally {
+      callerMaxRows.fold(spark.conf.unset(DriverLocal.MaxRowsConf))(
+        spark.conf.set(DriverLocal.MaxRowsConf, _))
       spark.conf.unset("spark.graft.store.root")
       graft.storage.DurableStores.deleteDir(spark, auditRoot.toString)
     }

@@ -101,38 +101,15 @@ object ScaleEvidence {
     }.min
 
   /** Total shuffle-WRITE megabytes of one noop run of `df` — the
-    * bytes-on-the-wire measurement behind pruning claims (stage-level
-    * task metrics summed via a listener; the bus is async, so the sum
-    * is read after it settles). Rounded to 0.1 MB. */
+    * bytes-on-the-wire measurement behind pruning claims, summed over
+    * the run's stages by [[graft.metrics.JobMetrics]]. Rounded to
+    * 0.1 MB. */
   private def shuffleWriteMb(spark: SparkSession, df: => DataFrame): Double = {
-    val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) total.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, rec) = graft.metrics.JobMetrics.during(spark) {
       df.write.format("noop").mode("overwrite").save()
       graft.engine.CacheRegistry.releaseAll()
-      var last = -1L
-      var settled = 0
-      var waited = 0
-      while (settled < 3 && waited < 5000) {
-        val cur = total.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(100); waited += 100
-      }
-      // a timed-out settle means the async bus was still delivering:
-      // the recorded MB may undercount — say so, never silently
-      if (settled < 3)
-        System.err.println("[scale] WARNING: shuffle-metrics listener " +
-          "did not settle within 5 s under load — the recorded " +
-          "shuffle MB for this measurement may undercount")
-      math.rint(total.get() / 1e6 * 10) / 10
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    math.rint(rec.shuffleWriteBytes / 1e6 * 10) / 10
   }
 
   /** Write `df` to `root/name` and read it back — every sweep's

@@ -95,8 +95,9 @@ object BpeTrain {
   /** Driver-local learning short-circuit (round 18): the
     * distinct-word table is vocab-sized by construction, and the
     * per-merge loop is `numMerges` dependent TakeOrdered(1) + fold
-    * rounds — pure job-launch latency at gate scale (ProfileQ: q105's
-    * warm wall was 1.5 s of which total task time was 0.25 s). When
+    * rounds — pure job-launch latency at gate scale (q105's warm wall
+    * was 1.5 s of which total task time was 0.25 s; Bench's
+    * `query_metrics` records both). When
     * the word table fits [[graft.engine.DriverLocal]]'s bound it is
     * collected once and the loop runs on the driver with EXACTLY the
     * distributed semantics: argmax by (count desc, left asc, right

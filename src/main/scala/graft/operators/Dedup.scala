@@ -120,7 +120,8 @@ object Dedup {
     * whole shingle sets — the CPU hot spot of every sketch-dedup
     * composite. Measured at sf0.1 before this existed: the
     * verification stage of q67/q62 ran as 2 tasks of ~1.8 s each on a
-    * 32-core session (ProfileQ; ~40% of the warm wall), with the other
+    * 32-core session (~40% of the warm wall; Bench's `query_metrics`
+    * carries the per-query task times), with the other
     * 30 cores idle. Keyed on the first verification join's key so the
     * exchange doubles as that join's left-side distribution — at any
     * scale the join needed this shuffle anyway. */

@@ -91,8 +91,8 @@ object PageStitch {
     // the stitch decisions are a few narrow columns (AQE coalesces to
     // one task) but each joined row then pays an array concat + md5
     // over two whole token streams — the same byte-blind-AQE trap as
-    // the dedup verification joins (ProfileQ: one 0.5 s single-task
-    // stage at gate scale)
+    // the dedup verification joins (one 0.5 s single-task stage at
+    // gate scale; see q104's `max_task_sec` in Bench's `query_metrics`)
     graft.engine.Spread.spreadForExplosion(
         stitchPairs(pages, idCol, tokensCol, k, maxOverlap), col("page_a"))
       .join(toks.select(col("pid").as("page_a"), col("t").as("ta")),

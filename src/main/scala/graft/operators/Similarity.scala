@@ -205,8 +205,8 @@ object IvfAnn {
     * Driver-local short-circuit (round 18): refine's callers
     * pass a bounded 1-in-4 hash sample, and the distributed loop costs
     * `iters` dependent assign→mean pipelines — ~6 sequential stages of
-    * pure latency at gate scale (ProfileQ: q90's warm wall was 2.5 s
-    * of which total task time was 1.0 s). When the sample fits
+    * pure latency at gate scale (q90's warm wall was 2.5 s of which
+    * total task time was 1.0 s; Bench's `query_metrics` records both). When the sample fits
     * [[graft.engine.DriverLocal]]'s bound, its one collect both tests
     * the bound and is the sample Lloyd then runs on the driver.
     * Centroid VALUES may differ from the distributed

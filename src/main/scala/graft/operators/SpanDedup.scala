@@ -42,7 +42,8 @@ object SpanDedup {
     // spread before the per-row window work: tokenization plus one
     // xxhash64 per token position is CPU the scan's split count
     // otherwise serializes (single-split parquet at gate scale ran the
-    // whole windowing as one 0.65 s task — ProfileQ q95/q97); no-op on
+    // whole windowing as one 0.65 s task — q95/q97's `max_task_sec` in
+    // Bench's `query_metrics`); no-op on
     // scans that already carry >= parallelism splits
     Dedup.spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol).as("doc"), toks.as("toks"))

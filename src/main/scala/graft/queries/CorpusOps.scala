@@ -231,8 +231,8 @@ object CorpusOps {
     // spread BEFORE tokenization: everything downstream (the page
     // slices, the head side's ~57 positioned k-gram hashes per page,
     // the overlap verification) is per-row CPU work that otherwise
-    // runs on the scan's 1–2 parquet splits at gate scale (ProfileQ:
-    // two 2-task stages carried ~85% of q104's task time). No-op at
+    // runs on the scan's 1–2 parquet splits at gate scale (two 2-task
+    // stages carried ~85% of q104's task time; Bench's `query_metrics`). No-op at
     // real scale (Tables.spread only widens under-partitioned scans).
     val tok = graft.Tables.spread(t(s, d, "documents"))
       .select($"doc_id", graft.operators.Dedup.tokens($"text").as("w"))
@@ -344,7 +344,8 @@ object CorpusOps {
     import s.implicits._
     // spread before the shingle explode + per-gram md5: the gram
     // pipeline feeds BOTH the df aggregation and the join side, and a
-    // single-split scan ran each as a ~0.5 s single task (ProfileQ);
+    // single-split scan ran each as a ~0.5 s single task (Bench's
+    // `query_metrics`: `max_task_sec`);
     // no-op at real scale
     val g = graft.Tables.spread(t(s, d, "documents"))
       .select($"doc_id",

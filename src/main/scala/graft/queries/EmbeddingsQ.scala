@@ -60,8 +60,9 @@ object EmbeddingsQ {
     import s.implicits._
     // spread BEFORE quantization: the per-row int8 quantize plus the
     // sample × corpus integer dots are map-side CPU a single-split
-    // scan serializes onto one task (ProfileQ: one 1.5 s task carried
-    // ~74% of q74's warm task time); no-op at real scale
+    // scan serializes onto one task (one 1.5 s task carried ~74% of
+    // q74's warm task time; see its record in Bench's `query_metrics`);
+    // no-op at real scale
     val z = graft.operators.Quantize.quantizeInt8(
       graft.Tables.spread(t(s, d, "embeddings")), "embedding", "qv")
     // int8 values are exact in float32 and every product/partial sum

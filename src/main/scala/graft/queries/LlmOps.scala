@@ -103,8 +103,9 @@ object LlmOps {
     val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       Similarity.dot(a, b)
     // spread the brute side: sample × corpus cosines are map-side CPU
-    // that a single-split scan serializes onto one task (ProfileQ: one
-    // 0.72 s task ≈ half of q101's warm task time); no-op at real scale
+    // that a single-split scan serializes onto one task (one 0.72 s
+    // task ≈ half of q101's warm task time; see its record in Bench's
+    // `query_metrics`); no-op at real scale
     val brute = graft.Tables.spread(
         emb.select($"vec_id".as("nid"), $"embedding".as("nv")))
       .crossJoin(broadcast(qs))

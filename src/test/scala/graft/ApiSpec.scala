@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -14,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.Api
 import graft.engine.Fixtures
 import graft.ingest.{BulkSources, Enrichment, Normalize, NormalizeUsers}
+import graft.metrics.JobMetrics
 import graft.storage.Storage
 
 /** End-to-end API surface over Storage: ingest → point lookups → merge
@@ -74,28 +73,6 @@ class ApiSpec extends AnyFunSuite {
 
   private def sortedRows(st: Storage, table: String): Seq[String] =
     st.read(table).toJSON.collect().sorted.toSeq
-
-  /** Spark job groups of the jobs started while `body` runs, in start
-    * order. The listener bus delivers job starts in order, so a marker
-    * job run after `body` flushes it. */
-  private def jobGroupsDuring(body: => Any): Seq[String] = {
-    val sc = spark.sparkContext
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      val marker = s"flush-${System.nanoTime}"
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
-        .takeWhile(g => g != null && g != marker).toSeq
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Wait until every listener has seen every event posted so far (the
     * status tracker is one of them). The bus is Spark-internal but
@@ -224,7 +201,7 @@ class ApiSpec extends AnyFunSuite {
     val api = new Api(freshStorage())
     val sc = spark.sparkContext
     val group = s"ingest-caller-${System.nanoTime}"
-    val groups = jobGroupsDuring {
+    val (_, rec) = JobMetrics.during(spark) {
       sc.setJobGroup(group, "concurrent ingest")
       try {
         api.ingestSubmissions(multiSiteBatch())
@@ -236,9 +213,10 @@ class ApiSpec extends AnyFunSuite {
           to_timestamp(lit("2022-07-06 00:00:00"))))
       } finally sc.clearJobGroup()
     }
+    val groups = rec.jobs.map(_.group)
     // the upsert's probe and five appends at least
     assert(groups.size >= 6, groups)
-    assert(groups.forall(_ == group), groups)
+    assert(groups.forall(_.contains(group)), groups)
   }
 
   test("a failed write is rethrown after the other writes finish; input unpersisted") {

@@ -659,41 +659,33 @@ class AsofJoinSpec extends AnyFunSuite {
     // building the DataFrame with supplied bounds must launch ZERO
     // jobs (the min/max `.head()` is the job the overload removes —
     // stored/bucketed dimensions carry their range in a manifest)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      val supplied = AsofJoin.asofJoinNative(
+    val (supplied, build) = graft.metrics.JobMetrics.during(s) {
+      AsofJoin.asofJoinNative(
         left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4),
         splitBounds = Some((0.0, 52.0)))
-      Thread.sleep(500) // listener bus is async; give a job time to surface
-      assert(jobs.get() === 0,
-        "supplied bounds must not launch the bounds job at build time")
-      assert(canon(supplied) === computed,
-        "supplied bounds must not change answers")
-      // a CONSERVATIVE range is also safe: bucketOf clamps out-of-range
-      // times into the edge buckets — spread changes, answers don't
-      val clamped = canon(AsofJoin.asofJoinNative(
-        left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4),
-        splitBounds = Some((10.0, 30.0))))
-      assert(clamped === computed)
-      // supplied bounds plan no bounds subquery; computed bounds plan
-      // one (the min/max aggregate rides the plan as a scalar subquery,
-      // its several references canonically equal)
-      def boundsSubqueries(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
-          case sq: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
-            sq.plan.canonicalized
-        })).distinct.size
-      assert(boundsSubqueries(supplied) === 0,
-        "supplied bounds must not plan the bounds subquery")
-      assert(boundsSubqueries(computedDf) === 1,
-        "computed bounds plan one bounds subquery")
-    } finally s.sparkContext.removeSparkListener(listener)
+    }
+    assert(build.jobs.isEmpty,
+      "supplied bounds must not launch the bounds job at build time")
+    assert(canon(supplied) === computed,
+      "supplied bounds must not change answers")
+    // a CONSERVATIVE range is also safe: bucketOf clamps out-of-range
+    // times into the edge buckets — spread changes, answers don't
+    val clamped = canon(AsofJoin.asofJoinNative(
+      left, right, Seq("k"), "t", "t", "rid", numSplits = Some(4),
+      splitBounds = Some((10.0, 30.0))))
+    assert(clamped === computed)
+    // supplied bounds plan no bounds subquery; computed bounds plan
+    // one (the min/max aggregate rides the plan as a scalar subquery,
+    // its several references canonically equal)
+    def boundsSubqueries(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case sq: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
+          sq.plan.canonicalized
+      })).distinct.size
+    assert(boundsSubqueries(supplied) === 0,
+      "supplied bounds must not plan the bounds subquery")
+    assert(boundsSubqueries(computedDf) === 1,
+      "computed bounds plan one bounds subquery")
   }
 
   test("tolerance asof keeps payload pruning: the bound never reads the asof struct") {
@@ -1303,28 +1295,6 @@ class AsofJoinSpec extends AnyFunSuite {
       .select($"user_id", $"event_id", $"ts")
     val purchases = events.filter($"event_type" === "purchase")
       .select($"user_id", $"event_id", $"ts", $"value")
-    // job starts seen while `body` runs; the listener bus delivers them
-    // in order, so a marker job run after `body` flushes it
-    def jobsDuring(body: => Any): Int = {
-      val sc = s.sparkContext
-      val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          groups.add(String.valueOf(Option(j.properties)
-            .map(_.getProperty("spark.jobGroup.id")).orNull))
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        val marker = s"flush-${System.nanoTime}"
-        sc.setJobGroup(marker, "listener flush")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        Iterator.continually(
-          groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-          .takeWhile(g => g != null && g != marker).size
-      } finally sc.removeSparkListener(listener)
-    }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
     def q130Shape(df: org.apache.spark.sql.DataFrame) = df
@@ -1338,13 +1308,13 @@ class AsofJoinSpec extends AnyFunSuite {
       s.conf.set("spark.graft.asof.skewSplits", "8")
       // a 1-byte threshold: the routing sizes the right side from stats
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-      val jobs = jobsDuring {
+      val (_, build) = graft.metrics.JobMetrics.during(s) {
         split = AsofJoin.asofJoinNative(clicks, purchases, Seq("user_id"),
           "ts", "ts", "event_id", numSplits = Some(8))
         routed = AsofJoin.asofJoinNative(clicks, purchases, Seq("user_id"),
           "ts", "ts", "event_id")
       }
-      assert(jobs === 0, "building the joins must not start a Spark job")
+      assert(build.jobs.isEmpty, "building the joins must not start a Spark job")
       assert(routed.queryExecution.analyzed.collect {
         case a: graft.plans.AsofJoinPlan => a.leftKeys.map(_.name)
       } === Seq(Seq("user_id", "__b")), "the conf must route to the split")

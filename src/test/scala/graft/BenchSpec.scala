@@ -255,6 +255,45 @@ class BenchSpec extends AnyFunSuite {
     assert(json.contains("\"demoted\":[\"q65_incremental_merge\"]"), json)
   }
 
+  test("the artifact JSON appends query_metrics and leaves every earlier key as it was") {
+    import graft.metrics.JobMetrics
+    def render(metrics: Map[String, JobMetrics.Record]) = Bench.renderArtifactJson(
+      results = Seq(("qa", 1.0, 1.5, 9.0, 3), ("qb", 2.0, 2.0, 2.0, 1)),
+      calCpuSec = 0.4, calScanSec = 0.6, calFsMetaSec = 0.05,
+      sfDir = "/tmp/sf", mode = "headline",
+      nQueries = 2, passes = 3, passStartedAt = Seq("t1", "t2", "t3"),
+      budgetSec = 600.0, budgetExceeded = false, partialPass = false,
+      queryCapSec = 60.0, capped = Seq("qb"), billed = Map("qb" -> 61.3),
+      queryMetrics = metrics)
+    val rec = JobMetrics.Record(
+      jobs = Seq(JobMetrics.Job(7, Some("graft-bench-qa")), JobMetrics.Job(8, None)),
+      stages = Seq(
+        JobMetrics.Stage(11, "graft.Bench$.main(Bench.scala:1)", tasks = 4,
+          executorRunMs = 1500, executorCpuNs = 1200000000L, resultBytes = 10,
+          shuffleWriteBytes = 2500000, maxTaskMs = 600),
+        JobMetrics.Stage(12, "graft.operators.Dedup$.x(\"q\")", tasks = 2,
+          executorRunMs = 2500, executorCpuNs = 300000000L, resultBytes = 5,
+          shuffleWriteBytes = 0, maxTaskMs = 2000)))
+    val without = render(Map.empty)
+    val withMetrics = render(Map("qa" -> rec))
+    assert(without.endsWith(",\"query_metrics\":{}}"), without)
+    assert(withMetrics.endsWith(",\"query_metrics\":{\"qa\":{\"jobs\":2," +
+      "\"stages\":2,\"tasks\":6,\"executor_run_sec\":4.0," +
+      "\"executor_cpu_sec\":1.5,\"shuffle_write_mb\":2.5," +
+      "\"max_task_sec\":2.0," +
+      "\"slowest_stage\":\"graft.operators.Dedup$.x(\\\"q\\\")\"}}}"), withMetrics)
+    // the record is appended: every key before it, and its value, is
+    // the same as in an artifact without it
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val a = json.readTree(without).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val b = json.readTree(withMetrics).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(b.get("query_metrics").get("qa").get("tasks").asInt === 6)
+    a.remove("query_metrics"); b.remove("query_metrics")
+    assert(a === b)
+    val prefix = without.stripSuffix(",\"query_metrics\":{}}")
+    assert(withMetrics.startsWith(prefix + ",\"query_metrics\":"))
+  }
+
   test("the fsmeta calibration probe measures fixed metadata work") {
     // store-heavy band shifts (r18: ~1.0x cpu+scan calibration while
     // store probes ran 3-5x) are attributable only if the artifact

@@ -1,14 +1,12 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.DriverLocal
+import graft.metrics.JobMetrics
 import graft.operators.IvfAnn
 import DriverLocalSpec.withMaxRows
 
@@ -36,39 +34,6 @@ class DriverLocalSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  /** The jobs `body` launches and their tasks' summed `resultSize`
-    * (the bytes each task sent back to the driver). A marker job
-    * flushes the asynchronous listener bus: everything `body` caused
-    * is posted before the marker's start. */
-  private def jobsAndResultBytes(body: => Any): (Int, Long) = {
-    val sc = spark.sparkContext
-    val events = new LinkedBlockingQueue[SparkListenerEvent]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = events.add(j)
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = events.add(t)
-    }
-    val marker = s"flush-${System.nanoTime}"
-    def isMarker(e: SparkListenerEvent) = e match {
-      case j: SparkListenerJobStart =>
-        Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker)
-      case _ => false
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val seen = Iterator.continually(events.poll(60, TimeUnit.SECONDS))
-        .takeWhile(e => e != null && !isMarker(e)).toVector
-      val jobs = seen.collect { case j: SparkListenerJobStart => j }
-      val stages = jobs.flatMap(_.stageIds).toSet
-      (jobs.size, seen.collect {
-        case t: SparkListenerTaskEnd if stages(t.stageId) && t.taskMetrics != null =>
-          t.taskMetrics.resultSize
-      }.sum)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("collect returns the rows within both limits and None past either") {
     val s = spark
@@ -103,14 +68,14 @@ class DriverLocalSpec extends AnyFunSuite {
     val seeds = IvfAnn.centroids(emb, "vec_id", "embedding", c = 4)
     var refined: DataFrame = null
     // the distributed loop is lazy: the probe is all that runs here
-    val (jobs, bytes) = jobsAndResultBytes {
+    val (_, probe) = JobMetrics.during(s) {
       refined = IvfAnn.refine(emb, "vec_id", "embedding", seeds)
     }
     assert(!refined.queryExecution.analyzed.isInstanceOf[LocalRelation],
       "an over-cap sample must take the distributed loop")
-    assert(jobs >= 1)
-    assert(bytes <= DriverLocal.MaxBytes + rowBytes,
-      s"probe sent $bytes bytes to the driver")
+    assert(probe.jobs.nonEmpty)
+    assert(probe.resultBytes <= DriverLocal.MaxBytes + rowBytes,
+      s"probe sent ${probe.resultBytes} bytes to the driver")
   }
 
   test("every driver-local site answers the same at a bound of 0 as at the default") {
@@ -118,7 +83,7 @@ class DriverLocalSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     def run(q: String, maxRows: Long): (Int, Seq[String]) = {
       var rows = Seq.empty[String]
-      val (jobs, _) = jobsAndResultBytes {
+      val (_, rec) = JobMetrics.during(s) {
         withMaxRows(s, maxRows) {
           graft.engine.CacheRegistry.withRetained {
             rows = SparkEntry.queries(q)(s, sf).collect().map(_.toString)
@@ -127,7 +92,7 @@ class DriverLocalSpec extends AnyFunSuite {
         }
       }
       s.catalog.clearCache()
-      (jobs, rows)
+      (rec.jobs.size, rows)
     }
     // the site each query reaches: CC (q62, q67), refine (q82, q90),
     // BPE (q105), k-center selection (q110); q109's prototype prune

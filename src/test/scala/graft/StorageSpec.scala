@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -14,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Fixtures, Merge, ProbePrune}
 import graft.ingest.{Formats, Normalize}
 import graft.maintenance.Dump
+import graft.metrics.JobMetrics
 import graft.storage.Storage
 import graft.streaming.StreamingIngest
 
@@ -76,26 +74,9 @@ class StorageSpec extends AnyFunSuite {
       "archive_contributors", "merged_submissions", "merged_users")
   }
 
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * job starts in order, so a marker job run after `body` flushes it. */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      val marker = s"flush-${System.nanoTime}"
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
-        .takeWhile(g => g != null && g != marker).size
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Any): Int =
+    JobMetrics.during(spark)(body)._2.jobs.size
 
   test("read returns what schema inference returns for every stored table shape") {
     val st = new Storage(spark, tmpDir())

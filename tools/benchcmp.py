@@ -19,6 +19,11 @@ them:
      n_samples) and is reported separately as cold-band noise, never
      flagged as a regression.
 
+When both artifacts carry `query_metrics` (Bench's per-query record of
+its last completed pass), each common query's job count and executor
+CPU seconds are printed with their deltas; they do not affect the exit
+code.
+
 Exit code 1 when any flagged mover exists, 0 otherwise, 2 on input
 errors — so the comparison can gate scripts.
 """
@@ -92,6 +97,15 @@ def main(argv):
         for q, b, n, ratio, nb, nn_ in sorted(rs, key=lambda r: -r[3]):
             print(f"  {q:40s} {b:8.2f}s -> {n:8.2f}s  "
                   f"norm {ratio:5.2f}x  n={nb}/{nn_}")
+    bm, nm = base.get("query_metrics"), new.get("query_metrics")
+    if bm and nm:
+        work = [q for q in common if q in bm and q in nm]
+        print(f"\nper-query work (query_metrics, base -> new): {len(work)}")
+        for q in work:
+            bj, nj = bm[q]["jobs"], nm[q]["jobs"]
+            bc, nc = bm[q]["executor_cpu_sec"], nm[q]["executor_cpu_sec"]
+            print(f"  {q:40s} jobs {bj:4d} -> {nj:4d} ({nj - bj:+d})  "
+                  f"executor cpu {bc:7.2f}s -> {nc:7.2f}s ({nc - bc:+.2f}s)")
     only_base = sorted(set(bq) - set(nq))
     only_new = sorted(set(nq) - set(bq))
     if only_base:
